@@ -76,7 +76,7 @@ def compile_stage(name, sources, classpath, upstream=""):
         f.write("\n".join(sources) + "\n")
     compiler = [j for j in classpath if os.path.basename(j).startswith(
         ("scala-compiler-", "scala-library-", "scala-reflect-"))]
-    cmd = ["java", "-Xss8m", "-Xmx2g", "-cp", ":".join(compiler),
+    cmd = ["java", "-XX:-UsePerfData", "-Xss8m", "-Xmx2g", "-cp", ":".join(compiler),
            "scala.tools.nsc.Main", "-nowarn", "-classpath", ":".join(classpath),
            "-d", tmp, "@" + argfile]
     r = subprocess.run(cmd, stdout=sys.stderr, stderr=sys.stderr)

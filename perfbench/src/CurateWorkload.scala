@@ -4,21 +4,22 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.CurationPipeline
 
-/** `curate_corpus`: repeated full curation passes (quality gate → exact
-  * dedup → line scrub → span dedup → MinHash-LSH near-dup →
-  * decontamination) plus per-language stats, each pass into a fresh
-  * output dir, over a seeded corpus with planted exact duplicates,
+/** The curation half of `curate_index`: repeated full curation passes
+  * (quality gate → exact dedup → line scrub → span dedup → MinHash-LSH
+  * near-dup → decontamination) plus per-language stats, each pass into a
+  * fresh output dir, over a seeded corpus with planted exact duplicates,
   * near-duplicates and boilerplate lines.
   */
 final class CurateWorkload(ctx: Ctx) extends Workload {
   import CurateWorkload._
   private val spark = ctx.spark
   private val input = s"${ctx.dir}/documents.parquet"
+  private val survivorsPath = s"${ctx.dir}/survivors.txt"
   private var inputDocs = 0L
   /** (survivor ids, stats) digests of the first pass; every pass must match. */
   private var reference: Option[(String, String)] = None
   private var passes = 0
-  private var writtenBytes = 0L
+  private var written = 0L
   private var lastOutBytes = 0L
   private var lastFinalBytes = 0L
 
@@ -54,22 +55,29 @@ final class CurateWorkload(ctx: Ctx) extends Workload {
     val answer = if (ctx.plant && i == 0) ids.drop(1) else ids
     val statsText = stats.map(r => (0 until r.length).map(r.get).mkString("|")).sorted.mkString(";")
     val d = (sha256(answer.mkString(",")), sha256(statsText))
-    if (reference.isEmpty) reference = Some(d)
+    if (reference.isEmpty) {
+      reference = Some(d)
+      // the survivor ids the oracle check compares with q77's
+      java.nio.file.Files.write(java.nio.file.Paths.get(survivorsPath),
+        answer.mkString(",").getBytes("UTF-8"))
+    }
     passes += 1
     val ok = reference.contains(d) && ids.nonEmpty
     lastOutBytes = Main.duBytes(out)
     lastFinalBytes = Main.duBytes(s"$out/6_decontaminated.parquet")
-    writtenBytes += lastOutBytes
+    written += lastOutBytes
     if (i > 0) Main.deleteTree(s"${ctx.dir}/pass_$i")
     OpResult("pass", seconds, inputDocs, ok)
   }
 
-  def writeAmp: Double = writtenBytes.toDouble / (Main.duBytes(input) * passes)
+  def writtenBytes: Long = written
+  def inputBytes: Long = Main.duBytes(input) * passes
   def bytesOnDisk: Long = lastOutBytes
-  def liveBytesRatio: Double = lastFinalBytes.toDouble / lastOutBytes
+  def liveBytes: Long = lastFinalBytes
   def layerExtras: Map[String, Double] = Map.empty
   override def detail: Map[String, Any] = Map(
     "corpus_path" -> input, "oracle_sql_path" -> s"${ctx.dir}/q77_oracle.sql",
+    "survivors_path" -> survivorsPath,
     "survivor_digest" -> reference.get._1, "stats_digest" -> reference.get._2,
     "input_docs" -> inputDocs)
 

@@ -42,6 +42,9 @@ object Gen {
     }
     sb.toString
   }
+
+  /** A capitalised pronounceable name for index `i`. */
+  def name(seed: Long, i: Long): String = word(seed, (1L << 40) + i).capitalize
 }
 
 /** Seeded document corpus: base docs over a synthetic vocabulary with

@@ -6,12 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.io.{IndexMeta, StableJson}
 import graft.operators.{SearchOps, SemanticIndex, VectorIndex}
 
-/** `index_serve_ingest`: the three persisted index families (BM25
-  * postings, IVF-PQ vectors, semantic-dedup cells) built once, then a
-  * closed-loop op mix of seeded calls, repeated in rounds ([[Round]]):
-  * mostly serve calls — indexed BM25, ANN query and their RRF hybrid over
-  * fixed-size query batches — with an ingest into all three families and
-  * a fold + prune across all three in every round.
+/** The index half of `curate_index`: the three persisted index families
+  * (BM25 postings, IVF-PQ vectors, semantic-dedup cells) built once, then
+  * a closed-loop op mix of seeded calls, repeated in rounds ([[Round]]):
+  * an ingest into all three families, a hybrid serve call (indexed BM25
+  * and ANN query fused by RRF) over a fixed-size query batch, and a
+  * fold + prune across all three.
   */
 final class IndexWorkload(ctx: Ctx) extends Workload {
   import IndexWorkload._
@@ -21,16 +21,18 @@ final class IndexWorkload(ctx: Ctx) extends Workload {
   private val pRoot = s"$dir/postings"
   private val vRoot = s"$dir/vectors"
   private val sRoot = s"$dir/semantic"
-  private val rawDocs = s"$dir/raw/docs"
   private val rawVecs = s"$dir/raw/vectors"
   private var model: VectorIndex.Model = _
   private var batches = 0
   private var planted = false
   private val recalls = scala.collection.mutable.ArrayBuffer.empty[Double]
   private var payloadBytes = 0L
-  private var writtenBytes = 0L
+  private var written = 0L
+  private val serveS = scala.collection.mutable.ArrayBuffer.empty[Double]
   private val ingestS = scala.collection.mutable.ArrayBuffer.empty[Double]
   private val foldS = scala.collection.mutable.ArrayBuffer.empty[Double]
+  /** Most versions each family held on disk, read before each prune. */
+  private val peakVersions = scala.collection.mutable.Map.empty[String, Int]
 
   def primaryKind: String = "serve"
   override def period: Int = Round.size
@@ -74,17 +76,26 @@ final class IndexWorkload(ctx: Ctx) extends Workload {
     rows.toDF("vec_id", "embedding", "label")
   }
 
+  /** Writes the raw vectors (the ANN leg re-ranks against them) and
+    * builds the three families from the same generated rows, each on its
+    * own thread (they share no files).
+    */
   def setup(): Unit = {
-    docsFrame(1L to BaseDocs.toLong).write.parquet(rawDocs)
-    vecFrame(vecRows(1L to BaseVecs.toLong)).write.parquet(rawVecs)
-    val docs = spark.read.parquet(rawDocs)
-    val emb = spark.read.parquet(rawVecs)
-    SearchOps.buildPostingsIndex(docs, "text", "doc_id", pRoot)
-    val (m, codes) = VectorIndex.build(emb, "vec_id", "embedding", "label", Dim, SubSpaces, Codes)
-    VectorIndex.writeVersion(m, codes, vRoot, 1)
-    VectorIndex.swapPointer(vRoot, 1)
-    model = m
-    SemanticIndex.buildAndServe(emb, "vec_id", "embedding", k = Cells, maxIter = 2, sRoot)
+    val docs = docsFrame(1L to BaseDocs.toLong).cache()
+    val emb = vecFrame(vecRows(1L to BaseVecs.toLong)).cache()
+    Par.all(
+      () => emb.write.parquet(rawVecs),
+      () => SearchOps.buildPostingsIndex(docs, "text", "doc_id", pRoot),
+      () => {
+        val (m, codes) = VectorIndex.build(emb, "vec_id", "embedding", "label", Dim, SubSpaces, Codes)
+        VectorIndex.writeVersion(m, codes, vRoot, 1)
+        VectorIndex.swapPointer(vRoot, 1)
+        model = m
+      },
+      () => SemanticIndex.buildAndServe(emb, "vec_id", "embedding", k = Cells, maxIter = 2, sRoot))
+    docs.unpersist()
+    emb.unpersist()
+    Seq(pRoot, vRoot, sRoot).foreach(r => peakVersions(r) = versions(r))
   }
 
   // ---- serving ------------------------------------------------------------
@@ -124,47 +135,49 @@ final class IndexWorkload(ctx: Ctx) extends Workload {
 
   private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
 
-  private def serve(i: Int, kind: String, check: Boolean = true): OpResult = {
+  /** One hybrid serve call: both legs, fused, collected. The answer
+    * carries both legs, so checking it checks BM25 exactness and ANN
+    * recall at once.
+    */
+  private def serve(i: Int): OpResult = {
     val (terms, vecs) = queryBatch(i)
     val t0 = System.nanoTime()
-    val (layer, out) = kind match {
-      case "bm25" => ("operators.search", bm25Leg(terms))
-      case "ann" => ("operators.vector", annLeg(vecs))
-      case _ => ("operators.search", fused(bm25Leg(terms), annLeg(vecs)))
-    }
-    val got = ctx.span("collect", layer)(out.collect())
+    val out = fused(bm25Leg(terms), annLeg(vecs))
+    val got = ctx.span("collect", "operators.search")(out.collect())
     val seconds = (System.nanoTime() - t0) / 1e9
-    // hybrid answers carry both legs, so checking them checks BM25
-    // exactness and ANN recall at once
-    val ok = !check || kind != "hybrid" || checkHybrid(terms, vecs, got)
+    serveS += seconds
+    val ok = checkHybrid(terms, vecs, got)
     OpResult("serve", seconds, QueryBatch.toLong, ok)
   }
 
   /** A hybrid answer against brute force over the same live corpus: the
     * fused ranking must equal RRF over brute-force BM25 and the served ANN
     * leg (so indexed BM25 is exact), and the ANN leg's recall@k against the
-    * exact cosine top-k must reach the floor.
+    * exact cosine top-k must reach the floor. The three reference queries
+    * run concurrently.
     */
   private def checkHybrid(terms: DataFrame, vecs: DataFrame, got: Array[Row]): Boolean =
     ctx.tracer.untraced {
       val served = got.map(_.toSeq).toSet
       val answer = if (ctx.plant && !planted) { planted = true; served.drop(1) } else served
-      val brute = SearchOps.bm25TopK(spark.read.parquet(rawDocs), "text", "doc_id", terms,
+      val live = docsFrame(1L to BaseDocs + batches.toLong * IngestDocs)
+      val brute = SearchOps.bm25TopK(live, "text", "doc_id", terms,
         topK = TopK).select("query_id", "doc_id", "rank")
-      val ann = annLeg(vecs).localCheckpoint()
-      val ok = answer == rows(SearchOps.rrfFuse(Seq(brute, ann), topK = TopK)) &&
-        recall(ann.collect().map(r => (r.get(0), r.get(1))).toSet, vecs) >= ctx.recallFloor
-      if (!ok) System.err.println(s"perfbench: hybrid serve check failed, recall ${recalls.lastOption}")
+      val ann = annLeg(vecs)
+      val exact = SearchOps.cosineTopKFor(vecs, spark.read.parquet(rawVecs), "vec_id", "embedding", TopK)
+      val Seq(bruteRows, annRows, exactRows) =
+        Par.all(() => brute.collect(), () => ann.collect(), () => exact.collect())
+      def local(rs: Array[Row], like: DataFrame) =
+        spark.createDataFrame(java.util.Arrays.asList(rs: _*), like.schema)
+      val pairs = (rs: Array[Row]) => rs.map(r => (r.get(0), r.get(1))).toSet
+      val truth = pairs(exactRows)
+      val recall = truth.count(pairs(annRows)).toDouble / truth.size
+      recalls += recall
+      val ok = answer == rows(SearchOps.rrfFuse(Seq(local(bruteRows, brute), local(annRows, ann)),
+        topK = TopK)) && recall >= ctx.recallFloor
+      if (!ok) System.err.println(s"perfbench: hybrid serve check failed, recall $recall")
       ok
     }
-
-  private def recall(served: Set[(Any, Any)], vecs: DataFrame): Double = {
-    val exact = SearchOps.cosineTopKFor(vecs, spark.read.parquet(rawVecs), "vec_id", "embedding",
-      TopK).collect().map(r => (r.get(0), r.get(1))).toSet
-    val r = exact.count(served).toDouble / exact.size
-    recalls += r
-    r
-  }
 
   // ---- ingest and maintenance ---------------------------------------------
   private def ingest(): OpResult = {
@@ -186,27 +199,30 @@ final class IndexWorkload(ctx: Ctx) extends Workload {
     val newVecs = vecFrame(vrows)
     val before = Main.duBytes(dir) - Main.duBytes(s"$dir/raw")
     val t0 = System.nanoTime()
-    val pv = ctx.span("SearchOps.appendPostingsIndex", "operators.search") {
-      SearchOps.appendPostingsIndex(newDocs, "text", "doc_id", pRoot, s"b$b")
-    }
-    val vAppended = ctx.span("VectorIndex.appendBatch", "operators.vector") {
-      VectorIndex.appendBatch(newVecs, "vec_id", "embedding", model,
-        VectorIndex.versionDir(vRoot, VectorIndex.currentVersion(vRoot).get), b)
-    }
-    val rejected = ctx.span("SemanticIndex.ingest", "operators.semantic") {
-      val sDir = SemanticIndex.versionDir(sRoot, SemanticIndex.currentVersion(sRoot).get)
-      val (verdicts, labeled) = SemanticIndex.judgeBatch(newVecs, "vec_id", "embedding", sDir, 0.81)
-      val v = verdicts.select("vid", "kept").collect()
-      val kept = v.filter(_.getBoolean(1)).map(_.getLong(0)).toSeq
-      import spark.implicits._
-      SemanticIndex.appendBatch(labeled.join(kept.toDF("vid"), Seq("vid"), "left_semi"), sDir, b)
-      v.filterNot(_.getBoolean(1)).map(_.getLong(0)).toSet
+    val (pv, vAppended, rejected) = Par.all(
+      () => ctx.span("SearchOps.appendPostingsIndex", "operators.search") {
+        SearchOps.appendPostingsIndex(newDocs, "text", "doc_id", pRoot, s"b$b")
+      },
+      () => ctx.span("VectorIndex.appendBatch", "operators.vector") {
+        VectorIndex.appendBatch(newVecs, "vec_id", "embedding", model,
+          VectorIndex.versionDir(vRoot, VectorIndex.currentVersion(vRoot).get), b)
+      },
+      () => ctx.span("SemanticIndex.ingest", "operators.semantic") {
+        val sDir = SemanticIndex.versionDir(sRoot, SemanticIndex.currentVersion(sRoot).get)
+        val (verdicts, labeled) = SemanticIndex.judgeBatch(newVecs, "vec_id", "embedding", sDir, 0.81)
+        val v = verdicts.select("vid", "kept").collect()
+        val kept = v.filter(_.getBoolean(1)).map(_.getLong(0)).toSeq
+        import spark.implicits._
+        SemanticIndex.appendBatch(labeled.join(kept.toDF("vid"), Seq("vid"), "left_semi"), sDir, b)
+        v.filterNot(_.getBoolean(1)).map(_.getLong(0)).toSet
+      }) match {
+      case Seq(p: Option[_], v: Boolean, r: Set[_]) => (p, v, r.asInstanceOf[Set[Long]])
+      case other => sys.error(s"unexpected ingest results $other")
     }
     val seconds = (System.nanoTime() - t0) / 1e9
     ingestS += seconds
-    writtenBytes += Main.duBytes(dir) - Main.duBytes(s"$dir/raw") - before
-    // the live corpus the brute-force checks read
-    newDocs.write.mode("append").parquet(rawDocs)
+    written += Main.duBytes(dir) - Main.duBytes(s"$dir/raw") - before
+    // the raw vectors the ANN leg re-ranks against and the recall check reads
     newVecs.select("vec_id", "embedding", "label").write.mode("append").parquet(rawVecs)
     payloadBytes += vrows.map(_._2.size * 8L + 16).sum +
       docIds.map(i => Corpus.words(seed, i, Vocab).mkString(" ").length + 8L).sum
@@ -215,35 +231,44 @@ final class IndexWorkload(ctx: Ctx) extends Workload {
     OpResult("ingest", seconds, 0L, ok)
   }
 
+  /** Folds the three families concurrently, then prunes them. The bytes
+    * the folds write (the new versions, before the prunes drop the old
+    * ones) count as written; the disk walks run between the timed calls.
+    */
   private def foldPrune(): OpResult = {
-    val before = Main.duBytes(dir) - Main.duBytes(s"$dir/raw")
+    val before = indexBytes
     val t0 = System.nanoTime()
-    ctx.span("SearchOps.foldPrune", "operators.search") {
-      SearchOps.foldPostingsIndex(spark, pRoot)
+    Par.all(
+      () => ctx.span("SearchOps.foldPostingsIndex", "operators.search") {
+        SearchOps.foldPostingsIndex(spark, pRoot)
+      },
+      () => ctx.span("VectorIndex.foldIngestAndSwap", "operators.vector") {
+        VectorIndex.foldIngestAndSwap(spark, vRoot, Dim, SubSpaces, Codes)
+        model = VectorIndex.readCurrentModel(spark, vRoot, Dim, SubSpaces, Codes)
+      },
+      () => ctx.span("SemanticIndex.foldIngestAndSwap", "operators.semantic") {
+        SemanticIndex.foldIngestAndSwap(spark, sRoot)
+      })
+    val foldSeconds = (System.nanoTime() - t0) / 1e9
+    written += math.max(0L, indexBytes - before)
+    Seq(pRoot, vRoot, sRoot).foreach(r => peakVersions(r) = peakVersions(r) max versions(r))
+    val t1 = System.nanoTime()
+    ctx.span("SearchOps.prunePostingsVersions", "operators.search") {
       SearchOps.prunePostingsVersions(spark, pRoot, keepLatest = 1)
     }
-    ctx.span("VectorIndex.foldPrune", "operators.vector") {
-      VectorIndex.foldIngestAndSwap(spark, vRoot, Dim, SubSpaces, Codes)
-      VectorIndex.pruneVersions(vRoot, keepLatest = 1)
-      model = VectorIndex.readCurrentModel(spark, vRoot, Dim, SubSpaces, Codes)
-    }
-    ctx.span("SemanticIndex.foldPrune", "operators.semantic") {
-      SemanticIndex.foldIngestAndSwap(spark, sRoot)
+    ctx.span("VectorIndex.pruneVersions", "operators.vector")(VectorIndex.pruneVersions(vRoot, keepLatest = 1))
+    ctx.span("SemanticIndex.pruneVersions", "operators.semantic") {
       SemanticIndex.pruneVersions(sRoot, keepLatest = 1)
     }
-    val seconds = (System.nanoTime() - t0) / 1e9
+    val seconds = foldSeconds + (System.nanoTime() - t1) / 1e9
     foldS += seconds
-    writtenBytes += math.max(0L, Main.duBytes(dir) - Main.duBytes(s"$dir/raw") - before)
     OpResult("fold_prune", seconds, 0L, Seq(pRoot, vRoot, sRoot).forall(versions(_) == 1))
   }
-
-  /** Warm-up: one hybrid serve, which runs both legs and the fusion. */
-  override def warm(): Option[OpResult] = Some(serve(WarmQuery, "hybrid", check = false))
 
   def op(i: Int): OpResult = Round(i % Round.size) match {
     case "ingest" => ingest()
     case "fold" => foldPrune()
-    case kind => serve(i, kind)
+    case _ => serve(i)
   }
 
   private def versions(root: String): Int =
@@ -254,7 +279,7 @@ final class IndexWorkload(ctx: Ctx) extends Workload {
   /** Bytes the served versions reach: the current version dir of each
     * family plus the postings segments its manifest carries by reference.
     */
-  private def liveBytes: Long = {
+  def liveBytes: Long = {
     val pv = SearchOps.postingsVersionDir(pRoot, SearchOps.postingsCurrentVersion(pRoot).get)
     val segs = IndexMeta.readString(s"$pv/manifest.json").map(StableJson.parse).collect {
       case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]("segments").asInstanceOf[Seq[Any]]
@@ -264,14 +289,15 @@ final class IndexWorkload(ctx: Ctx) extends Workload {
       Main.duBytes(SemanticIndex.versionDir(sRoot, SemanticIndex.currentVersion(sRoot).get))
   }
 
-  def writeAmp: Double = writtenBytes.toDouble / payloadBytes
+  def writtenBytes: Long = written
+  def inputBytes: Long = payloadBytes
   def bytesOnDisk: Long = indexBytes
-  def liveBytesRatio: Double = liveBytes.toDouble / indexBytes
   override def detail: Map[String, Any] = Map("ann_recall_at_k" -> recalls.toSeq)
   def layerExtras: Map[String, Double] = Map(
-    "operators.search.versions_live" -> versions(pRoot).toDouble,
-    "operators.vector.versions_live" -> versions(vRoot).toDouble,
-    "operators.semantic.versions_live" -> versions(sRoot).toDouble,
+    "operators.search.versions_live" -> peakVersions(pRoot).toDouble,
+    "operators.vector.versions_live" -> peakVersions(vRoot).toDouble,
+    "operators.semantic.versions_live" -> peakVersions(sRoot).toDouble,
+    "index.serve_s.p50" -> Main.median(serveS.toSeq),
     "index.ingest_s.p50" -> Main.median(ingestS.toSeq),
     "index.fold_prune_s.p50" -> Main.median(foldS.toSeq))
 }
@@ -287,13 +313,21 @@ object IndexWorkload {
   val Topics = 150
   val TopK = 10
   val Shortlist = 50
-  val QueryBatch = 8
+  /** 40 queries and 40 ingested docs and vectors per call: the sizes of
+    * the repository's soak driver (one derived BM25 query per 50 corpus
+    * docs; ANN queries and the IVF-PQ append batch one vector in 5000 of
+    * 200k).
+    */
+  val QueryBatch = 40
   val IngestDocs = 40
   val IngestVecs = 40
   val Clones = 4
-  /** One round of the op mix: four serve calls, an ingest, a fold + prune. */
-  val Round: Seq[String] = Seq("bm25", "ann", "ingest", "hybrid", "bm25", "fold")
+  /** One round of the op mix: an ingest, a serve call that reads the
+    * unfolded segment, a fold + prune. The ratio is an assumption, not a
+    * measured traffic mix: the soak driver folds after three appends, but
+    * a round of three ingests does not fit the run budget.
+    */
+  val Round: Seq[String] = Seq("ingest", "serve", "fold")
   val QueryIdBase = 50000000L
   val VecIdBase = 1000000L
-  val WarmQuery = 1000000
 }

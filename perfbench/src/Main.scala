@@ -21,23 +21,21 @@ trait Workload {
   def setup(): Unit
   /** The `i`-th timed operation. */
   def op(i: Int): OpResult
-  /** Untimed warm-up after setup, counted into `setup_s`; None = the
-    * workload has none and its first timed op runs cold.
-    */
-  def warm(): Option[OpResult] = None
   /** The kind of op whose latency is the headline (`latency_s.p50`). */
   def primaryKind: String
   /** Ops in one full round of the workload's op mix; the timed loop always
     * ends on a round boundary so every run measures the same mix.
     */
   def period: Int = 1
-  /** Run-end figures: bytes written per input byte, bytes the published
-    * state occupies, live share of the bytes on disk, plus extra layer
-    * metrics only this workload can measure.
+  /** Run-end figures: bytes the timed ops wrote, input bytes they
+    * consumed (`write_amp` is the ratio), bytes the workload's state
+    * occupies on disk and the live (served or published) part of them,
+    * plus layer metrics only this workload can measure.
     */
-  def writeAmp: Double
+  def writtenBytes: Long
+  def inputBytes: Long
   def bytesOnDisk: Long
-  def liveBytesRatio: Double
+  def liveBytes: Long
   def layerExtras: Map[String, Double]
   /** Extra facts for the result's `detail` object. */
   def detail: Map[String, Any] = Map.empty
@@ -46,6 +44,23 @@ trait Workload {
 final case class Ctx(spark: SparkSession, tracer: Tracer, seed: Long, dir: String,
                      plant: Boolean, recallFloor: Double) {
   def span[T](name: String, layer: String)(body: => T): T = tracer.span(name, layer)(body)
+}
+
+/** Runs independent calls on threads of their own. */
+object Par {
+  /** Runs every body on its own thread, waits for all of them and returns
+    * their results in order; a failure is rethrown once all have ended.
+    */
+  def all[T](bodies: (() => T)*): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(bodies.size)
+    try {
+      val futures = bodies.map(b => pool.submit(new java.util.concurrent.Callable[T] {
+        def call(): T = b()
+      }))
+      val settled = futures.map(f => scala.util.Try(f.get()))
+      settled.map(_.fold(e => throw Option(e.getCause).getOrElse(e), identity))
+    } finally pool.shutdown()
+  }
 }
 
 object Main {
@@ -58,28 +73,34 @@ object Main {
     "optimize_ms", "plan_ms", "exchanges")
   private val serve = Seq("calls", "jobs", "tasks", "busy_s", "exec_run_s", "sched_delay_s",
     "shuffle_write_mb", "analysis_ms", "optimize_ms", "plan_ms", "exchanges")
+  private val small = Seq("calls", "jobs", "busy_s", "analysis_ms")
+  val GoldMarts: Seq[String] = Seq("current_members", "activity_yearly", "activity_monthly",
+    "constituency_yearly", "content_fact_pool")
   val CurationStages: Seq[String] = Seq("1_quality_gate", "2_exact_dedup", "3_line_scrub",
     "4_span_dedup", "5_near_dedup", "6_decontaminated")
-  /** Set-ups per run; `setup_s` counts their median. */
-  val SetupReps = 3
-  val Overhead: Seq[String] = Seq("latency_s.p50", "items_per_s", "ops_per_s")
-
-  /** Per-layer metric names with their units, in print order. */
+  /** Per-layer metric names with their units, in print order. `run.py`
+    * adds `trace_overhead.*`, the difference of an untraced and a traced
+    * run, and `operators.curation.near_dup_recall` from its oracle check.
+    */
   val PerLayer: Seq[(String, String)] = {
     def of(layer: String, names: Seq[String]) = names.map(n => s"$layer.$n")
     val names =
-      of("io", Seq("bytes_written", "files_written", "live_bytes_ratio")) ++
+      of("sources", Seq("calls", "busy_s", "pages", "retries")) ++
+      of("silver", serve ++ Seq("wait_s", "rows_out")) ++
+      of("gold", full) ++ GoldMarts.map(m => s"gold.$m.busy_s") ++
+      of("compat", small) ++ of("control", small) ++
+      of("orchestrate", small ++ Seq("optimize_ms", "plan_ms")) ++
+      of("io", Seq("calls", "jobs", "tasks", "busy_s", "bytes_written", "files_written",
+        "live_bytes_ratio")) ++
       of("operators.curation", full) ++ CurationStages.map(s => s"operators.curation.$s.busy_s") ++
       Seq("search", "vector", "semantic").flatMap(f =>
         of(s"operators.$f", serve :+ "versions_live")) ++
-      Seq("index.ingest_s.p50", "index.fold_prune_s.p50") ++
-      Overhead.map(m => s"trace_overhead.$m")
+      Seq("index.serve_s.p50", "index.ingest_s.p50", "index.fold_prune_s.p50")
     names.map(n => n -> unitOf(n))
   }
 
   private def unitOf(n: String): String = n.split('.').last match {
-    case s if s.endsWith("_s") || s == "p50" =>
-      if (n.startsWith("trace_overhead.items") || n.startsWith("trace_overhead.ops")) "1/s" else "s"
+    case s if s.endsWith("_s") || s == "p50" => "s"
     case s if s.endsWith("_ms") => "ms"
     case s if s.endsWith("_mb") => "MB"
     case "bytes_written" => "bytes"
@@ -162,90 +183,59 @@ object Main {
 
     val listener = if (trace) Some(LayerListener.install(spark)) else None
     val tracer = new Tracer(spark, s"$workload-$seed-${System.currentTimeMillis()}")
-    def make(dir: String): Workload = {
-      val ctx = Ctx(spark, tracer, seed, dir, plant, recallFloor)
-      workload match {
-        case "curate_corpus" => new CurateWorkload(ctx)
-        case "index_serve_ingest" => new IndexWorkload(ctx)
-        case other => sys.error(s"unknown workload $other")
-      }
+    val ctx = Ctx(spark, tracer, seed, s"$work/data", plant, recallFloor)
+    val wl: Workload = workload match {
+      case "refresh_weekly" => new RefreshWorkload(ctx)
+      case "curate_index" => new CurateIndexWorkload(ctx)
+      case other => sys.error(s"unknown workload $other")
     }
 
-    // set up several times and keep the last; the median is the figure
-    val setupTimes = mutable.ArrayBuffer.empty[Double]
-    var wl: Workload = null
-    (0 until SetupReps).foreach { r =>
-      val dir = s"$work/data/setup$r"
-      if (r > 0) deleteTree(s"$work/data/setup${r - 1}")
-      val s0 = System.nanoTime()
-      wl = make(dir)
-      wl.setup()
-      setupTimes += (System.nanoTime() - s0) / 1e9
-    }
-    val w0 = System.nanoTime()
-    val warm = wl.warm()
-    val warmS = (System.nanoTime() - w0) / 1e9
+    // one setup; there is no warm-up, so the first timed op runs cold,
+    // as the first call of a batch job does
+    val s0 = System.nanoTime()
+    wl.setup()
+    val setupOnlyS = (System.nanoTime() - s0) / 1e9
     var heapPeak = liveHeapMb()
-    val setupS = sessionS + median(setupTimes.toSeq) + warmS
+    val loopStart = System.nanoTime()
+    val setupS = sessionS + setupOnlyS
 
     // closed loop until the engine calls have taken `seconds`, ending on a
-    // round of the op mix. A traced run measures one such phase untraced
-    // and then one traced, so tracing overhead is the difference of the
-    // two; a workload without a warm-up first runs a cold phase that
-    // neither side of that comparison includes.
-    val phases: Seq[Option[Boolean]] =
-      if (!trace) Seq(Some(false))
-      else (if (warm.isEmpty) Seq(None) else Nil) ++ Seq(Some(false), Some(true))
-    val results = mutable.ArrayBuffer.empty[(OpResult, Option[Boolean])]
-    var i = 0
-    phases.foreach { phase =>
-      val traced = phase.contains(true)
-      var timed = 0.0
-      var n = 0
-      tracer.enabled = traced
-      while (timed < seconds || n % wl.period != 0) {
-        val r = wl.op(i)
-        results += r -> phase
-        timed += r.seconds
-        i += 1
-        n += 1
-        if (n % wl.period == 0) heapPeak = heapPeak max liveHeapMb()
-      }
-      tracer.enabled = false
+    // round of the op mix; a traced run traces every timed op
+    val all = mutable.ArrayBuffer.empty[OpResult]
+    var timed = 0.0
+    tracer.enabled = trace
+    while (timed < seconds || all.size % wl.period != 0) {
+      val r = wl.op(all.size)
+      all += r
+      timed += r.seconds
+      if (all.size % wl.period == 0) heapPeak = heapPeak max liveHeapMb()
     }
+    tracer.enabled = false
+    val loopWallS = (System.nanoTime() - loopStart) / 1e9
+    val attempted = all.size
+    val failed = all.count(!_.ok)
 
-    def endToEnd(rs: Seq[OpResult]): Map[String, Double] = {
-      val prim = rs.filter(_.kind == wl.primaryKind).map(_.seconds)
-      val t = rs.map(_.seconds).sum
-      val producing = rs.filter(_.items > 0)
-      Map("latency_s.p50" -> median(prim),
-        "items_per_s" -> producing.map(_.items).sum / producing.map(_.seconds).sum,
-        "ops_per_s" -> rs.size / t)
-    }
-    val all = results.map(_._1).toSeq
-    val attempted = all.size + warm.size
-    val failed = all.count(!_.ok) + warm.count(!_.ok)
-
+    // latency and throughput of the headline op; ops_per_s over the mix
+    val prim = all.filter(_.kind == wl.primaryKind)
+    val endToEnd = Map("latency_s.p50" -> median(prim.map(_.seconds).toSeq),
+      "items_per_s" -> prim.map(_.items).sum / prim.map(_.seconds).sum,
+      "ops_per_s" -> all.size / timed, "setup_s" -> setupS,
+      "write_amp" -> wl.writtenBytes.toDouble / wl.inputBytes,
+      "bytes_on_disk" -> wl.bytesOnDisk.toDouble, "heap_peak_mb" -> heapPeak)
     val metrics: Seq[(String, Double, String)] =
-      if (!trace) {
-        val e = endToEnd(all) ++ Map("setup_s" -> setupS, "write_amp" -> wl.writeAmp,
-          "bytes_on_disk" -> wl.bytesOnDisk.toDouble, "heap_peak_mb" -> heapPeak)
-        EndToEnd.map { case (n, u) => (n, e(n), u) }
-      } else {
-        val on = endToEnd(results.filter(_._2.contains(true)).map(_._1).toSeq)
-        val off = endToEnd(results.filter(_._2.contains(false)).map(_._1).toSeq)
+      if (!trace) EndToEnd.map { case (n, u) => (n, endToEnd(n), u) }
+      else {
         org.apache.spark.sql.perfbench.SqlEvents.drain(spark.sparkContext)
         val layer = layerMetrics(tracer, listener.get) ++ wl.layerExtras ++
-          Map("io.live_bytes_ratio" -> wl.liveBytesRatio) ++
-          Overhead.map(m => s"trace_overhead.$m" -> (on(m) - off(m)))
+          Map("io.live_bytes_ratio" -> wl.liveBytes.toDouble / wl.bytesOnDisk)
         writeSpans(tracer, s"$work/spans.jsonl")
         PerLayer.map { case (n, u) => (n, layer.getOrElse(n, 0.0), u) }
       }
 
     val detail = Map(
       "workload" -> workload, "seed" -> seed, "cores" -> cores, "session_s" -> sessionS,
-      "setup_reps_s" -> setupTimes.toSeq, "warm_s" -> warmS,
-      "timed_s" -> all.map(_.seconds).sum,
+      "setup_only_s" -> setupOnlyS, "loop_wall_s" -> loopWallS,
+      "timed_s" -> timed, "end_to_end" -> endToEnd,
       "ops" -> all.groupBy(_.kind).map { case (k, v) => k -> v.size },
       "primary_s" -> all.filter(_.kind == wl.primaryKind).map(_.seconds)) ++ wl.detail
     val json = new StringBuilder

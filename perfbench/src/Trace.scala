@@ -19,8 +19,8 @@ import org.apache.spark.sql.perfbench.SqlEvents
   * `operators` split by operator family.
   */
 object Layers {
-  val All: Seq[String] = Seq("operators.curation", "operators.search",
-    "operators.vector", "operators.semantic")
+  val All: Seq[String] = Seq("sources", "silver", "gold", "compat", "control", "orchestrate",
+    "io", "operators.curation", "operators.search", "operators.vector", "operators.semantic")
   /** Spark local property carrying the layer of the running call. */
   val Key = "perfbench.layer"
 }
@@ -62,6 +62,18 @@ final class Tracer(spark: SparkSession, val runId: String) {
         sc.setJobDescription(prevDesc)
       }
     }
+
+  /** Id of the innermost open span on this thread (0 = none). */
+  def currentSpan: Long = current.get()
+
+  /** Runs `body` on this thread as if inside span `parent`: spans a pool
+    * thread opens for a call traced on another thread nest under it.
+    */
+  def under[T](parent: Long)(body: => T): T = {
+    val was = current.get()
+    current.set(parent)
+    try body finally current.set(was)
+  }
 
   /** Runs `body` with tracing off (output checks are not the workload). */
   def untraced[T](body: => T): T = {
@@ -160,7 +172,9 @@ final class LayerListener extends SparkListener with AdaptiveSparkPlanHelper {
   }
 
   override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-    case e: SparkListenerSQLExecutionEnd =>
+    // only executions whose jobs carried a layer (started inside a span
+    // while tracing was on)
+    case e: SparkListenerSQLExecutionEnd if execLayer.containsKey(e.executionId) =>
       SqlEvents.queryExecution(e).foreach(qe => record(e.executionId, qe, SqlEvents.durationNs(e)))
     case _ =>
   }

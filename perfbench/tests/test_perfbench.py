@@ -3,7 +3,8 @@
 Run from the root of a checkout:
   python3 -m unittest discover -s perfbench/tests -v
 The contract and oracle tests take seconds; the ones marked "runs the
-benchmark" start the engine and take about a minute per run.
+benchmark" start the engine and take one to two minutes per run (a
+traced run is two JVMs, untraced then traced).
 """
 import json
 import os
@@ -78,6 +79,41 @@ class ContractTest(unittest.TestCase):
         self.assertEqual(sid, oracle._sha("3,1"))
         self.assertEqual(sst, oracle._sha("de|1|4|2|2;en|2|9|1|3"))
 
+    def test_curation_verdict(self):
+        # (doc_id, lang, n_words, near_dup, contaminated, survives) of the
+        # oracle's stage-4 docs: 1-4 survive, 5-7 are near-dup drops that
+        # decontamination keeps, 8 is a near-dup drop it removes, 9 is
+        # contaminated only
+        rows = [(1, "en", 10, False, False, True), (2, "en", 20, False, False, True),
+                (3, "de", 30, False, False, True), (4, "de", 40, False, False, True),
+                (5, "en", 5, True, False, False), (6, "en", 6, True, False, False),
+                (7, "de", 7, True, False, False), (8, "en", 8, True, True, False),
+                (9, "de", 9, False, True, False)]
+
+        def verdict(ids, floor=0.6):
+            stats = {}
+            for i in [i for i in ids if i <= len(rows)]:
+                _, lang, n, _, _, _ = rows[i - 1]
+                s = stats.setdefault(lang, [lang, 0, 0, i, i])
+                s[1], s[2], s[3], s[4] = s[1] + 1, s[2] + n, min(s[3], i), max(s[4], i)
+            return oracle.judge(rows, ids, *oracle.digests(ids, stats.values()), floor)
+
+        ok, facts = verdict([1, 2, 3, 4])
+        self.assertTrue(ok)
+        self.assertEqual(facts["near_dup_recall"], 1.0)
+        # one missed near-dup pair of three: recall 2/3, above a 0.6 floor
+        ok, facts = verdict([1, 2, 3, 4, 6])
+        self.assertTrue(ok)
+        self.assertEqual(facts["near_dup_missed"], [6])
+        self.assertFalse(verdict([1, 2, 3, 4, 6], floor=0.7)[0])
+        self.assertFalse(verdict([1, 2, 3, 4, 5, 6])[0])  # recall 1/3
+        self.assertFalse(verdict([1, 2, 3])[0])  # an oracle survivor dropped
+        self.assertFalse(verdict([1, 2, 3, 4, 8])[0])  # decontamination drops 8
+        self.assertFalse(verdict([1, 2, 3, 4, 9])[0])  # contaminated, no near-dup
+        self.assertFalse(verdict([1, 2, 3, 4, 10])[0])  # not a stage-4 doc
+        # digests that do not match the ids
+        self.assertFalse(oracle.judge(rows, [1, 2, 3, 4], "x", "y", 0.6)[0])
+
 
 class RunTest(unittest.TestCase):
     """Runs the benchmark."""
@@ -85,7 +121,7 @@ class RunTest(unittest.TestCase):
     def test_metric_names_match_benchmark_json(self):
         s = spec()
         for trace, key in (("0", "end_to_end"), ("1", "per_layer")):
-            res, out = run("index_serve_ingest", 7, trace=trace)
+            res, out = run("curate_index", 7, trace=trace)
             want = [(m["name"], m["unit"]) for m in s[key]]
             got = [(n, m["unit"]) for n, m in res["metrics"].items()]
             self.assertEqual(got, want)
@@ -95,7 +131,7 @@ class RunTest(unittest.TestCase):
                 self.assertIn(n, out)
 
     def test_planted_wrong_answer_is_counted(self):
-        for workload in ("index_serve_ingest", "curate_corpus"):
+        for workload in [w["name"] for w in spec()["workloads"]]:
             res, _ = run(workload, 7, plant="1")
             self.assertFalse(res["correct"], workload)
             self.assertGreaterEqual(res["failed"], 1, workload)
