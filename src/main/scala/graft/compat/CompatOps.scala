@@ -82,9 +82,9 @@ object CompatOps {
               threshold: ComparisonThreshold): ComparisonRow = {
     val lk = keySet(legacy, legacyKeyCol).cache()
     val ck = keySet(compat, compatKeyCol).cache()
-    val matched = lk.intersect(ck).count()
-    val legacyOnly = lk.except(ck).count()
-    val compatOnly = ck.except(lk).count()
+    val (matched, legacyOnly, compatOnly) =
+      try (lk.intersect(ck).count(), lk.except(ck).count(), ck.except(lk).count())
+      finally { ck.unpersist(); lk.unpersist() }
     val legacyRows = legacy.count()
     val compatRows = compat.count()
     val coverage = coveragePct(compat, compatKeyCol)

@@ -55,8 +55,8 @@ object ReviewOps {
     */
   def mismatchDetail(legacy: DataFrame, unified: DataFrame,
                      datasetName: String, unifiedLabel: String = "compat"): DataFrame = {
-    val ll = memberLookup(legacy).cache()
-    val ul = memberLookup(unified).cache()
+    val ll = memberLookup(legacy)
+    val ul = memberLookup(unified)
     def side(primary: DataFrame, secondary: DataFrame, sideName: String,
              primaryLabel: String, secondaryLabel: String): DataFrame =
       primary.join(secondary.select(col("member_code")), Seq("member_code"), "left_anti")
@@ -79,18 +79,20 @@ object ReviewOps {
                       datasetName: String): Map[String, Any] = {
     val lk = memberLookup(legacy).select("member_code").cache()
     val uk = memberLookup(unified).select("member_code").cache()
-    val matched = lk.intersect(uk).count()
-    val legacyOnly = lk.except(uk).count()
-    val unifiedOnly = uk.except(lk).count()
-    Map(
-      "dataset_name" -> datasetName,
-      "legacy_rows" -> legacy.count(),
-      "unified_rows" -> unified.count(),
-      "legacy_member_count" -> lk.count(),
-      "unified_member_count" -> uk.count(),
-      "matched_member_count" -> matched,
-      "legacy_only_count" -> legacyOnly,
-      "unified_only_count" -> unifiedOnly)
+    try {
+      val matched = lk.intersect(uk).count()
+      val legacyOnly = lk.except(uk).count()
+      val unifiedOnly = uk.except(lk).count()
+      Map(
+        "dataset_name" -> datasetName,
+        "legacy_rows" -> legacy.count(),
+        "unified_rows" -> unified.count(),
+        "legacy_member_count" -> lk.count(),
+        "unified_member_count" -> uk.count(),
+        "matched_member_count" -> matched,
+        "legacy_only_count" -> legacyOnly,
+        "unified_only_count" -> unifiedOnly)
+    } finally { uk.unpersist(); lk.unpersist() }
   }
 
   /** mismatch_review.py:188-204 _dq. */
@@ -130,8 +132,9 @@ object ReviewOps {
     val (matched, legacyOnly, unifiedOnly) = (lks, uks) match {
       case (Some(l), Some(u)) =>
         val lc = l.cache(); val uc = u.cache()
-        (lc.intersect(uc).count().toString,
+        try (lc.intersect(uc).count().toString,
           lc.except(uc).count().toString, uc.except(lc).count().toString)
+        finally { uc.unpersist(); lc.unpersist() }
       case _ => ("", "", "")
     }
     val unifiedRows = unified.map(_.count()).getOrElse(0L)

@@ -40,14 +40,12 @@ object TrialReport {
                   legacyKey: String, trialKey: String): Seq[Map[String, String]] = {
     val lk = memberCodes(legacy).cache()
     val tk = memberCodes(trial).cache()
+    val (legacyMembers, trialMembers, matched, trialOnly, legacyOnly) =
+      try (lk.count(), tk.count(), lk.intersect(tk).count(), tk.except(lk).count(),
+        lk.except(tk).count())
+      finally { tk.unpersist(); lk.unpersist() }
     val legacyRows = legacy.count()
     val trialRows = trial.count()
-    val legacyMembers = lk.count()
-    val trialMembers = tk.count()
-    val matched = lk.intersect(tk).count()
-    val trialOnly = tk.except(lk).count()
-    val legacyOnly = lk.except(tk).count()
-    lk.unpersist(); tk.unpersist()
     val commonColumns = (legacy.columns.toSet & trial.columns.toSet).toSeq.sorted
     def row(name: String, status: String, lv: String, tv: String,
             msg: String): Map[String, String] =

@@ -75,25 +75,59 @@ object GoldMarts {
       .withColumn("snapshot_date", lit(snapshotDate))
 
     // keep only current members when any row is flagged current (reference
-    // applies the mask only when it selects something). Cache before the
-    // existence probe — without it the 4-join roster plan evaluates twice
-    // (once for the probe, once for the output).
-    roster.cache()
-    val anyCurrent = roster.filter(Fns.truthy(col("is_current_member"))).limit(1).count() > 0
-    val filtered = if (anyCurrent) roster.filter(Fns.truthy(col("is_current_member"))) else roster
+    // applies the mask only when it selects something). The probe reads
+    // `members` alone: every frame joined onto it is unique per
+    // member_code (row_number = 1 or groupBy), so the left joins keep
+    // exactly the members' rows and flags, and the four-join roster plan
+    // runs once, for the output.
+    val isCurrent = Fns.truthy(col("is_current_member"))
+    val filtered = if (members.filter(isCurrent).isEmpty) roster else roster.filter(isCurrent)
     val spec = TableRegistry.specs("gold_current_members")
     orderedDedupe(TableSpec.conform(filtered, spec), spec.primaryKey,
       Seq(col("member_code").asc))
   }
 
-  /** Speech metrics per (member, year): count + distinct debate days
-    * (table_gold_member_activity_yearly.py:154-168).
+  /** Speeches with a non-blank speaker and a parseable debate date `d`:
+    * the rows every speech aggregate counts (…:154-168).
     */
-  def speechMetrics(speeches: DataFrame): DataFrame =
+  private def datedSpeeches(speeches: DataFrame): DataFrame =
     speeches
       .withColumn("member_code", trim(col("speaker_member_code")))
       .withColumn("d", Fns.parseIsoDate(col("debate_date")))
       .filter(nonBlank(col("member_code")) && col("d").isNotNull)
+
+  /** Member votes with a non-blank member and a parseable division date
+    * `d` (…:171-188).
+    */
+  private def datedVotes(memberVotes: DataFrame): DataFrame =
+    memberVotes
+      .withColumn("member_code", trim(col("member_code")))
+      .withColumn("d", Fns.parseIsoDate(col("division_date")))
+      .filter(nonBlank(col("member_code")) && col("d").isNotNull)
+
+  /** Division rows with a parseable date `d` (…:191-203); falls back to
+    * member_votes when the divisions input is empty or lacks dates.
+    */
+  private def datedDivisions(divisions: DataFrame, memberVotes: DataFrame): DataFrame = {
+    val source =
+      if (divisions.columns.contains("division_date") && !divisions.isEmpty) divisions
+      else memberVotes
+    source
+      .withColumn("d", Fns.parseIsoDate(col("division_date")))
+      .filter(col("d").isNotNull)
+  }
+
+  private def divisionsPerYear(dated: DataFrame): DataFrame =
+    dated
+      .withColumn("year", year(col("d")).cast("string"))
+      .groupBy("year")
+      .agg(countDistinct(col("division_id")).as("division_count"))
+
+  /** Speech metrics per (member, year): count + distinct debate days
+    * (table_gold_member_activity_yearly.py:154-168).
+    */
+  def speechMetrics(speeches: DataFrame): DataFrame =
+    datedSpeeches(speeches)
       .withColumn("year", year(col("d")).cast("string"))
       .groupBy("member_code", "year")
       .agg(count(col("speech_id")).as("speech_count"),
@@ -103,10 +137,7 @@ object GoldMarts {
     * (table_gold_member_activity_yearly.py:171-188).
     */
   def voteMetrics(memberVotes: DataFrame): DataFrame =
-    memberVotes
-      .withColumn("member_code", trim(col("member_code")))
-      .withColumn("d", Fns.parseIsoDate(col("division_date")))
-      .filter(nonBlank(col("member_code")) && col("d").isNotNull)
+    datedVotes(memberVotes)
       .withColumn("year", year(col("d")).cast("string"))
       .withColumn("vote_kind", voteKindContains(col("vote_code"), col("vote_label")))
       .groupBy("member_code", "year")
@@ -118,17 +149,8 @@ object GoldMarts {
   /** Distinct divisions per year (…:191-203); falls back to member_votes
     * when the divisions input lacks dates.
     */
-  def divisionCounts(divisions: DataFrame, memberVotes: DataFrame): DataFrame = {
-    val source =
-      if (divisions.columns.contains("division_date") && !divisions.isEmpty) divisions
-      else memberVotes
-    source
-      .withColumn("d", Fns.parseIsoDate(col("division_date")))
-      .filter(col("d").isNotNull)
-      .withColumn("year", year(col("d")).cast("string"))
-      .groupBy("year")
-      .agg(countDistinct(col("division_id")).as("division_count"))
-  }
+  def divisionCounts(divisions: DataFrame, memberVotes: DataFrame): DataFrame =
+    divisionsPerYear(datedDivisions(divisions, memberVotes))
 
   /** Dense rank per year on the metric VALUE only — ties share a rank
     * regardless of tie-break columns (…:248-261; SURVEY §7.4.6).
@@ -152,7 +174,8 @@ object GoldMarts {
                            snapshotDate: String): DataFrame = {
     val sm = speechMetrics(speeches)
     val vm = voteMetrics(memberVotes)
-    val dc = divisionCounts(divisions, memberVotes)
+    val divisionRows = datedDivisions(divisions, memberVotes)
+    val dc = divisionsPerYear(divisionRows)
 
     val memberCodes = currentMembers.select(trim(col("member_code")).as("member_code"))
       .unionByName(sm.select("member_code")).unionByName(vm.select("member_code"))
@@ -160,8 +183,13 @@ object GoldMarts {
     val years = sm.select("year").unionByName(vm.select("year"))
       .unionByName(dc.select("year"))
       .filter(nonBlank(col("year"))).distinct()
+    // every dated row yields a non-blank year, so `years` is empty exactly
+    // when all three dated inputs are: probe those scans, not the
+    // aggregates built on them
+    val noYears = datedSpeeches(speeches).isEmpty && datedVotes(memberVotes).isEmpty &&
+      divisionRows.isEmpty
     val yearsOrDefault =
-      if (years.isEmpty) years.sparkSession.sql(s"SELECT substr('$snapshotDate',1,4) AS year")
+      if (noYears) years.sparkSession.sql(s"SELECT substr('$snapshotDate',1,4) AS year")
       else years
 
     val grid = memberCodes.crossJoin(yearsOrDefault)
@@ -195,18 +223,12 @@ object GoldMarts {
     */
   def memberActivityMonthly(speeches: DataFrame, memberVotes: DataFrame,
                             snapshotDate: String): DataFrame = {
-    val sm = speeches
-      .withColumn("member_code", trim(col("speaker_member_code")))
-      .withColumn("d", Fns.parseIsoDate(col("debate_date")))
-      .filter(nonBlank(col("member_code")) && col("d").isNotNull)
+    val sm = datedSpeeches(speeches)
       .withColumn("year_month", date_format(col("d"), "yyyy-MM"))
       .groupBy("member_code", "year_month")
       .agg(count(col("speech_id")).as("speech_count"),
         countDistinct(col("d")).as("debate_day_count"))
-    val vm = memberVotes
-      .withColumn("member_code", trim(col("member_code")))
-      .withColumn("d", Fns.parseIsoDate(col("division_date")))
-      .filter(nonBlank(col("member_code")) && col("d").isNotNull)
+    val vm = datedVotes(memberVotes)
       .withColumn("year_month", date_format(col("d"), "yyyy-MM"))
       .groupBy("member_code", "year_month")
       .agg(count(col("member_vote_id")).as("votes_cast_count"))
@@ -234,18 +256,12 @@ object GoldMarts {
     val lookup = roster.select("member_code", "constituency_name")
       .filter(nonBlank(col("member_code"))).dropDuplicates("member_code")
 
-    val sp = speeches
-      .withColumn("member_code", trim(col("speaker_member_code")))
-      .withColumn("d", Fns.parseIsoDate(col("debate_date")))
-      .filter(nonBlank(col("member_code")) && col("d").isNotNull)
+    val sp = datedSpeeches(speeches)
       .withColumn("year", year(col("d")).cast("string"))
       .join(broadcast(lookup), Seq("member_code"))
       .groupBy("constituency_name", "year")
       .agg(count(lit(1)).as("speech_count"))
-    val mv = memberVotes
-      .withColumn("member_code", trim(col("member_code")))
-      .withColumn("d", Fns.parseIsoDate(col("division_date")))
-      .filter(nonBlank(col("member_code")) && col("d").isNotNull)
+    val mv = datedVotes(memberVotes)
       .withColumn("year", year(col("d")).cast("string"))
       .join(broadcast(lookup), Seq("member_code"))
       .groupBy("constituency_name", "year")

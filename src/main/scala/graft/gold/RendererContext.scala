@@ -145,66 +145,73 @@ object RendererContext {
                        debateIssues: DataFrame, constituencyImages: DataFrame,
                        constituencyName: String, requestedMember: Option[String] = None,
                        issueLimit: Int = 8): PostContext = {
-    val mt = buildMemberTable(members, photos, summaries).cache()
-    val conKey = normalizeNameStr(constituencyName)
+    // every frame cached here is released before the call returns, on
+    // the failure path too; dependents go first so no release re-plans
+    // a cache that is about to go as well
+    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
+    try {
+      val mt = cache(buildMemberTable(members, photos, summaries))
+      val conKey = normalizeNameStr(constituencyName)
 
-    val inCon = mt.filter(col("constituency_key") === conKey).cache()
-    if (inCon.isEmpty) {
-      val sample = mt.select("constituency").na.drop().distinct()
-        .orderBy("constituency").limit(20).collect().map(_.getString(0)).toSeq
-      throw new RuntimeException(
-        s"No members matched constituency '$constituencyName'. Sample available constituencies: $sample")
-    }
+      val inCon = cache(mt.filter(col("constituency_key") === conKey))
+      if (inCon.isEmpty) {
+        val sample = mt.select("constituency").na.drop().distinct()
+          .orderBy("constituency").limit(20).collect().map(_.getString(0)).toSeq
+        throw new RuntimeException(
+          s"No members matched constituency '$constituencyName'. Sample available constituencies: $sample")
+      }
 
-    val recs = issueRecords(debateIssues, mt).cache()
-    val conCounts = recs.filter(col("constituency_key") === conKey).groupBy("issue")
-      .agg(count(lit(1)).as("count")).cache()
-    val speechCounts = recs.filter(col("constituency_key") === conKey)
-      .groupBy("member_key").agg(count(lit(1)).as("speech_count"))
+      val recs = cache(issueRecords(debateIssues, mt))
+      val conCounts = cache(recs.filter(col("constituency_key") === conKey).groupBy("issue")
+        .agg(count(lit(1)).as("count")))
+      val speechCounts = recs.filter(col("constituency_key") === conKey)
+        .groupBy("member_key").agg(count(lit(1)).as("speech_count"))
 
-    val withCounts = inCon.join(broadcast(speechCounts), Seq("member_key"), "left")
-      .withColumn("speech_count", coalesce(col("speech_count"), lit(0L)))
+      val withCounts = inCon.join(broadcast(speechCounts), Seq("member_key"), "left")
+        .withColumn("speech_count", coalesce(col("speech_count"), lit(0L)))
 
-    val requestedKey = requestedMember.map(normalizeNameStr).filter(_.nonEmpty)
-    val selected = requestedKey
-      .flatMap(k => withCounts.filter(col("member_key") === k).limit(1).collect().headOption)
-      .getOrElse(withCounts.orderBy(col("speech_count").desc, col("full_name").asc)
-        .limit(1).collect().head)
+      val requestedKey = requestedMember.map(normalizeNameStr).filter(_.nonEmpty)
+      val selected = requestedKey
+        .flatMap(k => withCounts.filter(col("member_key") === k).limit(1).collect().headOption)
+        .getOrElse(withCounts.orderBy(col("speech_count").desc, col("full_name").asc)
+          .limit(1).collect().head)
 
-    val memberKey = selected.getAs[String]("member_key")
-    val memberCounts = recs.filter(col("member_key") === memberKey).groupBy("issue")
-      .agg(count(lit(1)).as("count")).cache()
+      val memberKey = selected.getAs[String]("member_key")
+      val memberCounts = recs.filter(col("member_key") === memberKey).groupBy("issue")
+        .agg(count(lit(1)).as("count"))
 
-    val conIssues = mostCommon(conCounts, issueLimit)
-    val memIssues = mostCommon(memberCounts, issueLimit)
+      val conIssues = mostCommon(conCounts, issueLimit)
+      val memIssues = mostCommon(memberCounts, issueLimit)
 
-    val partyCount = inCon.select("party").na.drop().filter(trim(col("party")) =!= "")
-      .distinct().count()
-    val conSpeechTotal = conCounts.agg(coalesce(sum("count"), lit(0L))).collect().head.getLong(0)
+      val partyCount = inCon.select("party").na.drop().filter(trim(col("party")) =!= "")
+        .distinct().count()
+      val conSpeechTotal = conCounts.agg(coalesce(sum("count"), lit(0L))).collect().head.getLong(0)
 
-    def opt(r: org.apache.spark.sql.Row, name: String): Option[String] =
-      Option(r.getAs[String](name)).map(_.trim).filter(_.nonEmpty)
+      def opt(r: org.apache.spark.sql.Row, name: String): Option[String] =
+        Option(r.getAs[String](name)).map(_.trim).filter(_.nonEmpty)
 
-    PostContext(
-      constituency = ConstituencyContext(
-        name = constituencyName,
-        memberCount = inCon.count(),
-        partyCount = partyCount,
-        speechCount = conSpeechTotal,
-        imageUrl = pickConstituencyImage(constituencyImages, constituencyName),
-        topIssueLabel = conIssues.headOption.map(_.label).getOrElse(noIssue)),
-      member = MemberContext(
-        fullName = opt(selected, "full_name").getOrElse("Unknown member"),
-        party = opt(selected, "party").getOrElse("Party unavailable"),
-        constituency = opt(selected, "constituency").getOrElse(constituencyName),
-        photoUrl = if (selected.schema.fieldNames.contains("photo_url")) opt(selected, "photo_url") else None,
-        background = (if (selected.schema.fieldNames.contains("background")) opt(selected, "background") else None)
-          .getOrElse("Background summary unavailable."),
-        speechCount = selected.getAs[Long]("speech_count"),
-        topIssueLabel = memIssues.headOption.map(_.label).getOrElse(noIssue),
-        memberKey = memberKey),
-      issues = conIssues,
-      memberIssues = memIssues)
+      PostContext(
+        constituency = ConstituencyContext(
+          name = constituencyName,
+          memberCount = inCon.count(),
+          partyCount = partyCount,
+          speechCount = conSpeechTotal,
+          imageUrl = pickConstituencyImage(constituencyImages, constituencyName),
+          topIssueLabel = conIssues.headOption.map(_.label).getOrElse(noIssue)),
+        member = MemberContext(
+          fullName = opt(selected, "full_name").getOrElse("Unknown member"),
+          party = opt(selected, "party").getOrElse("Party unavailable"),
+          constituency = opt(selected, "constituency").getOrElse(constituencyName),
+          photoUrl = if (selected.schema.fieldNames.contains("photo_url")) opt(selected, "photo_url") else None,
+          background = (if (selected.schema.fieldNames.contains("background")) opt(selected, "background") else None)
+            .getOrElse("Background summary unavailable."),
+          speechCount = selected.getAs[Long]("speech_count"),
+          topIssueLabel = memIssues.headOption.map(_.label).getOrElse(noIssue),
+          memberKey = memberKey),
+        issues = conIssues,
+        memberIssues = memIssues)
+    } finally cached.reverseIterator.foreach(_.unpersist())
   }
 
   /** context.py:26-34 pick_constituency_image: exact or either-way

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Declarative data-quality checks (SURVEY §2.6 A11, reference per-table
   * `_dq_results` + contracts.py:63-154). One pass over a cached DataFrame
@@ -41,22 +42,26 @@ object DqOps {
     val missing = contract.requiredCols.filterNot(cols.contains)
     val colCheck = ("required_columns", missing.isEmpty, missing.mkString(","))
 
-    val needed = (contract.pk ++ contract.nonNullCols).distinct.filter(cols.contains)
-    val cnt = df.cache()
-    val rowCount = cnt.count()
-    val rowCheck = ("min_rows", rowCount >= contract.minRows, s"$rowCount")
+    // cache for the several checks below unless the caller already holds
+    // a persist of this frame; release only what this call persisted
+    val own = df.storageLevel == StorageLevel.NONE
+    val cnt = if (own) df.cache() else df
+    try {
+      val rowCount = cnt.count()
+      val rowCheck = ("min_rows", rowCount >= contract.minRows, s"$rowCount")
 
-    val pkChecks = if (contract.pk.nonEmpty && contract.pk.forall(cols.contains)) {
-      val dups = rowCount - cnt.select(contract.pk.map(col): _*).distinct().count()
-      val blanks = cnt.filter(contract.pk.map(c => col(c).isNull || trim(col(c).cast("string")) === "")
-        .reduce(_ || _)).count()
-      Seq(("pk_unique", dups == 0, s"$dups"), ("pk_nonblank", blanks == 0, s"$blanks"))
-    } else Nil
+      val pkChecks = if (contract.pk.nonEmpty && contract.pk.forall(cols.contains)) {
+        val dups = rowCount - cnt.select(contract.pk.map(col): _*).distinct().count()
+        val blanks = cnt.filter(contract.pk.map(c => col(c).isNull || trim(col(c).cast("string")) === "")
+          .reduce(_ || _)).count()
+        Seq(("pk_unique", dups == 0, s"$dups"), ("pk_nonblank", blanks == 0, s"$blanks"))
+      } else Nil
 
-    val nnChecks = contract.nonNullCols.filter(cols.contains).map { c =>
-      val nulls = cnt.filter(col(c).isNull).count()
-      (s"nonnull_$c", nulls == 0, s"$nulls")
-    }
-    Seq(colCheck, rowCheck) ++ pkChecks ++ nnChecks
+      val nnChecks = contract.nonNullCols.filter(cols.contains).map { c =>
+        val nulls = cnt.filter(col(c).isNull).count()
+        (s"nonnull_$c", nulls == 0, s"$nulls")
+      }
+      Seq(colCheck, rowCheck) ++ pkChecks ++ nnChecks
+    } finally if (own) cnt.unpersist()
   }
 }

@@ -37,24 +37,27 @@ object ContractOps {
       // embedded newlines parse as one record, as pandas read_csv does
       val df = spark.read.option("header", "true")
         .option("multiLine", "true").option("escape", "\"")
-        .csv(s"$storeRoot/$resolved").cache()
+        .csv(s"$storeRoot/$resolved")
 
       val cols = df.columns.toSet
       val missingColumns = contract.requiredColumns.filterNot(cols).sorted
       val missingPk = contract.primaryKey.filterNot(cols).sorted
-      val rowCount = df.count()
-      val (dupCount: Long, blankPkRows: Long) =
+      val (rowCount: Long, dupCount: Long, blankPkRows: Long) =
         if (contract.primaryKey.nonEmpty && missingPk.isEmpty) {
-          // pandas duplicated(keep=False).sum() counts EVERY row of a
-          // duplicated group
-          val dups = df.groupBy(contract.primaryKey.map(col): _*)
-            .agg(count(lit(1)).as("n")).filter(col("n") > 1)
-            .agg(coalesce(sum("n"), lit(0L))).collect().head.getLong(0)
-          val blank = df.filter(
-            contract.primaryKey.map(c => trim(coalesce(col(c), lit(""))) === "")
-              .reduce(_ || _)).count()
-          (dups, blank)
-        } else (0L, 0L)
+          // one query: per-key group sizes, then row / duplicate / blank
+          // sums. Blankness is a function of the key, so it is constant
+          // within a group. pandas duplicated(keep=False).sum() counts
+          // EVERY row of a duplicated group
+          val blank = contract.primaryKey
+            .map(c => trim(coalesce(col(c), lit(""))) === "").reduce(_ || _)
+          val r = df.groupBy(contract.primaryKey.map(col): _*)
+            .agg(count(lit(1)).as("n"), max(blank).as("blank"))
+            .agg(coalesce(sum("n"), lit(0L)),
+              coalesce(sum(when(col("n") > 1, col("n"))), lit(0L)),
+              coalesce(sum(when(col("blank"), col("n"))), lit(0L)))
+            .collect().head
+          (r.getLong(0), r.getLong(1), r.getLong(2))
+        } else (df.count(), 0L, 0L)
 
       val ageDays = store.lastModified(resolved).map { ms =>
         val modifiedDate = Instant.ofEpochMilli(ms).atZone(ZoneOffset.UTC).toLocalDate

@@ -61,22 +61,24 @@ object SilverBuilder {
       case _ => MergeOps.snapshotReplace(conformed)
     }
 
-    // one cached pass feeds DQ and writes
-    merged.cache()
-    val dqRow = DqOps.summary(merged, spec.primaryKey, spec.columns).collect().head
-    val rowCount = dqRow.getAs[Long]("row_count")
-    val dqStatus =
-      if (dqRow.getAs[Long]("pk_duplicate_count") == 0 &&
-        dqRow.getAs[Long]("pk_blank_count") == 0 && rowCount > 0) "pass" else "fail"
-
-    // write csv + parquet into the immutable batch location
     val csvKey = s"latest/csv/${spec.name}.csv"
     val parquetKey = latestKey
-    val csvBatch = store.batchKeyForProductionKey(csvKey, batchId)
-    val parquetBatch = store.batchKeyForProductionKey(parquetKey, batchId)
-    TableIO.writeCsv(merged, s"$storeRoot/$csvBatch")
-    TableIO.writeParquet(merged, s"$storeRoot/$parquetBatch")
-    merged.unpersist()
+
+    // one cached pass feeds DQ and writes; released on every path, a
+    // failed write included
+    merged.cache()
+    val (rowCount, dqStatus) = try {
+      val dqRow = DqOps.summary(merged, spec.primaryKey, spec.columns).collect().head
+      val rowCount = dqRow.getAs[Long]("row_count")
+      val dqStatus =
+        if (dqRow.getAs[Long]("pk_duplicate_count") == 0 &&
+          dqRow.getAs[Long]("pk_blank_count") == 0 && rowCount > 0) "pass" else "fail"
+
+      // write csv + parquet into the immutable batch location
+      TableIO.writeCsv(merged, s"$storeRoot/${store.batchKeyForProductionKey(csvKey, batchId)}")
+      TableIO.writeParquet(merged, s"$storeRoot/${store.batchKeyForProductionKey(parquetKey, batchId)}")
+      (rowCount, dqStatus)
+    } finally merged.unpersist()
 
     store.recordBatchTable(batchId, spec.name, rowCount, dqStatus,
       spec.primaryKey, spec.columns, Seq(csvKey, parquetKey))

@@ -168,4 +168,162 @@ class CacheHygieneSpec extends SparkSpec {
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"incrementalDedupToParquet leaked cached frames with RDD ids $leaked")
   }
+
+  /** Fails when `body` leaves a cached RDD behind. Id SETS, not counts,
+    * for the reason given above.
+    */
+  private def assertNoLeak(label: String)(body: => Unit): Unit = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    body
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"$label leaked cached frames with RDD ids $leaked")
+  }
+
+  test("GoldPhase.run with a materializing sink leaves no cache behind") {
+    val members = Seq(
+        ("hyg-m1", "Alice A", "true", "FF", "Dublin", "34"),
+        ("hyg-m2", "Bob B", "false", "FG", "Cork", "34"))
+      .toDF("member_code", "full_name", "is_current_member",
+        "latest_party_name", "latest_constituency_name", "latest_house_no")
+    val memberships = Seq(("ms1", "hyg-m1", "34", "2024-01-01", "", "true"))
+      .toDF("membership_id", "member_code", "house_no", "membership_start", "membership_end", "is_current")
+    val parties = Seq(("p1", "hyg-m1", "FF", "2024-01-01", "", "true"))
+      .toDF("member_party_id", "member_code", "party_name", "party_start", "party_end", "is_current")
+    val constituencies = Seq(("c1", "hyg-m1", "Dublin Bay", "2024-01-01", "", "true"))
+      .toDF("member_constituency_id", "member_code", "constituency_name", "represent_start", "represent_end", "is_current")
+    val offices = Seq(("o1", "hyg-m1", "Whip", "2024-01-01", "", "true"))
+      .toDF("member_office_id", "member_code", "office_name", "office_start", "office_end", "is_current")
+    val speeches = Seq(("hyg-s1", "hyg-m1", "2024-02-01", "a"))
+      .toDF("speech_id", "speaker_member_code", "debate_date", "speech_text")
+    val votes = Seq(("hyg-v1", "hyg-m1", "2024-02-05", "ta", "Tá", "hyg-d1"))
+      .toDF("member_vote_id", "member_code", "division_date", "vote_code", "vote_label", "division_id")
+    val divisions = Seq(("hyg-d1", "2024-02-05")).toDF("division_id", "division_date")
+    assertNoLeak("GoldPhase.run") {
+      graft.gold.GoldPhase.run(graft.gold.GoldPhase.Inputs(members, memberships,
+          parties, constituencies, offices, speeches, votes, divisions, "2024-12-31")) {
+        (_, df) => df.count(); df
+      }
+    }
+  }
+
+  test("ContractOps.validateContractSet leaves no cache behind") {
+    import graft.orchestrate.ContractOps
+    val root = java.nio.file.Files.createTempDirectory("graft_cachehygiene_contracts").toString
+    val store = graft.io.BatchStore.local(root)
+    def put(key: String, body: String): Unit = {
+      val path = java.nio.file.Paths.get(root, store.batchKeyForProductionKey(key, "b1"))
+      java.nio.file.Files.createDirectories(path.getParent)
+      java.nio.file.Files.write(path, body.getBytes("UTF-8"))
+    }
+    put("compat/hygiene/a.csv", "member_code,full_name\nh1,One\nh2,Two\n")
+    put("compat/hygiene/b.csv", "member_code,year\nh1,2024\nh1,2024\n")
+    store.putJson(store.productionPointerKey, Map[String, Any]("mode" -> "batch", "batch_id" -> "b1"))
+    val contracts = Map(
+      "a" -> ContractOps.DatasetContract("a", "compat/hygiene/a.csv",
+        Seq("member_code"), Seq("member_code")),
+      "b" -> ContractOps.DatasetContract("b", "compat/hygiene/b.csv",
+        Seq("member_code"), Seq("member_code", "year")))
+    assertNoLeak("ContractOps.validateContractSet") {
+      val res = ContractOps.validateContractSet(spark, store, root, contracts, Nil,
+        java.time.LocalDate.now())
+      assert(res("dataset_count") == 2L)
+    }
+  }
+
+  test("SilverBuilder.build releases its merge cache, also when a write fails") {
+    import graft.operators.FlattenOps.{FieldSpec, FlattenSpec}
+    import graft.silver.SilverBuilder
+    import graft.sources.RestSource
+    val spec = graft.core.TableRegistry.specs("silver_members")
+    val flattenSpec = FlattenSpec(wrapperKeys = Seq("member"), fields = Seq(
+      FieldSpec("member_code", Seq("memberCode")),
+      FieldSpec("full_name", Seq("fullName")),
+      FieldSpec("is_current_member", Seq("isCurrent"), default = "false")))
+    def fetch() = {
+      val transport = new RestSource.HttpTransport {
+        private var served = false
+        def get(url: String, params: Map[String, String]): RestSource.HttpResult = {
+          val body = if (served) """{"results":[]}"""
+            else """{"results":[{"member":{"memberCode":"hyg1","fullName":"Hy Giene"}}]}"""
+          served = true
+          RestSource.HttpResult(200, body)
+        }
+      }
+      new RestSource.Client(transport, "https://api.test", sleeper = _ => ())
+        .getPaginated("/members", Map("limit" -> "10"))
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft_cachehygiene_silver").toString
+    val store = graft.io.BatchStore.local(root)
+    assertNoLeak("SilverBuilder.build") {
+      val r = SilverBuilder.build(spark, store, root, "b1", spec, flattenSpec,
+        () => fetch(), snapshotDate = "2026-01-01")
+      assert(r.ok && r.rowCount == 1)
+    }
+    // a store root under a regular file: the DQ pass materializes the
+    // cache, then the csv write cannot create its directory
+    val notADir = java.nio.file.Files.createTempFile("graft_cachehygiene_file", ".txt").toString
+    assertNoLeak("SilverBuilder.build (failing write)") {
+      intercept[Exception] {
+        SilverBuilder.build(spark, store, s"$notADir/root", "b2", spec, flattenSpec,
+          () => fetch(), snapshotDate = "2026-01-01")
+      }
+    }
+  }
+
+  test("compat and review comparisons leave no cache behind") {
+    import graft.compat.{CompatOps, ReviewOps}
+    val legacy = (1 to 40).map(i => (s"hyg$i", s"Name $i")).toDF("member_code", "full_name")
+    val unified = (3 to 42).map(i => (s"hyg$i", s"Name $i", "x")).toDF("member_code", "member_name", "x")
+    assertNoLeak("CompatOps.compare") {
+      CompatOps.compare("roster", legacy, unified, "member_code", "member_code",
+        CompatOps.ComparisonThreshold(5, 5, 10.0, 90.0))
+    }
+    assertNoLeak("ReviewOps.mismatchSummary") {
+      assert(ReviewOps.mismatchSummary(legacy, unified, "roster")("matched_member_count") == 38L)
+    }
+    assertNoLeak("ReviewOps.comparePair") {
+      assert(ReviewOps.comparePair("roster", "lk", "uk", Some(legacy), Some(unified),
+        "member_code", "member_code")("matched_key_count") == "38")
+    }
+    assertNoLeak("ReviewOps.mismatchDetail + action") {
+      assert(ReviewOps.mismatchDetail(legacy, unified, "roster").collect().length == 4)
+    }
+  }
+
+  test("DqOps.validate releases its own cache and keeps the caller's") {
+    import graft.operators.DqOps
+    val df = Seq(("hyg-k1", "x"), ("hyg-k1", "y"), ("hyg-k2", null)).toDF("pk", "v")
+    val contract = DqOps.Contract(minRows = 1, pk = Seq("pk"), nonNullCols = Seq("v"))
+    assertNoLeak("DqOps.validate") { DqOps.validate(df, contract) }
+    df.cache()
+    try {
+      DqOps.validate(df, contract)
+      assert(df.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "validate released a persist the caller holds")
+    } finally df.unpersist()
+  }
+
+  test("RendererContext.buildPostContext releases its caches, also when it throws") {
+    import graft.gold.RendererContext
+    val members = Seq(
+        ("Hy Giene", "Hygiene North", "Clean Party", "HY1"),
+        ("Sani Tary", "Hygiene North", "Clean Party", "HY2"))
+      .toDF("full_name", "constituency", "party", "member_code")
+    val photos = Seq(("HY1", "Hy Giene", null: String)).toDF("member_code", "full_name", "photo_url")
+    val summaries = Seq(("HY1", "Hy Giene", "Background.")).toDF("member_code", "full_name", "background")
+    val issues = Seq(("Hy Giene", "Water"), ("Hy Giene", "Water"), ("Sani Tary", "Waste"))
+      .toDF("Speaker Name", "issue")
+    val images = Seq(("hygiene-north.png", "k", null: String)).toDF("filename", "s3_key", "url")
+    assertNoLeak("RendererContext.buildPostContext") {
+      val ctx = RendererContext.buildPostContext(members, photos, summaries, issues, images,
+        constituencyName = "Hygiene North")
+      assert(ctx.constituency.speechCount == 3)
+    }
+    assertNoLeak("RendererContext.buildPostContext (unknown constituency)") {
+      intercept[RuntimeException] {
+        RendererContext.buildPostContext(members, photos, summaries, issues, images,
+          constituencyName = "Atlantis")
+      }
+    }
+  }
 }

@@ -60,11 +60,40 @@ class ContractOpsSpec extends SparkSpec {
       asOf = LocalDate.now())
     assert(result("status") == "fail")
     assert(result("missing_columns").asInstanceOf[Seq[String]].contains("full_name"))
-    assert(result("duplicate_primary_key_rows").asInstanceOf[Long] > 0)
+    // pandas duplicated(keep=False): both m1 rows count
+    assert(result("duplicate_primary_key_rows") == 2L)
     val age = result("age_days").asInstanceOf[Long]
     assert(age > contract.maximumAgeDays)
     val errors = result("errors").asInstanceOf[Seq[String]]
     assert(errors.exists(_.contains("row_count")) || result("row_count") == 2L)
+  }
+
+  test("blank primary-key rows count null and whitespace-only keys") {
+    val (store, root) = newStore()
+    writeCsv(root, store.batchKeyForProductionKey(contract.logicalKey, "b1"),
+      "member_code,full_name\n,Null Key\n\"  \",Space Key\nm1,One\nm2,Two\n")
+    store.putJson(store.productionPointerKey,
+      Map[String, Any]("mode" -> "batch", "batch_id" -> "b1"))
+    val result = ContractOps.validateDatasetContract(spark, store, root, contract,
+      asOf = LocalDate.now())
+    assert(result("status") == "fail")
+    assert(result("row_count") == 4L)
+    assert(result("blank_primary_key_rows") == 2L)
+    assert(result("duplicate_primary_key_rows") == 0L)
+  }
+
+  test("a missing primary-key column still reports row_count") {
+    val (store, root) = newStore()
+    writeCsv(root, store.batchKeyForProductionKey(contract.logicalKey, "b1"),
+      "full_name\nOne\nTwo\nThree\n")
+    store.putJson(store.productionPointerKey,
+      Map[String, Any]("mode" -> "batch", "batch_id" -> "b1"))
+    val result = ContractOps.validateDatasetContract(spark, store, root, contract,
+      asOf = LocalDate.now())
+    assert(result("status") == "fail")
+    assert(result("row_count") == 3L)
+    assert(result("missing_primary_key_columns") == Seq("member_code"))
+    assert(result("duplicate_primary_key_rows") == 0L && result("blank_primary_key_rows") == 0L)
   }
 
   test("candidate read never falls back to the logical production object") {

@@ -103,6 +103,56 @@ class GoldMartsSpec extends SparkSpec {
     assert(r.getAs[String]("snapshot_date") == "2024-12-31")
   }
 
+  private def rosterMembers(flags: (String, String)*): DataFrame =
+    flags.map { case (code, current) => (code, s"Name $code", current, "P", "C", "34") }
+      .toDF("member_code", "full_name", "is_current_member",
+        "latest_party_name", "latest_constituency_name", "latest_house_no")
+
+  private def noHistory(cols: String*): DataFrame =
+    Seq.empty[(String, String, String, String, String, String)].toDF(cols: _*)
+
+  private def currentOf(members: DataFrame): Set[String] =
+    GoldMarts.currentMembers(members,
+      noHistory("membership_id", "member_code", "house_no", "membership_start", "membership_end", "is_current"),
+      noHistory("member_party_id", "member_code", "party_name", "party_start", "party_end", "is_current"),
+      noHistory("member_constituency_id", "member_code", "constituency_name", "represent_start", "represent_end", "is_current"),
+      noHistory("member_office_id", "member_code", "office_name", "office_start", "office_end", "is_current"),
+      "2024-12-31").select("member_code").as[String].collect().toSet
+
+  test("currentMembers: no member flagged current keeps the whole roster") {
+    assert(currentOf(rosterMembers(("m1", "false"), ("m2", ""), ("m3", null))) ==
+      Set("m1", "m2", "m3"))
+    // one flagged member switches the mask on
+    assert(currentOf(rosterMembers(("m1", "false"), ("m2", "true"))) == Set("m2"))
+  }
+
+  test("memberActivityYearly: no dated activity gives one snapshot-year row per member") {
+    val sp = speeches(("s1", "", "2024-02-01", "blank speaker"), ("s2", "m1", "not-a-date", "bad date"))
+    val mv = votes(("v1", " ", "2024-02-05", "ta", "Tá"), ("v2", "m1", "", "nil", "Níl"))
+    val divisions = Seq(("div1", "not-a-date")).toDF("division_id", "division_date")
+    val out = GoldMarts.memberActivityYearly(roster("m1", "m2"), sp, mv, divisions, "2023-12-31")
+      .collect().map(r => (r.getAs[String]("member_code"), r.getAs[String]("year"),
+        r.getAs[String]("speech_count"), r.getAs[String]("votes_cast_count"),
+        r.getAs[String]("division_count")))
+    assert(out.toSet == Set(("m1", "2023", "0", "0", "0"), ("m2", "2023", "0", "0", "0")))
+    assert(out.length == 2)
+  }
+
+  test("memberActivityYearly: division_count falls back to member votes") {
+    val sp = speeches(("s1", "m1", "2024-02-01", "a"))
+    // three votes over two distinct divisions in 2024
+    val mv = votes(("v1", "m1", "2024-02-05", "ta", "Tá"), ("v2", "m1", "2024-02-06", "nil", "Níl"))
+      .unionByName(Seq(("v3", "m2", "2024-02-05", "ta", "Tá", "d_v1"))
+        .toDF("member_vote_id", "member_code", "division_date", "vote_code", "vote_label", "division_id"))
+    def divisionCounts(divisions: DataFrame): Set[String] =
+      GoldMarts.memberActivityYearly(roster("m1", "m2"), sp, mv, divisions, "2024-12-31")
+        .select("division_count").as[String].collect().toSet
+    // empty divisions input
+    assert(divisionCounts(Seq.empty[(String, String)].toDF("division_id", "division_date")) == Set("2"))
+    // divisions without a division_date column
+    assert(divisionCounts(Seq("div1", "div2", "div3").toDF("division_id")) == Set("2"))
+  }
+
   test("memberActivityMonthly groups at year-month grain with zero-fill") {
     val sp = speeches(("s1", "m1", "2024-02-01", "a"), ("s2", "m1", "2024-03-01", "b"))
     val mv = votes(("v1", "m1", "2024-03-05", "ta", "Tá"))

@@ -398,6 +398,10 @@ object RefreshE2EMain {
     println(f"REFRESH total                        ${total}%7.2f s  (store: $root)")
     val rowsByTable = buildResults.map { case (t, r) => s"$t=${r.rowCount}" }.mkString(" ")
     println(s"REFRESH silver-rows $rowsByTable")
+    // release this driver's own cache (the current-members frame its gold
+    // sink returned); whatever is still persisted was left by engine calls
+    currentMembers.unpersist()
+    println(s"REFRESH leaked-caches ${spark.sparkContext.getPersistentRDDs.size}")
     spark.stop()
   }
 }
