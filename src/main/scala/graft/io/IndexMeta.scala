@@ -136,9 +136,8 @@ object IndexMeta {
   def listChildNames(dir: String): Seq[String] = listChildNamesVia(fs(dir), dir)
 
   /** Recursively delete `path`; false when it was already absent. The
-    * retention-GC primitive ([[graft.operators.SearchOps
-    * .prunePostingsVersions]] / [[graft.operators.VectorIndex
-    * .pruneVersions]]) — callers own the which-dirs-are-dead decision.
+    * retention-GC primitive ([[VersionedStore.pruneVersions]]) — callers
+    * own the which-dirs-are-dead decision.
     */
   def deleteTree(path: String): Boolean =
     fs(path).delete(new Path(path), true)

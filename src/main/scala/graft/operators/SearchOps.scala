@@ -197,73 +197,56 @@ object SearchOps {
 
   // ---- Persisted postings index: versioned, pointer-swapped ----------
   //
-  // The serving analog of the corpus dedup index and the vector index
-  // (same POINTER convention as operators/VectorIndex.scala): tokenize +
-  // postings-groupBy are paid once at build/append time, never at serve.
-  // All metadata (pointer, manifests, version listing) resolves through
-  // the Hadoop FileSystem API ([[graft.io.IndexMeta]]), so the index
-  // root may live on file://, hdfs:// or s3a:// beside its segments —
-  // the BatchStore convention. Layout:
-  //   root/POINTER                          (version name; atomic put —
-  //     see IndexMeta.swapVersionPointer for the per-store semantics)
-  //   root/versions/vNNNN/manifest.json     {n_docs, total_len (exact
-  //     longs), segments (paths relative to root — later versions
-  //     REFERENCE earlier versions' segments instead of copying, so an
-  //     append writes only its delta), applied_tags (idempotency ledger,
-  //     carried forward)}
-  //   root/versions/vNNNN/postings/segNNNN/ (term, doc_id, tf, dl longs)
-  //   root/versions/vNNNN/termstats/        (term, df long — the GLOBAL
-  //     per-term doc frequency, re-merged per version: df and the corpus
-  //     scalars change on every append, postings rows never do)
+  // The serving analog of the corpus dedup index and the vector index:
+  // tokenize + postings-groupBy are paid once at build/append time,
+  // never at serve. Versioning, claim-based allocation, the POINTER,
+  // the intake claim and retention are [[graft.io.VersionedStore]]'s
+  // (the `postings` instance below). Each version holds:
+  //   manifest.json     {n_docs, total_len (exact longs), segments
+  //     (paths relative to root — later versions REFERENCE earlier
+  //     versions' segments instead of copying, so an append writes only
+  //     its delta), has_tombstones, applied_tags (idempotency ledger,
+  //     carried forward)}; written last, so it marks the version complete
+  //   postings/segNNNN/ (term, doc_id, tf, dl longs)
+  //   termstats/        (term, df long — the GLOBAL per-term doc
+  //     frequency, re-merged per version: df and the corpus scalars
+  //     change on every append, postings rows never do)
+  //   tombstones/       (doc_id) deleted docs, until the next fold
   // A crash before the pointer swap leaves an unreferenced version dir —
   // inert, the old version keeps serving; re-running the append is the
   // recovery, and the applied_tags ledger makes a REPLAYED append (same
-  // tag) a no-op instead of a double-count. Concurrent mutators are
-  // fenced by an exclusive per-version-dir claim (IndexMeta.claimDir:
-  // token files + alone-or-lose listing, exclusive wherever listings
-  // reflect completed creates — local/HDFS/consistent object stores;
-  // other stores install a WriterLock adapter).
-  def postingsVersionDir(root: String, v: Int): String =
-    f"$root/versions/v$v%04d"
-
-  def postingsCurrentVersion(root: String): Option[Int] =
-    graft.io.IndexMeta.readVersionPointer(root)
-
-  def postingsIndexExists(root: String): Boolean =
-    postingsCurrentVersion(root).isDefined
-
-  /** Allocate-and-claim the next version number. Starts at max existing
-    * dir + 1, not pointer + 1 — a torn (unswapped) version dir must
-    * never be silently adopted OR overwritten mid-recovery — and claims
-    * the dir atomically, stepping past numbers a concurrent writer got
-    * to first (two appends racing, or a fold racing the streaming sink,
-    * must never interleave writes into one version dir). `v\d{4,}`:
-    * `%04d` pads but never truncates, so v10000 lists as "v10000" —
-    * a 4-digit-only match would orphan every version past v9999 and
-    * make this allocator overwrite the LIVE version forever after.
-    */
-  private def claimNextPostingsVersion(root: String): Int = {
-    val vs = graft.io.IndexMeta.listChildNames(s"$root/versions")
-      .filter(_.matches("v\\d{4,}")).map(_.stripPrefix("v").toInt)
-    var v = (vs :+ 0).max + 1
-    var attempts = 0
-    while (!graft.io.IndexMeta.claimDir(postingsVersionDir(root, v))) {
-      v += 1; attempts += 1
-      require(attempts < 1000,
-        s"could not claim a postings version dir under $root after 1000 tries")
+  // tag) a no-op instead of a double-count.
+  private object postings extends graft.io.VersionedStore {
+    protected val family = "postings index"
+    def exists(dir: String): Boolean =
+      graft.io.IndexMeta.exists(s"$dir/manifest.json")
+    // replays ride the manifest's applied_tags, not ingest segments
+    override protected def segmentLedger = false
+    // appends and deletes carry segments by reference, so a kept
+    // manifest may point into far older version dirs
+    override protected def references(root: String, v: Int): Seq[String] = {
+      val dir = versionDir(root, v)
+      if (exists(dir)) strings(readManifest(dir), "segments") else Nil
     }
-    v
+    def segment(v: Int): String = inVersion(v, f"postings/seg$v%04d")
   }
 
-  private def postingsSwapPointer(root: String, v: Int): Unit =
-    graft.io.IndexMeta.swapVersionPointer(root, v)
+  def postingsVersionDir(root: String, v: Int): String = postings.versionDir(root, v)
 
-  private def readPostingsManifest(root: String, v: Int): Map[String, Any] =
+  def postingsCurrentVersion(root: String): Option[Int] = postings.currentVersion(root)
+
+  def postingsIndexExists(root: String): Boolean = postingsCurrentVersion(root).isDefined
+
+  private def readManifest(dir: String): Map[String, Any] =
     graft.io.StableJson.parse(graft.io.IndexMeta.readString(
-      s"${postingsVersionDir(root, v)}/manifest.json").getOrElse(
-      throw new IllegalStateException(
-        s"missing manifest for postings version v$v at $root")))
+      s"$dir/manifest.json").getOrElse(
+      throw new IllegalStateException(s"missing postings manifest at $dir")))
       .asInstanceOf[Map[String, Any]]
+
+  private def strings(m: Map[String, Any], key: String): Seq[String] =
+    m(key).asInstanceOf[Seq[_]].map(String.valueOf)
+
+  private def long(m: Map[String, Any], key: String): Long = m(key).toString.toLong
 
   /** Tokenize one doc batch into (postings delta, n_docs, total_len). */
   private def postingsDelta(docs: DataFrame, textCol: String,
@@ -291,8 +274,8 @@ object SearchOps {
                                    nDocs: Long, totalLen: Long,
                                    appliedTags: Seq[String],
                                    tombstones: Option[DataFrame] = None): Unit = {
-    val vDir = postingsVersionDir(root, v)
-    val segRel = f"versions/v$v%04d/postings/seg$v%04d"
+    val vDir = postings.versionDir(root, v)
+    val segRel = postings.segment(v)
     delta.foreach(_.write.mode("overwrite").parquet(s"$root/$segRel"))
     mergedTermstats.write.mode("overwrite").parquet(s"$vDir/termstats")
     tombstones.foreach(_.write.mode("overwrite").parquet(s"$vDir/tombstones"))
@@ -306,21 +289,23 @@ object SearchOps {
   }
 
   private def readTombstones(spark: org.apache.spark.sql.SparkSession,
-                             root: String, v: Int,
-                             m: Map[String, Any]): Option[DataFrame] =
+                             dir: String, m: Map[String, Any]): Option[DataFrame] =
     if (m.get("has_tombstones").exists(_ == true))
-      Some(spark.read.parquet(s"${postingsVersionDir(root, v)}/tombstones"))
+      Some(spark.read.parquet(s"$dir/tombstones"))
     else None
+
+  /** Every segment `m` references, as one frame. */
+  private def readSegments(spark: org.apache.spark.sql.SparkSession, root: String,
+                           m: Map[String, Any]): DataFrame =
+    spark.read.parquet(strings(m, "segments").map(s => s"$root/$s"): _*)
 
   /** Build version 1 of the postings index and swap the pointer. */
   def buildPostingsIndex(docs: DataFrame, textCol: String, idCol: String,
                          root: String): Int = {
     val (post, n, l) = postingsDelta(docs, textCol, idCol)
     val ts = post.groupBy("term").agg(count(lit(1)).as("df"))
-    val v = claimNextPostingsVersion(root)
-    writePostingsVersion(root, v, Some(post), Nil, ts, n, l, Nil)
-    postingsSwapPointer(root, v)
-    v
+    postings.publish(root)((_, v) =>
+      writePostingsVersion(root, v, Some(post), Nil, ts, n, l, Nil))
   }
 
   /** Append a doc batch as a NEW version: writes only the delta segment
@@ -337,30 +322,24 @@ object SearchOps {
     * [[foldPostingsIndex]], which drops its rows for real AND clears the
     * ledger — then this append converges on exactly a fresh full build.
     *
-    * Concurrency: every mutation of the root (append, delete, fold,
-    * prune) holds the per-root intake claim
-    * ([[graft.io.IndexMeta.withIntakeClaim]]), so its whole
-    * read-manifest→write-version→swap is one atomic step — without it,
-    * an append committing between a fold's manifest read and its swap
-    * lost both its rows and its tag from the served chain (the
-    * round-17 lost-segment race, on this family as a lost DELTA). The
-    * tag ledger remains the recovery for the claim's own edge (a
-    * broken stale claim of a crashed writer): a superseded tag is
-    * absent from the SERVED manifest, so "re-run until your tag is
-    * served" still converges — applied tags no-op (SearchOpsSpec races
-    * two appends for real and pins convergence).
+    * Concurrency: like every mutation of the root (append, delete, fold,
+    * prune) it holds the per-root intake claim, so its whole
+    * read-manifest→write-version→swap is one atomic step. The tag ledger
+    * remains the recovery for the claim's own edge (a broken stale claim
+    * of a crashed writer): a superseded tag is absent from the SERVED
+    * manifest, so "re-run until your tag is served" still converges —
+    * applied tags no-op (SearchOpsSpec races two appends for real and
+    * pins convergence).
     */
   def appendPostingsIndex(newDocs: DataFrame, textCol: String, idCol: String,
                           root: String, batchTag: String): Option[Int] =
-      graft.io.IndexMeta.withIntakeClaim(root) {
+      postings.withServedDir(root) { cur =>
     val spark = newDocs.sparkSession
-    val cur = postingsCurrentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no postings index at $root — build first"))
-    val m = readPostingsManifest(root, cur)
-    val tags = m("applied_tags").asInstanceOf[Seq[_]].map(String.valueOf)
+    val m = readManifest(cur)
+    val tags = strings(m, "applied_tags")
     if (tags.contains(batchTag)) None
     else {
-      readTombstones(spark, root, cur, m).foreach { t =>
+      readTombstones(spark, cur, m).foreach { t =>
         val clash = newDocs.select(col(idCol).cast("long").as("doc_id")).distinct()
           .join(broadcast(t.select(col("doc_id"))), "doc_id")
           .limit(5).collect().map(_.getLong(0))
@@ -371,16 +350,12 @@ object SearchOps {
       }
       val (post, n, l) = postingsDelta(newDocs, textCol, idCol)
       val deltaTs = post.groupBy("term").agg(count(lit(1)).as("df"))
-      val curTs = spark.read.parquet(s"${postingsVersionDir(root, cur)}/termstats")
-      val merged = curTs.union(deltaTs)
+      val merged = spark.read.parquet(s"$cur/termstats").union(deltaTs)
         .groupBy("term").agg(sum(col("df")).as("df"))
-      val v = claimNextPostingsVersion(root)
-      val priorSegs = m("segments").asInstanceOf[Seq[_]].map(String.valueOf)
-      writePostingsVersion(root, v, Some(post), priorSegs, merged,
-        m("n_docs").toString.toLong + n, m("total_len").toString.toLong + l,
-        tags :+ batchTag, readTombstones(spark, root, cur, m))
-      postingsSwapPointer(root, v)
-      Some(v)
+      Some(postings.publishClaimed(root, Some(cur))(v =>
+        writePostingsVersion(root, v, Some(post), strings(m, "segments"), merged,
+          long(m, "n_docs") + n, long(m, "total_len") + l,
+          tags :+ batchTag, readTombstones(spark, cur, m))))
     }
   }
 
@@ -403,76 +378,28 @@ object SearchOps {
     */
   def foldPostingsIndex(spark: org.apache.spark.sql.SparkSession,
                         root: String): Int =
-      graft.io.IndexMeta.withIntakeClaim(root) {
-    val cur = postingsCurrentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no postings index at $root"))
-    val m = readPostingsManifest(root, cur)
-    val segs = m("segments").asInstanceOf[Seq[_]].map(s => s"$root/${String.valueOf(s)}")
-    val tombs = readTombstones(spark, root, cur, m)
-    val all = spark.read.parquet(segs: _*)
-    val folded = tombs.fold(all)(t => all.join(
-      broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_anti"))
-    val ts = spark.read.parquet(s"${postingsVersionDir(root, cur)}/termstats")
-    val v = claimNextPostingsVersion(root)
-    writePostingsVersion(root, v, Some(folded), Nil, ts,
-      m("n_docs").toString.toLong, m("total_len").toString.toLong,
-      m("applied_tags").asInstanceOf[Seq[_]].map(String.valueOf), None)
-    postingsSwapPointer(root, v)
-    v
-  }  // withIntakeClaim: an append landing between this fold's manifest
-     // read and its swap would lose its delta AND its tag from the
-     // served chain (the round-17 lost-segment race on this family)
+    postings.publishFromServed(root) { (cur, v) =>
+      val m = readManifest(cur)
+      val all = readSegments(spark, root, m)
+      val folded = readTombstones(spark, cur, m).fold(all)(t => all.join(
+        broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_anti"))
+      writePostingsVersion(root, v, Some(folded), Nil,
+        spark.read.parquet(s"$cur/termstats"), long(m, "n_docs"),
+        long(m, "total_len"), strings(m, "applied_tags"), None)
+    }
 
-  /** Retention GC for superseded postings versions: delete version dirs
-    * that nothing can reach anymore. Every fold/append/delete mints a
-    * new version and leaves the old one on disk (that immutability IS
-    * the crash-recovery and pinned-reader story), so without retention
-    * a busy index accumulates one dir per mutation forever — at 100 TB
-    * that is real storage, listing overhead, and recovery confusion.
-    *
-    * Kept, in order of why:
-    *  - the SERVED version and everything at/above the pointer (a dir
-    *    past the pointer belongs to an in-flight or crashed writer —
-    *    its claim/recovery story, never GC's);
-    *  - the `keepLatest - 1` newest superseded versions (grace for
-    *    readers whose plans pinned files before the last swap);
-    *  - the REFERENCE CLOSURE of every kept version: appends and
-    *    deletes carry segments by reference, so a kept manifest —
-    *    including a grace version's, whose pinned readers hold concrete
-    *    file paths — may point into far older version dirs; those
-    *    survive any retention setting. Only a fold (which consolidates
-    *    to one owned segment) makes predecessors collectable, which is
-    *    the natural call order: fold, then prune.
-    *
-    * Holds the per-root intake claim for the whole walk (a concurrent
-    * append could otherwise read a manifest whose referenced segments
-    * this is deleting). Returns the pruned version numbers.
+  /** Retention GC for superseded postings versions
+    * ([[graft.io.VersionedStore.pruneVersions]]). Appends and deletes
+    * carry segments by reference, so the prune also keeps the REFERENCE
+    * CLOSURE of every kept version — including a grace version's, whose
+    * pinned readers hold concrete file paths. Only a fold (which
+    * consolidates to one owned segment) makes predecessors collectable,
+    * which is the natural call order: fold, then prune. Returns the
+    * pruned version numbers.
     */
   def prunePostingsVersions(spark: org.apache.spark.sql.SparkSession,
-                            root: String, keepLatest: Int = 1): Seq[Int] = {
-    require(keepLatest >= 1, "keepLatest must be >= 1")
-    graft.io.IndexMeta.withIntakeClaim(root) {
-    val served = postingsCurrentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no postings index at $root"))
-    val all = graft.io.IndexMeta.listChildNames(s"$root/versions")
-      .filter(_.matches("v\\d{4,}")).map(_.stripPrefix("v").toInt)
-    val grace = all.filter(_ < served).sorted.takeRight(keepLatest - 1).toSet
-    val baseKeep = all.filter(_ >= served).toSet ++ grace
-    val SegVer = "versions/v(\\d{4,})/.*".r
-    val referenced = baseKeep.toSeq
-      .filter(v => graft.io.IndexMeta.exists(
-        s"${postingsVersionDir(root, v)}/manifest.json"))
-      .flatMap(v => readPostingsManifest(root, v)("segments")
-        .asInstanceOf[Seq[_]].map(String.valueOf)
-        .collect { case SegVer(n) => n.toInt })
-    val keep = baseKeep ++ referenced
-    val prunable = all.filterNot(keep).sorted
-    prunable.foreach(v =>
-      graft.io.IndexMeta.deleteTree(postingsVersionDir(root, v)))
-    prunable
-    }  // withIntakeClaim: a concurrent append could read a manifest
-       // whose referenced segments this walk is deleting
-  }
+                            root: String, keepLatest: Int = 1): Seq[Int] =
+    postings.pruneVersions(root, keepLatest)
 
   /** Tombstone `deletedIds` (a (doc_id) frame) in a new version:
     * segments carry by reference — postings files are never rewritten
@@ -486,40 +413,30 @@ object SearchOps {
     */
   def deleteFromPostingsIndex(spark: org.apache.spark.sql.SparkSession,
                               root: String, deletedIds: DataFrame): Int =
-      graft.io.IndexMeta.withIntakeClaim(root) {
-    val cur = postingsCurrentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no postings index at $root"))
-    val m = readPostingsManifest(root, cur)
-    val segs = m("segments").asInstanceOf[Seq[_]].map(s => s"$root/${String.valueOf(s)}")
-    val prior = readTombstones(spark, root, cur, m)
-    val ids0 = deletedIds.select(col(deletedIds.columns.head).cast("long").as("doc_id"))
-      .distinct()
-    // only ids not already tombstoned may adjust stats (replay safety)
-    val fresh = prior.fold(ids0)(t =>
-      ids0.join(broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_anti"))
-    val all = spark.read.parquet(segs: _*)
-    val del = all.join(broadcast(fresh), Seq("doc_id"))
-    val delStats = del.groupBy("doc_id").agg(max(col("dl")).as("dl"))
-      .agg(count(lit(1)).as("n"), sum(col("dl")).as("l")).head()
-    val (dn, dl2) = (delStats.getLong(0),
-      if (delStats.isNullAt(1)) 0L else delStats.getLong(1))
-    val dec = del.groupBy("term").agg(count(lit(1)).as("dec"))
-    val curTs = spark.read.parquet(s"${postingsVersionDir(root, cur)}/termstats")
-    val merged = curTs.join(broadcast(dec), Seq("term"), "left")
-      .select(col("term"),
-        (col("df") - coalesce(col("dec"), lit(0L))).as("df"))
-      .filter(col("df") > 0)
-    val tombs = prior.fold(fresh)(t => t.select(col("doc_id")).union(fresh).distinct())
-    val v = claimNextPostingsVersion(root)
-    writePostingsVersion(root, v, None,
-      m("segments").asInstanceOf[Seq[_]].map(String.valueOf), merged,
-      m("n_docs").toString.toLong - dn, m("total_len").toString.toLong - dl2,
-      m("applied_tags").asInstanceOf[Seq[_]].map(String.valueOf), Some(tombs))
-    postingsSwapPointer(root, v)
-    v
-  }  // withIntakeClaim: a delete is the same read-manifest→swap
-     // read-modify-write as append/fold — unserialized it can swallow
-     // a concurrent mutation's version the same way
+    postings.publishFromServed(root) { (cur, v) =>
+      val m = readManifest(cur)
+      val prior = readTombstones(spark, cur, m)
+      val ids0 = deletedIds.select(col(deletedIds.columns.head).cast("long").as("doc_id"))
+        .distinct()
+      // only ids not already tombstoned may adjust stats (replay safety)
+      val fresh = prior.fold(ids0)(t =>
+        ids0.join(broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_anti"))
+      val del = readSegments(spark, root, m).join(broadcast(fresh), Seq("doc_id"))
+      val delStats = del.groupBy("doc_id").agg(max(col("dl")).as("dl"))
+        .agg(count(lit(1)).as("n"), sum(col("dl")).as("l")).head()
+      val (dn, dl2) = (delStats.getLong(0),
+        if (delStats.isNullAt(1)) 0L else delStats.getLong(1))
+      val dec = del.groupBy("term").agg(count(lit(1)).as("dec"))
+      val merged = spark.read.parquet(s"$cur/termstats")
+        .join(broadcast(dec), Seq("term"), "left")
+        .select(col("term"),
+          (col("df") - coalesce(col("dec"), lit(0L))).as("df"))
+        .filter(col("df") > 0)
+      val tombs = prior.fold(fresh)(t => t.select(col("doc_id")).union(fresh).distinct())
+      writePostingsVersion(root, v, None, strings(m, "segments"), merged,
+        long(m, "n_docs") - dn, long(m, "total_len") - dl2,
+        strings(m, "applied_tags"), Some(tombs))
+    }
 
   /** [[bm25TopK]] served from the persisted index: same scores by
     * construction (stored tf/dl/df are exact longs cast back to double;
@@ -538,20 +455,18 @@ object SearchOps {
                       maxDfFrac: Option[Double] = None,
                       maxQueryTerms: Long = defaultMaxQueryTerms): DataFrame = {
     guardQueryWorkload(queries, "bm25TopKIndexed", maxQueryTerms)
-    val cur = postingsCurrentVersion(root).getOrElse(
-      throw new IllegalStateException(s"no postings index at $root"))
-    val m = readPostingsManifest(root, cur)
-    val nDocs = m("n_docs").toString.toLong.toDouble
-    val totalLen = m("total_len").toString.toLong.toDouble
-    val segs = m("segments").asInstanceOf[Seq[_]].map(s => s"$root/${String.valueOf(s)}")
-    val post0 = spark.read.parquet(segs: _*)
+    val cur = postings.versionDir(root, postings.servedVersion(root))
+    val m = readManifest(cur)
+    val nDocs = long(m, "n_docs").toDouble
+    val totalLen = long(m, "total_len").toDouble
+    val post0 = readSegments(spark, root, m)
     // tombstoned docs are suppressed at serve until a fold drops their
     // rows; their stats were already subtracted at delete time
-    val post = readTombstones(spark, root, cur, m).fold(post0)(t =>
+    val post = readTombstones(spark, cur, m).fold(post0)(t =>
       post0.join(broadcast(t.select(col("doc_id"))), Seq("doc_id"), "left_anti"))
     val qterms = queries.select(col("query_id").cast("long").as("query_id"),
       col("term")).distinct()
-    val dft0 = spark.read.parquet(s"${postingsVersionDir(root, cur)}/termstats")
+    val dft0 = spark.read.parquet(s"$cur/termstats")
       .join(broadcast(qterms.select("term").distinct()), "term")
       .select(col("term"), col("df").cast("double").as("df"))
     // df is PRECOMPUTED here, so the stop-word cap prunes capped terms

@@ -13,20 +13,19 @@ import graft.functions.VecExprs
   * recompute (the q73/q78 prepared-dedup-index stance applied to
   * embedding dedup).
   *
-  * Layout under `root/` (the [[VectorIndex]] versioning conventions):
-  *   - `versions/vNNNN/centroids/` — (cell, cent) parquet: the trained
-  *     coarse model, k·dim longs, read to the driver and baked into
-  *     the batch-labeling expression as plan constants.
-  *   - `versions/vNNNN/labeled/` — (vid, qv, n2) parquet PARTITIONED BY
-  *     cell: the corpus side of every future judgment. The pair join
-  *     keys on the cell label with the batch side broadcast, so a
-  *     100 TB corpus contributes a scan, never an exchange.
-  *   - `versions/vNNNN/ingest/b<id>/` — one committed segment of KEPT
-  *     batch rows per streaming trigger (complete-or-absent `_SUCCESS`
-  *     contract), so later batches dedup against earlier accepted ones.
-  *   - `versions/vNNNN/folded_batches.txt` — the carried ledger that
-  *     keeps triggers exactly-once ACROSS maintenance swaps.
-  *   - `root/POINTER` — the atomically-swapped served version.
+  * Each version (versioning, pointer, ledger and retention are
+  * [[graft.io.VersionedStore]]'s) holds:
+  *   - `centroids/` — (cell, cent) parquet: the trained coarse model,
+  *     k·dim longs, read to the driver and baked into the
+  *     batch-labeling expression as plan constants.
+  *   - `labeled/` — (vid, qv, n2) parquet PARTITIONED BY cell: the
+  *     corpus side of every future judgment. The pair join keys on the
+  *     cell label with the batch side broadcast, so a 100 TB corpus
+  *     contributes a scan, never an exchange.
+  *   - `ingest/b<id>/` — one committed segment of KEPT batch rows per
+  *     streaming trigger, so later batches dedup against earlier
+  *     accepted ones.
+  *   - `_MODEL_OK` — the sentinel [[writeVersion]] commits last.
   *
   * All arithmetic is the exact integer-quantized cosine convention of
   * [[SimilarityOps.semanticDedup]] (floor(x·10⁶) longs; dup iff d > 0 ∧
@@ -38,7 +37,9 @@ import graft.functions.VecExprs
   * features are pandas in-memory); this is training-data-pipeline
   * surface where the 100 TB design is the requirement itself.
   */
-object SemanticIndex {
+object SemanticIndex extends graft.io.VersionedStore {
+
+  protected val family = "semantic index"
 
   /** Train the coarse quantizer and label the corpus: the build step.
     * Returns the driver-sized model (k·dim longs) and the labeled
@@ -67,46 +68,6 @@ object SemanticIndex {
     qf.withColumn("cell", SimilarityOps.assignCells(col("qv"), cents))
       .withColumn("n2", VecExprs.dotLong(col("qv"), col("qv")).cast("double"))
 
-  def versionDir(root: String, v: Int): String = f"$root/versions/v$v%04d"
-
-  /** Serialize one intake trigger or one fold against the other — the
-    * round-17 race: a trigger that passed `batchApplied` and committed
-    * its segment to the OLD version after a concurrent fold enumerated
-    * `committedSegmentIds` (but before the pointer swap) would leave
-    * the new version without those kept rows AND without the batch id
-    * in the carried ledger, while the stream checkpoint commits — the
-    * rows silently vanish from every future version. Holding the claim
-    * across BOTH windows makes the interleaving impossible: the fold
-    * sees either the whole segment (committed before it acquired) or
-    * none of it (trigger re-resolves the pointer after the swap).
-    * Delegates to [[graft.io.IndexMeta.withIntakeClaim]] — the shared
-    * mutex every versioned index family uses; its wait budget exceeds
-    * the claim staleness window, so a crashed holder's marker always
-    * auto-breaks before a live contender gives up.
-    */
-  def withIntakeClaim[T](root: String)(body: => T): T =
-    graft.io.IndexMeta.withIntakeClaim(root)(body)
-
-  def currentVersion(root: String): Option[Int] =
-    graft.io.IndexMeta.readVersionPointer(root)
-
-  /** Allocate-and-claim the next version number — max existing dir + 1,
-    * claimed atomically (the [[VectorIndex.claimNextVersion]] contract:
-    * a torn dir stays inert, never adopted).
-    */
-  private def claimNextVersion(root: String): Int = {
-    val vs = graft.io.IndexMeta.listChildNames(s"$root/versions")
-      .filter(_.matches("v\\d{4,}")).map(_.stripPrefix("v").toInt)
-    var v = (vs :+ 0).max + 1
-    var attempts = 0
-    while (!graft.io.IndexMeta.claimDir(versionDir(root, v))) {
-      v += 1; attempts += 1
-      require(attempts < 1000,
-        s"could not claim a semantic-index version dir under $root after 1000 tries")
-    }
-    v
-  }
-
   /** Write a complete version WITHOUT serving it. `labeled` lands
     * partitioned by cell (the probe side of every future judgment);
     * the `_MODEL_OK` sentinel commits LAST, so [[exists]] never reads a
@@ -130,13 +91,12 @@ object SemanticIndex {
   def exists(dir: String): Boolean =
     graft.io.IndexMeta.exists(s"$dir/_MODEL_OK")
 
-  def swapPointer(root: String, v: Int): Unit = {
-    require(exists(versionDir(root, v)),
-      s"refusing to swap pointer to incomplete semantic index v$v at $root")
-    graft.io.IndexMeta.swapVersionPointer(root, v)
-  }
-
-  /** Build + write + serve in one step: the bootstrap path. Returns the
+  /** Build + write + serve in one step: the bootstrap path, and the
+    * rebuild path on a root that is already served (fresh train → next
+    * version). Training runs before the intake claim; the publish holds
+    * it and carries the served version's folded ledger plus its
+    * committed segments, so a batch whose kept rows the rebuild corpus
+    * absorbed replays as a skip, not a self-dup re-judge. Returns the
     * served version number.
     */
   def buildAndServe(corpus: DataFrame, idCol: String, vecCol: String,
@@ -157,10 +117,7 @@ object SemanticIndex {
     else qf0
     try {
       val cents = SimilarityOps.kmeansTrainQ(qf, k, maxIter)
-      val v = claimNextVersion(root)
-      writeVersion(cents, labelQ(qf, cents), root, v)
-      swapPointer(root, v)
-      v
+      publish(root)((_, v) => writeVersion(cents, labelQ(qf, cents), root, v))
     } finally if (cacheQuantized) qf.unpersist()
   }
 
@@ -181,40 +138,8 @@ object SemanticIndex {
     * replay contract).
     */
   def readLabeledWithIngest(spark: SparkSession, dir: String): DataFrame =
-    graft.io.IndexMeta.listChildNames(s"$dir/ingest")
-      .filter(n => graft.io.IndexMeta.exists(s"$dir/ingest/$n/_SUCCESS"))
-      .foldLeft(readLabeled(spark, dir)) { (acc, seg) =>
-        acc.unionByName(spark.read.parquet(s"$dir/ingest/$seg")
-          .select(col("vid"), col("qv"), col("n2"), col("cell")))
-      }
-
-  /** Batch ids a fold already absorbed into this version (or an
-    * ancestor) — the carried ledger that keeps [[appendBatch]]
-    * exactly-once across maintenance swaps.
-    */
-  def foldedBatchIds(dir: String): Set[Long] =
-    graft.io.IndexMeta.readString(s"$dir/folded_batches.txt")
-      .map(_.linesIterator.map(_.trim).filter(_.nonEmpty).map(_.toLong).toSet)
-      .getOrElse(Set.empty)
-
-  private def writeFoldedBatchIds(dir: String, ids: Set[Long]): Unit =
-    graft.io.IndexMeta.writeString(s"$dir/folded_batches.txt",
-      ids.toSeq.sorted.mkString("", "\n", "\n"))
-
-  private def committedSegmentIds(dir: String): Set[Long] =
-    graft.io.IndexMeta.listChildNames(s"$dir/ingest")
-      .filter(n => graft.io.IndexMeta.exists(s"$dir/ingest/$n/_SUCCESS"))
-      .map(_.stripPrefix("b").toLong).toSet
-
-  /** Whether a trigger's batch is already fully applied to this version
-    * — its segment committed here, or absorbed by a fold (the ledger).
-    * The intake checks this FIRST: re-judging a batch against an index
-    * that already contains its own kept rows would mark every one of
-    * them a duplicate of itself.
-    */
-  def batchApplied(dir: String, batchId: Long): Boolean =
-    graft.io.IndexMeta.exists(s"$dir/ingest/b$batchId/_SUCCESS") ||
-      foldedBatchIds(dir).contains(batchId)
+    withCommittedSegments(dir, readLabeled(spark, dir))(seg =>
+      spark.read.parquet(seg).select(col("vid"), col("qv"), col("n2"), col("cell")))
 
   /** Commit one trigger's KEPT labeled rows as an ingest segment:
     * complete-or-absent, never double-applied (the
@@ -225,7 +150,7 @@ object SemanticIndex {
     if (batchApplied(dir, batchId)) false
     else {
       keptLabeled.select(col("vid"), col("qv"), col("n2"), col("cell"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$dir/ingest/b$batchId")
+        .write.mode(SaveMode.Overwrite).parquet(segmentDir(dir, batchId))
       true
     }
 
@@ -261,54 +186,17 @@ object SemanticIndex {
     * A crash between the new version's commit and the swap leaves the
     * old version serving and the complete-but-unswapped dir inert;
     * re-running the fold is the recovery (it allocates a fresh number,
-    * never adopts the orphan).
-    *
-    * Safe to run against a LIVE intake with no stream restart: the
-    * whole enumerate→write→ledger→swap sequence holds
-    * [[withIntakeClaim]], mutually exclusive with each trigger's
-    * judge→append window — without it, a trigger committing its
-    * segment between this fold's enumeration and its swap would lose
-    * those rows from every future version (round-17 ADVICE).
+    * never adopts the orphan). Safe against a LIVE intake with no
+    * stream restart: the publish holds the intake claim, mutually
+    * exclusive with each trigger's judge→append window.
     */
   def foldIngestAndSwap(spark: SparkSession, root: String): Int =
-    withIntakeClaim(root) {
-      val v = currentVersion(root).getOrElse(
-        sys.error(s"no served semantic index version at $root"))
-      val vDir = versionDir(root, v)
-      val nv = claimNextVersion(root)
+    publishFromServed(root) { (vDir, nv) =>
       writeVersion(readCentroids(spark, vDir),
         readLabeledWithIngest(spark, vDir), root, nv)
-      writeFoldedBatchIds(versionDir(root, nv),
-        foldedBatchIds(vDir) ++ committedSegmentIds(vDir))
-      swapPointer(root, nv)
-      nv
     }
 
-  /** Retention GC for superseded versions — versions are self-contained
-    * (fold rewrites labeled and carries the ledger), so anything below
-    * the pointer outside the reader-grace window is unreachable (the
-    * [[VectorIndex.pruneVersions]] contract). Returns pruned numbers.
-    *
-    * Defaults to keepLatest=2 — the served version PLUS one grace
-    * version — because a live intake trigger resolves the pointer once
-    * at trigger start: a prune run right after a fold with keepLatest=1
-    * would delete the version that trigger is still judging against
-    * (round-17 ADVICE). The GC walk also holds [[withIntakeClaim]], so
-    * it can never delete out from under a trigger that is mid-judge —
-    * the grace version covers batch READERS of superseded dirs, the
-    * claim covers the intake itself.
-    */
-  def pruneVersions(root: String, keepLatest: Int = 2): Seq[Int] = {
-    require(keepLatest >= 1, "keepLatest must be >= 1")
-    withIntakeClaim(root) {
-      val served = currentVersion(root).getOrElse(
-        sys.error(s"no served semantic index version at $root"))
-      val all = graft.io.IndexMeta.listChildNames(s"$root/versions")
-        .filter(_.matches("v\\d{4,}")).map(_.stripPrefix("v").toInt)
-      val grace = all.filter(_ < served).sorted.takeRight(keepLatest - 1).toSet
-      val prunable = all.filter(v => v < served && !grace(v)).sorted
-      prunable.foreach(v => graft.io.IndexMeta.deleteTree(versionDir(root, v)))
-      prunable
-    }
-  }
+  // Retention: the inherited [[graft.io.VersionedStore.pruneVersions]].
+  // Versions are self-contained (a fold rewrites labeled and carries the
+  // ledger), so no reference closure is needed.
 }

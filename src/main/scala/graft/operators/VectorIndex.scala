@@ -33,7 +33,9 @@ import graft.functions.VecExprs
   * part of the training-data-pipeline surface beyond SURVEY §2 where
   * the 100 TB design is the requirement itself.
   */
-object VectorIndex {
+object VectorIndex extends graft.io.VersionedStore {
+
+  protected val family = "vector index"
 
   /** The full PQ model: coarse centroids + per-subspace codebooks. */
   case class Model(dim: Int, m: Int, k: Int,
@@ -164,59 +166,30 @@ object VectorIndex {
     * no-ops, or OVERWRITES the torn remnant of its own crash; it can
     * never double-append, and it can never touch another batch's files.
     * Returns true when this call wrote the batch, false on a replay
-    * no-op. The base `codes/` tree stays bulk-immutable; a retrain
-    * folds ingest segments back into the next version's base.
+    * no-op — including a batch a fold or retrain already absorbed (the
+    * carried ledger, [[batchApplied]]). The base `codes/` tree stays
+    * bulk-immutable; a retrain folds ingest segments back into the next
+    * version's base.
     */
   def appendBatch(newEmb: DataFrame, idCol: String, vecCol: String,
-                  model: Model, path: String, batchId: Long): Boolean = {
-    val dir = s"$path/ingest/b$batchId"
-    if (graft.io.IndexMeta.exists(s"$dir/_SUCCESS") ||
-        foldedBatchIds(path).contains(batchId)) false
+                  model: Model, path: String, batchId: Long): Boolean =
+    if (batchApplied(path, batchId)) false
     else {
       encode(newEmb, idCol, vecCol, model)
         .write.mode(SaveMode.Overwrite).partitionBy("cell")
-        .parquet(dir)
+        .parquet(segmentDir(path, batchId))
       true
     }
-  }
-
-  /** Batch ids whose segments a [[foldIngestAndSwap]]/[[retrainAndSwap]]
-    * already absorbed into this version (or an ancestor) — the carried
-    * ledger that keeps [[appendBatch]] exactly-once ACROSS maintenance:
-    * a trigger that committed its segment to the old version, crashed
-    * before its checkpoint, and replays against the new version must
-    * no-op, not re-append rows the fold already consolidated.
-    */
-  def foldedBatchIds(path: String): Set[Long] =
-    graft.io.IndexMeta.readString(s"$path/folded_batches.txt")
-      .map(_.linesIterator.map(_.trim).filter(_.nonEmpty).map(_.toLong).toSet)
-      .getOrElse(Set.empty)
-
-  private def writeFoldedBatchIds(path: String, ids: Set[Long]): Unit =
-    graft.io.IndexMeta.writeString(s"$path/folded_batches.txt",
-      ids.toSeq.sorted.mkString("", "\n", "\n"))
-
-  /** Committed segment batch ids currently present under `path/ingest`. */
-  private def committedSegmentIds(path: String): Set[Long] =
-    graft.io.IndexMeta.listChildNames(s"$path/ingest")
-      .filter(n => graft.io.IndexMeta.exists(s"$path/ingest/$n/_SUCCESS"))
-      .map(_.stripPrefix("b").toLong).toSet
 
   /** Base codes plus every COMMITTED streaming-ingest segment (torn
-    * segments — no `_SUCCESS` — are invisible, matching [[appendBatch]]'s
-    * replay contract). Each root is loaded separately and unioned —
-    * Spark's partition discovery refuses mixed roots in one read — and
-    * the probed-cell equi-join still prunes cell directories per branch.
+    * segments are invisible, matching [[appendBatch]]'s replay
+    * contract); the probed-cell equi-join still prunes cell directories
+    * per branch.
     */
-  def readCodesWithIngest(spark: SparkSession, path: String): DataFrame = {
-    val committed = graft.io.IndexMeta.listChildNames(s"$path/ingest")
-      .filter(n => graft.io.IndexMeta.exists(s"$path/ingest/$n/_SUCCESS"))
-      .map(n => s"$path/ingest/$n")
-    committed.foldLeft(readCodes(spark, path)) { (acc, seg) =>
-      acc.unionByName(spark.read.parquet(seg)
+  def readCodesWithIngest(spark: SparkSession, path: String): DataFrame =
+    withCommittedSegments(path, readCodes(spark, path))(seg =>
+      spark.read.parquet(seg)
         .select(col("vid"), col("cell").cast("long").as("cell"), col("codes")))
-    }
-  }
 
   /** Multi-probe ADC scan + exact re-rank THROUGH the persisted index —
     * row-identical to [[SimilarityOps.ivfPqTopKRefined]] on the same
@@ -338,76 +311,17 @@ object VectorIndex {
   // Appends through a stale model degrade recall as the corpus drifts;
   // the answer is a periodic RETRAIN — rebuild model + codes from the
   // full corpus into a NEW version directory, then swap one pointer.
-  // Layout:
-  //   root/versions/vNNNN/{codes,centroids,codebooks}   (immutable once
-  //     swapped-to; appends between retrains land inside the current
-  //     version's codes/)
-  //   root/POINTER                                       (the version
-  //     name; one-line file, replaced by atomic rename)
-  // Readers resolve POINTER once per query plan, so a swap mid-stream
-  // changes which files the NEXT query reads, never a running scan
-  // (Spark pins concrete files at planning). A crash after writeVersion
-  // but before swapPointer leaves the old version serving and the new
-  // directory inert — re-running the retrain is the recovery, the same
-  // contract as [[append]]. The pointer swap is a tmp-write +
-  // rename-into-place with a small-object overwrite-put fallback,
-  // through the Hadoop FileSystem API (see [[graft.io.IndexMeta]] for
-  // the per-store atomicity semantics), so the whole lifecycle runs
-  // against file://, hdfs:// or s3a:// roots. Version numbering is allocate-and-claim
-  // ([[claimNextVersion]]): max existing dir + 1 — a torn (unswapped)
-  // version dir is never silently adopted OR overwritten mid-recovery —
-  // with an atomic per-dir claim ([[graft.io.IndexMeta.claimDir]]) that
-  // steps past numbers a concurrent writer got to first. A fold racing
-  // a retrain (streaming ingest plus scheduled maintenance, the
-  // StreamOps.vectorIngestSink deployment) therefore writes two
-  // complete, self-consistent versions into DISJOINT dirs; both read
-  // the same base, so the last pointer swap wins and the loser's
-  // version goes unreferenced — re-running it on top of the winner is
-  // the recovery, the same contract as [[append]]. Same allocation as
-  // the postings index (SearchOps.claimNextPostingsVersion);
-  // VectorIndexSpec races two retrains for real and pins disjointness.
+  // Each version holds {codes,centroids,codebooks} plus its ingest
+  // segments, tombstones and carried ledger; versioning, allocation,
+  // the pointer, the ledger and retention are [[graft.io.VersionedStore]]'s.
+  // A fold racing a retrain writes two complete versions into disjoint
+  // dirs from the same base, so the last swap wins and re-running the
+  // loser on top is the recovery; VectorIndexSpec races two retrains
+  // for real and pins disjointness.
 
-  def versionDir(root: String, v: Int): String = f"$root/versions/v$v%04d"
-
-  /** The currently-served version number, if a pointer has ever been
-    * swapped in.
-    */
-  def currentVersion(root: String): Option[Int] =
-    graft.io.IndexMeta.readVersionPointer(root)
-
-  /** Allocate-and-claim the next version number: max existing dir + 1
-    * (never pointer + 1 — a torn dir must stay inert, not be adopted or
-    * overwritten), claimed atomically, stepping past numbers a racing
-    * writer claimed first. Mirrors SearchOps.claimNextPostingsVersion;
-    * the `v\d{4,}` match survives v10000 (`%04d` pads, never
-    * truncates — a 4-digit-only regex would orphan every version past
-    * v9999 and re-allocate live numbers forever after).
-    */
-  private def claimNextVersion(root: String): Int = {
-    val vs = graft.io.IndexMeta.listChildNames(s"$root/versions")
-      .filter(_.matches("v\\d{4,}")).map(_.stripPrefix("v").toInt)
-    var v = (vs :+ 0).max + 1
-    var attempts = 0
-    while (!graft.io.IndexMeta.claimDir(versionDir(root, v))) {
-      v += 1; attempts += 1
-      require(attempts < 1000,
-        s"could not claim a vector-index version dir under $root after 1000 tries")
-    }
-    v
-  }
-
-  /** Write a complete index under `versions/vNNNN` WITHOUT serving it. */
+  /** Write a complete index as version `v` of `root` WITHOUT serving it. */
   def writeVersion(model: Model, codes: DataFrame, root: String, v: Int): Unit =
     write(model, codes, versionDir(root, v))
-
-  /** Atomically (see [[graft.io.IndexMeta.swapVersionPointer]]) point
-    * readers at version `v`. Refuses a torn target.
-    */
-  def swapPointer(root: String, v: Int): Unit = {
-    require(exists(versionDir(root, v)),
-      s"refusing to swap pointer to incomplete index version v$v at $root")
-    graft.io.IndexMeta.swapVersionPointer(root, v)
-  }
 
   /** Full retrain: rebuild model + codes from `emb` into the next
     * version directory and swap the pointer. Returns the new version.
@@ -415,35 +329,24 @@ object VectorIndex {
     * a retrain from the raw corpus cannot resurrect deleted vectors —
     * and carried into the new version, so EVERY future version keeps
     * excluding them until the deletes are applied to the corpus
-    * upstream (same ledger contract as [[foldIngestAndSwap]]).
+    * upstream (same ledger contract as [[foldIngestAndSwap]]). The
+    * folded-batch ledger is carried too: the retrain absorbs streamed
+    * vectors through the corpus, which is authoritative, so a replayed
+    * old batch must no-op against the new version.
     */
   def retrainAndSwap(emb: DataFrame, idCol: String, vecCol: String,
                      cellCol: String, dim: Int, m: Int, k: Int,
                      root: String): Int =
-      graft.io.IndexMeta.withIntakeClaim(root) {
-    val cv = currentVersion(root)
-    val v = claimNextVersion(root)
-    val spark = emb.sparkSession
-    val tombs = cv.map(c => readTombstones(spark, versionDir(root, c)))
-    val survivors = tombs.map(t =>
-      emb.join(t.select(col("vid").as("__tomb_vid")),
-        col(idCol).cast("long") === col("__tomb_vid"), "left_anti"))
-      .getOrElse(emb)
-    val (model, codes) = build(survivors, idCol, vecCol, cellCol, dim, m, k)
-    writeVersion(model, codes, root, v)
-    tombs.filter(!_.isEmpty).foreach(t => delete(t, "vid", versionDir(root, v)))
-    // carry the folded-batch ledger (a retrain absorbs the streamed docs
-    // through the corpus, which is authoritative — a replayed old batch
-    // must no-op against the new version, not re-append)
-    cv.foreach { c =>
-      writeFoldedBatchIds(versionDir(root, v),
-        foldedBatchIds(versionDir(root, c)) ++
-          committedSegmentIds(versionDir(root, c)))
+    publish(root) { (from, v) =>
+      val tombs = from.map(readTombstones(emb.sparkSession, _))
+      val survivors = tombs.map(t =>
+        emb.join(t.select(col("vid").as("__tomb_vid")),
+          col(idCol).cast("long") === col("__tomb_vid"), "left_anti"))
+        .getOrElse(emb)
+      val (model, codes) = build(survivors, idCol, vecCol, cellCol, dim, m, k)
+      writeVersion(model, codes, root, v)
+      tombs.filter(!_.isEmpty).foreach(t => delete(t, "vid", versionDir(root, v)))
     }
-    swapPointer(root, v)
-    v
-  }  // withIntakeClaim: a trigger committing a segment between this
-     // retrain's ledger carry and its swap would lose rows + tag
 
   /** Fold the current version's committed ingest segments into the NEXT
     * version: same model, one consolidated cell-partitioned codes tree —
@@ -453,12 +356,9 @@ object VectorIndex {
     * version serves untouched until the atomic pointer swap, and
     * because the model is unchanged no re-encode happens, so answers
     * are IDENTICAL before and after (q116 pins that under the driver's
-    * hash gate). A crash mid-fold leaves the old version serving and
-    * the half-written next version inert — re-running the fold is the
-    * recovery, the same contract as [[append]]/[[retrainAndSwap]]. A
-    * trigger that replays against the OLD version dir after the swap
-    * re-commits its segment there harmlessly: the serving version never
-    * reads it, and the next fold-from-old or retrain supersedes it.
+    * hash gate). The folded-batch ledger carries forward, so a trigger
+    * that committed its segment to the old version and replays after
+    * the swap no-ops.
     *
     * Tombstoned rows are dropped from the consolidated codes (the
     * anti-join [[query]] applies at read time, applied once at write
@@ -473,81 +373,20 @@ object VectorIndex {
     */
   def foldIngestAndSwap(spark: SparkSession, root: String,
                         dim: Int, m: Int, k: Int): Int =
-      graft.io.IndexMeta.withIntakeClaim(root) {
-    val v = currentVersion(root).getOrElse(
-      sys.error(s"no served index version at $root"))
-    val nv = claimNextVersion(root)
-    val vDir = versionDir(root, v)
-    val model = readModel(spark, vDir, dim, m, k)
-    val tombs = readTombstones(spark, vDir)
-    writeVersion(model, readCodesWithIngest(spark, vDir)
-        .join(tombs, Seq("vid"), "left_anti"),
-      root, nv)
-    if (!tombs.isEmpty) delete(tombs, "vid", versionDir(root, nv))
-    // carry the folded-batch ledger: absorbed segments + everything an
-    // ancestor already absorbed, so a cross-swap replay stays a no-op
-    writeFoldedBatchIds(versionDir(root, nv),
-      foldedBatchIds(vDir) ++ committedSegmentIds(vDir))
-    swapPointer(root, nv)
-    nv
-  }  // withIntakeClaim: the round-17 SemanticIndex race exists here
-     // identically — a trigger's segment committed between this fold's
-     // committedSegmentIds enumeration and its swap would vanish from
-     // every future version while the stream checkpoint commits
-
-  /** Retention GC for superseded index versions: every fold/retrain
-    * mints a new version dir and leaves the old one serving-ready on
-    * disk (immutability IS the crash-recovery and pinned-reader story),
-    * so a periodically-retrained index accumulates one full codes tree
-    * per retrain forever — at 100 TB that is a corpus-sized dir per
-    * maintenance cycle. Unlike the postings index, vector versions are
-    * SELF-CONTAINED (fold/retrain rewrite codes, carry the tombstone
-    * and folded-batch ledgers into the new dir, and appends land inside
-    * the current version), so no reference closure is needed: anything
-    * below the pointer outside the `keepLatest - 1` reader-grace window
-    * is unreachable. Dirs at/above the pointer are never touched (an
-    * in-flight or crashed writer owns them). Holds the per-root intake
-    * claim for the whole GC walk, so it can never delete the version a
-    * live [[graft.streaming.StreamOps.vectorIngestSinkVersioned]]
-    * trigger resolved at trigger start (the trigger holds the same
-    * claim across its resolve→append window); keepLatest > 1 remains
-    * the grace knob for BATCH readers of superseded dirs. Defaults to
-    * keepLatest=2 — served version plus one reader-grace version —
-    * for the same reason [[SemanticIndex.pruneVersions]] does: the
-    * claim covers claimed intake triggers, but a plain batch reader
-    * (q110-shaped serving) resolves the pointer un-claimed and may
-    * still be scanning the superseded dir when a post-fold prune runs;
-    * the two families' trigger/reader patterns are identical, so their
-    * production-stance defaults are too (round-18 ADVICE). Lifecycle
-    * tests wanting full reclaim pass keepLatest=1 explicitly. Returns
-    * the pruned version numbers.
-    */
-  def pruneVersions(root: String, keepLatest: Int = 2): Seq[Int] = {
-    require(keepLatest >= 1, "keepLatest must be >= 1")
-    graft.io.IndexMeta.withIntakeClaim(root) {
-      val served = currentVersion(root).getOrElse(
-        sys.error(s"no served index version at $root"))
-      val all = graft.io.IndexMeta.listChildNames(s"$root/versions")
-        .filter(_.matches("v\\d{4,}")).map(_.stripPrefix("v").toInt)
-      val grace = all.filter(_ < served).sorted.takeRight(keepLatest - 1).toSet
-      val prunable = all.filter(v => v < served && !grace(v)).sorted
-      prunable.foreach(v => graft.io.IndexMeta.deleteTree(versionDir(root, v)))
-      prunable
+    publishFromServed(root) { (vDir, nv) =>
+      val tombs = readTombstones(spark, vDir)
+      writeVersion(readModel(spark, vDir, dim, m, k), readCodesWithIngest(spark, vDir)
+          .join(tombs, Seq("vid"), "left_anti"),
+        root, nv)
+      if (!tombs.isEmpty) delete(tombs, "vid", versionDir(root, nv))
     }
-  }
 
   def readCurrentModel(spark: SparkSession, root: String,
-                       dim: Int, m: Int, k: Int): Model = {
-    val v = currentVersion(root).getOrElse(
-      sys.error(s"no served index version at $root"))
-    readModel(spark, versionDir(root, v), dim, m, k)
-  }
+                       dim: Int, m: Int, k: Int): Model =
+    readModel(spark, versionDir(root, servedVersion(root)), dim, m, k)
 
-  def readCurrentCodes(spark: SparkSession, root: String): DataFrame = {
-    val v = currentVersion(root).getOrElse(
-      sys.error(s"no served index version at $root"))
-    readCodes(spark, versionDir(root, v))
-  }
+  def readCurrentCodes(spark: SparkSession, root: String): DataFrame =
+    readCodes(spark, versionDir(root, servedVersion(root)))
 
   // ---- Deletes: tombstones ------------------------------------------
   //

@@ -214,43 +214,90 @@ class SearchOpsSpec extends SparkSpec with Matchers {
         .orderBy("query_id", "rank").collect().toSeq
   }
 
-  test("a crash-torn version is never adopted: old version serves, recovery lands past it") {
+  /** One versioned index family, driven through its public lifecycle:
+    * `build` serves v1, `mutate` runs one publishing mutation, `served`
+    * reads an answer through the pointer, and `marker` is the file whose
+    * presence marks a version complete.
+    */
+  private case class Family(name: String, build: String => Unit,
+      mutate: String => Option[Int], served: String => Seq[Any],
+      versionDir: (String, Int) => String, current: String => Option[Int],
+      marker: String)
+
+  private lazy val families: Seq[Family] = {
+    import graft.operators.{SemanticIndex, VectorIndex}
     val qs = q((0L, "cat"))
-    val root = tmpRoot().getPath
-    SearchOps.buildPostingsIndex(docs.filter($"doc_id" <= 2), "text", "doc_id", root)
-    val before = SearchOps.bm25TopKIndexed(spark, root, qs, topK = 10)
-      .orderBy("query_id", "rank").collect().toSeq
-    // simulate an append that died after writing files but BEFORE the
-    // pointer swap: a partial version dir with no manifest
-    val torn = new java.io.File(SearchOps.postingsVersionDir(root, 2))
-    assert(torn.mkdirs())
-    java.nio.file.Files.write(new java.io.File(torn, "junk").toPath, Array[Byte](1))
-    // readers still serve v1
-    SearchOps.postingsCurrentVersion(root) shouldBe Some(1)
-    SearchOps.bm25TopKIndexed(spark, root, qs, topK = 10)
-      .orderBy("query_id", "rank").collect().toSeq shouldBe before
-    // the retried append must land PAST the torn dir, never inside it
-    SearchOps.appendPostingsIndex(docs.filter($"doc_id" > 2),
-      "text", "doc_id", root, batchTag = "b1") shouldBe Some(3)
-    SearchOps.postingsCurrentVersion(root) shouldBe Some(3)
+    val emb = (0 until 12).map { i =>
+      (i.toLong, Seq.tabulate(4)(d => if (d == i % 2) 5.0 + i else 0.1 * i), (i % 2).toLong)
+    }.toDF("vec_id", "embedding", "label")
+    val corpus = Seq(
+      (0L, Seq(10.0, 0.0, 0.0, 0.0)), (1L, Seq(0.0, 10.0, 0.0, 0.0)),
+      (2L, Seq(0.0, 0.0, 10.0, 0.0)), (3L, Seq(0.0, 0.0, 0.0, 10.0))
+    ).toDF("vid", "vd")
+    val probe = Seq((100L, Seq(9.8, 0.1, 0.0, 0.0)), (101L, Seq(5.0, 5.0, 0.0, 0.0)))
+      .toDF("vid", "vd")
+    Seq(
+      Family("postings",
+        root => SearchOps.buildPostingsIndex(docs.filter($"doc_id" <= 2), "text", "doc_id", root),
+        root => SearchOps.appendPostingsIndex(docs.filter($"doc_id" > 2),
+          "text", "doc_id", root, batchTag = "b1"),
+        root => SearchOps.bm25TopKIndexed(spark, root, qs, topK = 10)
+          .orderBy("query_id", "rank").collect().toSeq,
+        SearchOps.postingsVersionDir, SearchOps.postingsCurrentVersion, "manifest.json"),
+      Family("vector",
+        root => VectorIndex.retrainAndSwap(emb, "vec_id", "embedding", "label", 4, 2, 2, root),
+        root => Some(VectorIndex.foldIngestAndSwap(spark, root, 4, 2, 2)),
+        root => VectorIndex.query(emb, "vec_id", "embedding",
+            VectorIndex.readCurrentModel(spark, root, 4, 2, 2),
+            VectorIndex.readCurrentCodes(spark, root), rawVectors = emb,
+            nprobe = 2, shortlist = 4, topK = 2)
+          .orderBy("query_id", "rank").collect().toSeq,
+        VectorIndex.versionDir, VectorIndex.currentVersion, "codes/_SUCCESS"),
+      Family("semantic",
+        root => SemanticIndex.buildAndServe(corpus, "vid", "vd", k = 4, maxIter = 2, root),
+        root => Some(SemanticIndex.foldIngestAndSwap(spark, root)),
+        root => SemanticIndex.judgeBatch(probe, "vid", "vd",
+            SemanticIndex.versionDir(root, SemanticIndex.currentVersion(root).get), 0.81)
+          ._1.orderBy("vid").collect().toSeq,
+        SemanticIndex.versionDir, SemanticIndex.currentVersion, "_MODEL_OK"))
+  }
+
+  test("a crash-torn version is never adopted: old version serves, recovery lands past it") {
+    families.foreach { f => withClue(s"[${f.name}] ") {
+      val root = tmpRoot().getPath
+      f.build(root)
+      val before = f.served(root)
+      // simulate a mutation that died after writing files but BEFORE the
+      // pointer swap: a partial version dir with no completion marker
+      val torn = new java.io.File(f.versionDir(root, 2))
+      assert(torn.mkdirs())
+      java.nio.file.Files.write(new java.io.File(torn, "junk").toPath, Array[Byte](1))
+      // readers still serve v1
+      f.current(root) shouldBe Some(1)
+      f.served(root) shouldBe before
+      // the retried mutation must land PAST the torn dir, never inside it
+      f.mutate(root) shouldBe Some(3)
+      f.current(root) shouldBe Some(3)
+    } }
   }
 
   test("version numbering survives v9999: 5-digit dirs are listed, never overwritten") {
-    val root = tmpRoot().getPath
-    SearchOps.buildPostingsIndex(docs, "text", "doc_id", root)
-    // simulate an index that has lived through ~10k versions: torn
-    // (unswapped) dirs at the 4→5 digit boundary. A 4-digit-only match
-    // would make max(visible)+1 stick at 10000 forever and silently
-    // overwrite v10000 on every subsequent append.
-    Seq(9999, 10000).foreach { v =>
-      assert(new java.io.File(SearchOps.postingsVersionDir(root, v)).mkdirs())
-    }
-    SearchOps.appendPostingsIndex(docs.limit(0), "text", "doc_id",
-      root, batchTag = "past-rollover") shouldBe Some(10001)
-    SearchOps.postingsCurrentVersion(root) shouldBe Some(10001)
-    // and the dir name round-trips (%04d pads, never truncates)
-    SearchOps.postingsVersionDir(root, 10001) should endWith("v10001")
-    assert(new java.io.File(SearchOps.postingsVersionDir(root, 10001), "manifest.json").exists())
+    families.foreach { f => withClue(s"[${f.name}] ") {
+      val root = tmpRoot().getPath
+      f.build(root)
+      // simulate an index that has lived through ~10k versions: torn
+      // (unswapped) dirs at the 4→5 digit boundary. A 4-digit-only match
+      // would make max(visible)+1 stick at 10000 forever and silently
+      // overwrite v10000 on every subsequent mutation.
+      Seq(9999, 10000).foreach { v =>
+        assert(new java.io.File(f.versionDir(root, v)).mkdirs())
+      }
+      f.mutate(root) shouldBe Some(10001)
+      f.current(root) shouldBe Some(10001)
+      // and the dir name round-trips (%04d pads, never truncates)
+      f.versionDir(root, 10001) should endWith("v10001")
+      assert(new java.io.File(f.versionDir(root, 10001), f.marker).exists())
+    } }
   }
 
   test("re-adding a tombstoned doc is refused before a fold, converges after one") {

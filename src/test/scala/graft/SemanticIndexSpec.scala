@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.{SemanticIndex, SimilarityOps}
+import graft.streaming.StreamOps
 
 /** The persisted SemDeDup layout must be a pure serving form of the
   * derive-in-query operator: judgments through the stored index equal
@@ -171,5 +172,34 @@ class SemanticIndexSpec extends SparkSpec {
     assert(SemanticIndex.currentVersion(root).contains(v2))
     // prune takes the same mutex: uncontended here, must still succeed
     assert(SemanticIndex.pruneVersions(root, keepLatest = 1) == Seq(1))
+  }
+
+  test("a rebuild on a served root carries the ledger: a replayed absorbed batch skips, its verdicts stand") {
+    // the documented rebuild path: buildAndServe again on a served root,
+    // from a corpus that already holds a committed batch's kept rows.
+    // The rebuild must carry that batch into its ledger, or a replay
+    // re-judges it against an index holding its own kept rows and marks
+    // each one a duplicate of itself.
+    val root = tmpDir("semidx_rebuild").getPath
+    val target = tmpDir("semidx_rebuild_verdicts").getPath
+    SemanticIndex.buildAndServe(corpus, "vid", "vd", k, iters, root)
+    StreamOps.semanticIntakeTrigger(batch, 7L, root, "vid", "vd", target, t2)
+    def verdicts() = spark.read.parquet(s"$target/batch=b7")
+      .select("vid", "dup_of", "kept").orderBy("vid").collect()
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1),
+        r.getBoolean(2))).toSeq
+    val first = verdicts()
+    assert(first.exists(_._3) && first.exists(!_._3),
+      s"fixture must produce both dups and keeps: $first")
+    val keptIds = first.filter(_._3).map(_._1)
+    val rebuilt = corpus.unionByName(batch.filter(col("vid").isin(keptIds: _*)))
+    val v2 = SemanticIndex.buildAndServe(rebuilt, "vid", "vd", k, iters, root)
+    StreamOps.semanticIntakeTrigger(batch, 7L, root, "vid", "vd", target, t2)
+    assert(verdicts() == first, "a replayed absorbed batch must skip, not re-judge")
+    val dir = SemanticIndex.versionDir(root, v2)
+    assert(SemanticIndex.foldedBatchIds(dir) == Set(7L),
+      "the rebuild must carry the served version's committed batch")
+    assert(!new java.io.File(dir, "ingest").exists(),
+      "the skipped replay must not commit a segment")
   }
 }

@@ -514,7 +514,7 @@ class VectorIndexSpec extends SparkSpec {
     // Two maintenance jobs racing on one root (a fold racing a retrain
     // under streaming ingest is the deployment shape; two retrains give
     // the same race a deterministic oracle). The claim-based allocation
-    // (claimNextVersion, the SearchOps.claimNextPostingsVersion pattern)
+    // (VersionedStore's, shared with the postings and semantic families)
     // guarantees they never share a version dir; it deliberately does
     // NOT serialize them — both read the same base, the last pointer
     // swap wins, and the loser's complete version goes unreferenced.

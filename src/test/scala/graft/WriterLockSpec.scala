@@ -19,8 +19,9 @@ class GraftNoRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     if (exists(dst)) false else super.rename(src, dst)
 }
 
-/** The claim/lock layer under both persisted-index version allocators
-  * (SearchOps.claimNextPostingsVersion, VectorIndex.claimNextVersion):
+/** The claim/lock layer under the persisted-index version allocator
+  * (graft.io.VersionedStore, shared by the postings, vector and semantic
+  * families):
   *  - the default TokenListingLock is exclusive under a REAL race on
   *    local disk (where neither `createNewFile` nor rename-into-place
   *    is exclusive — the round-12 advice finding);
