@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** End-to-end training-corpus curation: the composition a 100 TB
   * pipeline actually runs, built from the individual operators —
@@ -14,13 +15,64 @@ import org.apache.spark.sql.functions._
   *  4. benchmark decontamination (drop the eval docs themselves and
   *     every train doc sharing a 5-gram with one).
   *
-  * Each stage is one distributed pass over the survivors of the
-  * previous stage; at corpus scale the intermediate survivor sets
-  * would be persisted as parquet between stages (they are lazily
-  * recomputed here, which is fine for the verify scale and keeps the
-  * composition a single declarative plan).
+  * Each chain ([[curate]]'s and [[curateFull]]'s) has ONE definition
+  * that hands every stage's survivors to a stage boundary, in chain
+  * order, and builds the next stage on what the boundary returns:
+  *
+  *  - the lazy variants (`curate*`, `curate*Stages`) persist the stages
+  *    later stages read more than once and return one declarative plan
+  *    per stage (the q67/q77 query shape);
+  *  - the sinks (`*ToParquet`) land each stage — write
+  *    `outDir/<label>.parquet`, read it back — so the next stage is
+  *    built over a small parquet leaf after the one before it has run,
+  *    never over the whole upstream lineage. That is the medallion
+  *    discipline: no stage's plan is re-analyzed or re-executed by a
+  *    later one, and the landed stages give restartability.
+  *
+  * Caches internal to one stage (the span stage's tokenization, the
+  * near-dup shingle table) persist in both shapes; a sink releases each
+  * once the stage it serves has landed.
   */
 object CurationPipeline {
+
+  /** Where a chain's stages go. `stage` is called at each stage boundary
+    * (and for each monitoring report) in chain order and returns the
+    * frame later stages build on; `release` ends a stage-internal cache
+    * once the stage it serves has landed.
+    */
+  private final case class Boundary(stage: (String, DataFrame) => DataFrame,
+                                    release: DataFrame => Unit)
+
+  /** The lazy boundary: persist the named stages, pass everything else
+    * through; stage-internal caches stay alive for the returned plans.
+    */
+  private def persisting(labels: String*): Boundary = Boundary(
+    (label, df) => if (labels.contains(label)) df.persist(StorageLevel.MEMORY_AND_DISK) else df,
+    _ => ())
+
+  /** The sink boundary: write `outDir/<label>.parquet` and continue from
+    * the landed table; stage-internal caches unpersist once landed. The
+    * read-back takes the schema just written, so landing a stage runs no
+    * footer-inference job.
+    */
+  private def landing(outDir: String): Boundary = Boundary({ (label, df) =>
+      val path = s"$outDir/$label.parquet"
+      df.write.mode("overwrite").parquet(path)
+      df.sparkSession.read.schema(df.schema).parquet(path)
+    }, _.unpersist())
+
+  /** The (doc_id, lang, _is_eval, _nt norm text, _ws words) frame both
+    * chains start from; one materialized tokenization feeds stage 1
+    * (lambda-CSE: see DedupOps.shinglesOfWords).
+    */
+  private def tokenized(docs: DataFrame, textCol: String, idCol: String, langCol: String,
+                        evalPred: Column): DataFrame =
+    docs.select(
+        col(idCol).cast("long").as("doc_id"),
+        col(langCol).as("lang"),
+        evalPred.as("_is_eval"),
+        DedupOps.normText(col(textCol)).as("_nt"))
+      .withColumn("_ws", split(col("_nt"), " "))
 
   /** Survivors of the full chain, carrying (doc_id, lang, _nt norm
     * text, _ws words). `maxDupTenths` = allowed duplicate-word
@@ -49,57 +101,49 @@ object CurationPipeline {
                    ngramN: Int = 3, jaccardThreshold: Double = 0.5,
                    contamN: Int = 5,
                  maxBucket: Int = DedupOps.DefaultMaxBucket): Seq[(String, DataFrame)] =
-    curateStagesWithCaches(docs, textCol, idCol, langCol, evalPred,
-      maxDupTenths, ngramN, jaccardThreshold, contamN, maxBucket)._1
+    curateChain(docs, textCol, idCol, langCol, evalPred, maxDupTenths,
+      ngramN, jaccardThreshold, contamN, maxBucket,
+      persisting("2_exact_dedup", "3_near_dedup"))
 
-  /** [[curateStages]] plus every frame the chain persisted (stage frames
-    * AND the internal shingle table) so an owner can unpersist them all
-    * after its final action — see [[curateToParquet]] — plus the chain's
-    * monitoring reports (near-dup cap drops; lazy, evaluated only when a
-    * sink writes them).
+  /** [[curate]]'s one chain definition, stages handed to `at` in order;
+    * the near-dup cap-drop report ("no silent caps") goes to `at` as
+    * `reports/near_dup_cap_drops` over the same shingle frame the
+    * candidates ran on.
     */
-  private def curateStagesWithCaches(docs: DataFrame, textCol: String, idCol: String,
-                   langCol: String,
-                   evalPred: Column, maxDupTenths: Int = 7,
-                   ngramN: Int = 3, jaccardThreshold: Double = 0.5,
-                   contamN: Int = 5,
-                 maxBucket: Int = DedupOps.DefaultMaxBucket):
-      (Seq[(String, DataFrame)], Seq[DataFrame], Seq[(String, DataFrame)]) = {
-    // one materialized tokenization feeds stage 1 (lambda-CSE: see
-    // DedupOps.shinglesOfWords)
-    val base = docs.select(
-        col(idCol).cast("long").as("doc_id"),
-        col(langCol).as("lang"),
-        evalPred.as("_is_eval"),
-        DedupOps.normText(col(textCol)).as("_nt"))
-      .withColumn("_ws", split(col("_nt"), " "))
+  private def curateChain(docs: DataFrame, textCol: String, idCol: String,
+                          langCol: String, evalPred: Column, maxDupTenths: Int,
+                          ngramN: Int, jaccardThreshold: Double, contamN: Int,
+                          maxBucket: Int, at: Boundary): Seq[(String, DataFrame)] = {
+    val base = tokenized(docs, textCol, idCol, langCol, evalPred)
     val train = base.filter(!col("_is_eval"))
 
     // 1. repetition filter
-    val keep1 = train.filter(size(col("_ws")) >= 2 &&
+    val keep1 = at.stage("1_repetition_gate", train.filter(size(col("_ws")) >= 2 &&
       (size(col("_ws")) - size(array_distinct(col("_ws")))) * 10 <=
-        size(col("_ws")) * maxDupTenths)
+        size(col("_ws")) * maxDupTenths))
 
     // 2. exact dedup: min doc_id per normalized text (combinable
     // min-agg + semi-join — skew-proof on mass-duplicate corpora, see
-    // DedupOps.keepMinIdPerText). Persisted: it feeds the near-dup
-    // shingle table AND the anti-join base (at corpus scale each stage
-    // writes parquet instead).
-    val keep2 = DedupOps.keepMinIdPerText(keep1, "_nt", "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // DedupOps.keepMinIdPerText). It feeds the near-dup shingle table
+    // AND the anti-join base.
+    val keep2 = at.stage("2_exact_dedup", DedupOps.keepMinIdPerText(keep1, "_nt", "doc_id"))
 
     // 3. near-dup removal: LSH candidates + exact verify (same engine
     // as q28; _nt is already normalized so re-normalization is a
     // no-op), drop the larger id of each pair. The shingle table is
     // persisted HERE (not inside minhashNearDupPairs) so the chain owns
-    // every cache it creates and can hand them to an unpersisting caller.
+    // every cache it creates.
     val sh = DedupOps.shingleHashTable(keep2, "_nt", "doc_id", ngramN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dropped = DedupOps.minhashNearDupPairsFromShingles(sh,
-        threshold = jaccardThreshold, cacheShingles = false, maxBucket = maxBucket)
-      .select(col("doc_b").as("doc_id")).distinct()
-    val keep3 = keep2.join(dropped, Seq("doc_id"), "left_anti")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val keep3 = try {
+      val dropped = DedupOps.minhashNearDupPairsFromShingles(sh,
+          threshold = jaccardThreshold, cacheShingles = false, maxBucket = maxBucket)
+        .select(col("doc_b").as("doc_id")).distinct()
+      val landed = at.stage("3_near_dedup", keep2.join(dropped, Seq("doc_id"), "left_anti"))
+      at.stage("reports/near_dup_cap_drops",
+        DedupOps.minhashOversizedBuckets(sh, maxBucket = maxBucket))
+      landed
+    } finally at.release(sh)
 
     // 4. decontamination: survivors vs the full original eval set
     // (union keeps contaminationReport's single-input shape; the eval
@@ -109,42 +153,27 @@ object CurationPipeline {
           base.filter(col("_is_eval")).select("doc_id", "_nt")),
         "_nt", "doc_id", evalPred, contamN)
       .select(col("train_doc").as("doc_id"))
-    val result = keep3.join(contaminated, Seq("doc_id"), "left_anti")
-    (Seq("1_repetition_gate" -> keep1, "2_exact_dedup" -> keep2,
-      "3_near_dedup" -> keep3, "4_decontaminated" -> result),
-      Seq(keep2, sh, keep3),
-      // cap-drop observability ("no silent caps"): the LSH buckets the
-      // near-dup stage's cap discarded, over the SAME persisted shingle
-      // frame the candidates ran on
-      Seq("near_dup_cap_drops" ->
-        DedupOps.minhashOversizedBuckets(sh, maxBucket = maxBucket)))
+    val result = at.stage("4_decontaminated", keep3.join(contaminated, Seq("doc_id"), "left_anti"))
+    Seq("1_repetition_gate" -> keep1, "2_exact_dedup" -> keep2,
+      "3_near_dedup" -> keep3, "4_decontaminated" -> result)
   }
 
-  /** [[curate]] in the corpus-scale shape: every stage materializes to
-    * `outDir/<label>.parquet` (later stages reuse the in-session caches
-    * while writing; the parquet gives restartability), then every cache
-    * the chain created is unpersisted — a long-lived session can run
-    * curation repeatedly without accumulating executor storage. Returns
-    * the final survivors read back from parquet.
+  /** [[curate]] in the corpus-scale shape: each stage lands as
+    * `outDir/<label>.parquet` before the next one is built over the
+    * landed table, the near-dup cap-drop report lands as
+    * `outDir/reports/near_dup_cap_drops.parquet` (a production run never
+    * discards mass silently), and every cache the chain created is
+    * unpersisted once its stage has landed — a long-lived session can
+    * run curation repeatedly without accumulating executor storage.
+    * Returns the final survivors read back from parquet.
     */
   def curateToParquet(docs: DataFrame, textCol: String, idCol: String, langCol: String,
                       evalPred: Column, outDir: String, maxDupTenths: Int = 7,
                       ngramN: Int = 3, jaccardThreshold: Double = 0.5,
                       contamN: Int = 5,
-                 maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
-    val (stages, caches, reports) = curateStagesWithCaches(docs, textCol, idCol, langCol,
-      evalPred, maxDupTenths, ngramN, jaccardThreshold, contamN, maxBucket)
-    stages.foreach { case (label, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/$label.parquet")
-    }
-    // monitoring artifacts: what the caps dropped, recorded next to the
-    // stage outputs so a production run never discards mass silently
-    reports.foreach { case (label, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/reports/$label.parquet")
-    }
-    caches.foreach(_.unpersist())
-    docs.sparkSession.read.parquet(s"$outDir/${stages.last._1}.parquet")
-  }
+                 maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame =
+    curateChain(docs, textCol, idCol, langCol, evalPred, maxDupTenths,
+      ngramN, jaccardThreshold, contamN, maxBucket, landing(outDir)).last._2
 
   /** The FULL curation chain a web-scale training pipeline runs —
     * [[curate]]'s stages plus the scrubbing family, composed in the
@@ -190,71 +219,69 @@ object CurationPipeline {
                  ngramN: Int = 3, jaccardThreshold: Double = 0.5,
                  contamN: Int = 5,
                  maxBucket: Int = DedupOps.DefaultMaxBucket): Seq[(String, DataFrame)] =
-    curateFullStagesWithCaches(docs, textCol, idCol, langCol, evalPred, minWords,
+    curateFullChain(docs, textCol, idCol, langCol, evalPred, minWords,
       lineWords, lineMinDocs, spanWords, spanMinCount, ngramN,
-      jaccardThreshold, contamN, maxBucket)._1
+      jaccardThreshold, contamN, maxBucket,
+      persisting("2_exact_dedup", "4_span_dedup", "5_near_dedup"))
 
-  private def curateFullStagesWithCaches(docs: DataFrame, textCol: String, idCol: String,
-                 langCol: String,
-                 evalPred: Column, minWords: Int = 15,
-                 lineWords: Int = 4, lineMinDocs: Int = 3,
-                 spanWords: Int = 10, spanMinCount: Int = 2,
-                 ngramN: Int = 3, jaccardThreshold: Double = 0.5,
-                 contamN: Int = 5,
-                 maxBucket: Int = DedupOps.DefaultMaxBucket):
-      (Seq[(String, DataFrame)], Seq[DataFrame], Seq[(String, DataFrame)]) = {
-    val base = docs.select(
-        col(idCol).cast("long").as("doc_id"),
-        col(langCol).as("lang"),
-        evalPred.as("_is_eval"),
-        DedupOps.normText(col(textCol)).as("_nt"))
-      .withColumn("_ws", split(col("_nt"), " "))
+  /** [[curateFull]]'s one chain definition (see [[curateChain]]). */
+  private def curateFullChain(docs: DataFrame, textCol: String, idCol: String,
+                 langCol: String, evalPred: Column, minWords: Int,
+                 lineWords: Int, lineMinDocs: Int,
+                 spanWords: Int, spanMinCount: Int,
+                 ngramN: Int, jaccardThreshold: Double, contamN: Int,
+                 maxBucket: Int, at: Boundary): Seq[(String, DataFrame)] = {
+    val base = tokenized(docs, textCol, idCol, langCol, evalPred)
     val train = base.filter(!col("_is_eval"))
 
     // 1. quality gate
-    val keep1 = train
-      .filter(size(TextOps.gopherFailReasons(col("_ws"), minWords = minWords)) === 0)
+    val keep1 = at.stage("1_quality_gate", train
+      .filter(size(TextOps.gopherFailReasons(col("_ws"), minWords = minWords)) === 0))
 
     // 2. exact dedup on the normalized text (before span dedup: full
     // copies share every span and would annihilate each other there).
     // Combinable min-agg + semi-join — skew-proof, see keepMinIdPerText.
-    val keep2 = DedupOps.keepMinIdPerText(keep1, "_nt", "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keep2 = at.stage("2_exact_dedup", DedupOps.keepMinIdPerText(keep1, "_nt", "doc_id"))
 
     // 3. line-level boilerplate removal over the deduped corpus
     val chunks = transform(
       sequence(lit(0), floor((size(col("_ws")) - 1) / lineWords).cast("int")),
       i => array_join(slice(col("_ws"), i * lineWords + 1, lit(lineWords)), " "))
     val lined = keep2.select(col("doc_id"), array_join(chunks, "\n").as("_lined"))
-    val keep3 = ScrubOps.lineFrequencyFilter(lined, "_lined", "doc_id", lineMinDocs)
-      .filter(col("text_clean") =!= "")
-      .select(col("doc_id"),
-        regexp_replace(col("text_clean"), "\n", " ").as("_t"))
+    val keep3 = at.stage("3_line_scrub",
+      ScrubOps.lineFrequencyFilter(lined, "_lined", "doc_id", lineMinDocs)
+        .filter(col("text_clean") =!= "")
+        .select(col("doc_id"),
+          regexp_replace(col("text_clean"), "\n", " ").as("_t")))
 
     // 4. span-level substring dedup over the line-cleaned corpus;
     // emitWordHashes hands the surviving words' hashes straight to the
     // near-dup stage (no re-tokenize / re-hash of the cleaned text)
     val (spanned, spanCaches) = ScrubOps.spanDedupWithCaches(keep3, "_t", "doc_id",
       spanWords, spanMinCount, emitWordHashes = true)
-    val keep4 = spanned
-      .filter(col("text_clean") =!= "")
-      .select(col("doc_id"), col("text_clean").as("_t"), col("wh_clean"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keep4 = try at.stage("4_span_dedup", spanned
+        .filter(col("text_clean") =!= "")
+        .select(col("doc_id"), col("text_clean").as("_t"), col("wh_clean")))
+      finally spanCaches.foreach(at.release)
 
-    // 5. near-dup removal, shingling the span stage's word-hash arrays;
-    // the shingle frame persists here (chain-owned, see curateStages)
+    // 5. near-dup removal, shingling the span stage's word-hash arrays
+    // (chain-owned shingle cache, see curateChain). keep5 carries
+    // wh_clean forward: the decontamination stage shingles the SAME
+    // surviving-word hashes (split(_t) words == the surviving words,
+    // FNV'd == wh_clean) instead of re-tokenizing every survivor
     val shTbl = keep4.select(col("doc_id"),
         DedupOps.shingleHashesOfWordHashes(col("wh_clean"), ngramN).as("sg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dropped = DedupOps.minhashNearDupPairsFromShingles(shTbl,
-        threshold = jaccardThreshold, cacheShingles = false, maxBucket = maxBucket)
-      .select(col("doc_b").as("doc_id")).distinct()
-    // keep5 carries wh_clean forward: the decontamination stage shingles
-    // the SAME surviving-word hashes (split(_t) words == the surviving
-    // words, FNV'd == wh_clean) instead of re-tokenizing every survivor
-    val keep5 = keep4.join(dropped, Seq("doc_id"), "left_anti")
-      .select("doc_id", "_t", "wh_clean")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val keep5 = try {
+      val dropped = DedupOps.minhashNearDupPairsFromShingles(shTbl,
+          threshold = jaccardThreshold, cacheShingles = false, maxBucket = maxBucket)
+        .select(col("doc_b").as("doc_id")).distinct()
+      val landed = at.stage("5_near_dedup", keep4.join(dropped, Seq("doc_id"), "left_anti")
+        .select("doc_id", "_t", "wh_clean"))
+      at.stage("reports/near_dup_cap_drops",
+        DedupOps.minhashOversizedBuckets(shTbl, maxBucket = maxBucket))
+      landed
+    } finally at.release(shTbl)
 
     // 6. decontamination vs the ORIGINAL eval texts — eval side hashed
     // with the same FNV kernel so the shingle families match
@@ -266,21 +293,21 @@ object CurationPipeline {
     val contaminated = DedupOps.contaminationReportFromWordHashes(
         trainWh.unionByName(evalWh), contamN)
       .select(col("train_doc").as("doc_id"))
-    val result = keep5.join(contaminated, Seq("doc_id"), "left_anti")
+    val result = at.stage("6_decontaminated", keep5.join(contaminated, Seq("doc_id"), "left_anti")
       .select("doc_id", "_t")
       .join(base.select("doc_id", "lang"), Seq("doc_id"))
-      .withColumn("_ws", split(col("_t"), " "))
-    (Seq("1_quality_gate" -> keep1, "2_exact_dedup" -> keep2,
+      .withColumn("_ws", split(col("_t"), " ")))
+    Seq("1_quality_gate" -> keep1, "2_exact_dedup" -> keep2,
       "3_line_scrub" -> keep3, "4_span_dedup" -> keep4,
-      "5_near_dedup" -> keep5, "6_decontaminated" -> result),
-      Seq(keep2) ++ spanCaches ++ Seq(keep4, shTbl, keep5),
-      Seq("near_dup_cap_drops" ->
-        DedupOps.minhashOversizedBuckets(shTbl, maxBucket = maxBucket)))
+      "5_near_dedup" -> keep5, "6_decontaminated" -> result)
   }
 
   /** [[curateFull]] in the corpus-scale shape (see [[curateToParquet]]):
-    * per-stage parquet materialization, then every chain-created cache
-    * unpersists. Returns the final survivors read back from parquet.
+    * each stage lands as `outDir/<label>.parquet` and the next one is
+    * built over the landed table; the span stage's caches release once
+    * stage 4 lands, the shingle table once the cap-drop report
+    * (`outDir/reports/near_dup_cap_drops.parquet`) is written. Returns
+    * the final survivors read back from parquet.
     */
   def curateFullToParquet(docs: DataFrame, textCol: String, idCol: String, langCol: String,
                  evalPred: Column, outDir: String, minWords: Int = 15,
@@ -288,19 +315,10 @@ object CurationPipeline {
                  spanWords: Int = 10, spanMinCount: Int = 2,
                  ngramN: Int = 3, jaccardThreshold: Double = 0.5,
                  contamN: Int = 5,
-                 maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame = {
-    val (stages, caches, reports) = curateFullStagesWithCaches(docs, textCol, idCol, langCol,
-      evalPred, minWords, lineWords, lineMinDocs, spanWords, spanMinCount,
-      ngramN, jaccardThreshold, contamN, maxBucket)
-    stages.foreach { case (label, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/$label.parquet")
-    }
-    reports.foreach { case (label, df) =>
-      df.write.mode("overwrite").parquet(s"$outDir/reports/$label.parquet")
-    }
-    caches.foreach(_.unpersist())
-    docs.sparkSession.read.parquet(s"$outDir/${stages.last._1}.parquet")
-  }
+                 maxBucket: Int = DedupOps.DefaultMaxBucket): DataFrame =
+    curateFullChain(docs, textCol, idCol, langCol, evalPred, minWords,
+      lineWords, lineMinDocs, spanWords, spanMinCount, ngramN,
+      jaccardThreshold, contamN, maxBucket, landing(outDir)).last._2
 
   /** Per-language corpus stats over the curated survivors. The
     * repartition barrier before the orderBy is the q48 trick: the range

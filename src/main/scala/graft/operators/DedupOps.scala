@@ -331,22 +331,7 @@ object DedupOps {
                                       numHashes: Int = 64, bands: Int = 32,
                                       threshold: Double = 0.5,
                                       cacheShingles: Boolean = true,
-                                      maxBucket: Int = DefaultMaxBucket): DataFrame =
-    minhashNearDupPairsFromShinglesWithDrops(
-      sh0, numHashes, bands, threshold, cacheShingles, maxBucket)._1
-
-  /** [[minhashNearDupPairsFromShingles]] plus the cap-drop report (None
-    * when uncapped): (band_idx, band_hash, bucket_width) of every bucket
-    * the cap excludes, sharing the pairs plan's shingle frame — for
-    * callers that want the drops as data instead of the bare variant's
-    * log line.
-    */
-  def minhashNearDupPairsFromShinglesWithDrops(sh0: DataFrame,
-                                      numHashes: Int = 64, bands: Int = 32,
-                                      threshold: Double = 0.5,
-                                      cacheShingles: Boolean = true,
-                                      maxBucket: Int = DefaultMaxBucket)
-  : (DataFrame, Option[DataFrame]) = {
+                                      maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // The shingle table feeds three consumers (signature agg + both
     // verify-join sides) — persist it once instead of recomputing the
     // most expensive narrow stage per consumer. At corpus scale, write it
@@ -357,15 +342,31 @@ object DedupOps {
     else sh0
     val sig = minhashSignaturesFromShingles(sh, numHashes)
     val cand = lshCandidatePairs(sig, bands, numHashes / bands, maxBucket)
-    val pairs = cand
+    cand
       .join(sh.select(col("doc_id").as("doc_a"), col("sg").as("sg_a")), Seq("doc_a"))
       .join(sh.select(col("doc_id").as("doc_b"), col("sg").as("sg_b")), Seq("doc_b"))
       .withColumn("jaccard", jaccard(col("sg_a"), col("sg_b")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
+  }
+
+  /** [[minhashNearDupPairsFromShingles]] plus the cap-drop report (None
+    * when uncapped): (band_idx, band_hash, bucket_width) of every bucket
+    * the cap excludes, sharing the pairs plan's shingle frame (persist
+    * returns the same frame) — for callers that want the drops as data
+    * instead of the bare variant's log line.
+    */
+  def minhashNearDupPairsFromShinglesWithDrops(sh0: DataFrame,
+                                      numHashes: Int = 64, bands: Int = 32,
+                                      threshold: Double = 0.5,
+                                      cacheShingles: Boolean = true,
+                                      maxBucket: Int = DefaultMaxBucket)
+  : (DataFrame, Option[DataFrame]) = {
+    val pairs = minhashNearDupPairsFromShingles(
+      sh0, numHashes, bands, threshold, cacheShingles, maxBucket)
     val drops =
       if (maxBucket == NoBucketCap) None
-      else Some(minhashOversizedBuckets(sh, numHashes, bands, maxBucket))
+      else Some(minhashOversizedBuckets(sh0, numHashes, bands, maxBucket))
     (pairs, drops)
   }
 

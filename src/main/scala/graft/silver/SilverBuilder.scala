@@ -86,15 +86,18 @@ object SilverBuilder {
       summary.pagination.stopReason, Seq(csvKey, parquetKey))
   }
 
-  /** Read the currently-promoted version of a table (for upsert merges);
-    * empty frame when nothing is promoted yet.
+  /** Read the currently-promoted version of a table (for upsert merges).
+    * Empty only when nothing is promoted yet or the promoted batch has no
+    * such table; any other failure (an unreadable table, a listing error)
+    * propagates — merging into an empty frame would publish this cycle's
+    * rows alone and silently drop the table's history.
     */
   def readCurrent(spark: SparkSession, store: BatchStore, storeRoot: String,
                   latestKey: String, shape: DataFrame): DataFrame =
-    try {
+    if (!store.exists(store.productionPointerKey)) shape.limit(0)
+    else {
       val resolved = store.resolveProductionKey(latestKey)
-      spark.read.parquet(s"$storeRoot/$resolved")
-    } catch {
-      case _: Exception => shape.limit(0)
+      if (store.exists(resolved)) spark.read.parquet(s"$storeRoot/$resolved")
+      else shape.limit(0)
     }
 }

@@ -14,31 +14,7 @@ import graft.operators.CurationPipeline
 class CurateFullSpec extends SparkSpec {
   import spark.implicits._
 
-  private val s10 = "sqaa sqbb sqcc sqdd sqee sqff sqgg sqhh sqii sqjj" // shared 10-word span
-  private lazy val docs = Seq(
-    // clean survivor (16 words, two "the" stopwords)
-    (1L, "en", "the cava cbrn ctig cjmp cwhr cdzn cplt cwtr cstn ccld the criv cgrs csnk cmpl"),
-    // gate: too short
-    (2L, "en", "the dcat is dsml"),
-    // gate: no stopwords
-    (3L, "en", "eaaa ebbb eccc eddd eeee efff eggg ehhh eiii ejjj ekkk elll emmm ennn eooo eppp"),
-    // boilerplate trio: same first 4-word line, distinct remainders
-    (4L, "en", "fclk fher facc fcok the daaa dbbb dccc dddd the deee dfff dggg dhhh diii djjj"),
-    (5L, "en", "fclk fher facc fcok the eaa2 ebb2 ecc2 edd2 the eee2 eff2 egg2 ehh2 eii2 ejj2"),
-    (6L, "en", "fclk fher facc fcok the faa3 fbb3 fcc3 fdd3 the fee3 fff3 fgg3 fhh3 fii3 fjj3"),
-    // span pair: distinct 6-word heads + the same 10-word tail
-    (7L, "de", s"the the gaaa gbbb gccc gddd $s10"),
-    (8L, "de", s"the the haaa hbbb hccc hddd $s10"),
-    // exact duplicate of doc 1 (case + extra spaces): exact stage keeps 1
-    (9L, "en", "THE  cava cbrn ctig cjmp cwhr cdzn cplt cwtr cstn ccld the criv cgrs csnk cmpl"),
-    // near-dup pair: differ at one position -> 3-gram jaccard 11/17
-    (11L, "en", "the jaaa jbbb jccc jddd the jeee jfff jxxx jggg jhhh jiii jjjj jkkk jlll jmmm"),
-    (12L, "en", "the jaaa jbbb jccc jddd the jeee jfff jyyy jggg jhhh jiii jjjj jkkk jlll jmmm"),
-    // contaminated: contains the eval doc's 5-gram "pack my box with five"
-    (13L, "en", "the kaaa kbbb kccc kddd the keee pack my box with five kfff kggg khhh kiii"),
-    // eval doc (id % 10 == 0)
-    (20L, "en", "pack my box with five dozen liquor jugs")
-  ).toDF("doc_id", "lang", "text")
+  private lazy val docs = CurateFullSpec.rows.toDF("doc_id", "lang", "text")
 
   private lazy val curated = CurationPipeline.curateFull(
     docs, "text", "doc_id", "lang", col("doc_id") % 10 === 0)
@@ -65,4 +41,33 @@ class CurateFullSpec extends SparkSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(got.toSeq == Seq(("de", 2L, 12L, 7L, 8L), ("en", 5L, 68L, 1L, 11L)))
   }
+}
+
+/** The planted-defect corpus, shared with CurationStageOutputSpec. */
+object CurateFullSpec {
+  private val s10 = "sqaa sqbb sqcc sqdd sqee sqff sqgg sqhh sqii sqjj" // shared 10-word span
+  val rows: Seq[(Long, String, String)] = Seq(
+    // clean survivor (16 words, two "the" stopwords)
+    (1L, "en", "the cava cbrn ctig cjmp cwhr cdzn cplt cwtr cstn ccld the criv cgrs csnk cmpl"),
+    // gate: too short
+    (2L, "en", "the dcat is dsml"),
+    // gate: no stopwords
+    (3L, "en", "eaaa ebbb eccc eddd eeee efff eggg ehhh eiii ejjj ekkk elll emmm ennn eooo eppp"),
+    // boilerplate trio: same first 4-word line, distinct remainders
+    (4L, "en", "fclk fher facc fcok the daaa dbbb dccc dddd the deee dfff dggg dhhh diii djjj"),
+    (5L, "en", "fclk fher facc fcok the eaa2 ebb2 ecc2 edd2 the eee2 eff2 egg2 ehh2 eii2 ejj2"),
+    (6L, "en", "fclk fher facc fcok the faa3 fbb3 fcc3 fdd3 the fee3 fff3 fgg3 fhh3 fii3 fjj3"),
+    // span pair: distinct 6-word heads + the same 10-word tail
+    (7L, "de", s"the the gaaa gbbb gccc gddd $s10"),
+    (8L, "de", s"the the haaa hbbb hccc hddd $s10"),
+    // exact duplicate of doc 1 (case + extra spaces): exact stage keeps 1
+    (9L, "en", "THE  cava cbrn ctig cjmp cwhr cdzn cplt cwtr cstn ccld the criv cgrs csnk cmpl"),
+    // near-dup pair: differ at one position -> 3-gram jaccard 11/17
+    (11L, "en", "the jaaa jbbb jccc jddd the jeee jfff jxxx jggg jhhh jiii jjjj jkkk jlll jmmm"),
+    (12L, "en", "the jaaa jbbb jccc jddd the jeee jfff jyyy jggg jhhh jiii jjjj jkkk jlll jmmm"),
+    // contaminated: contains the eval doc's 5-gram "pack my box with five"
+    (13L, "en", "the kaaa kbbb kccc kddd the keee pack my box with five kfff kggg khhh kiii"),
+    // eval doc (id % 10 == 0)
+    (20L, "en", "pack my box with five dozen liquor jugs")
+  )
 }

@@ -147,203 +147,6 @@ object ProfileMain {
         timeDf(s"${args.head.take(3)}:$label")(build()(i)._2) }
       val full = if (args.head == "q77stages") "q77_corpus_pipeline_full" else "q67_corpus_pipeline"
       timeDf(s"${args.head.take(3)}:full+stats")(SparkEntry.queries(full)(spark, sfDir))
-    } else if (args.headOption.contains("q77probe")) {
-      // decompose stage 1's floor: scan, normText+split, each gate term
-      import org.apache.spark.sql.functions._
-      import graft.operators.{DedupOps, TextOps}
-      val docs = Tables.load(spark, sfDir, "documents")
-      timeDf("probe:scan-only")(docs.select(col("doc_id"), col("text")))
-      val base = docs.select(
-          col("doc_id").cast("long").as("doc_id"),
-          col("lang").as("lang"),
-          (col("doc_id") % 10 === 0).as("_is_eval"),
-          DedupOps.normText(col("text")).as("_nt"))
-        .withColumn("_ws", split(col("_nt"), " "))
-      timeDf("probe:base(nt+ws)")(base)
-      val train = base.filter(!col("_is_eval"))
-      timeDf("probe:gate-full")(train.filter(
-        size(TextOps.gopherFailReasons(col("_ws"), minWords = 15)) === 0))
-      timeDf("probe:gate-nodistinct")(train.filter(
-        size(col("_ws")) >= 15 && size(col("_ws")) <= 10000))
-      timeDf("probe:gate-distinct-only")(train.filter(
-        size(array_distinct(col("_ws"))) > 0))
-      timeDf("probe:gate-join-only")(train.filter(
-        length(array_join(col("_ws"), " ")) > 0))
-      timeDf("probe:gate-stop-only")(train.filter(
-        size(filter(col("_ws"), w => w.isin(TextOps.markers("en"): _*))) >= 2))
-    } else if (args.headOption.contains("q77split")) {
-      // driver-side plan construction vs executor time: the bench's
-      // timed() constructs the query per rep, so Catalyst analysis of
-      // the 6-stage chain is inside every bench number
-      import org.apache.spark.sql.functions._
-      import graft.operators.CurationPipeline
-      val docs = Tables.load(spark, sfDir, "documents")
-      for (rep <- 1 to 3) {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val q = SparkEntry.queries("q77_corpus_pipeline_full")(spark, sfDir)
-        val t1 = System.nanoTime()
-        q.write.format("noop").mode("overwrite").save()
-        val t2 = System.nanoTime()
-        println(f"PROFILE q77split r$rep construct=${(t1 - t0) / 1e9}%5.2f s  " +
-          f"execute=${(t2 - t1) / 1e9}%5.2f s")
-      }
-      spark.catalog.clearCache()
-      // how much of construct is the persist() analyses vs the final plan
-      for (rep <- 1 to 2) {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val stages = CurationPipeline.curateFullStages(docs, "text", "doc_id",
-          "lang", col("doc_id") % 10 === 0)
-        val t1 = System.nanoTime()
-        println(f"PROFILE q77split r$rep stages-construct=${(t1 - t0) / 1e9}%5.2f s")
-      }
-    } else if (args.headOption.contains("q77construct")) {
-      // construction loop for driver thread-dump sampling (guide §7.3)
-      import org.apache.spark.sql.functions._
-      import graft.operators.CurationPipeline
-      val docs = Tables.load(spark, sfDir, "documents")
-      val t0 = System.nanoTime()
-      var n = 0
-      while ((System.nanoTime() - t0) / 1e9 < 30) {
-        CurationPipeline.curateFullStages(docs, "text", "doc_id",
-          "lang", col("doc_id") % 10 === 0)
-        spark.catalog.clearCache()
-        n += 1
-      }
-      println(f"PROFILE q77construct loops=$n in ${(System.nanoTime() - t0) / 1e9}%5.1f s")
-    } else if (args.headOption.contains("q77cstages")) {
-      // construction-time share per chain stage: replays the chain's
-      // structure with a stopwatch between operator constructions.
-      // NOTE (also for q77trunc below): these probes hand-replay the
-      // round-20 shape of CurationPipeline.curateFullStagesWithCaches —
-      // if the pipeline changes, re-sync before trusting their numbers
-      import org.apache.spark.sql.functions._
-      import graft.operators.{DedupOps, ScrubOps, TextOps}
-      val docs = Tables.load(spark, sfDir, "documents")
-      for (rep <- 1 to 2) {
-        spark.catalog.clearCache()
-        var last = System.nanoTime()
-        def mark(label: String): Unit = {
-          val now = System.nanoTime()
-          println(f"PROFILE construct:$label%-28s ${(now - last) / 1e9}%6.3f s")
-          last = now
-        }
-        val base = docs.select(
-            col("doc_id").cast("long").as("doc_id"), col("lang").as("lang"),
-            (col("doc_id") % 10 === 0).as("_is_eval"),
-            DedupOps.normText(col("text")).as("_nt"))
-          .withColumn("_ws", split(col("_nt"), " "))
-        val train = base.filter(!col("_is_eval"))
-        mark("base+train")
-        val keep1 = train.filter(
-          size(TextOps.gopherFailReasons(col("_ws"), minWords = 15)) === 0)
-        mark("1_gate")
-        val keep2 = DedupOps.keepMinIdPerText(keep1, "_nt", "doc_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        mark("2_exact_dedup")
-        val chunks = transform(
-          sequence(lit(0), floor((size(col("_ws")) - 1) / 4).cast("int")),
-          i => array_join(slice(col("_ws"), i * 4 + 1, lit(4)), " "))
-        val lined = keep2.select(col("doc_id"), array_join(chunks, "\n").as("_lined"))
-        val keep3 = ScrubOps.lineFrequencyFilter(lined, "_lined", "doc_id", 3)
-          .filter(col("text_clean") =!= "")
-          .select(col("doc_id"),
-            regexp_replace(col("text_clean"), "\n", " ").as("_t"))
-        mark("3_line_scrub")
-        val spanned = ScrubOps.spanDedup(keep3, "_t", "doc_id",
-          10, 2, emitWordHashes = true)
-        val keep4 = spanned.filter(col("text_clean") =!= "")
-          .select(col("doc_id"), col("text_clean").as("_t"), col("wh_clean"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        mark("4_span_dedup")
-        val shTbl = keep4.select(col("doc_id"),
-            DedupOps.shingleHashesOfWordHashes(col("wh_clean"), 3).as("sg"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val dropped = DedupOps.minhashNearDupPairsFromShingles(shTbl,
-            threshold = 0.5, cacheShingles = false)
-          .select(col("doc_b").as("doc_id")).distinct()
-        val keep5 = keep4.join(dropped, Seq("doc_id"), "left_anti")
-          .select("doc_id", "_t", "wh_clean")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        mark("5_near_dedup")
-        val evalWh = ScrubOps.fnvWordHashTable(
-            base.filter(col("_is_eval")).select("doc_id", "_nt"), "_nt", "doc_id")
-          .select(col("doc_id"), lit(true).as("_is_eval"), col("wh").as("_wh"))
-        val trainWh = keep5.select(col("doc_id"), lit(false).as("_is_eval"),
-          col("wh_clean").as("_wh"))
-        val contaminated = DedupOps.contaminationReportFromWordHashes(
-            trainWh.unionByName(evalWh), 5)
-          .select(col("train_doc").as("doc_id"))
-        val result = keep5.join(contaminated, Seq("doc_id"), "left_anti")
-          .select("doc_id", "_t")
-          .join(base.select("doc_id", "lang"), Seq("doc_id"))
-          .withColumn("_ws", split(col("_t"), " "))
-        mark("6_decontaminated")
-        result.write.format("noop").mode("overwrite").save()
-        mark("execute")
-      }
-    } else if (args.headOption.contains("q77trunc")) {
-      // prototype: truncate the chain's logical plan at each persisted
-      // stage boundary via localCheckpoint(eager=false) — measures the
-      // total (construct + execute) against the lazy baseline
-      import org.apache.spark.sql.functions._
-      import graft.operators.{DedupOps, ScrubOps, TextOps}
-      val docs = Tables.load(spark, sfDir, "documents")
-      for (rep <- 1 to 3) {
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val base = docs.select(
-            col("doc_id").cast("long").as("doc_id"), col("lang").as("lang"),
-            (col("doc_id") % 10 === 0).as("_is_eval"),
-            DedupOps.normText(col("text")).as("_nt"))
-          .withColumn("_ws", split(col("_nt"), " "))
-        val train = base.filter(!col("_is_eval"))
-        val keep1 = train.filter(
-          size(TextOps.gopherFailReasons(col("_ws"), minWords = 15)) === 0)
-        val keep2 = DedupOps.keepMinIdPerText(keep1, "_nt", "doc_id")
-          .localCheckpoint(false)
-        val chunks = transform(
-          sequence(lit(0), floor((size(col("_ws")) - 1) / 4).cast("int")),
-          i => array_join(slice(col("_ws"), i * 4 + 1, lit(4)), " "))
-        val lined = keep2.select(col("doc_id"), array_join(chunks, "\n").as("_lined"))
-        val keep3 = ScrubOps.lineFrequencyFilter(lined, "_lined", "doc_id", 3)
-          .filter(col("text_clean") =!= "")
-          .select(col("doc_id"),
-            regexp_replace(col("text_clean"), "\n", " ").as("_t"))
-        val spanned = ScrubOps.spanDedup(keep3, "_t", "doc_id",
-          10, 2, emitWordHashes = true)
-        val keep4 = spanned.filter(col("text_clean") =!= "")
-          .select(col("doc_id"), col("text_clean").as("_t"), col("wh_clean"))
-          .localCheckpoint(false)
-        val shTbl = keep4.select(col("doc_id"),
-            DedupOps.shingleHashesOfWordHashes(col("wh_clean"), 3).as("sg"))
-          .localCheckpoint(false)
-        val dropped = DedupOps.minhashNearDupPairsFromShingles(shTbl,
-            threshold = 0.5, cacheShingles = false)
-          .select(col("doc_b").as("doc_id")).distinct()
-        val keep5 = keep4.join(dropped, Seq("doc_id"), "left_anti")
-          .select("doc_id", "_t", "wh_clean")
-          .localCheckpoint(false)
-        val evalWh = ScrubOps.fnvWordHashTable(
-            base.filter(col("_is_eval")).select("doc_id", "_nt"), "_nt", "doc_id")
-          .select(col("doc_id"), lit(true).as("_is_eval"), col("wh").as("_wh"))
-        val trainWh = keep5.select(col("doc_id"), lit(false).as("_is_eval"),
-          col("wh_clean").as("_wh"))
-        val contaminated = DedupOps.contaminationReportFromWordHashes(
-            trainWh.unionByName(evalWh), 5)
-          .select(col("train_doc").as("doc_id"))
-        val result = keep5.join(contaminated, Seq("doc_id"), "left_anti")
-          .select("doc_id", "_t")
-          .join(base.select("doc_id", "lang"), Seq("doc_id"))
-          .withColumn("_ws", split(col("_t"), " "))
-        val t1 = System.nanoTime()
-        result.write.format("noop").mode("overwrite").save()
-        val t2 = System.nanoTime()
-        val nRows = result.count()
-        println(f"PROFILE q77trunc r$rep construct=${(t1 - t0) / 1e9}%5.2f s  " +
-          f"execute=${(t2 - t1) / 1e9}%5.2f s  rows=$nRows")
-      }
     } else if (args.headOption.contains("q148stages")) {
       import org.apache.spark.sql.functions._
       import graft.operators.{SearchOps, TextOps}
