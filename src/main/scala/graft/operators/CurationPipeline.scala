@@ -36,30 +36,39 @@ import org.apache.spark.storage.StorageLevel
 object CurationPipeline {
 
   /** Where a chain's stages go. `stage` is called at each stage boundary
-    * (and for each monitoring report) in chain order and returns the
-    * frame later stages build on; `release` ends a stage-internal cache
-    * once the stage it serves has landed.
+    * in chain order and returns the frame later stages build on; `report`
+    * takes a monitoring report by name, so a boundary that does not keep
+    * it never builds its plan; `release` ends a stage-internal cache once
+    * the stage it serves has landed.
     */
   private final case class Boundary(stage: (String, DataFrame) => DataFrame,
+                                    report: (String, => DataFrame) => Unit,
                                     release: DataFrame => Unit)
 
   /** The lazy boundary: persist the named stages, pass everything else
-    * through; stage-internal caches stay alive for the returned plans.
+    * through, drop the reports unbuilt; stage-internal caches stay alive
+    * for the returned plans.
     */
   private def persisting(labels: String*): Boundary = Boundary(
     (label, df) => if (labels.contains(label)) df.persist(StorageLevel.MEMORY_AND_DISK) else df,
+    (_, _) => (),
     _ => ())
 
-  /** The sink boundary: write `outDir/<label>.parquet` and continue from
-    * the landed table; stage-internal caches unpersist once landed. The
-    * read-back takes the schema just written, so landing a stage runs no
-    * footer-inference job.
+  /** The sink boundary: write `outDir/<label>.parquet` (stages and
+    * reports alike) and continue from the landed stage; stage-internal
+    * caches unpersist once landed. The read-back takes the schema just
+    * written, so landing a stage runs no footer-inference job.
     */
-  private def landing(outDir: String): Boundary = Boundary({ (label, df) =>
+  private def landing(outDir: String): Boundary = {
+    def write(label: String, df: DataFrame): String = {
       val path = s"$outDir/$label.parquet"
       df.write.mode("overwrite").parquet(path)
-      df.sparkSession.read.schema(df.schema).parquet(path)
-    }, _.unpersist())
+      path
+    }
+    Boundary((label, df) => df.sparkSession.read.schema(df.schema).parquet(write(label, df)),
+      (label, df) => write(label, df),
+      _.unpersist())
+  }
 
   /** The (doc_id, lang, _is_eval, _nt norm text, _ws words) frame both
     * chains start from; one materialized tokenization feeds stage 1
@@ -106,8 +115,8 @@ object CurationPipeline {
       persisting("2_exact_dedup", "3_near_dedup"))
 
   /** [[curate]]'s one chain definition, stages handed to `at` in order;
-    * the near-dup cap-drop report ("no silent caps") goes to `at` as
-    * `reports/near_dup_cap_drops` over the same shingle frame the
+    * the near-dup cap-drop report ("no silent caps") goes to `at.report`
+    * as `reports/near_dup_cap_drops` over the same shingle frame the
     * candidates ran on.
     */
   private def curateChain(docs: DataFrame, textCol: String, idCol: String,
@@ -140,7 +149,7 @@ object CurationPipeline {
           threshold = jaccardThreshold, cacheShingles = false, maxBucket = maxBucket)
         .select(col("doc_b").as("doc_id")).distinct()
       val landed = at.stage("3_near_dedup", keep2.join(dropped, Seq("doc_id"), "left_anti"))
-      at.stage("reports/near_dup_cap_drops",
+      at.report("reports/near_dup_cap_drops",
         DedupOps.minhashOversizedBuckets(sh, maxBucket = maxBucket))
       landed
     } finally at.release(sh)
@@ -278,7 +287,7 @@ object CurationPipeline {
         .select(col("doc_b").as("doc_id")).distinct()
       val landed = at.stage("5_near_dedup", keep4.join(dropped, Seq("doc_id"), "left_anti")
         .select("doc_id", "_t", "wh_clean"))
-      at.stage("reports/near_dup_cap_drops",
+      at.report("reports/near_dup_cap_drops",
         DedupOps.minhashOversizedBuckets(shTbl, maxBucket = maxBucket))
       landed
     } finally at.release(shTbl)

@@ -54,7 +54,7 @@ object SilverBuilder {
 
     // merge policy against the currently-promoted table (M1-M3)
     val latestKey = s"latest/parquet/${spec.name}.parquet"
-    val existing = readCurrent(spark, store, storeRoot, latestKey, conformed)
+    val existing = readCurrent(spark, store, latestKey, conformed)
     val merged = spec.writeStrategy match {
       case "upsert" | "append" =>
         MergeOps.upsert(existing, conformed, spec.primaryKey, spec.businessKey)
@@ -90,14 +90,15 @@ object SilverBuilder {
     * Empty only when nothing is promoted yet or the promoted batch has no
     * such table; any other failure (an unreadable table, a listing error)
     * propagates — merging into an empty frame would publish this cycle's
-    * rows alone and silently drop the table's history.
+    * rows alone and silently drop the table's history. The checks and the
+    * read resolve against the store's one root.
     */
-  def readCurrent(spark: SparkSession, store: BatchStore, storeRoot: String,
+  def readCurrent(spark: SparkSession, store: BatchStore,
                   latestKey: String, shape: DataFrame): DataFrame =
     if (!store.exists(store.productionPointerKey)) shape.limit(0)
     else {
       val resolved = store.resolveProductionKey(latestKey)
-      if (store.exists(resolved)) spark.read.parquet(s"$storeRoot/$resolved")
+      if (store.exists(resolved)) spark.read.parquet(store.objectPath(resolved))
       else shape.limit(0)
     }
 }

@@ -3,15 +3,15 @@
 working tree.
 
 Usage (from the root of the repository):
-  python3 tools/abpairs.py --workload curate_index --seeds 1,2,3,4,5,6
-  python3 tools/abpairs.py --workload refresh_weekly --seeds 1-6 --base HEAD~1
-  python3 tools/abpairs.py ... --base-dir /path/to/base/checkout
+  python3 tools/abpairs.py --workload curate_index --seeds 1,2,3,4,5,6 --base HEAD~1
+  python3 tools/abpairs.py --workload refresh_weekly --seeds 1-6 --base main
 
 Each pair runs `perfbench/run.py --workload W --seed S --seconds 5 --trace 0`
 once in a checkout of the base revision (a temporary `git worktree`, removed
-afterwards, unless --base-dir names an existing checkout) and once in the
-working tree, on the same seed. The side that runs first alternates from pair
-to pair, so a host that drifts during the series weighs on both sides alike.
+afterwards) and once in the working tree, on the same seed. The side that
+runs first alternates from pair to pair, so a host that drifts during the
+series weighs on both sides alike. It refuses to run when the base is HEAD
+and no tracked file has changed: both sides would run the same code.
 
 Prints the per-pair deltas of every end-to-end metric, the per-metric medians
 of both sides and each median's change as a fraction of its bound in
@@ -96,20 +96,24 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="e.g. 1,2,3 or 1-6")
-    ap.add_argument("--base", default="HEAD", help="base revision (default HEAD)")
-    ap.add_argument("--base-dir", help="existing checkout of the base instead of a worktree")
-    ap.add_argument("--out", help="write every run's result object here (JSON)")
+    ap.add_argument("--base", required=True, help="base revision, e.g. HEAD~1")
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
 
-    tmp = None
-    base_dir = args.base_dir
-    if base_dir is None:
-        tmp = tempfile.mkdtemp(prefix="abpairs-")
-        base_dir = os.path.join(tmp, "base")
-        subprocess.run(["git", "worktree", "add", "--detach", base_dir, args.base],
-                       cwd=ROOT, check=True, stdout=subprocess.DEVNULL)
+    def rev(r):
+        return subprocess.run(["git", "rev-parse", "--verify", r + "^{commit}"], cwd=ROOT,
+                              check=True, stdout=subprocess.PIPE, text=True).stdout.strip()
+    tree_clean = subprocess.run(["git", "diff", "--quiet", "HEAD"], cwd=ROOT).returncode == 0
+    if rev(args.base) == rev("HEAD") and tree_clean:
+        print(f"refusing to run: base {args.base} is HEAD and the working tree has no "
+              "changes, so both sides would run the same code", file=sys.stderr)
+        return 1
+
+    tmp = tempfile.mkdtemp(prefix="abpairs-")
+    base_dir = os.path.join(tmp, "base")
+    subprocess.run(["git", "worktree", "add", "--detach", base_dir, args.base],
+                   cwd=ROOT, check=True, stdout=subprocess.DEVNULL)
     pairs = []
     try:
         for i, seed in enumerate(parse_seeds(args.seeds)):
@@ -122,13 +126,9 @@ def main():
             print(f"pair {i + 1} seed {seed} ({order[0][0]} first): latency_s.p50 "
                   f"base {p50['base']} change {p50['change']}", flush=True)
     finally:
-        if args.out:
-            with open(args.out, "w") as f:
-                json.dump([{"seed": s, "base": b, "change": c} for s, b, c in pairs], f, indent=1)
-        if tmp is not None:
-            subprocess.run(["git", "worktree", "remove", "--force", base_dir], cwd=ROOT,
-                           stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
-            shutil.rmtree(tmp, ignore_errors=True)
+        subprocess.run(["git", "worktree", "remove", "--force", base_dir], cwd=ROOT,
+                       stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+        shutil.rmtree(tmp, ignore_errors=True)
     try:
         lines = summarize(pairs, spec)
     except ValueError as e:
