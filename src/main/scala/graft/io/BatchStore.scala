@@ -136,9 +136,8 @@ final class BatchStore(fs: FileSystem, root: String,
     * production/previous pointer PAIR — two unguarded promotes can both
     * read the same current pointer, both record it as "previous", and
     * the losing promote's generation disappears from the supersede
-    * chain (rollbackPrevious then skips a real generation) — the same
-    * lost-update shape the corpus-dedup index promote serializes
-    * (DedupOps round-15). The reference's batch.py takes no lock (its
+    * chain (rollbackPrevious then skips a real generation). The
+    * reference's batch.py takes no lock (its
     * orchestrator is single-writer by convention); the claim changes
     * no single-writer output, it only makes the multi-writer
     * deployment safe.

@@ -220,9 +220,7 @@ object IndexMeta {
     * whose OWNING PROCESS died: hold duration does not matter (a prune
     * pass legitimately holds for minutes of deleteTree at corpus
     * scale). 15 minutes bounds how long a crashed holder can wedge the
-    * pointer while staying ~200 heartbeats above the refresh cadence —
-    * the same staleness convention as the dedup-index epoch-claim
-    * sweeps.
+    * pointer while staying ~200 heartbeats above the refresh cadence.
     *
     * Clock-skew tolerance: staleness compares the CONTENDER's local
     * `System.currentTimeMillis()` against the marker's STORE-side

@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 
 /** The versioning discipline every pointer-published index family
   * shares — postings/BM25 ([[graft.operators.SearchOps]]), vector
-  * IVF-PQ ([[graft.operators.VectorIndex]]) and semantic dedup
-  * ([[graft.operators.SemanticIndex]]). A family supplies only its
+  * IVF-PQ ([[graft.operators.VectorIndex]]), semantic dedup
+  * ([[graft.operators.SemanticIndex]]) and the corpus-dedup index
+  * ([[graft.operators.DedupOps]]). A family supplies only its
   * payload: what a version holds, how to write/read/fold it, its
   * tombstone rules, and [[exists]] (when a version dir is complete).
   *
@@ -146,7 +147,7 @@ trait VersionedStore {
   /** Names (`b<id>`) of the committed segments under `dir/ingest`; torn
     * ones (no `_SUCCESS`) are invisible.
     */
-  private def committedSegments(dir: String): Seq[String] =
+  protected def committedSegments(dir: String): Seq[String] =
     IndexMeta.listChildNames(s"$dir/ingest")
       .filter(n => IndexMeta.exists(s"$dir/ingest/$n/_SUCCESS"))
 

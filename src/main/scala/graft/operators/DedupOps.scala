@@ -645,8 +645,10 @@ object DedupOps {
     val (out, caches) = incrementalDedupPreparedWithCaches(newBatch,
       CorpusDedupIndex(idx0.fingerprints, sh, bd, idx0.params),
       textCol, idCol, n, numHashes, bands, threshold, maxBucket)
-    out.write.mode("overwrite").parquet(outPath)
-    (Seq(sh, bd) ++ caches).foreach(_.unpersist())
+    // released also when the write throws: a failed sink must not leave
+    // corpus-sized caches behind for the rest of the session
+    try out.write.mode("overwrite").parquet(outPath)
+    finally (Seq(sh, bd) ++ caches).foreach(_.unpersist())
     newBatch.sparkSession.read.parquet(outPath)
   }
 
@@ -656,7 +658,7 @@ object DedupOps {
     * as a parquet table when a batch is ACCEPTED into the corpus, then
     * every subsequent ingest reads them instead of re-shingling /
     * re-signing 100 TB per day. Persist with [[writeCorpusDedupIndex]]
-    * (bucketed tables keyed by each frame's join key) so the per-batch
+    * (parquet bucketed by each frame's join key) so the per-batch
     * joins are co-located — no corpus-side exchange, ever.
     */
   final case class CorpusDedupIndex(fingerprints: DataFrame, // (cid, _h)
@@ -709,1328 +711,301 @@ object DedupOps {
       minhashOversizedBuckets(sh, numHashes, bands, maxBucket))
   }
 
-  /** Persist a corpus index as BUCKETED tables (saveAsTable — bucketing
-    * needs catalog metadata, so these are tables, not bare parquet
-    * directories): bands by its join key (band_idx, band_hash),
-    * fingerprints by _h, shingles by doc_id. A bucketed side reports its
-    * hash partitioning from the scan, so every per-batch join in
-    * [[incrementalDedupPrepared]] plans with NO corpus-side exchange —
-    * only the batch-sized side shuffles (to the bucket count). At 100 TB
-    * that corpus shuffle is exactly the cost the prepared index exists
-    * to avoid; paying the layout once at accept-time makes daily ingest
-    * joins read-co-located forever after. Bucket count: size so one
-    * bucket of the largest table ≈ 100-500 MB at the target corpus
-    * scale; it also becomes the minimum join parallelism.
-    */
-  def writeCorpusDedupIndex(idx: CorpusDedupIndex, tablePrefix: String,
-                            buckets: Int = 64, path: Option[String] = None): Unit = {
-    writeBucketedIndexTable(idx.fingerprints, tablePrefix, "fingerprints",
-      Seq("_h"), buckets, path)
-    writeBucketedIndexTable(idx.shingles, tablePrefix, "shingles",
-      Seq("doc_id"), buckets, path)
-    writeBucketedIndexTable(idx.bands, tablePrefix, "bands",
-      Seq("band_idx", "band_hash"), buckets, path)
-    finishIndexWrite(idx.bands.sparkSession, tablePrefix, buckets, path,
-      Map("fingerprints" -> idx.fingerprints.schema.toDDL,
-        "shingles" -> idx.shingles.schema.toDDL,
-        "bands" -> idx.bands.schema.toDDL),
-      idx.params)
+  // ---- the persisted corpus index --------------------------------------
+  //
+  // One root per index, published through [[graft.io.VersionedStore]]:
+  // pointer, claim-based version allocation, ingest segments, the carried
+  // ledger, the intake claim and retention are the store's, as for the
+  // postings, vector and semantic families (docs/INDEX_LIFECYCLES.md).
+  // Each version holds:
+  //   fingerprints/ shingles/ bands/  parquet bucketed by the join key
+  //     (_h; doc_id; band_idx, band_hash) — the bucket id rides in each
+  //     file name
+  //   manifest.json  {buckets, schemas, params, version_id, carried};
+  //     written last, so it marks the version complete. `carried` maps a
+  //     table to the root-relative dirs a fold took over by reference
+  //     instead of rewriting (fingerprints and shingles only)
+  //   ingest/b<id>/{fingerprints,shingles,bands}/  one appended batch,
+  //     complete-or-absent (`_SUCCESS` at the segment root, written last)
+  //   folded_batches.txt  the batch ids folded into this version
+  // Readers register a version's tables as external catalog tables
+  // PARTITIONED by segment and BUCKETED by join key: every base dir and
+  // committed segment is one partition at its own location, and the
+  // partitioned scan still reports the bucket partitioning — so per-batch
+  // joins stay free of corpus-side exchanges across appends.
+
+  private val IndexTables: Seq[(String, Seq[String])] = Seq(
+    "fingerprints" -> Seq("_h"), "shingles" -> Seq("doc_id"),
+    "bands" -> Seq("band_idx", "band_hash"))
+
+  private[graft] object corpusIndex extends graft.io.VersionedStore {
+    protected val family = "corpus dedup index"
+    def exists(dir: String): Boolean = graft.io.IndexMeta.exists(s"$dir/manifest.json")
+    // a fold carries fingerprints and shingles by reference, so a kept
+    // version may read files that live in older version dirs
+    override protected def references(root: String, v: Int): Seq[String] = {
+      val dir = versionDir(root, v)
+      if (exists(dir)) readManifest(dir).carried.values.flatten.toSeq else Nil
+    }
+    def segments(dir: String): Seq[String] = committedSegments(dir)
+    def segment(dir: String, batchId: Long): String = segmentDir(dir, batchId)
   }
 
-  /** One bucketed+sorted index table write (shared by the full write and
-    * the compaction rewrite leg). The frame is repartitioned by the
-    * bucket hash FIRST: `repartition(buckets, cols)` uses the same
-    * murmur3 hash as the bucketed-write bucket id, so each task holds
-    * exactly one bucket and writes exactly one file — without it every
-    * writer task emits a file per bucket it touches (tasks × buckets
-    * files, observed 9× fragmentation at sf0.1), bloating every later
-    * file listing, scan, and append-ledger record for no gain.
+  private final case class IndexManifest(buckets: Int, schemas: Map[String, String],
+                                         params: CorpusIndexParams, versionId: String,
+                                         carried: Map[String, Seq[String]])
+
+  private def readManifest(dir: String): IndexManifest = {
+    val m = graft.io.StableJson.parse(graft.io.IndexMeta.readString(s"$dir/manifest.json")
+      .getOrElse(throw new IllegalStateException(s"no corpus index manifest under $dir")))
+      .asInstanceOf[Map[String, Any]]
+    def obj(k: String) = m.getOrElse(k, Map.empty).asInstanceOf[Map[String, Any]]
+    val p = obj("params").map { case (k, v) => k -> v.toString.toInt }
+    IndexManifest(m("buckets").toString.toInt,
+      obj("schemas").map { case (k, v) => k -> String.valueOf(v) },
+      CorpusIndexParams(p("n"), p("numHashes"), p("bands"), p("maxBucket")),
+      String.valueOf(m("version_id")),
+      obj("carried").map { case (k, v) => k -> v.asInstanceOf[Seq[_]].map(String.valueOf) })
+  }
+
+  /** Write the tables of `idx` that `carried` does not name under `dir`,
+    * then the manifest — last, so a crash leaves an inert version.
     */
-  private def writeBucketedIndexTable(df: DataFrame, tablePrefix: String,
-                                      name: String, cols: Seq[String],
-                                      buckets: Int, path: Option[String]): Unit = {
-    val w0 = df.repartition(buckets, cols.map(col): _*)
+  private def writeVersion(idx: CorpusDedupIndex, dir: String, buckets: Int,
+                           params: CorpusIndexParams,
+                           carried: Map[String, Seq[String]] = Map.empty): Unit = {
+    val frames = tableFrames(idx)
+    IndexTables.foreach { case (name, cols) =>
+      if (!carried.contains(name)) writeBucketed(frames(name), s"$dir/$name", cols, buckets)
+    }
+    graft.io.IndexMeta.writeString(s"$dir/manifest.json", graft.io.StableJson.write(Map(
+      "buckets" -> buckets,
+      "schemas" -> frames.map { case (n, f) => n -> f.schema.toDDL },
+      "params" -> Map("n" -> params.n, "numHashes" -> params.numHashes,
+        "bands" -> params.bands, "maxBucket" -> params.maxBucket),
+      "version_id" -> java.util.UUID.randomUUID().toString,
+      "carried" -> carried)))
+  }
+
+  private def tableFrames(idx: CorpusDedupIndex): Map[String, DataFrame] =
+    Map("fingerprints" -> idx.fingerprints, "shingles" -> idx.shingles, "bands" -> idx.bands)
+
+  /** One bucketed+sorted parquet write into `dir` (overwriting it). The
+    * frame is repartitioned by the bucket hash FIRST: `repartition(buckets,
+    * cols)` uses the same murmur3 hash as the bucket id, so each task holds
+    * exactly one bucket and writes exactly one file — without it every
+    * writer task emits a file per bucket it touches (tasks × buckets files,
+    * observed 9× fragmentation at sf0.1). Bucketing needs catalog
+    * metadata, so the write goes through a throwaway external table that
+    * is dropped again; the files stay.
+    */
+  private def writeBucketed(df: DataFrame, dir: String, cols: Seq[String],
+                            buckets: Int): Unit = {
+    val tmp = "graft_cdx_write_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    try df.repartition(buckets, cols.map(col): _*)
       .write.bucketBy(buckets, cols.head, cols.tail: _*)
       .sortBy(cols.head, cols.tail: _*).mode("overwrite")
-    // explicit path → EXTERNAL table: the files outlive the (possibly
-    // in-memory) catalog and a later session re-attaches them with
-    // [[attachCorpusDedupIndex]] instead of rebuilding the corpus index
-    val w = path.fold(w0)(p => w0.option("path", s"$p/$name"))
-    w.saveAsTable(s"${tablePrefix}_$name")
+      .option("path", dir).saveAsTable(tmp)
+    finally df.sparkSession.sql(s"DROP TABLE IF EXISTS $tmp")
   }
 
-  /** Shared tail of every index-producing write: build params onto the
-    * bands table, layout manifest next to the files, fresh epoch ledger.
+  /** Persist a corpus index under `root` as bucketed parquet — bands by
+    * its join key (band_idx, band_hash), fingerprints by _h, shingles by
+    * doc_id — and serve it as the root's next version. A bucketed side
+    * reports its hash partitioning from the scan, so every per-batch join
+    * in [[incrementalDedupPrepared]] plans with NO corpus-side exchange —
+    * only the batch-sized side shuffles (to the bucket count). At 100 TB
+    * that corpus shuffle is exactly the cost the prepared index exists to
+    * avoid; paying the layout once at accept-time makes daily ingest joins
+    * read-co-located forever after. Bucket count: size so one bucket of
+    * the largest table ≈ 100-500 MB at the target corpus scale; it also
+    * becomes the minimum join parallelism. On a served root this is a
+    * rebuild: the publish carries the served version's ledger. The index
+    * must carry its build params (appends and folds derive the band
+    * family from them). Returns the new version.
     */
-  private def finishIndexWrite(spark: org.apache.spark.sql.SparkSession,
-                               tablePrefix: String, buckets: Int,
-                               path: Option[String],
-                               schemas: Map[String, String],
-                               params: Option[CorpusIndexParams],
-                               carriedTags: Seq[String] = Nil,
-                               compactedFrom: Option[Map[String, Any]] = None): Unit = {
-    // build params ride the bands table's properties so every read path
-    // (same-session read or cross-session attach) recovers them for the
-    // ingest-call verification in incrementalDedupPrepared
-    params.foreach(p => spark.sql(
-      s"""ALTER TABLE ${tablePrefix}_bands SET TBLPROPERTIES ${paramsProps(p)}"""))
-    // layout manifest next to the files: attach verifies against it
-    // instead of trusting the caller's bucket count (a mismatched bucket
-    // DDL would make every join silently wrong)
-    path.foreach { p =>
-      val manifest: Map[String, Any] = Map(
-        "buckets" -> buckets, "schemas" -> schemas) ++
-        params.map(pr => "params" -> Map(
-          "n" -> pr.n, "numHashes" -> pr.numHashes,
-          "bands" -> pr.bands, "maxBucket" -> pr.maxBucket))
-      writeTextFile(spark, s"$p/manifest.json", graft.io.StableJson.write(manifest))
-    }
-    // fresh append-epoch ledger: the base record pins the just-written
-    // files so torn-append repair can always separate original index
-    // files from partial-append orphans
-    initEpochLedger(spark, tablePrefix, carriedTags, compactedFrom)
+  def writeCorpusDedupIndex(idx: CorpusDedupIndex, root: String, buckets: Int = 64): Int = {
+    val params = idx.params.getOrElse(throw new IllegalArgumentException(
+      "the index carries no build params — build it with buildCorpusDedupIndex"))
+    corpusIndex.publish(root)((_, v) =>
+      writeVersion(idx, corpusIndex.versionDir(root, v), buckets, params))
   }
 
-  private def paramsProps(p: CorpusIndexParams): String =
-    s"""('graft.index.n'='${p.n}','graft.index.numHashes'='${p.numHashes}',""" +
-      s"""'graft.index.bands'='${p.bands}','graft.index.maxBucket'='${p.maxBucket}')"""
+  /** True once a version of the index at `root` has been served. */
+  def corpusDedupIndexExists(root: String): Boolean = corpusIndex.currentVersion(root).isDefined
 
-  private def writeTextFile(spark: org.apache.spark.sql.SparkSession,
-                            path: String, content: String): Unit = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(hp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readTextFile(spark: org.apache.spark.sql.SparkSession,
-                           path: String): Option[String] = {
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hp)) None
-    else {
-      val in = fs.open(hp)
-      try {
-        val bytes = org.apache.commons.io.IOUtils.toByteArray(in)
-        Some(new String(bytes, "UTF-8"))
-      } finally in.close()
-    }
-  }
-
-  /** Re-register an index previously written by [[writeCorpusDedupIndex]]
-    * with an explicit path, in a session whose catalog doesn't know it
-    * (e.g. a fresh in-memory catalog). Pure DDL — no data moves. The
-    * written manifest.json is the layout's source of truth: attach reads
-    * bucket count and schemas from it and REFUSES a caller-supplied
-    * bucket count that disagrees (a mismatched bucket DDL makes every
-    * downstream join silently wrong — that footgun must be loud).
-    * Indexes written before manifests existed must be rebuilt.
-    *
-    * @param buckets optional cross-check; -1 (default) takes the
-    *                manifest's count, any other value must equal it
-    */
-  def attachCorpusDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                             tablePrefix: String, path: String,
-                             buckets: Int = -1): Unit = {
-    val manifestJson = readTextFile(spark, s"$path/manifest.json").getOrElse(
-      throw new IllegalStateException(
-        s"no manifest.json under $path — the index predates layout manifests " +
-          "(or the path is wrong); rebuild it with writeCorpusDedupIndex"))
-    val m = graft.io.StableJson.parse(manifestJson).asInstanceOf[Map[String, Any]]
-    val manifestBuckets = m("buckets").asInstanceOf[Number].intValue()
-    require(buckets < 0 || buckets == manifestBuckets,
-      s"bucket count mismatch: caller says $buckets, manifest at $path says " +
-        s"$manifestBuckets — attaching with the wrong count would make every " +
-        "bucketed join silently wrong")
-    val schemas = m("schemas").asInstanceOf[Map[String, Any]]
-    def ddl(name: String, cols: String): Unit = {
-      val table = s"${tablePrefix}_$name"
-      // IF NOT EXISTS alone would silently keep a STALE registration: a
-      // session that attached this prefix before the on-disk index was
-      // rebuilt with a different bucket count (or moved) would keep its
-      // old bucket DDL over the new files — every co-located join then
-      // reads the wrong buckets and judges silently wrong. Re-attach
-      // drops a registration that disagrees with the manifest.
-      if (spark.catalog.tableExists(table)) {
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        val expectedLoc = new org.apache.hadoop.fs.Path(s"$path/$name")
-        val sameBuckets = meta.bucketSpec.exists(_.numBuckets == manifestBuckets)
-        val sameLoc = new org.apache.hadoop.fs.Path(meta.location).toUri.getPath ==
-          expectedLoc.toUri.getPath
-        if (!sameBuckets || !sameLoc) {
-          // only EXTERNAL registrations are safe to drop: DROP TABLE on a
-          // MANAGED table (written via writeCorpusDedupIndex with no path)
-          // deletes its data files — attaching an external index under an
-          // in-use managed prefix would silently destroy the managed
-          // index's data
-          require(meta.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL,
-            s"table $table is MANAGED and disagrees with the manifest at $path " +
-              "— refusing to DROP it (that would delete its data files); " +
-              "attach under a different prefix or drop the managed index yourself")
-          spark.sql(s"DROP TABLE $table")
-        }
-      }
-      spark.sql(s"""CREATE TABLE IF NOT EXISTS $table (${schemas(name)})
-        |USING PARQUET
-        |CLUSTERED BY ($cols) SORTED BY ($cols) INTO $manifestBuckets BUCKETS
-        |LOCATION '$path/$name'""".stripMargin)
-      ()
-    }
-    ddl("fingerprints", "`_h`")
-    ddl("shingles", "doc_id")
-    ddl("bands", "band_idx, band_hash")
-    m.get("params").map(_.asInstanceOf[Map[String, Any]]).foreach { pm =>
-      def i(k: String) = pm(k).asInstanceOf[Number].intValue()
-      spark.sql(s"""ALTER TABLE ${tablePrefix}_bands SET TBLPROPERTIES ${paramsProps(
-        CorpusIndexParams(i("n"), i("numHashes"), i("bands"), i("maxBucket")))}""")
-    }
-    // a crashed append travels with the files — refuse the attach too
-    requireNoTornEpochs(spark, tablePrefix)
-  }
-
-  /** Read an index persisted by [[writeCorpusDedupIndex]]. The frames
-    * carry the bucketed layout, so downstream joins on the bucket keys
-    * need no corpus-side exchange (asserted by CorpusIndexSpec); the
-    * build params come back from the bands table's properties so
-    * [[incrementalDedupPrepared]] can verify the ingest call against
-    * them.
+  /** The served version of the index at `root` (pointer resolved once),
+    * base plus every committed ingest segment. The frames carry the
+    * bucketed layout, so downstream joins on the bucket keys need no
+    * corpus-side exchange (asserted by CorpusIndexSpec); the build params
+    * come from the manifest so [[incrementalDedupPrepared]] can verify the
+    * ingest call against them.
     */
   def readCorpusDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                           tablePrefix: String): CorpusDedupIndex = {
-    // never hand out a torn index: a crashed append between inserts
-    // would make near-dup judgments silently blind to some docs
-    requireNoTornEpochs(spark, tablePrefix)
-    val props = spark.sql(s"SHOW TBLPROPERTIES ${tablePrefix}_bands")
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val params = for {
-      n <- props.get("graft.index.n")
-      nh <- props.get("graft.index.numHashes")
-      b <- props.get("graft.index.bands")
-      mb <- props.get("graft.index.maxBucket")
-    } yield CorpusIndexParams(n.toInt, nh.toInt, b.toInt, mb.toInt)
-    CorpusDedupIndex(
-      spark.table(s"${tablePrefix}_fingerprints"),
-      spark.table(s"${tablePrefix}_shingles"),
-      spark.table(s"${tablePrefix}_bands"),
-      params)
-  }
+                           root: String): CorpusDedupIndex =
+    readCorpusIndexAt(spark, root, corpusIndex.versionDir(root, corpusIndex.servedVersion(root)))
 
-  /** True when all three index tables exist in the catalog. */
-  def corpusDedupIndexExists(spark: org.apache.spark.sql.SparkSession,
-                             tablePrefix: String): Boolean =
-    Seq("_fingerprints", "_shingles", "_bands")
-      .forall(s => spark.catalog.tableExists(tablePrefix + s))
-
-  // ---- append-epoch ledger: crash-safe multi-table appends ----------
-  //
-  // appendToCorpusDedupIndex inserts into THREE tables; a job that dies
-  // between inserts would leave a torn index (a doc in _fingerprints but
-  // absent from _shingles/_bands makes near-dup verification silently
-  // blind to it). The ledger makes the append all-or-nothing in effect:
-  // an `intent` marker is written before the first insert, each insert's
-  // added files are recorded, and a `commit` record closes the epoch.
-  // Readers refuse an index whose ledger shows an intent without a
-  // commit; [[repairCorpusDedupIndex]] quarantines the partial files
-  // (current files minus every committed epoch's recorded files) and
-  // returns the index to its last committed state. Single writer
-  // assumed, like the reference's batch pipeline.
-
-  private val IndexTableNames = Seq("fingerprints", "shingles", "bands")
-
-  private def tableLocationPath(spark: org.apache.spark.sql.SparkSession,
-                                table: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table)).location)
-
-  private def hadoopFs(spark: org.apache.spark.sql.SparkSession,
-                       p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  /** Ledger directory: a sibling of the three table dirs (`$path/_epochs/
-    * <prefix>` for a path-backed index, `<warehouse>/_epochs/<prefix>`
-    * for a managed one), so an attach over copied files finds the ledger
-    * with them. The leading underscore keeps Spark's file listing from
-    * ever treating it as data.
+  /** [[readCorpusDedupIndex]] of version dir `dir` — the shape for a caller
+    * that resolved the pointer under the intake claim.
     */
-  private[graft] def epochLedgerDir(spark: org.apache.spark.sql.SparkSession,
-                                    tablePrefix: String): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(
-      tableLocationPath(spark, s"${tablePrefix}_bands").getParent,
-      s"_epochs/$tablePrefix")
-
-  /** Non-hidden leaf files under a table dir, as root-relative paths. */
-  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                            root: org.apache.hadoop.fs.Path): Set[String] = {
-    if (!fs.exists(root)) Set.empty
-    else {
-      val rootStr = root.toUri.getPath.stripSuffix("/")
-      val it = fs.listFiles(root, true)
-      val b = Set.newBuilder[String]
-      while (it.hasNext) {
-        val f = it.next().getPath
-        val rel = f.toUri.getPath.stripPrefix(rootStr).stripPrefix("/")
-        if (!rel.split("/").exists(c => c.startsWith("_") || c.startsWith(".")))
-          b += rel
-      }
-      b.result()
+  private[graft] def readCorpusIndexAt(spark: org.apache.spark.sql.SparkSession,
+                                       root: String, dir: String): CorpusDedupIndex = {
+    val m = readManifest(dir)
+    val tables = registerVersion(spark, root, dir, m)
+    def read(name: String): DataFrame = {
+      val t = spark.table(tables(name))
+      t.select(t.columns.filterNot(_ == "seg").map(col).toIndexedSeq: _*)
     }
+    CorpusDedupIndex(read("fingerprints"), read("shingles"), read("bands"), Some(m.params))
   }
 
-  private final case class EpochLedger(intents: Map[Long, Map[String, Any]],
-                                       commits: Map[Long, Map[String, Any]]) {
-    def torn: Seq[Long] = (intents.keySet -- commits.keySet).toSeq.sorted
-    def nextEpoch: Long = ((intents.keySet ++ commits.keySet) + 0L).max + 1
-    def committedTags: Set[String] =
-      commits.values.flatMap(_.get("tag").map(String.valueOf)).toSet ++
-        commits.values.flatMap(_.get("carried_tags").collect {
-          case s: Seq[_] => s.map(String.valueOf)
-        }.getOrElse(Nil))
-    def committedFilesOf(table: String): Set[String] =
-      commits.values.flatMap(c => epochFilesOf(c, table)).toSet
-    /** Committed idempotence tags in append order (base-carried tags
-      * first — oldest by construction — then per-epoch tags by epoch id),
-      * so compaction's carry can prune to the most RECENT window.
-      */
-    def orderedCommittedTags: Seq[String] = {
-      val baseCarried = commits.get(0L)
-        .flatMap(_.get("carried_tags").collect { case s: Seq[_] => s.map(String.valueOf) })
-        .getOrElse(Nil)
-      val epochTags = commits.toSeq.sortBy(_._1)
-        .collect { case (e, r) if e != 0L => r.get("tag").map(String.valueOf) }
-        .flatten
-      (baseCarried ++ epochTags).distinct.filterNot(_ == "base")
-    }
-    def ledgerId: Option[String] =
-      commits.get(0L).flatMap(_.get("ledger_id")).map(String.valueOf)
-  }
-
-  private def epochFilesOf(record: Map[String, Any], table: String): Seq[String] =
-    record.get("tables").collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      .flatMap(_.get(table)).collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      .flatMap(_.get("files")).collect { case v: Seq[_] => v.map(String.valueOf) }
-      .getOrElse(Nil)
-
-  private val EpochFileName = "epoch-(\\d+)\\.(intent|commit)\\.json".r
-
-  private def epochFileName(epoch: Long, kind: String): String =
-    f"epoch-$epoch%08d.$kind.json"
-
-  private val EpochClaimName = "epoch-(\\d+)\\.claim".r
-
-  private def epochClaimMarker(dir: org.apache.hadoop.fs.Path,
-                               e: Long): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(dir, f"epoch-$e%08d.claim")
-
-  /** Drop epoch `e`'s claim-marker dir. Called by the winner once its
-    * COMMIT record lands (the record is then the permanent fence for
-    * the id — [[claimNextEpoch]] re-checks records after winning a
-    * marker, so a recycled marker can never recycle the id) and by
-    * [[repairCorpusDedupIndex]] for torn/abandoned claims. Without
-    * the release, a long-lived streaming intake mints one permanent
-    * marker dir per epoch that every ledger listing must rescan.
+  /** Register version `dir`'s three tables in the session catalog and add
+    * any committed segment not yet registered as a partition. Table names
+    * derive from the root, the version and the manifest's version id, so a
+    * registration never outlives the version it describes — a root rebuilt
+    * in place, or a fold, gets fresh names. Returns table name per index
+    * table.
     */
-  private def releaseEpochClaim(dir: org.apache.hadoop.fs.Path, e: Long): Unit = {
-    graft.io.IndexMeta.deleteTree(epochClaimMarker(dir, e).toString); ()
-  }
-
-  /** Allocate-and-claim the next epoch id: max existing record + 1,
-    * claimed atomically via a sibling `epoch-NNNNNNNN.claim` marker dir
-    * (invisible to the `EpochFileName` regex, so readers and repair
-    * never see it), stepping past ids a racing writer claimed first —
-    * the SearchOps/VectorIndex version-allocation pattern applied to
-    * the ledger. Without the claim, two writers racing one ledger (a
-    * promote healing into an index a streaming intake is appending to)
-    * mint the SAME epoch id and the loser's intent/commit records are
-    * silently overwritten — its inserted files then read as orphans
-    * and the next repair would quarantine a fully committed append.
-    *
-    * Committed markers are RELEASED (see [[releaseEpochClaim]]), so a
-    * writer claiming from a stale ledger read can win the marker of an
-    * already-recorded epoch; the intent/commit record is the permanent
-    * fence — after winning a marker the allocator re-checks for a
-    * record of that id and steps on instead of overwriting it.
-    *
-    * Scope note: the claim makes the LEDGER collision-proof; file
-    * ATTRIBUTION under truly concurrent appends can still overlap
-    * (insertTracked diffs directory listings), which repair treats
-    * safely (orphans = files minus the UNION of committed records) —
-    * precise per-epoch attribution keeps the documented single-writer
-    * append contract.
-    */
-  private def claimNextEpoch(dir: org.apache.hadoop.fs.Path,
-                             led: EpochLedger): Long =
-    claimEpochFrom(dir, led.nextEpoch)
-
-  private def claimEpochFrom(dir: org.apache.hadoop.fs.Path, start: Long): Long = {
-    var e = start
-    var attempts = 0
-    while (attempts < 1000) {
-      if (graft.io.IndexMeta.claimDir(epochClaimMarker(dir, e).toString)) {
-        val recorded = Seq("intent", "commit").exists(k => graft.io.IndexMeta.exists(
-          new org.apache.hadoop.fs.Path(dir, epochFileName(e, k)).toString))
-        if (!recorded) return e
-        // a recycled marker over a recorded epoch: release and step on
-        releaseEpochClaim(dir, e)
-      }
-      e += 1; attempts += 1
-    }
-    throw new IllegalStateException(
-      s"could not claim an epoch id under $dir after 1000 tries")
-  }
-
-  /** [[claimEpochFrom]] by table prefix — the STALE-READER shape, for
-    * CorpusIndexSpec: a writer whose ledger read predates another
-    * writer's commit starts below the recorded watermark and must be
-    * fenced onto a fresh id by the records, not the (released) markers.
-    */
-  private[graft] def claimEpochIdFrom(spark: org.apache.spark.sql.SparkSession,
-                                      tablePrefix: String, start: Long): Long =
-    claimEpochFrom(epochLedgerDir(spark, tablePrefix), start)
-
-  /** [[claimNextEpoch]] from a fresh ledger read — the exact
-    * read-then-claim sequence both mutating entry points run, exposed
-    * for CorpusIndexSpec to race directly (the ledger types are
-    * private, so the end-to-end race can't reach the allocator).
-    */
-  private[graft] def claimNextEpochId(spark: org.apache.spark.sql.SparkSession,
-                                      tablePrefix: String): Long = {
-    val dir = epochLedgerDir(spark, tablePrefix)
-    claimNextEpoch(dir, readEpochLedger(spark, tablePrefix).getOrElse(
-      EpochLedger(Map.empty, Map.empty)))
-  }
-
-  private def readEpochLedger(spark: org.apache.spark.sql.SparkSession,
-                              tablePrefix: String): Option[EpochLedger] =
-    readEpochLedgerAt(spark, epochLedgerDir(spark, tablePrefix))
-
-  /** Ledger read by DIRECTORY, not catalog prefix: the promote-time
-    * coverage check re-reads the SOURCE index's ledger from the path the
-    * compaction snapshot recorded, which must work even in a session
-    * whose catalog no longer registers the source prefix.
-    */
-  private def readEpochLedgerAt(spark: org.apache.spark.sql.SparkSession,
-                                dir: org.apache.hadoop.fs.Path): Option[EpochLedger] = {
-    val fs = hadoopFs(spark, dir)
-    if (!fs.exists(dir)) None
-    else {
-      val records = fs.listStatus(dir).toSeq.map(_.getPath).flatMap { p =>
-        p.getName match {
-          case EpochFileName(id, kind) =>
-            readTextFile(spark, p.toString).map(j =>
-              (id.toLong, kind, graft.io.StableJson.parse(j).asInstanceOf[Map[String, Any]]))
-          case _ => None
+  private def registerVersion(spark: org.apache.spark.sql.SparkSession, root: String,
+                              dir: String, m: IndexManifest): Map[String, String] =
+    registerLock.synchronized {
+      val vPath = new org.apache.hadoop.fs.Path(dir)
+      val leaf = vPath.getParent.getParent.getName.toLowerCase.replaceAll("[^a-z0-9_]", "_")
+      val id = java.util.UUID.nameUUIDFromBytes(s"$dir|${m.versionId}".getBytes("UTF-8"))
+        .toString.take(8)
+      val segs = corpusIndex.segments(dir)
+      IndexTables.map { case (name, cols) =>
+        val table = s"cdx_${leaf}_${vPath.getName}_${id}_$name"
+        val bases = m.carried.get(name).fold(Seq("base" -> s"$dir/$name"))(
+          _.zipWithIndex.map { case (rel, i) => s"c$i" -> s"$root/$rel" })
+        val parts = bases ++ segs.map(n => n -> s"$dir/ingest/$n/$name")
+        val keys = cols.map(c => s"`$c`").mkString(", ")
+        // located at the base partition: a carried table has no dir of
+        // its own, and every scan reads the partition locations anyway
+        spark.sql(s"""CREATE TABLE IF NOT EXISTS $table (${m.schemas(name)}, seg STRING)
+          |USING PARQUET PARTITIONED BY (seg)
+          |CLUSTERED BY ($keys) SORTED BY ($keys) INTO ${m.buckets} BUCKETS
+          |LOCATION '${parts.head._2}'""".stripMargin)
+        val known = spark.sessionState.catalog
+          .listPartitionNames(org.apache.spark.sql.catalyst.TableIdentifier(table)).toSet
+        val missing = parts.filterNot { case (p, _) => known(s"seg=$p") }
+        if (missing.nonEmpty) {
+          spark.sql(s"ALTER TABLE $table ADD IF NOT EXISTS " + missing.map {
+            case (p, loc) => s"PARTITION (seg='$p') LOCATION '$loc'" }.mkString(" "))
+          // a partitioned table is sized from catalog statistics; without
+          // them the planner assumes a huge relation and stops broadcasting
+          // a small index side
+          spark.sql(s"ANALYZE TABLE $table COMPUTE STATISTICS NOSCAN")
         }
-      }
-      Some(EpochLedger(
-        records.collect { case (e, "intent", r) => e -> r }.toMap,
-        records.collect { case (e, "commit", r) => e -> r }.toMap))
-    }
-  }
-
-  /** (Re)initialize the ledger: wipe it and record the CURRENT files of
-    * all three tables as the base epoch, so repair can always separate
-    * original index files from torn-append orphans.
-    *
-    * `carriedTags`: idempotence tags whose appends are already REFLECTED
-    * in the base files — compaction passes the source index's committed
-    * tags so a streaming trigger replayed across a compact+promote still
-    * reads as committed. Without this, a trigger that committed its
-    * append on the OLD prefix and crashed before the checkpoint commit
-    * would re-judge against the compacted index (which already contains
-    * its accepted docs via the copied fingerprints), judge everything
-    * exact_dup, and overwrite its target partition with an empty frame —
-    * silent data loss in the sink.
-    *
-    * `compactedFrom`: compaction's snapshot of the SOURCE index it read
-    * (prefix, ledger dir, committed epochs, table locations, bucket
-    * count, ledger id) — [[promoteCorpusDedupIndexChecked]] diffs the
-    * source's CURRENT committed epochs against this snapshot at promote
-    * time, closing the window where an append commits on the old prefix
-    * between compaction's read and the pointer swap.
-    *
-    * The base record also carries a fresh `ledger_id`: a full re-WRITE
-    * of a prefix restarts epoch numbering, so the promote-time diff
-    * compares identities first — matching epoch ids on a rewritten
-    * source would otherwise read as "covered".
-    */
-  private def initEpochLedger(spark: org.apache.spark.sql.SparkSession,
-                              tablePrefix: String,
-                              carriedTags: Seq[String] = Nil,
-                              compactedFrom: Option[Map[String, Any]] = None): Unit = {
-    val dir = epochLedgerDir(spark, tablePrefix)
-    hadoopFs(spark, dir).delete(dir, true)
-    val tables = IndexTableNames.map { n =>
-      val loc = tableLocationPath(spark, s"${tablePrefix}_$n")
-      n -> Map("files" -> listDataFiles(hadoopFs(spark, loc), loc).toSeq.sorted)
-    }.toMap
-    val base: Map[String, Any] =
-      Map("epoch" -> 0L, "tag" -> "base", "tables" -> tables,
-        "ledger_id" -> java.util.UUID.randomUUID().toString) ++
-        // APPEND order, not sorted: orderedCommittedTags treats this list
-        // as oldest-first, and compaction's carry prunes with takeRight.
-        // Real intake tags ("$qid-$batchId") are not zero-padded, so a
-        // lexicographic sort would reorder qid-10 before qid-9 and a
-        // CHAINED compaction's prune could drop the most recent tag —
-        // exactly the replayed-trigger empty-overwrite this carry exists
-        // to prevent. StableJson preserves array order both ways.
-        (if (carriedTags.nonEmpty) Map("carried_tags" -> carriedTags) else Map.empty) ++
-        compactedFrom.map("compacted_from" -> _)
-    writeTextFile(spark, new org.apache.hadoop.fs.Path(dir, epochFileName(0L, "commit")).toString,
-      graft.io.StableJson.write(base))
-  }
-
-  /** Refuse a torn index: an intent without a commit means a previous
-    * append died between table inserts, so the three tables disagree and
-    * near-dup judgments would be silently blind to some appended docs.
-    * Indexes without a ledger (pre-epoch writes) pass — nothing is
-    * tracked for them until their first epoch append bootstraps one.
-    */
-  private def requireNoTornEpochs(spark: org.apache.spark.sql.SparkSession,
-                                  tablePrefix: String): Unit =
-    readEpochLedger(spark, tablePrefix).foreach { led =>
-      if (led.torn.nonEmpty) throw new IllegalStateException(
-        s"index $tablePrefix has torn append epoch(s) ${led.torn.mkString(",")}: " +
-          "a previous appendToCorpusDedupIndex died between table inserts. " +
-          "Run DedupOps.repairCorpusDedupIndex to quarantine the partial files, " +
-          "then retry the append — judging against a torn index would be " +
-          "silently wrong, not an error")
+        name -> table
+      }.toMap
     }
 
-  /** Quarantine torn append epochs: delete, from each table dir, every
-    * data file not recorded by a committed epoch (the base record from
-    * [[writeCorpusDedupIndex]] plus each completed append), and drop the
-    * torn intent markers. Returns the repair summary:
-    * `{"torn_epochs": [...], "deleted_files": {table: n}}`. A no-op on a
-    * clean or unledgered index.
-    */
-  def repairCorpusDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                             tablePrefix: String,
-                             claimStalenessMs: Long = DefaultClaimStalenessMs): Map[String, Any] =
-    readEpochLedger(spark, tablePrefix) match {
-      case None => Map("torn_epochs" -> Nil, "deleted_files" -> Map.empty[String, Any])
-      case Some(led) if led.torn.isEmpty =>
-        // clean indexes still get the clutter sweep: a crashed claimant
-        // leaves no torn epoch, only its marker
-        sweepAbandonedClaims(epochLedgerDir(spark, tablePrefix), led, claimStalenessMs)
-        Map("torn_epochs" -> Nil, "deleted_files" -> Map.empty[String, Any])
-      case Some(led) =>
-        require(led.commits.contains(0L),
-          s"ledger for $tablePrefix has no base epoch record — original index " +
-            "files cannot be distinguished from torn-append orphans; rebuild " +
-            "the index with writeCorpusDedupIndex")
-        val deleted = IndexTableNames.map { n =>
-          val loc = tableLocationPath(spark, s"${tablePrefix}_$n")
-          val fs = hadoopFs(spark, loc)
-          val orphans = listDataFiles(fs, loc) -- led.committedFilesOf(n)
-          orphans.foreach(rel => fs.delete(new org.apache.hadoop.fs.Path(loc, rel), false))
-          spark.catalog.refreshByPath(loc.toString)
-          n -> orphans.size
-        }.toMap
-        IndexTableNames.foreach(n => spark.catalog.refreshTable(s"${tablePrefix}_$n"))
-        // cached plans (e.g. a judgment's persisted frames) may pin the
-        // pre-repair file listing and would fail on the deleted orphans;
-        // repair is an exceptional recovery path, so dropping the whole
-        // cache is the safe trade
-        spark.catalog.clearCache()
-        val dir = epochLedgerDir(spark, tablePrefix)
-        led.torn.foreach { e =>
-          hadoopFs(spark, dir)
-            .delete(new org.apache.hadoop.fs.Path(dir, epochFileName(e, "intent")), false)
-          // the quarantined epoch's claim marker goes with its intent —
-          // the id becomes mintable again, its files are gone
-          releaseEpochClaim(dir, e)
-        }
-        sweepAbandonedClaims(dir, led, claimStalenessMs)
-        Map("torn_epochs" -> led.torn, "deleted_files" -> deleted)
-    }
+  private val registerLock = new Object
 
-  /** Claim markers younger than this survive every sweep: the
-    * claim-win → intent-write window is sub-second, so 15 minutes is a
-    * generous multiple of any real claimant's hold time while still
-    * collecting genuinely dead markers on the next maintenance pass.
-    */
-  private[graft] val DefaultClaimStalenessMs: Long =
-    graft.io.IndexMeta.DefaultClaimStalenessMs
-
-  /** Collect abandoned claim markers (a claimant that died between
-    * claim and intent) at or below the committed watermark — dead
-    * clutter every ledger listing rescans. Markers ABOVE the watermark
-    * may belong to a live claimant mid-append and stay. Below-watermark
-    * markers are NOT proof of death either: [[claimEpochFrom]] hands
-    * gap ids (quarantined or tie-burned epochs) to stale readers, and
-    * sweeping a live claimant's marker between its claim-win and its
-    * intent-write would let a second writer mint the same id — the
-    * double-record overwrite the claim protocol exists to prevent. So
-    * only markers older than `olderThanMs` (by marker mtime) release;
-    * a live claimant's marker is always fresh.
-    */
-  private def sweepAbandonedClaims(dir: org.apache.hadoop.fs.Path,
-                                   led: EpochLedger,
-                                   olderThanMs: Long = DefaultClaimStalenessMs): Unit = {
-    val watermark = (led.commits.keySet + 0L).max
-    val fs = graft.io.IndexMeta.fs(dir.toString)
-    val now = System.currentTimeMillis()
-    graft.io.IndexMeta.listChildNames(dir.toString).foreach {
-      case EpochClaimName(id)
-          if id.toLong <= watermark && !led.intents.contains(id.toLong) &&
-            !led.commits.contains(id.toLong) =>
-        val marker = epochClaimMarker(dir, id.toLong)
-        val stale =
-          try now - fs.getFileStatus(marker).getModificationTime >= olderThanMs
-          catch { case _: java.io.FileNotFoundException => false } // already released
-        if (stale) releaseEpochClaim(dir, id.toLong)
-      case _ => ()
-    }
-  }
-
-  // ---- index production pointer (BatchStore S10 integration) --------
-
-  /** Promote an index behind a BatchStore pointer object: readers and
-    * streaming intake sinks resolve the CURRENT prefix through the
-    * pointer per trigger, so a compact+promote rolls them onto the fresh
-    * index without a restart ([[compactCorpusDedupIndex]] writes to a
-    * new prefix; this is the "caller swaps" half). The pointer records
-    * the previous prefix for rollback-by-hand. This raw form swaps
-    * UNCHECKED, so it is package-private: the only public promote is
-    * [[promoteCorpusDedupIndexChecked]], which diffs the source ledger's
-    * committed epochs against compaction's snapshot and heals (or
-    * refuses on) appends that landed on the OLD prefix after compaction
-    * read it. An external caller reaching for a shorter name must not be
-    * able to re-open that append window by accident.
-    */
-  private[graft] def promoteCorpusDedupIndex(store: graft.io.BatchStore, pointerKey: String,
-                              tablePrefix: String,
-                              path: Option[String] = None): Map[String, Any] =
-    // the pointer put and the retirement-ledger append are ONE
-    // read-modify-write: two unguarded promotes can both read pointer
-    // P0, both swap, both append P0 — the losing promote's generation
-    // is then never recorded as retired, storage the GC can never find.
-    // Prune takes the same claim, so its ledger rewrite can't swallow a
-    // concurrent promote's append either.
-    graft.io.IndexMeta.withClaim(store.objectPath(pointerSwapLockKey(pointerKey))) {
-    val previous = store.readJsonIfExists(pointerKey)
-    val pointer = Map(
-      "table_prefix" -> tablePrefix,
-      "promoted_at_utc" -> store.timestamp(),
-      "previous_table_prefix" ->
-        previous.map(p => String.valueOf(p.getOrElse("table_prefix", null))).orNull) ++
-      path.map("path" -> _)
-    store.putJson(pointerKey, pointer)
-    // retirement ledger: the pointer only remembers ONE previous
-    // generation, so without this append the generation retired two
-    // promotes ago becomes unfindable — and uncollectable — garbage.
-    // [[pruneCorpusDedupIndex]] reads this list; entries record the
-    // prefix AND path so prefix reuse at a new location (the a→b→a
-    // alternation) can never alias the serving generation. A MANAGED
-    // outgoing generation (no explicit path) records its epoch-ledger
-    // dir instead, resolved through the catalog NOW while the tables
-    // are still registered — once someone drops them the location is
-    // unrecoverable and the entry would be skipped on every prune
-    // forever.
-    previous.foreach { prev =>
-      val prevPrefix = prev.get("table_prefix").map(String.valueOf)
-      val prevPath = prev.get("path").map(String.valueOf)
-      val samePlace = prevPrefix.contains(tablePrefix) &&
-        prevPath.map(normLoc) == path.map(normLoc)
-      if (prevPrefix.isDefined && !samePlace) {
-        val rk = retiredGenerationsKey(pointerKey)
-        val existing = readRetiredGenerations(store, pointerKey)
-        val ledgerLoc: Option[String] =
-          if (prevPath.isDefined) None
-          else scala.util.Try {
-            val spark = org.apache.spark.sql.SparkSession.active
-            if (corpusDedupIndexExists(spark, prevPrefix.get))
-              Some(epochLedgerDir(spark, prevPrefix.get).toString)
-            else None
-          }.toOption.flatten
-        val entry: Map[String, Any] =
-          Map("table_prefix" -> prevPrefix.get,
-            "retired_at_utc" -> store.timestamp()) ++
-            prevPath.map("path" -> _) ++ ledgerLoc.map("ledger_dir" -> _)
-        store.putJson(rk, Map("retired" -> (existing :+ entry)))
-      }
-    }
-    pointer
-  }
-
-  /** Claim dir serializing every pointer-put + retirement-ledger
-    * mutation for one pointerKey (promotes and prunes alike).
-    */
-  private[graft] def pointerSwapLockKey(pointerKey: String): String =
-    pointerKey.stripSuffix(".json") + "_swap.lock"
-
-  /** Scheme-free normalized location for alias comparisons — the SAME
-    * normalization everywhere (`file:/x/`, `/x` and `/x/` are one
-    * location), so a rollback-by-promote whose caller spells the same
-    * path differently can never slip past a serving-alias guard.
-    */
-  private def normLoc(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath.stripSuffix("/")
-
-  private[graft] def retiredGenerationsKey(pointerKey: String): String =
-    pointerKey.stripSuffix(".json") + "_retired.json"
-
-  private def readRetiredGenerations(store: graft.io.BatchStore,
-                                     pointerKey: String): Seq[Map[String, Any]] =
-    store.readJsonIfExists(retiredGenerationsKey(pointerKey))
-      .flatMap(_.get("retired")).collect {
-        case s: Seq[_] => s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] }
-      }.getOrElse(Nil)
-
-  /** Retention GC for the corpus-dedup index family — the third leg of
-    * the per-family GC story (SearchOps.prunePostingsVersions /
-    * VectorIndex.pruneVersions close the other two). Compaction writes
-    * each new generation to a FRESH prefix/path and the checked promote
-    * swaps the pointer, so superseded generations (bucketed tables +
-    * their epoch ledger) otherwise accumulate forever.
+  /** Append newly ACCEPTED docs to the served version as ingest segment
+    * `batchId` — the other half of the daily-ingest lifecycle:
+    * [[incrementalDedupPrepared]] judges a batch against the index, and the
+    * batch's `kept` docs join the corpus HERE, batch-sized, instead of
+    * re-shingling/re-signing the whole corpus. Each segment table is
+    * bucketed like the base, so the zero-corpus-side-exchange join
+    * property survives appends — CorpusIndexSpec proves judgments against
+    * an appended index match a fresh build over the unioned corpus.
+    * Derivations use the index's recorded build params.
     *
-    * Collects generations from the promote-maintained retirement ledger
-    * ([[retiredGenerationsKey]]), OLDEST first, keeping:
-    *  - the serving generation, always (anything aliasing the pointer's
-    *    current prefix+path is skipped defensively, never deleted);
-    *  - the most recent `keepRetired` retirements as a reader-grace
-    *    window — pointer-resolving readers re-resolve per trigger, but
-    *    a query planned against the old generation may still be
-    *    mid-flight at promote time (the q128/q129 keepLatest analogue).
+    * Cap note: the width cap was applied at BUILD time; appended rows can
+    * legitimately grow a bucket past `maxBucket` over many accepts. The
+    * next [[compactCorpusDedupIndex]] re-caps; the batch-side cap in
+    * [[incrementalDedupPrepared]] still bounds per-ingest fan-out
+    * meanwhile.
     *
-    * Per collected generation: the catalog registrations drop ONLY when
-    * they point under the retired path (a reused prefix re-registered at
-    * the serving location must survive — the a→b→a alternation), then
-    * the path tree deletes — tables AND the `_epochs/<prefix>` ledger
-    * dir live under it. Entries with no recorded path (managed-table
-    * generations) drop through the catalog when still registered —
-    * managed drops delete their data — and are reported skipped
-    * otherwise rather than guessed at.
-    *
-    * Replay safety is by construction, not by keeping the old ledger:
-    * compaction CARRIES the source's committed idempotence tags into
-    * the new generation's base epoch record, so a streaming trigger
-    * replayed after its original generation is collected still reads
-    * as committed (CorpusIndexSpec pins exactly this boundary).
-    *
-    * Returns the collected entries (with a `collected` disposition per
-    * entry: `deleted` or `skipped_no_path`).
-    */
-  def pruneCorpusDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                            store: graft.io.BatchStore, pointerKey: String,
-                            keepRetired: Int = 1): Seq[Map[String, Any]] = {
-    require(keepRetired >= 0, "keepRetired must be >= 0")
-    // same claim as promote: the ledger rewrite below is a
-    // read-modify-write, and a promote appending a retirement between
-    // our read and our put would have its entry silently dropped — a
-    // permanently unfindable generation. The claim also freezes the
-    // pointer for the whole pass, so the serving-alias guard and the
-    // deletes judge one consistent serving generation.
-    graft.io.IndexMeta.withClaim(store.objectPath(pointerSwapLockKey(pointerKey))) {
-    val ptr = store.readJsonIfExists(pointerKey).getOrElse(
-      throw new java.io.FileNotFoundException(s"no index pointer at $pointerKey"))
-    val curPrefix = String.valueOf(ptr.getOrElse("table_prefix",
-      throw new IllegalStateException(s"index pointer $pointerKey has no table_prefix")))
-    val curPath = ptr.get("path").map(String.valueOf).map(normLoc)
-    // the serving generation's epoch-ledger location, for managed
-    // entries whose only recorded handle is their ledger_dir
-    def servingLedger: Option[String] =
-      if (!corpusDedupIndexExists(spark, curPrefix)) None
-      else scala.util.Try(normLoc(epochLedgerDir(spark, curPrefix).toString)).toOption
-    val all = readRetiredGenerations(store, pointerKey)
-    val candidates = all.dropRight(keepRetired)
-    val results = candidates.map { e =>
-      val prefix = String.valueOf(e.getOrElse("table_prefix", ""))
-      val epath = e.get("path").map(String.valueOf).map(normLoc)
-      val eledger = e.get("ledger_dir").map(String.valueOf).map(normLoc)
-      // every location comparison through normLoc: a rollback-by-
-      // promote spelling the same place differently (trailing slash,
-      // file:/ scheme) must hit the skip, never the delete
-      val aliasesServing = (prefix == curPrefix && epath == curPath) ||
-        (epath.isDefined && epath == curPath) ||
-        (eledger.isDefined && eledger == servingLedger)
-      if (aliasesServing) e + ("collected" -> "skipped_serving")
-      else epath match {
-        case Some(p) =>
-          // drop catalog registrations only when they belong to THIS
-          // retired location; a reused prefix serving elsewhere survives
-          if (corpusDedupIndexExists(spark, prefix)) {
-            val registered = normLoc(tableLocationPath(spark, s"${prefix}_bands")
-              .getParent.toString)
-            if (registered == p)
-              IndexTableNames.foreach(n =>
-                spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$n"))
-          }
-          graft.io.IndexMeta.deleteTree(p)
-          e + ("collected" -> "deleted")
-        case None if eledger.isEmpty &&
-            corpusDedupIndexExists(spark, prefix) && prefix != curPrefix =>
-          // pre-ledger_dir managed entry, still registered: the ledger
-          // dir resolves through the catalog, and managed drops delete
-          // their data
-          val ledgerDir = epochLedgerDir(spark, prefix)
-          IndexTableNames.foreach(n => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$n"))
-          hadoopFs(spark, ledgerDir).delete(ledgerDir, true)
-          e + ("collected" -> "deleted")
-        case None if eledger.isDefined =>
-          // managed entry with its ledger location recorded at promote
-          // time. When the prefix is still registered AT that location
-          // this is the same incarnation: drop the tables (managed
-          // drops delete their data) before collecting the ledger dir.
-          // Registered elsewhere (or not at all) means the retired
-          // incarnation's tables are already gone — a managed
-          // re-CREATE requires the old drop — so only its ledger dir
-          // remains to collect.
-          val sameIncarnation = corpusDedupIndexExists(spark, prefix) &&
-            scala.util.Try(normLoc(epochLedgerDir(spark, prefix).toString))
-              .toOption.contains(eledger.get)
-          if (sameIncarnation)
-            IndexTableNames.foreach(n => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$n"))
-          graft.io.IndexMeta.deleteTree(eledger.get)
-          e + ("collected" -> "deleted")
-        case None =>
-          // nothing recorded, nothing registered: no recoverable
-          // storage. Dropping the entry (instead of re-skipping it on
-          // every future prune, forever) is the only terminal state.
-          e + ("collected" -> "dropped_unresolvable")
-      }
-    }
-    // oldest-first order preserved: surviving (skipped) candidates are
-    // older than the grace window by construction; deleted and
-    // unresolvable entries leave the ledger
-    val terminal = Set("deleted", "dropped_unresolvable")
-    val stillRetired =
-      results.filterNot(r => terminal(String.valueOf(r("collected"))))
-        .map(_ - "collected") ++ all.takeRight(keepRetired)
-    store.putJson(retiredGenerationsKey(pointerKey),
-      Map("retired" -> stillRetired))
-    results
-  }}
-
-  /** [[promoteCorpusDedupIndex]] with the compact-promote append window
-    * CLOSED: before swapping the pointer, diff the source index's
-    * CURRENT committed epochs against the snapshot compaction recorded
-    * (`compacted_from` in the target's base ledger record). An append
-    * that committed on the old prefix after compaction's read would be
-    * silently absent from the promoted index — near-dup judgments would
-    * go blind to its docs, forever and without an error. On a gap this
-    * either HEALS (default: copy the missing epochs' recorded files into
-    * the promoted index's tables — valid because append files carry
-    * their bucket ids in their names and the bucket layout matched at
-    * compaction — re-recording each as a committed epoch with its
-    * original idempotence tag) or REFUSES, naming the missing epochs.
-    *
-    * Refuses rather than heals when: the source was fully re-written
-    * since compaction (ledger identity mismatch — the snapshot no longer
-    * describes it), or the bucket counts differ (copied files would land
-    * in the wrong buckets and every bucketed join would be silently
-    * wrong). Targets without a `compacted_from` record (fresh builds,
-    * pre-guard compactions) promote unchecked, as before.
-    *
-    * Returns the pointer plus `healed_epochs` (source epoch ids copied
-    * in; empty when the snapshot covered everything).
-    *
-    * The check narrows the append window to the diff-to-swap instant,
-    * then a SECOND coverage diff immediately after the pointer write
-    * heals any epoch that committed inside that instant. The residual
-    * exposure — an append that starts on the old prefix before the swap
-    * and commits after the post-swap diff — can only leak DUPLICATES
-    * (those docs are in the sink but absent from the promoted index, so
-    * a later near-dup of them is kept), never lose sink data: the
-    * trigger's own replay is guarded by the sink's kept-empty/partition-
-    * exists check (StreamOps.intakeUpdateTrigger).
-    */
-  def promoteCorpusDedupIndexChecked(spark: org.apache.spark.sql.SparkSession,
-                                     store: graft.io.BatchStore, pointerKey: String,
-                                     tablePrefix: String,
-                                     path: Option[String] = None,
-                                     healMissing: Boolean = true): Map[String, Any] = {
-    val healed = healPromoteCoverageGap(spark, tablePrefix, healMissing)
-    val pointer = promoteCorpusDedupIndex(store, pointerKey, tablePrefix, path)
-    // post-swap re-diff: heals appends that committed on the old prefix
-    // between the diff above and the pointer write (idempotent — epochs
-    // already healed are recorded as healed_from_epoch and skipped)
-    val healedAfterSwap = healPromoteCoverageGap(spark, tablePrefix, healMissing)
-    pointer + ("healed_epochs" -> (healed ++ healedAfterSwap))
-  }
-
-  /** The coverage diff + heal behind [[promoteCorpusDedupIndexChecked]]:
-    * returns the source epoch ids healed into `toPrefix` (empty when the
-    * compaction snapshot already covered the source's committed state).
-    */
-  private def healPromoteCoverageGap(spark: org.apache.spark.sql.SparkSession,
-                                     toPrefix: String,
-                                     healMissing: Boolean): Seq[Long] = {
-    val tgtLedger = readEpochLedger(spark, toPrefix)
-    val cf = tgtLedger.flatMap(_.commits.get(0L))
-      .flatMap(_.get("compacted_from").collect {
-        case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
-      })
-    cf.fold(Seq.empty[Long]) { snap =>
-      val ledgerDir = new org.apache.hadoop.fs.Path(String.valueOf(snap("ledger_dir")))
-      val snapEpochs = snap.get("epochs").collect {
-        case s: Seq[_] => s.map(v => String.valueOf(v).toLong)
-      }.getOrElse(Nil).toSet
-      readEpochLedgerAt(spark, ledgerDir).fold(Seq.empty[Long]) { src =>
-        // identity first: a re-written source restarts epoch numbering,
-        // so matching ids prove nothing about coverage
-        val snapId = snap.get("ledger_id").map(String.valueOf)
-        if (snapId.isDefined && src.ledgerId.isDefined && snapId != src.ledgerId)
-          throw new IllegalStateException(
-            s"promote refused: the source index at $ledgerDir was re-written " +
-              "since this compaction (ledger identity changed) — the compacted " +
-              s"index $toPrefix no longer describes it; re-run the compaction")
-        // epoch 0 is the base state compaction consumed (snapshotted, or
-        // bootstrapped from exactly that state by the first later append);
-        // epochs a previous checked promote already healed into the
-        // target are recorded there as `healed_from_epoch` — skip them,
-        // making repeated checked promotes idempotent
-        val healedAlready = tgtLedger.map(_.commits.values.flatMap(
-          _.get("healed_from_epoch").collect { case l: Long => l }).toSet)
-          .getOrElse(Set.empty[Long])
-        val missing = (src.commits.keySet - 0L) -- snapEpochs -- healedAlready
-        if (missing.isEmpty) Nil
-        else {
-          val names = missing.toSeq.sorted
-          val tagsOf = names.map(e =>
-            e -> src.commits(e).get("tag").map(String.valueOf).getOrElse("<untagged>"))
-          if (!healMissing) throw new IllegalStateException(
-            s"promote refused: epoch(s) ${tagsOf.map { case (e, t) => s"$e(tag=$t)" }
-              .mkString(", ")} committed on the source index AFTER compaction " +
-              s"read it — the compacted index $toPrefix is missing their docs. " +
-              "Re-append them, re-compact, or promote with healMissing=true")
-          val srcBuckets = snap.get("buckets").map(v => String.valueOf(v).toInt).getOrElse(-1)
-          val tgtBuckets = tableBucketCount(spark, s"${toPrefix}_bands").getOrElse(-2)
-          require(srcBuckets == tgtBuckets,
-            s"promote cannot heal epochs ${names.mkString(",")}: the source was " +
-              s"bucketed into $srcBuckets and the compacted index into $tgtBuckets " +
-              "— appended files carry their bucket ids in their names, so a copy " +
-              "would mis-bucket them; re-run the compaction instead")
-          val locs = snap("locations").asInstanceOf[Map[String, Any]]
-          names.foreach(e => healEpochByFileCopy(spark, toPrefix, locs, e, src.commits(e)))
-          names
-        }
-      }
-    }
-  }
-
-  /** Test hook: name of the index table whose heal file-copy should fail
-    * (simulates a promote dying mid-heal — CorpusIndexSpec's torn-heal
-    * coverage). Never set outside tests.
-    */
-  private[graft] var healFaultInjection: Option[String] = None
-
-  /** Copy one committed source epoch's recorded files into the promoted
-    * index's tables and re-record it as a committed epoch (same tag, so
-    * streaming replay idempotence carries). Runs under the target's own
-    * intent→commit protocol: a crash mid-copy leaves a torn epoch the
-    * readers refuse and repair quarantines — never a silently
-    * half-healed index.
-    */
-  private def healEpochByFileCopy(spark: org.apache.spark.sql.SparkSession,
-                                  toPrefix: String, locs: Map[String, Any],
-                                  srcEpoch: Long, rec: Map[String, Any]): Unit = {
-    val led = readEpochLedger(spark, toPrefix).get
-    val dir = epochLedgerDir(spark, toPrefix)
-    val epoch = claimNextEpoch(dir, led)
-    val tag = rec.get("tag").map(String.valueOf)
-    writeTextFile(spark,
-      new org.apache.hadoop.fs.Path(dir, epochFileName(epoch, "intent")).toString,
-      graft.io.StableJson.write(Map("epoch" -> epoch,
-        "healed_from_epoch" -> srcEpoch) ++ tag.map("tag" -> _)))
-    val conf = spark.sparkContext.hadoopConfiguration
-    val tables = IndexTableNames.map { n =>
-      if (healFaultInjection.contains(n))
-        throw new IllegalStateException(s"injected heal fault before $n copy")
-      val files = epochFilesOf(rec, n)
-      val srcLoc = new org.apache.hadoop.fs.Path(String.valueOf(locs(n)))
-      val dstLoc = tableLocationPath(spark, s"${toPrefix}_$n")
-      files.foreach { rel =>
-        val sp = new org.apache.hadoop.fs.Path(srcLoc, rel)
-        val dp = new org.apache.hadoop.fs.Path(dstLoc, rel)
-        org.apache.hadoop.fs.FileUtil.copy(
-          sp.getFileSystem(conf), sp, dp.getFileSystem(conf), dp, false, true, conf)
-      }
-      spark.catalog.refreshByPath(dstLoc.toString)
-      n -> (Map("files" -> files.sorted) ++
-        rec.get("tables").collect { case m: Map[_, _] =>
-          m.asInstanceOf[Map[String, Any]]
-        }.flatMap(_.get(n)).collect { case m: Map[_, _] =>
-          m.asInstanceOf[Map[String, Any]].get("rows")
-        }.flatten.map("rows" -> _))
-    }.toMap
-    writeTextFile(spark,
-      new org.apache.hadoop.fs.Path(dir, epochFileName(epoch, "commit")).toString,
-      graft.io.StableJson.write(Map("epoch" -> epoch, "tables" -> tables,
-        "healed_from_epoch" -> srcEpoch) ++ tag.map("tag" -> _)))
-    releaseEpochClaim(dir, epoch) // the commit record now fences the id
-    IndexTableNames.foreach(n => spark.catalog.refreshTable(s"${toPrefix}_$n"))
-  }
-
-  /** Resolve the current index prefix through a BatchStore pointer,
-    * attaching the tables from the pointer's recorded path when the
-    * session's catalog doesn't know them (fresh session after a swap) —
-    * or when it knows them at a DIFFERENT location: an a→b→a prefix
-    * alternation (compact b back onto a retired prefix's name at a new
-    * path) would otherwise find the STALE same-prefix registration and
-    * silently judge against the retired index. attach re-verifies the
-    * manifest and replaces mismatched external registrations.
-    */
-  def resolveCorpusDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                              store: graft.io.BatchStore, pointerKey: String): String = {
-    val ptr = store.readJsonIfExists(pointerKey).getOrElse(
-      throw new java.io.FileNotFoundException(s"no index pointer at $pointerKey"))
-    val prefix = String.valueOf(ptr.getOrElse("table_prefix",
-      throw new IllegalStateException(s"index pointer $pointerKey has no table_prefix")))
-    val registeredElsewhere = ptr.get("path").exists { p =>
-      corpusDedupIndexExists(spark, prefix) && {
-        val registered = tableLocationPath(spark, s"${prefix}_bands").toUri.getPath
-        val expected = new org.apache.hadoop.fs.Path(s"${String.valueOf(p)}/bands")
-          .toUri.getPath
-        registered != expected
-      }
-    }
-    if (!corpusDedupIndexExists(spark, prefix) || registeredElsewhere)
-      ptr.get("path").foreach(p => attachCorpusDedupIndex(spark, prefix, String.valueOf(p)))
-    prefix
-  }
-
-  /** Ledger state of an idempotence tag: "committed" (the tagged append
-    * fully applied), "torn" (it died mid-append), or "absent". The
-    * intake sinks consult this before re-running a replayed trigger.
-    */
-  private[graft] def epochTagState(spark: org.apache.spark.sql.SparkSession,
-                                   tablePrefix: String, tag: String): String =
-    readEpochLedger(spark, tablePrefix) match {
-      case None => "absent"
-      case Some(led) =>
-        if (led.committedTags.contains(tag)) "committed"
-        else if (led.torn.exists(e =>
-          led.intents(e).get("tag").map(String.valueOf).contains(tag))) "torn"
-        else "absent"
-    }
-
-  /** Test hook: name of the index table whose append insert should fail
-    * (simulates a job dying mid-append — CorpusIndexSpec's torn-epoch
-    * coverage). Never set outside tests.
-    */
-  private[graft] var appendFaultInjection: Option[String] = None
-
-  /** Append newly ACCEPTED docs to a persisted corpus index — the other
-    * half of the daily-ingest lifecycle: [[incrementalDedupPrepared]]
-    * judges a batch against the index, and the batch's `kept` docs join
-    * the corpus HERE, batch-sized, instead of re-shingling/re-signing
-    * the whole corpus. Inserts respect the tables' bucketed layout
-    * (datasource bucketed tables hash appended rows into per-bucket
-    * files), so the zero-corpus-side-exchange join property survives
-    * appends — CorpusIndexSpec proves judgments against an appended
-    * index match a fresh build over the unioned corpus.
-    *
-    * Derivations use the index's RECORDED build params (manifested
-    * write / attach / build); an index without params refuses, since
-    * guessing n/bands would corrupt the band family silently.
-    *
-    * Cap note: the width cap was applied at BUILD time; appended rows
-    * can legitimately grow a bucket past `maxBucket` over many accepts.
-    * Monitor with [[oversizedBuckets]] over the bands table and re-cap
-    * during periodic compaction (a batch-sized scheduled job); the
-    * batch-side cap in [[incrementalDedupPrepared]] still bounds
-    * per-ingest fan-out meanwhile.
-    *
-    * Crash safety: the three inserts are wrapped in an append EPOCH
-    * (intent marker → tracked inserts → commit record, see the ledger
-    * section above). A job that dies mid-append leaves a torn epoch
-    * that read/attach refuse and [[repairCorpusDedupIndex]] rolls back;
-    * the index is never silently judged in a half-appended state.
-    *
-    * @param epochTag optional idempotence key (e.g. a streaming
-    *                 micro-batch id): a committed epoch carrying this
-    *                 tag makes the call a no-op, and a torn epoch
-    *                 carrying it is auto-repaired and redone — the
-    *                 exactly-once contract the intake sinks rely on
-    *                 under foreachBatch replay
+    * Exactly-once: the segment is complete-or-absent (`_SUCCESS` written
+    * last, torn segments invisible to readers), and a batch already
+    * applied — committed here or absorbed by a fold — is a no-op. A replay
+    * of a torn append rewrites its segment. Holds the root's intake claim,
+    * so a fold never enumerates segments while an append is between its
+    * check and its commit. Returns true when this call wrote the segment.
     */
   def appendToCorpusDedupIndex(accepted: DataFrame, textCol: String, idCol: String,
-                               tablePrefix: String,
-                               epochTag: Option[String] = None): Unit = {
-    val spark = accepted.sparkSession
-    // bootstrap a ledger for indexes written before epochs existed, so
-    // this append (and every later one) is tracked
-    if (readEpochLedger(spark, tablePrefix).isEmpty) initEpochLedger(spark, tablePrefix)
-    val led = readEpochLedger(spark, tablePrefix).get
-    // idempotence by tag (streaming replay): a committed epoch with this
-    // tag means the append fully applied — skip; a TORN epoch with this
-    // tag is our own earlier attempt — auto-repair and redo. Torn
-    // epochs from OTHER appends refuse (readCorpusDedupIndex would too).
-    val alreadyApplied = epochTag.exists(led.committedTags)
-    if (!alreadyApplied) {
-      if (led.torn.nonEmpty) {
-        val allOurs = epochTag.exists(t =>
-          led.torn.forall(e => led.intents(e).get("tag").map(String.valueOf).contains(t)))
-        if (allOurs) repairCorpusDedupIndex(spark, tablePrefix)
-        else requireNoTornEpochs(spark, tablePrefix)
-      }
-      val idx = readCorpusDedupIndex(spark, tablePrefix)
-      val p = idx.params.getOrElse(throw new IllegalStateException(
-        s"index $tablePrefix carries no build params — write it with " +
-          "writeCorpusDedupIndex (manifested) before appending"))
-      // Pin the accepted rows BEFORE the first insert: `accepted` is
-      // typically derived from a judgment against THIS index (a semi-join
-      // on the `kept` roster), so a lazy plan re-evaluated between the
-      // three inserts would see the partially-updated tables — the
-      // fingerprint insert would make every accepted doc exact-match
-      // itself and the shingle/band inserts would write an empty frame.
-      // localCheckpoint(eager) materializes once and truncates lineage
-      // (batch-sized; within one job, the executor-loss caveat is moot).
+                               root: String, batchId: Long): Boolean =
+    corpusIndex.withServedDir(root)(appendSegment(accepted, textCol, idCol, _, batchId))
+
+  /** [[appendToCorpusDedupIndex]] into version dir `dir`, for a caller
+    * already holding the intake claim.
+    */
+  private[graft] def appendSegment(accepted: DataFrame, textCol: String, idCol: String,
+                                   dir: String, batchId: Long): Boolean =
+    if (corpusIndex.batchApplied(dir, batchId)) false
+    else {
+      val m = readManifest(dir)
+      // pin the accepted rows once: `accepted` is typically a judgment
+      // semi-join, which three table writes would otherwise re-run
       val acc = accepted.select(col(idCol).cast("long").as(idCol),
         col(textCol).cast("string").as(textCol)).localCheckpoint(true)
-      val docs = acc.count()
-      val fp = acc.select(col(idCol).as("cid"),
-        textFingerprint(col(textCol)).as("_h"))
-      val sh = shingleHashTable(acc, textCol, idCol, p.n).persist()
-      val banded = bandTable(minhashSignaturesFromShingles(sh, p.numHashes),
-        p.bands, p.numHashes / p.bands)
-      // epoch intent BEFORE the first insert: a crash anywhere below
-      // leaves the intent without a commit, which read/attach refuse and
-      // repairCorpusDedupIndex can quarantine (added files are recorded
-      // per insert in the commit; repair derives orphans as current
-      // files minus every committed epoch's files)
-      val dir = epochLedgerDir(spark, tablePrefix)
-      val epoch = claimNextEpoch(dir, led)
-      writeTextFile(spark, new org.apache.hadoop.fs.Path(dir, epochFileName(epoch, "intent")).toString,
-        graft.io.StableJson.write(
-          Map("epoch" -> epoch, "docs" -> docs) ++ epochTag.map("tag" -> _)))
-      // insertInto matches columns by POSITION against the table schema.
-      // Each frame pins before the count+insert pair: the ledger's row
-      // count and the insert itself would otherwise each derive the frame
-      // from scratch (the bands derivation — minhash over every shingle —
-      // is the expensive one), doubling the append's compute for nothing.
-      // The insert repartitions the pinned frame by the table's bucket
-      // hash so each append adds exactly ONE file per bucket (not one per
-      // writer task per bucket) — long-term fragmentation then grows one
-      // file/bucket per append, which is what compaction's copy-vs-
-      // rewrite threshold measures.
-      val nBuckets = tableBucketCount(spark, s"${tablePrefix}_bands")
-      def insertTracked(df: DataFrame, name: String,
-                        cols: Seq[String]): (String, Map[String, Any]) = {
-        val loc = tableLocationPath(spark, s"${tablePrefix}_$name")
-        val fs = hadoopFs(spark, loc)
-        val before = listDataFiles(fs, loc)
-        if (appendFaultInjection.contains(name))
-          throw new IllegalStateException(s"injected append fault before $name insert")
-        // the shingle frame arrives already persisted (the bands
-        // derivation still reads it after this insert) — leave its
-        // lifecycle to the caller
-        val wasCached = df.storageLevel != org.apache.spark.storage.StorageLevel.NONE
-        val pinned = if (wasCached) df else df.persist()
-        try {
-          val rows = pinned.count()
-          val aligned = nBuckets.fold(pinned)(b => pinned.repartition(b, cols.map(col): _*))
-          aligned.write.mode("append").insertInto(s"${tablePrefix}_$name")
-          name -> Map("rows" -> rows,
-            "files" -> (listDataFiles(fs, loc) -- before).toSeq.sorted)
-        } finally if (!wasCached) { pinned.unpersist(); () }
-      }
+      // the shingle table feeds the shingle write AND the band derivation
+      val sh = shingleHashTable(acc, textCol, idCol, m.params.n).persist()
       try {
-        val tables = Seq(
-          ("fingerprints", fp, Seq("_h")),
-          ("shingles", sh, Seq("doc_id")),
-          ("bands", banded, Seq("band_idx", "band_hash")))
-          .map { case (n, df, cols) => insertTracked(df, n, cols) }.toMap
-        writeTextFile(spark, new org.apache.hadoop.fs.Path(dir, epochFileName(epoch, "commit")).toString,
-          graft.io.StableJson.write(
-            Map("epoch" -> epoch, "docs" -> docs, "tables" -> tables) ++
-              epochTag.map("tag" -> _)))
-        releaseEpochClaim(dir, epoch) // the commit record now fences the id
-      } finally {
-        sh.unpersist()
-        acc.unpersist()
-      }
+        val seg = corpusIndex.segment(dir, batchId)
+        val frames = tableFrames(CorpusDedupIndex(
+          acc.select(col(idCol).as("cid"), textFingerprint(col(textCol)).as("_h")), sh,
+          bandTable(minhashSignaturesFromShingles(sh, m.params.numHashes),
+            m.params.bands, m.params.numHashes / m.params.bands)))
+        IndexTables.foreach { case (name, cols) =>
+          writeBucketed(frames(name), s"$seg/$name", cols, m.buckets)
+        }
+        graft.io.IndexMeta.writeString(s"$seg/_SUCCESS", "")
+        true
+      } finally { sh.unpersist(); acc.unpersist() }
     }
-  }
 
-  /** Periodic compaction of an appended index (copy-on-write): re-apply
-    * the width cap to the bands table — appends legitimately grow
-    * buckets past `maxBucket` over many accepts ([[appendToCorpusDedupIndex]])
-    * — producing a FRESH bucketed index under `toPrefix`. The bands
-    * table is always rewritten (the re-cap changes it); fingerprints and
-    * shingles are rewritten only when fragmented past `maxFilesPerBucket`
-    * files per bucket or when the bucket count changes — otherwise their
-    * files copy byte-for-byte and re-register, because re-shuffling an
-    * unchanged corpus-scale shingle store to re-cap a bands table would
-    * dominate the maintenance job for zero gain. Writing to a new
-    * prefix/path rather than in place is deliberate: overwriting a
-    * table mid-read is a self-referential rewrite, and at corpus scale
-    * the swap is a pointer update (the BatchStore promote pattern), not
-    * a data move. Returns the dropped-buckets report for the run's
-    * logs ("no silent caps"). Ingest continues against `fromPrefix`
-    * until the caller swaps — [[promoteCorpusDedupIndexChecked]] is that swap,
-    * and pointer-resolving readers (StreamOps.nearDupIntakeSinkWithIndexPointer)
-    * roll onto `toPrefix` at their next trigger without a restart.
+  /** Fold the served version into the next one: re-apply the width cap to
+    * the bands — appends legitimately grow buckets past `maxBucket` — and
+    * absorb the committed segments. The bands are always rewritten (the
+    * re-cap changes them). Fingerprints and shingles carry BY REFERENCE —
+    * the new manifest names their base and segment dirs, no byte moves —
+    * unless fragmented past `maxFilesPerBucket` files per bucket, when
+    * they rewrite into one bucketed dir each: re-shuffling an unchanged
+    * corpus-scale shingle store to re-cap a bands table would dominate the
+    * maintenance job for zero gain, while many small per-append files tax
+    * every later listing and scan. Copy-on-write under the intake claim:
+    * appends wait, readers keep the old version until the pointer swap,
+    * and the absorbed batch ids carry in the ledger, so a replay after any
+    * number of folds is a no-op. Returns the dropped-buckets report ("no
+    * silent caps"), lazy over the folded-from version — read it before
+    * pruning that version.
     */
-  def compactCorpusDedupIndex(spark: org.apache.spark.sql.SparkSession,
-                              fromPrefix: String, toPrefix: String,
-                              buckets: Int, path: Option[String] = None,
-                              maxBucketOverride: Option[Int] = None,
-                              maxFilesPerBucket: Int = 4,
-                              carryRecentTags: Int = 64): DataFrame = {
-    val idx = readCorpusDedupIndex(spark, fromPrefix)
-    // ONE ledger snapshot, taken with the read above, serves both the
-    // carried-tags computation and the promote-time coverage diff — a
-    // second read after the table writes could see epochs the written
-    // files don't contain
-    val srcLedger = readEpochLedger(spark, fromPrefix)
-    val p = idx.params.getOrElse(throw new IllegalStateException(
-      s"index $fromPrefix carries no build params — cannot re-cap without them"))
-    val cap = maxBucketOverride.getOrElse(p.maxBucket)
-    // copy-on-write means a FRESH destination, on BOTH legs: the copy leg
-    // clears its destination before copying, and the rewrite leg would
-    // overwrite the very files its input plan is reading — guard here so
-    // the protection doesn't silently vanish when fragmentation flips a
-    // table from the copy leg to the rewrite leg
-    path.foreach { dst =>
-      val srcRoot = tableLocationPath(spark, s"${fromPrefix}_bands").getParent
-      val dstRoot = new org.apache.hadoop.fs.Path(dst)
-      require(!pathsOverlap(
-          hadoopFs(spark, dstRoot).makeQualified(dstRoot),
-          hadoopFs(spark, srcRoot).makeQualified(srcRoot)),
-        s"compaction destination $dst overlaps the source index's root " +
-          s"$srcRoot — copy-on-write compaction must write to a fresh path " +
-          "(a nested destination would plant new files under a source table " +
-          "dir, and the source's recursive file listing would fold them into " +
-          "its ledger/base pinning)")
+  def compactCorpusDedupIndex(spark: org.apache.spark.sql.SparkSession, root: String,
+                              maxFilesPerBucket: Int = 4): DataFrame =
+    corpusIndex.withServedDir(root) { from =>
+      val m = readManifest(from)
+      val idx = readCorpusIndexAt(spark, root, from)
+      val segs = corpusIndex.segments(from)
+      def relative(path: String): String = path.stripPrefix(s"$root/")
+      val carried = Seq("fingerprints", "shingles").map { name =>
+        name -> (m.carried.getOrElse(name, Seq(relative(s"$from/$name"))) ++
+          segs.map(n => relative(s"$from/ingest/$n/$name")))
+      }.filter { case (_, dirs) =>
+        dirs.map(d => dataFileCount(s"$root/$d")).sum <= m.buckets.toLong * maxFilesPerBucket
+      }.toMap
+      val bandKey = Seq("band_idx", "band_hash")
+      corpusIndex.publishClaimed(root, Some(from))(v => writeVersion(
+        idx.copy(bands = boundBuckets(idx.bands, bandKey, m.params.maxBucket, minWidth = 1L)),
+        corpusIndex.versionDir(root, v), m.buckets, m.params, carried))
+      oversizedBuckets(idx.bands, bandKey, m.params.maxBucket)
     }
-    // Only the bands table CHANGES under compaction (the re-cap filter);
-    // fingerprints and shingles are append-only and already bucketed. At
-    // corpus scale, re-shuffling the full shingle store to re-cap a bands
-    // table would be the single most expensive step of the maintenance
-    // job for zero information gain — so when the destination keeps the
-    // bucket count and the table isn't fragmented past `maxFilesPerBucket`
-    // files per bucket, the files are COPIED byte-for-byte (bucket ids
-    // ride in the file names, per-file sort order rides in the bytes) and
-    // re-registered under the new prefix. Fragmented tables (many small
-    // per-append files) take the Spark rewrite, which is the coalesce
-    // half of compaction's job. A changed bucket count always rewrites.
-    val fromBuckets = tableBucketCount(spark, s"${fromPrefix}_bands")
-    def compactTable(name: String, df: DataFrame, cols: Seq[String]): Unit = {
-      val srcLoc = tableLocationPath(spark, s"${fromPrefix}_$name")
-      val nFiles = listDataFiles(hadoopFs(spark, srcLoc), srcLoc).size
-      val copyable = path.isDefined && fromBuckets.contains(buckets) &&
-        nFiles <= buckets.toLong * maxFilesPerBucket
-      if (copyable)
-        copyBucketedIndexTable(spark, fromPrefix, toPrefix, name, cols,
-          buckets, path.get)
-      else writeBucketedIndexTable(df, toPrefix, name, cols, buckets, path)
-    }
-    compactTable("fingerprints", idx.fingerprints, Seq("_h"))
-    compactTable("shingles", idx.shingles, Seq("doc_id"))
-    writeBucketedIndexTable(
-      boundBuckets(idx.bands, Seq("band_idx", "band_hash"), cap, minWidth = 1L),
-      toPrefix, "bands", Seq("band_idx", "band_hash"), buckets, path)
-    // the source's committed idempotence tags carry into the new ledger:
-    // every tagged append is already reflected in the compacted files, so
-    // a streaming trigger replayed ACROSS the compact+promote must read
-    // as committed — re-judging it against an index that already holds
-    // its accepted docs would empty-overwrite its target partition.
-    // The carry is transitive (orderedCommittedTags includes previously
-    // carried tags) but PRUNED to the most recent `carryRecentTags`:
-    // foreachBatch replays only the single in-flight trigger, so a
-    // bounded recent window preserves replay semantics while keeping the
-    // list from growing one tag per append for the index's lifetime.
-    val carried = srcLedger.map(_.orderedCommittedTags).getOrElse(Nil)
-      .takeRight(carryRecentTags)
-    // snapshot of what this compaction actually consumed, stamped into
-    // the new index's base ledger record: promoteCorpusDedupIndexChecked
-    // diffs the source's current committed epochs against it, catching
-    // appends that COMMIT on the old prefix between this read and the
-    // pointer swap (they would otherwise be silently absent from the
-    // promoted index)
-    val compactedFrom: Map[String, Any] = Map(
-      "prefix" -> fromPrefix,
-      "ledger_dir" -> epochLedgerDir(spark, fromPrefix).toString,
-      "epochs" -> srcLedger.map(_.commits.keySet.toSeq.sorted).getOrElse(Nil),
-      "locations" -> IndexTableNames.map(n =>
-        n -> tableLocationPath(spark, s"${fromPrefix}_$n").toString).toMap,
-      // the SOURCE's bucket count: heal-by-file-copy is only valid when
-      // the source's appended files (bucket ids ride in the names) were
-      // bucketed the same way as the promoted index
-      "buckets" -> fromBuckets.getOrElse(-1)) ++
-      srcLedger.flatMap(_.ledgerId).map("ledger_id" -> _)
-    finishIndexWrite(spark, toPrefix, buckets, path,
-      Map("fingerprints" -> idx.fingerprints.schema.toDDL,
-        "shingles" -> idx.shingles.schema.toDDL,
-        "bands" -> idx.bands.schema.toDDL),
-      Some(p.copy(maxBucket = cap)), carried, Some(compactedFrom))
-    oversizedBuckets(idx.bands, Seq("band_idx", "band_hash"), cap)
-  }
 
-  /** True when either qualified path is an ancestor of (or equal to) the
-    * other. Exact-equality checks miss the nested cases: a destination
-    * inside the source root passes `!=` yet plants foreign files under a
-    * source table dir, and a source inside the destination would be
-    * deleted by the copy leg's destination clear.
+  /** Non-hidden files below `dir`. */
+  private def dataFileCount(dir: String): Int =
+    graft.io.IndexMeta.fs(dir).listStatus(new org.apache.hadoop.fs.Path(dir))
+      .filterNot(f => f.getPath.getName.startsWith("_") || f.getPath.getName.startsWith("."))
+      .map(f => if (f.isDirectory) dataFileCount(f.getPath.toString) else 1).sum
+
+  /** Retention GC ([[graft.io.VersionedStore.pruneVersions]]): keeps the
+    * served version, the `keepLatest - 1` newest superseded ones, and every
+    * version a kept one carries files from. Returns the pruned versions.
     */
-  private def pathsOverlap(a: org.apache.hadoop.fs.Path,
-                           b: org.apache.hadoop.fs.Path): Boolean = {
-    def comps(p: org.apache.hadoop.fs.Path): Seq[String] = {
-      val u = p.toUri
-      Seq(Option(u.getScheme).getOrElse(""), Option(u.getAuthority).getOrElse("")) ++
-        u.getPath.split("/").filter(_.nonEmpty).toSeq
-    }
-    val (ca, cb) = (comps(a), comps(b))
-    ca.startsWith(cb) || cb.startsWith(ca)
-  }
-
-  /** Declared bucket count of a catalog table, if bucketed. */
-  private def tableBucketCount(spark: org.apache.spark.sql.SparkSession,
-                               table: String): Option[Int] =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .bucketSpec.map(_.numBuckets)
-
-  /** Compaction's no-rewrite leg: copy a bucketed table's data files
-    * byte-for-byte into `$destRoot/$name` (names preserved — Spark reads
-    * the bucket id from the file name, so the copied table keeps its
-    * bucketed layout and every downstream join stays corpus-side-
-    * exchange-free) and register the new table over them, attach-style.
-    * The copy runs as executor tasks (one per file batch), never through
-    * decode/encode — at corpus scale this is an object-store server-side
-    * copy per file, not a Spark job over the data.
-    */
-  private def copyBucketedIndexTable(spark: org.apache.spark.sql.SparkSession,
-                                     fromPrefix: String, toPrefix: String,
-                                     name: String, cols: Seq[String],
-                                     buckets: Int, destRoot: String): Unit = {
-    val srcLoc = tableLocationPath(spark, s"${fromPrefix}_$name")
-    val destLoc = new org.apache.hadoop.fs.Path(s"$destRoot/$name")
-    val destFs = hadoopFs(spark, destLoc)
-    // the copy leg clears its destination first — compacting "into" (or
-    // under, or over a parent of) the source location would delete the
-    // files it is about to copy
-    require(!pathsOverlap(destFs.makeQualified(destLoc),
-        hadoopFs(spark, srcLoc).makeQualified(srcLoc)),
-      s"compaction destination $destLoc overlaps the source table's " +
-        "location — copy-on-write compaction must write to a fresh path")
-    spark.sql(s"DROP TABLE IF EXISTS ${toPrefix}_$name")
-    destFs.delete(destLoc, true)
-    destFs.mkdirs(destLoc)
-    val files = listDataFiles(hadoopFs(spark, srcLoc), srcLoc).toSeq.sorted
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val (src, dst) = (srcLoc.toString, destLoc.toString)
-    spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 32)))
-      .foreach { rel =>
-        val c = conf.value
-        val sp = new org.apache.hadoop.fs.Path(s"$src/$rel")
-        val dp = new org.apache.hadoop.fs.Path(s"$dst/$rel")
-        org.apache.hadoop.fs.FileUtil.copy(
-          sp.getFileSystem(c), sp, dp.getFileSystem(c), dp, false, true, c)
-        ()
-      }
-    val colsDdl = cols.map(c => s"`$c`").mkString(", ")
-    val schemaDdl = spark.table(s"${fromPrefix}_$name").schema.toDDL
-    spark.sql(s"""CREATE TABLE ${toPrefix}_$name ($schemaDdl)
-      |USING PARQUET
-      |CLUSTERED BY ($colsDdl) SORTED BY ($colsDdl) INTO $buckets BUCKETS
-      |LOCATION '$destLoc'""".stripMargin)
-  }
+  def pruneCorpusDedupIndex(root: String, keepLatest: Int = 2): Seq[Int] =
+    corpusIndex.pruneVersions(root, keepLatest)
 
   /** [[incrementalDedup]] against a PRECOMPUTED corpus index: every
     * corpus-side artifact (fingerprints, shingles, band hashes) comes in
@@ -2064,8 +1039,8 @@ object DedupOps {
     // an index built with different shingle n / signature count / banding
     // produces band hashes from a DIFFERENT hash family: the joins would
     // run fine and match (almost) nothing. When the index carries its
-    // build params (buildCorpusDedupIndex result, or a read/attach of a
-    // manifested index), a mismatched ingest call is an error, not a
+    // build params (buildCorpusDedupIndex result, or a read of a
+    // persisted index), a mismatched ingest call is an error, not a
     // silently-empty judgment. maxBucket may legitimately differ (the
     // corpus cap applied at build; this arg caps only the batch side).
     index.params.foreach { p =>

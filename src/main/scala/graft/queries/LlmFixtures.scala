@@ -30,6 +30,24 @@ private[graft] object LlmFixtures {
     Integer.toHexString(dir.hashCode) + "_" + graft.io.Fingerprint.ofTree(
       s"${dir.stripSuffix("/")}/documents.parquet")
 
+  /** Build-once cache of a corpus-dedup index over `corpus` for this sf
+    * dir (q78 parameters, 16 buckets) under java.io.tmpdir, named
+    * `family` + [[corpusStamp]]; older stamps of the family are deleted.
+    * The versions survive across sessions — each session re-registers
+    * them from the root. Returns the root.
+    */
+  private[queries] def cachedDedupIndex(family: String, dir: String, corpus: DataFrame,
+                                        maxBucket: Int): String = {
+    val name = family + corpusStamp(dir)
+    val root = new java.io.File(sys.props("java.io.tmpdir"), name).getPath
+    if (!DedupOps.corpusDedupIndexExists(root)) {
+      cleanStaleIndexDirs(family + Integer.toHexString(dir.hashCode) + "_", name)
+      DedupOps.writeCorpusDedupIndex(DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id",
+        n = 3, numHashes = 64, bands = 32, maxBucket = maxBucket), root, buckets = 16)
+    }
+    root
+  }
+
   /** Drop persisted index dirs whose data stamp no longer matches —
     * regenerated testdata would otherwise accumulate one orphaned
     * bucketed index per generation under java.io.tmpdir.

@@ -191,35 +191,26 @@ object StreamOps {
     dedupWithinWatermark(fresh, tsCol, delay, Seq("_fp")).drop("_fp")
   }
 
-  /** Streaming intake with the FULL near-dup judgment: each micro-batch
-    * is judged against the prepared bucketed corpus index — exact
-    * fingerprint stage, MinHash-banded candidate stage, exact Jaccard
-    * verify, in-batch greedy keep-first (DedupOps.incrementalDedupPrepared,
-    * the q78 kernel) — and only `kept` docs append to `targetPath`.
+  /** Streaming intake with the FULL near-dup judgment against a static
+    * index: each micro-batch is judged against the prepared bucketed
+    * corpus index — exact fingerprint stage, MinHash-banded candidate
+    * stage, exact Jaccard verify, in-batch greedy keep-first
+    * (DedupOps.incrementalDedupPrepared, the q78 kernel) — and only
+    * `kept` docs land in `targetPath`.
     *
     * This closes the gap incrementalIntakeStream leaves (exact stage
     * only): a near-dup of a corpus doc now drops at intake. Per-trigger
     * cost is proportional to the batch — the corpus participates only
     * through the bucketed index tables' co-located joins (zero
-    * corpus-side exchange; CorpusIndexSpec) — which is what makes the
-    * full judgment viable per micro-batch against a 100 TB corpus.
-    * Every cache the kernel creates is unpersisted before the trigger
-    * commits, so state does not accumulate across micro-batches.
+    * corpus-side exchange; CorpusIndexSpec). Every cache the kernel
+    * creates is unpersisted before the trigger commits, so state does not
+    * accumulate across micro-batches.
     *
-    * The index is static within a run (the standard lambda split):
-    * docs accepted by earlier triggers join the index when the periodic
-    * batch job refreshes it, so near-dups WITHIN the stream horizon are
-    * caught by the in-batch stage only when they share a trigger —
-    * tighten the trigger interval or refresh the index more often to
-    * narrow that window.
-    *
-    * Replay safety: foreachBatch re-runs a micro-batch whose trigger
-    * never committed to the checkpoint. Each trigger therefore
-    * OVERWRITES its own `batch=<queryId>-<batchId>` partition of
-    * `targetPath` instead of appending — a replayed batch lands on the
-    * same files, not twice (exactly-once under a stable checkpoint;
-    * the index-updating variants extend the same guarantee to the
-    * index append via tag-keyed epochs).
+    * The index does not learn from the stream: near-dups of docs kept by
+    * EARLIER triggers are caught only by [[nearDupIntakeSinkWithIndexUpdate]].
+    * Replay safety: each trigger OVERWRITES its own
+    * `batch=<queryId>-<batchId>` partition of `targetPath`, so a replayed
+    * micro-batch lands on the same files, not twice.
     */
   def nearDupIntakeSink(stream: DataFrame,
                         index: graft.operators.DedupOps.CorpusDedupIndex,
@@ -232,7 +223,7 @@ object StreamOps {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idle triggers write nothing (see intakeUpdateTrigger)
+        // idle triggers write nothing
         if (!batch.isEmpty) {
           val kept = judgeKept(batch, graft.operators.DedupOps
             .incrementalDedupPreparedWithCaches(batch, index, textCol, idCol,
@@ -244,19 +235,29 @@ object StreamOps {
         ()
       }
 
-  /** [[nearDupIntakeSink]] with PER-TRIGGER index maintenance: each
-    * micro-batch is judged against the NAMED persisted index (read
-    * fresh per trigger), its `kept` docs append to both the sink and —
-    * via [[graft.operators.DedupOps.appendToCorpusDedupIndex]] — the
-    * index's bucketed tables. Batch N+1 therefore judges against the
-    * corpus PLUS every doc accepted in batches ≤ N: a near-dup of an
-    * earlier trigger's accepted doc now drops, closing the
-    * static-index variant's cross-trigger window entirely. Per-trigger
-    * cost stays batch-proportional on both the judge side (bucketed
-    * co-located corpus joins) and the accept side (batch-sized
-    * derivations + bucketed appends).
+  /** Near-dup intake that maintains the persisted corpus index at `root`
+    * ([[graft.operators.DedupOps.writeCorpusDedupIndex]]): each trigger
+    * resolves the SERVED version, judges the micro-batch against it plus
+    * every committed ingest segment, writes its `kept` docs to
+    * `targetPath/batch=b<id>`, and commits them as the version's ingest
+    * segment `b<id>`. Batch N+1 therefore judges against the corpus PLUS
+    * every doc accepted in batches ≤ N. A maintenance
+    * [[graft.operators.DedupOps.compactCorpusDedupIndex]] rolls the
+    * running intake onto the folded version with no stream restart.
+    *
+    * Exactly-once, in commit order: kept partition (deterministic
+    * overwrite) THEN segment (the commit point). A replay whose segment
+    * never committed re-judges against the unchanged version — identical
+    * verdicts, idempotent rewrite; one whose segment committed, or was
+    * absorbed by a fold (the carried ledger), skips ENTIRELY, because
+    * re-judging a batch against an index holding its own kept docs would
+    * mark each of them a duplicate of itself. The resolve→judge→commit
+    * window holds the root's intake claim
+    * ([[graft.io.VersionedStore.withServedDir]]), mutually exclusive with
+    * folds and prunes. One logical stream owns an index root (segments key
+    * on the raw batch id, the [[vectorIngestSink]] convention).
     */
-  def nearDupIntakeSinkWithIndexUpdate(stream: DataFrame, tablePrefix: String,
+  def nearDupIntakeSinkWithIndexUpdate(stream: DataFrame, root: String,
                         textCol: String, idCol: String, targetPath: String,
                         n: Int = 3, numHashes: Int = 64, bands: Int = 32,
                         threshold: Double = 0.5,
@@ -266,50 +267,30 @@ object StreamOps {
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        intakeUpdateTrigger(batch, batchId, tablePrefix, textCol, idCol,
+        intakeUpdateTrigger(batch, batchId, root, textCol, idCol,
           targetPath, n, numHashes, bands, threshold, maxBucket)
         ()
       }
 
-  /** [[nearDupIntakeSinkWithIndexUpdate]] resolving the index through a
-    * [[graft.io.BatchStore]] pointer PER TRIGGER — the rollover half of
-    * the compaction lifecycle: a maintenance job runs
-    * DedupOps.compactCorpusDedupIndex (fresh re-capped prefix) and
-    * DedupOps.promoteCorpusDedupIndexChecked (pointer overwrite), and
-    * this sink's next trigger judges and appends against the compacted
-    * index with no stream restart. The CHECKED promote narrows the
-    * append window to the diff-to-swap instant: a trigger whose tagged
-    * append commits on the OLD prefix after compaction read it is
-    * healed into (or loudly blocks) the promoted index, and a second
-    * post-swap coverage diff heals epochs that slip into that instant.
-    * The residual exposure (an append committing after the post-swap
-    * diff) can leak duplicates into later judgments but never lose sink
-    * data — the replay guard in the trigger body (kept-empty against an
-    * existing non-empty partition → no-op) keeps a replayed trigger
-    * from empty-overwriting its own output. A trigger that committed
-    * its append BEFORE the compact and replays AFTER the promote is
-    * safe: compaction carries the source ledger's committed tags into
-    * the new index's ledger, so the replay reads "committed" and no-ops
-    * instead of re-judging (which would see its own docs in the
-    * compacted index and empty-overwrite its target partition).
-    */
-  def nearDupIntakeSinkWithIndexPointer(stream: DataFrame,
-                        store: graft.io.BatchStore, pointerKey: String,
-                        textCol: String, idCol: String, targetPath: String,
-                        n: Int = 3, numHashes: Int = 64, bands: Int = 32,
-                        threshold: Double = 0.5,
-                        maxBucket: Int = graft.operators.DedupOps.DefaultMaxBucket)
-  : DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val prefix = graft.operators.DedupOps.resolveCorpusDedupIndex(
-          batch.sparkSession, store, pointerKey)
-        intakeUpdateTrigger(batch, batchId, prefix, textCol, idCol,
-          targetPath, n, numHashes, bands, threshold, maxBucket)
-        ()
+  private[graft] def intakeUpdateTrigger(batch: DataFrame, batchId: Long,
+                        root: String, textCol: String, idCol: String,
+                        targetPath: String, n: Int, numHashes: Int, bands: Int,
+                        threshold: Double, maxBucket: Int): Unit = {
+    if (batch.isEmpty) return // idle trigger: no empty partitions/segments
+    val dedup = graft.operators.DedupOps
+    dedup.corpusIndex.withServedDir(root) { dir =>
+      if (!dedup.corpusIndex.batchApplied(dir, batchId)) {
+        val kept = judgeKept(batch, dedup.incrementalDedupPreparedWithCaches(batch,
+          dedup.readCorpusIndexAt(batch.sparkSession, root, dir), textCol, idCol,
+          n, numHashes, bands, threshold, maxBucket), idCol)
+        try {
+          writeKeptPartition(kept, targetPath, s"b$batchId")
+          dedup.appendSegment(kept, textCol, idCol, dir, batchId)
+        } finally kept.unpersist()
       }
+    }
+    ()
+  }
 
   /** Streaming ingest into a persisted vector index
     * ([[graft.operators.VectorIndex]]): each micro-batch of
@@ -343,7 +324,7 @@ object StreamOps {
       }
 
   /** [[vectorIngestSink]] resolving the SERVED index version per trigger
-    * (the [[nearDupIntakeSinkWithIndexPointer]] treatment applied to the
+    * (the [[nearDupIntakeSinkWithIndexUpdate]] treatment applied to the
     * vector index): each micro-batch reads `root/POINTER`, loads that
     * version's model (a model-sized collect: cells·dim + m·k·sub longs),
     * and commits its segment inside that version's directory — so a
@@ -389,9 +370,7 @@ object StreamOps {
     * trigger retried from the same checkpoint no-ops instead of
     * double-counting df/n_docs — which would silently shift every idf
     * the index ever serves. Tags here are a membership SET (no ordering
-    * semantics), so the un-padded batchId is safe — unlike the dedup
-    * intake's carried-tag RECENCY window, which needed append-order
-    * preserved (DedupOps round-10 fix).
+    * semantics), so the un-padded batchId is safe.
     */
   def postingsIngestSink(stream: DataFrame, textCol: String, idCol: String,
                          root: String): DataStreamWriter[Row] =
@@ -529,88 +508,6 @@ object StreamOps {
   private def writeKeptPartition(kept: DataFrame, targetPath: String,
                                  tag: String): Unit =
     kept.write.mode("overwrite").parquet(s"$targetPath/batch=$tag")
-
-  /** Whether a trigger's `batch=<tag>` partition directory already
-    * exists — the replay-guard probe in [[intakeUpdateTrigger]]. Dir
-    * existence (not row count) is the right test: ANY prior write of
-    * this deterministic tag means an earlier attempt reached the
-    * write-partition step, and a kept-empty re-judgment against it can
-    * only be the already-applied case (or an idempotent all-dup replay,
-    * where the no-op leaves the identical empty partition in place).
-    */
-  private def targetPartitionExists(spark: org.apache.spark.sql.SparkSession,
-                                    targetPath: String, tag: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$targetPath/batch=$tag")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Shared per-trigger body of the index-updating sinks: exactly-once
-    * under foreachBatch replay. A committed epoch tagged with this
-    * trigger means both the target write and the index append already
-    * applied (the append commits LAST) — skip; a torn tagged epoch is
-    * our own crashed attempt — repair, then redo both idempotently
-    * (deterministic target partition, tag-keyed append).
-    */
-  /** Test/profiler hook: print per-stage timings of each intake trigger
-    * to stdout. Never set outside profiling runs.
-    */
-  private[graft] var intakeDebug = false
-
-  private[graft] def intakeUpdateTrigger(batch: DataFrame, batchId: Long,
-                        tablePrefix: String, textCol: String, idCol: String,
-                        targetPath: String, n: Int, numHashes: Int, bands: Int,
-                        threshold: Double, maxBucket: Int): Unit = {
-    val spark = batch.sparkSession
-    def t[A](label: String)(f: => A): A =
-      if (!intakeDebug) f else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"  intake[$batchId]:$label%-18s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
-      }
-    val tag = intakeBatchTag(spark, batchId)
-    // idle triggers must not touch the index: an empty micro-batch would
-    // otherwise still judge, write an empty partition, and append an
-    // empty tag-keyed EPOCH — an unattended per-minute stream would grow
-    // the ledger (and each trigger's ledger read) by thousands of no-op
-    // records between compactions. Skipping is replay-safe: an empty
-    // batch re-judges to the same empty result.
-    if (batch.isEmpty) return
-    graft.operators.DedupOps.epochTagState(spark, tablePrefix, tag) match {
-      case "committed" => ()
-      case state =>
-        if (state == "torn")
-          graft.operators.DedupOps.repairCorpusDedupIndex(spark, tablePrefix)
-        val idx = t("read-index")(
-          graft.operators.DedupOps.readCorpusDedupIndex(spark, tablePrefix))
-        val judged = t("judge")(graft.operators.DedupOps
-          .incrementalDedupPreparedWithCaches(batch, idx, textCol, idCol,
-            n, numHashes, bands, threshold, maxBucket))
-        val kept = t("kept")(judgeKept(batch, judged, idCol))
-        // Replay-outside-the-carried-window guard: if this judgment
-        // keeps NOTHING but the trigger's partition already exists, a
-        // prior attempt fully applied (its kept docs are in the index —
-        // that's exactly why the re-judge calls them all dups) and its
-        // idempotence tag has since been pruned from the carried window
-        // by a compaction. Overwriting the partition with the empty
-        // re-judgment would be silent data loss; the correct replay
-        // action is a no-op. A genuinely all-duplicates FIRST attempt
-        // has no partition yet and still writes its empty partition for
-        // replay determinism.
-        if (kept.isEmpty && targetPartitionExists(spark, targetPath, tag)) {
-          if (intakeDebug) println(s"  intake[$batchId]:replay-noop (kept empty, partition exists)")
-        } else {
-          t("write-partition")(writeKeptPartition(kept, targetPath, tag))
-          // an all-duplicates batch keeps nothing: write the (empty)
-          // partition for replay determinism, but don't add an empty epoch
-          // to the index — the tag staying "absent" just means a replay
-          // re-derives the same empty result
-          if (!kept.isEmpty)
-            t("append-index")(graft.operators.DedupOps.appendToCorpusDedupIndex(
-              kept, textCol, idCol, tablePrefix, epochTag = Some(tag)))
-        }
-        kept.unpersist()
-    }
-  }
 
   /** Streaming corpus intake: the stateless curation stages apply to a
     * stream unchanged (repetition filter is expression-only), and exact

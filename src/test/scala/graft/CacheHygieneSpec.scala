@@ -169,6 +169,21 @@ class CacheHygieneSpec extends SparkSpec {
     assert(leaked.isEmpty, s"incrementalDedupToParquet leaked cached frames with RDD ids $leaked")
   }
 
+  test("incrementalDedupToParquet releases its caches, also when the write fails") {
+    val corpus = docs.filter(col("doc_id") < 900)
+    val batch = Seq(
+      (5001L, "a brand new document with entirely original content today")
+    ).toDF("doc_id", "text")
+    // an output path under a regular file: the judgment's stages run,
+    // then the write cannot create its directory
+    val notADir = java.nio.file.Files.createTempFile("graft_cachehygiene_inc", ".txt").toString
+    assertNoLeak("incrementalDedupToParquet (failing write)") {
+      intercept[Exception] {
+        DedupOps.incrementalDedupToParquet(batch, corpus, "text", "doc_id", s"$notADir/out")
+      }
+    }
+  }
+
   /** Fails when `body` leaves a cached RDD behind. Id SETS, not counts,
     * for the reason given above.
     */

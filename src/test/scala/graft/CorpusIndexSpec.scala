@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -7,21 +8,25 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.DedupOps
 
-/** The bucketed corpus dedup index: writeCorpusDedupIndex persists the
-  * three frames as tables bucketed by their join keys, so every corpus
-  * leg of incrementalDedupPrepared joins CO-LOCATED — the scan reports
-  * the bucket partitioning and the planner inserts no corpus-side
-  * exchange. At 100 TB the corpus shuffle this removes IS the cost the
-  * prepared index exists to avoid; only batch-sized sides may move.
+/** The bucketed corpus dedup index: writeCorpusDedupIndex publishes the
+  * three frames as a version of a root, bucketed by their join keys, so
+  * every corpus leg of incrementalDedupPrepared joins CO-LOCATED — the
+  * scan reports the bucket partitioning and the planner inserts no
+  * corpus-side exchange. At 100 TB the corpus shuffle this removes IS the
+  * cost the prepared index exists to avoid; only batch-sized sides may
+  * move. Appends are ingest segments, compaction is a fold into the next
+  * version, retention is the store's prune.
   */
 class CorpusIndexSpec extends SparkSpec {
   import spark.implicits._
 
-  private val prefix = "graft_test_corpus_idx"
+  private val store = DedupOps.corpusIndex
 
-  private def dropIndex(): Unit =
-    Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $prefix$s"))
+  private def tmpRoot(name: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(name).toFile
+    org.apache.commons.io.FileUtils.forceDeleteOnExit(d)
+    d.getPath
+  }
 
   private lazy val corpus = (0 until 400).map { i =>
     (i.toLong, s"corpus document number $i talks about topic ${i % 40} in moderate detail with ${i % 7} extra side remarks included")
@@ -32,6 +37,33 @@ class CorpusIndexSpec extends SparkSpec {
     (10001L, "an entirely new document with no relatives in the corpus whatsoever today"),
     (10002L, "corpus document number 55 talks about topic 15 in moderate detail with 6 extra side remarks also included")
   ).toDF("doc_id", "text")
+
+  private lazy val family = (0 until 30).map(i =>
+    (7000L + i, "repeated template body with one unique trailing token marker " +
+      s"for member v$i")).toDF("doc_id", "text")
+
+  private def build(root: String, maxBucket: Int = DedupOps.DefaultMaxBucket): Int =
+    DedupOps.writeCorpusDedupIndex(
+      DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id", maxBucket = maxBucket),
+      root, buckets = 4)
+
+  private def judge(batch: DataFrame, idx: DedupOps.CorpusDedupIndex,
+                    maxBucket: Int = DedupOps.DefaultMaxBucket): Seq[(Long, String)] =
+    DedupOps.incrementalDedupPrepared(batch, idx, "text", "doc_id", maxBucket = maxBucket)
+      .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+
+  private def served(root: String): String = store.versionDir(root, store.servedVersion(root))
+
+  /** A crash between an append's table writes and its commit marker. */
+  private def tear(root: String, batchId: Long): Unit = {
+    val seg = s"${served(root)}/ingest/b$batchId"
+    assert(graft.io.IndexMeta.deleteTree(s"$seg/_SUCCESS"))
+    graft.io.IndexMeta.deleteTree(s"$seg/bands")
+  }
+
+  /** Every registered index table this suite's roots produced. */
+  private def isIndexScan(s: FileSourceScanExec): Boolean =
+    s.tableIdentifier.exists(_.table.startsWith("cdx_"))
 
   /** All nodes of the plan tree, unwrapping AQE containers (the final
     * adaptive plan's leaves are query stages whose real subtrees hang
@@ -52,399 +84,269 @@ class CorpusIndexSpec extends SparkSpec {
       case o => o.children ++ o.subqueries
     }
     val here = p match {
-      case s: FileSourceScanExec if s.tableIdentifier.exists(_.table.startsWith(prefix)) =>
-        Seq(acc2.reverse)
+      case s: FileSourceScanExec if isIndexScan(s) => Seq(acc2.reverse)
       case _ => Nil
     }
     here ++ kids.flatMap(pathsToIndexScans(_, acc2))
   }
 
-  test("round-trips through bucketed tables, re-attaches, and matches the in-memory path") {
-    dropIndex()
-    val extPath = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_test_corpus_idx_files").getPath
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix,
-        buckets = 4, path = Some(extPath))
-      assert(DedupOps.corpusDedupIndexExists(spark, prefix))
-      val idx = DedupOps.readCorpusDedupIndex(spark, prefix)
-      val prepared = DedupOps.incrementalDedupPrepared(newBatch, idx, "text", "doc_id")
-        .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val direct = DedupOps.incrementalDedup(newBatch, corpus, "text", "doc_id")
-        .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(prepared == direct, s"prepared $prepared vs direct $direct")
-      assert(prepared.toMap.apply(10000L) == "exact_dup")
-      assert(prepared.toMap.apply(10001L) == "kept")
+  private def withoutBroadcast[T](body: => T): T = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
 
-      // catalog loss (fresh session) → DDL-only re-attach over the same
-      // files must reproduce the judgment without rebuilding the index
-      dropIndex()
-      assert(!DedupOps.corpusDedupIndexExists(spark, prefix))
-      DedupOps.attachCorpusDedupIndex(spark, prefix, extPath, buckets = 4)
-      val reattached = DedupOps.incrementalDedupPrepared(
-          newBatch, DedupOps.readCorpusDedupIndex(spark, prefix), "text", "doc_id")
-        .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(reattached == direct, s"re-attached $reattached vs direct $direct")
-    } finally {
-      dropIndex()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(extPath))
+  private def assertBucketedScans(out: DataFrame): Unit = {
+    out.collect()
+    val scans = allNodes(out.queryExecution.executedPlan).collect {
+      case s: FileSourceScanExec if isIndexScan(s) => s
     }
+    assert(scans.nonEmpty, "no index-table scans in the plan")
+    scans.foreach(s => assert(s.bucketedScan,
+      s"index scan of ${s.tableIdentifier.get.table} lost the bucketed layout"))
+  }
+
+  /** Forget the session's registrations of `root`'s tables. */
+  private def dropRegistrations(root: String): Unit = {
+    val leaf = new java.io.File(root).getName.toLowerCase
+    spark.catalog.listTables().collect().map(_.name).filter(_.startsWith(s"cdx_$leaf"))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("round-trips through bucketed tables, re-attaches, and matches the in-memory path") {
+    val root = tmpRoot("cidx_roundtrip")
+    assert(!DedupOps.corpusDedupIndexExists(root))
+    assert(build(root) == 1)
+    assert(DedupOps.corpusDedupIndexExists(root))
+    val direct = DedupOps.incrementalDedup(newBatch, corpus, "text", "doc_id")
+      .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val prepared = judge(newBatch, DedupOps.readCorpusDedupIndex(spark, root))
+    assert(prepared == direct, s"prepared $prepared vs direct $direct")
+    assert(prepared.toMap.apply(10000L) == "exact_dup")
+    assert(prepared.toMap.apply(10001L) == "kept")
+
+    // catalog loss (a fresh session): the read re-registers the served
+    // version from the root — DDL only, no rebuild
+    dropRegistrations(root)
+    assert(judge(newBatch, DedupOps.readCorpusDedupIndex(spark, root)) == direct)
   }
 
   test("manifest is the layout's source of truth: mismatches raise, params round-trip") {
-    dropIndex()
-    val extPath = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_test_corpus_idx_manifest").getPath
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id",
-          n = 3, numHashes = 64, bands = 32, maxBucket = 100),
-        prefix, buckets = 4, path = Some(extPath))
-
-      // params persisted on the bands table and recovered by read
-      val idx = DedupOps.readCorpusDedupIndex(spark, prefix)
-      assert(idx.params.contains(DedupOps.CorpusIndexParams(3, 64, 32, 100)),
-        s"params not recovered: ${idx.params}")
-
-      // an ingest call with a different band family must refuse loudly
-      // (it would otherwise run fine and judge everything kept)
-      val e1 = intercept[IllegalArgumentException] {
-        DedupOps.incrementalDedupPrepared(newBatch, idx, "text", "doc_id",
-          n = 4, numHashes = 64, bands = 32)
-      }
-      assert(e1.getMessage.contains("band families"), e1.getMessage)
-
-      // wrong caller bucket count at attach: refuse (silently-wrong joins)
-      dropIndex()
-      val e2 = intercept[IllegalArgumentException] {
-        DedupOps.attachCorpusDedupIndex(spark, prefix, extPath, buckets = 8)
-      }
-      assert(e2.getMessage.contains("bucket count mismatch"), e2.getMessage)
-
-      // manifest-driven attach (no caller count) restores layout + params
-      DedupOps.attachCorpusDedupIndex(spark, prefix, extPath)
-      val reattached = DedupOps.readCorpusDedupIndex(spark, prefix)
-      assert(reattached.params.contains(DedupOps.CorpusIndexParams(3, 64, 32, 100)))
-
-      // a path with no manifest (pre-manifest index / wrong dir): refuse
-      dropIndex()
-      val e3 = intercept[IllegalStateException] {
-        DedupOps.attachCorpusDedupIndex(spark, prefix,
-          new java.io.File(sys.props("java.io.tmpdir"), "graft_no_such_idx").getPath)
-      }
-      assert(e3.getMessage.contains("manifest"), e3.getMessage)
-    } finally {
-      dropIndex()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(extPath))
+    val root = tmpRoot("cidx_manifest")
+    DedupOps.writeCorpusDedupIndex(
+      DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id",
+        n = 3, numHashes = 64, bands = 32, maxBucket = 100),
+      root, buckets = 4)
+    val idx = DedupOps.readCorpusDedupIndex(spark, root)
+    assert(idx.params.contains(DedupOps.CorpusIndexParams(3, 64, 32, 100)),
+      s"params not recovered: ${idx.params}")
+    // the registration takes its bucket count from the manifest
+    val tables = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith("cdx_cidx_manifest"))
+    assert(tables.length == 3, tables.toSeq.toString)
+    tables.foreach { t =>
+      val meta = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(t))
+      assert(meta.bucketSpec.map(_.numBuckets).contains(4), s"$t: ${meta.bucketSpec}")
     }
+
+    // an ingest call with a different band family must refuse loudly
+    // (it would otherwise run fine and judge everything kept)
+    val e1 = intercept[IllegalArgumentException] {
+      DedupOps.incrementalDedupPrepared(newBatch, idx, "text", "doc_id",
+        n = 4, numHashes = 64, bands = 32)
+    }
+    assert(e1.getMessage.contains("band families"), e1.getMessage)
+
+    // an index without build params cannot be persisted: appends and
+    // folds derive the band family from them
+    val e2 = intercept[IllegalArgumentException] {
+      DedupOps.writeCorpusDedupIndex(idx.copy(params = None), tmpRoot("cidx_bare"))
+    }
+    assert(e2.getMessage.contains("build params"), e2.getMessage)
+
+    // a root that never served a version refuses the read
+    val e3 = intercept[IllegalStateException] {
+      DedupOps.readCorpusDedupIndex(spark, tmpRoot("cidx_empty"))
+    }
+    assert(e3.getMessage.contains("no served"), e3.getMessage)
   }
 
   test("append keeps the index equivalent to a fresh build and the scans bucketed") {
-    dropIndex()
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix, buckets = 4)
+    val root = tmpRoot("cidx_append")
+    build(root)
+    val accepted = Seq(
+      (5000L, "an accepted document about incremental corpus growth over time"),
+      (5001L, "corpus document number 901 talks about topic 21 in moderate detail with 5 extra side remarks included")
+    ).toDF("doc_id", "text")
+    assert(DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", root, batchId = 0L))
 
-      // accept a batch into the corpus via append (batch-sized work)
-      val accepted = Seq(
-        (5000L, "an accepted document about incremental corpus growth over time"),
-        (5001L, "corpus document number 901 talks about topic 21 in moderate detail with 5 extra side remarks included")
-      ).toDF("doc_id", "text")
-      DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", prefix)
+    // a later batch judged against the APPENDED index must match the
+    // judgment against a fresh index built over corpus ∪ accepted
+    val later = Seq(
+      (9000L, "an accepted document about incremental corpus growth over time"),   // exact of 5000
+      (9001L, "corpus document number 901 talks about topic 21 in moderate detail with 9 extra side remarks included"), // near of 5001
+      (9002L, "nothing like anything else present in this corpus at all today")
+    ).toDF("doc_id", "text")
+    val viaAppend = judge(later, DedupOps.readCorpusDedupIndex(spark, root))
+    val viaRebuild = judge(later,
+      DedupOps.buildCorpusDedupIndex(corpus.unionByName(accepted), "text", "doc_id"))
+    assert(viaAppend == viaRebuild, s"append $viaAppend vs rebuild $viaRebuild")
+    assert(viaAppend.toMap == Map(9000L -> "exact_dup", 9001L -> "near_dup", 9002L -> "kept"))
 
-      // a later batch judged against the APPENDED index must match the
-      // judgment against a fresh index built over corpus ∪ accepted
-      val later = Seq(
-        (9000L, "an accepted document about incremental corpus growth over time"),   // exact of 5000
-        (9001L, "corpus document number 901 talks about topic 21 in moderate detail with 9 extra side remarks included"), // near of 5001
-        (9002L, "nothing like anything else present in this corpus at all today")
-      ).toDF("doc_id", "text")
-      val viaAppend = DedupOps.incrementalDedupPrepared(
-          later, DedupOps.readCorpusDedupIndex(spark, prefix), "text", "doc_id")
-        .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val viaRebuild = DedupOps.incrementalDedupPrepared(
-          later, DedupOps.buildCorpusDedupIndex(corpus.unionByName(accepted), "text", "doc_id"),
-          "text", "doc_id")
-        .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(viaAppend == viaRebuild, s"append $viaAppend vs rebuild $viaRebuild")
-      assert(viaAppend.toMap.apply(9000L) == "exact_dup")
-      assert(viaAppend.toMap.apply(9001L) == "near_dup")
-      assert(viaAppend.toMap.apply(9002L) == "kept")
-
-      // appended files keep the bucketed layout: index scans still
-      // report bucketed and plan no corpus-side exchange
-      val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      try {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        val out = DedupOps.incrementalDedupPrepared(
-          later, DedupOps.readCorpusDedupIndex(spark, prefix), "text", "doc_id")
-        out.collect()
-        val idxScans = allNodes(out.queryExecution.executedPlan).collect {
-          case s: FileSourceScanExec if s.tableIdentifier.exists(_.table.startsWith(prefix)) => s
-        }
-        assert(idxScans.nonEmpty)
-        idxScans.foreach(s => assert(s.bucketedScan,
-          s"post-append scan of ${s.tableIdentifier.get.table} lost the bucketed layout"))
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-
-      // params are required: an unmanifested index refuses the append
-      val bare = "graft_test_bare_idx"
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $bare$sfx"))
-      val idx0 = DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id")
-      DedupOps.writeCorpusDedupIndex(
-        idx0.copy(params = None), bare, buckets = 4)
-      val e = intercept[IllegalStateException] {
-        DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", bare)
-      }
-      assert(e.getMessage.contains("build params"), e.getMessage)
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $bare$sfx"))
-    } finally dropIndex()
+    // the segment is a partition of each bucketed table: index scans
+    // still report bucketed across base and segment
+    withoutBroadcast(assertBucketedScans(DedupOps.incrementalDedupPrepared(
+      later, DedupOps.readCorpusDedupIndex(spark, root), "text", "doc_id")))
   }
 
   test("compaction re-caps buckets that appends grew past the limit") {
-    dropIndex()
-    val toPrefix = prefix + "_compacted"
-    def dropTo(): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $toPrefix$s"))
-    dropTo()
-    try {
-      // capped build over the plain corpus: no bucket near the cap
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id", maxBucket = 12),
-        prefix, buckets = 4)
+    val root = tmpRoot("cidx_recap")
+    // capped build over the plain corpus: no bucket near the cap
+    build(root, maxBucket = 12)
+    // appends grow a hot templated family far past the cap (appends
+    // deliberately do NOT re-cap — batch-sized accepts can't see the
+    // cumulative width)
+    DedupOps.appendToCorpusDedupIndex(family, "text", "doc_id", root, batchId = 0L)
+    val over = DedupOps.oversizedBuckets(DedupOps.readCorpusDedupIndex(spark, root).bands,
+      Seq("band_idx", "band_hash"), maxBucket = 12)
+    val overCount = over.count()
+    assert(overCount > 0, "appends did not grow any bucket past the cap")
 
-      // appends grow a hot templated family far past the cap (appends
-      // deliberately do NOT re-cap — batch-sized accepts can't see the
-      // cumulative width)
-      val fam = (0 until 30).map(i =>
-        (7000L + i, "repeated template body with one unique trailing token marker " +
-          s"for member v$i")).toDF("doc_id", "text")
-      DedupOps.appendToCorpusDedupIndex(fam, "text", "doc_id", prefix)
-      val over = DedupOps.oversizedBuckets(
-        DedupOps.readCorpusDedupIndex(spark, prefix).bands,
-        Seq("band_idx", "band_hash"), maxBucket = 12)
-      assert(over.count() > 0, "appends did not grow any bucket past the cap")
+    // the fold names the dropped buckets and serves bands back under the cap
+    val report = DedupOps.compactCorpusDedupIndex(spark, root)
+    assert(report.count() == overCount)
+    assert(store.currentVersion(root).contains(2))
+    val after = DedupOps.readCorpusDedupIndex(spark, root)
+    assert(DedupOps.oversizedBuckets(after.bands,
+      Seq("band_idx", "band_hash"), maxBucket = 12).count() == 0)
+    assert(after.params.contains(DedupOps.CorpusIndexParams(3, 64, 32, 12)))
 
-      // compact into a fresh prefix: the report names the dropped
-      // buckets and the new bands table is back under the cap
-      val report = DedupOps.compactCorpusDedupIndex(spark, prefix, toPrefix, buckets = 4)
-      assert(report.count() == over.count())
-      val after = DedupOps.readCorpusDedupIndex(spark, toPrefix)
-      assert(DedupOps.oversizedBuckets(after.bands,
-        Seq("band_idx", "band_hash"), maxBucket = 12).count() == 0)
-      assert(after.params.contains(DedupOps.CorpusIndexParams(3, 64, 32, 12)))
-
-      // judgments against the compacted index: a probe whose only
-      // neighborhood is the dropped family bucket judges kept; a
-      // genuine corpus near-dup still judges near_dup
-      val probes = Seq(
-        (9100L, "repeated template body with one unique trailing token marker for member v999"),
-        (9101L, "corpus document number 55 talks about topic 15 in moderate detail with 6 extra side remarks also included")
-      ).toDF("doc_id", "text")
-      val out = DedupOps.incrementalDedupPrepared(probes, after, "text", "doc_id",
-          maxBucket = 12)
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(out(9100L) == "kept", s"dropped-bucket probe judged ${out(9100L)}")
-      assert(out(9101L) == "near_dup", s"genuine probe judged ${out(9101L)}")
-    } finally { dropIndex(); dropTo() }
+    // judgments against the folded index: a probe whose only
+    // neighborhood is the dropped family bucket judges kept; a genuine
+    // corpus near-dup still judges near_dup
+    val probes = Seq(
+      (9100L, "repeated template body with one unique trailing token marker for member v999"),
+      (9101L, "corpus document number 55 talks about topic 15 in moderate detail with 6 extra side remarks also included")
+    ).toDF("doc_id", "text")
+    val out = judge(probes, after, maxBucket = 12).toMap
+    assert(out(9100L) == "kept", s"dropped-bucket probe judged ${out(9100L)}")
+    assert(out(9101L) == "near_dup", s"genuine probe judged ${out(9101L)}")
   }
 
-  test("compaction copies unfragmented fingerprint/shingle files instead of rewriting them") {
-    dropIndex()
-    val toPrefix = prefix + "_compacted"
-    def dropTo(): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $toPrefix$s"))
-    dropTo()
-    val srcRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_copysrc")
-    val dstRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_copydst")
-    def fileNames(root: java.io.File, table: String): Set[String] =
-      Option(new java.io.File(root, table).listFiles())
-        .getOrElse(Array.empty[java.io.File]).map(_.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id", maxBucket = 12),
-        prefix, buckets = 4, path = Some(srcRoot.getPath))
-      val fam = (0 until 30).map(i =>
-        (7000L + i, "repeated template body with one unique trailing token marker " +
-          s"for member v$i")).toDF("doc_id", "text")
-      DedupOps.appendToCorpusDedupIndex(fam, "text", "doc_id", prefix)
+  test("a fold carries unfragmented fingerprints/shingles by reference") {
+    val root = tmpRoot("cidx_carry")
+    def manifest(v: Int): Map[String, Any] = graft.io.StableJson.parse(
+      graft.io.IndexMeta.readString(s"${store.versionDir(root, v)}/manifest.json").get)
+      .asInstanceOf[Map[String, Any]]
+    def carried(v: Int): Map[String, Any] = manifest(v)("carried").asInstanceOf[Map[String, Any]]
+    build(root, maxBucket = 12)
+    DedupOps.appendToCorpusDedupIndex(family, "text", "doc_id", root, batchId = 0L)
 
-      // same bucket count, few files per bucket → fingerprints/shingles
-      // COPY (identical file names under the new root — the appended
-      // per-epoch files included), bands rewrites re-capped
-      val report = DedupOps.compactCorpusDedupIndex(spark, prefix, toPrefix,
-        buckets = 4, path = Some(dstRoot.getPath))
-      assert(report.count() > 0, "re-cap dropped nothing — family not hot?")
-      assert(fileNames(srcRoot, "fingerprints") == fileNames(dstRoot, "fingerprints"),
-        "fingerprints was rewritten, not copied")
-      assert(fileNames(srcRoot, "shingles") == fileNames(dstRoot, "shingles"),
-        "shingles was rewritten, not copied")
-      assert(fileNames(srcRoot, "bands") != fileNames(dstRoot, "bands"),
-        "bands must rewrite (the re-cap changes it)")
+    // few files per bucket: fingerprints/shingles carry (the new version
+    // names v1's base and segment dirs, no byte moves); bands rewrite
+    // re-capped
+    assert(DedupOps.compactCorpusDedupIndex(spark, root).count() > 0,
+      "re-cap dropped nothing — family not hot?")
+    val v2 = carried(2)
+    assert(v2.keySet == Set("fingerprints", "shingles"), v2.toString)
+    assert(v2("fingerprints") == Seq("versions/v0001/fingerprints",
+      "versions/v0001/ingest/b0/fingerprints"), v2.toString)
+    assert(!graft.io.IndexMeta.exists(s"${store.versionDir(root, 2)}/fingerprints"))
+    assert(graft.io.IndexMeta.exists(s"${store.versionDir(root, 2)}/bands/_SUCCESS"))
 
-      // the copied tables keep their bucketed layout: judgments match
-      // the rewrite semantics and the index scans stay bucketed leaves
-      val after = DedupOps.readCorpusDedupIndex(spark, toPrefix)
-      assert(after.params.contains(DedupOps.CorpusIndexParams(3, 64, 32, 12)))
-      val probes = Seq(
-        (9100L, "repeated template body with one unique trailing token marker for member v999"),
-        (9101L, "corpus document number 55 talks about topic 15 in moderate detail with 6 extra side remarks also included"),
-        (9102L, "repeated template body with one unique trailing token marker for member v7")
-      ).toDF("doc_id", "text")
-      val judged = DedupOps.incrementalDedupPrepared(probes, after, "text", "doc_id",
-        maxBucket = 12)
-      val out = judged.collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(out(9100L) == "kept", s"dropped-bucket probe judged ${out(9100L)}")
-      assert(out(9101L) == "near_dup", s"genuine probe judged ${out(9101L)}")
-      assert(out(9102L) == "exact_dup", s"appended-doc copy judged ${out(9102L)}")
-      val scans = allNodes(judged.queryExecution.executedPlan).collect {
-        case s: FileSourceScanExec if s.tableIdentifier.exists(_.table.startsWith(toPrefix)) => s
-      }
-      assert(scans.nonEmpty, "no compacted-index scans in the plan")
-      scans.foreach(s => assert(s.bucketedScan,
-        s"copied table ${s.tableIdentifier.get.table} lost its bucketed scan"))
+    // the carried tables keep their bucketed layout and judgments
+    val probes = Seq(
+      (9100L, "repeated template body with one unique trailing token marker for member v999"),
+      (9101L, "corpus document number 55 talks about topic 15 in moderate detail with 6 extra side remarks also included"),
+      (9102L, "repeated template body with one unique trailing token marker for member v7")
+    ).toDF("doc_id", "text")
+    val after = DedupOps.readCorpusDedupIndex(spark, root)
+    val out = judge(probes, after, maxBucket = 12).toMap
+    assert(out == Map(9100L -> "kept", 9101L -> "near_dup", 9102L -> "exact_dup"), out.toString)
+    withoutBroadcast(assertBucketedScans(
+      DedupOps.incrementalDedupPrepared(probes, after, "text", "doc_id", maxBucket = 12)))
 
-      // a changed bucket count can't copy: the rewrite leg re-buckets
-      dropTo()
-      org.apache.commons.io.FileUtils.deleteQuietly(dstRoot)
-      DedupOps.compactCorpusDedupIndex(spark, prefix, toPrefix,
-        buckets = 8, path = Some(dstRoot.getPath))
-      assert(fileNames(srcRoot, "shingles") != fileNames(dstRoot, "shingles"),
-        "bucket-count change must force a rewrite")
-      val rebucketed = DedupOps.readCorpusDedupIndex(spark, toPrefix)
-      val out8 = DedupOps.incrementalDedupPrepared(probes, rebucketed, "text", "doc_id",
-          maxBucket = 12)
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(out8 == out, s"re-bucketed judgments drifted: $out8 vs $out")
-    } finally {
-      dropIndex(); dropTo()
-      org.apache.commons.io.FileUtils.deleteQuietly(srcRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(dstRoot)
-    }
+    // past the fragmentation threshold every table rewrites into the new
+    // version's own dirs, with the same judgments
+    DedupOps.compactCorpusDedupIndex(spark, root, maxFilesPerBucket = 0)
+    assert(carried(3).isEmpty)
+    assert(graft.io.IndexMeta.exists(s"${store.versionDir(root, 3)}/shingles/_SUCCESS"))
+    assert(judge(probes, DedupOps.readCorpusDedupIndex(spark, root), maxBucket = 12).toMap == out)
   }
 
   test("a crashed append is detected, refused, and repaired back to the committed state") {
-    dropIndex()
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix, buckets = 4)
-      val probe = Seq(
-        (9000L, "an accepted document about incremental corpus growth over time"),
-        (9002L, "nothing like anything else present in this corpus at all today")
-      ).toDF("doc_id", "text")
-      def judge() = DedupOps.incrementalDedupPrepared(
-          probe, DedupOps.readCorpusDedupIndex(spark, prefix), "text", "doc_id")
-        .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val before = judge()
+    val root = tmpRoot("cidx_torn")
+    build(root)
+    val probe = Seq(
+      (9000L, "an accepted document about incremental corpus growth over time"),
+      (9002L, "nothing like anything else present in this corpus at all today")
+    ).toDF("doc_id", "text")
+    val before = judge(probe, DedupOps.readCorpusDedupIndex(spark, root))
+    val accepted = Seq((5000L, "an accepted document about incremental corpus growth over time"))
+      .toDF("doc_id", "text")
+    DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", root, batchId = 3L)
+    tear(root, 3L)
 
-      // the append dies between the fingerprint and shingle inserts —
-      // the exact torn state that would make near-dup verification
-      // silently blind to the appended docs
-      val accepted = Seq(
-        (5000L, "an accepted document about incremental corpus growth over time")
-      ).toDF("doc_id", "text")
-      DedupOps.appendFaultInjection = Some("shingles")
-      val crash = intercept[IllegalStateException] {
-        DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", prefix)
-      }
-      assert(crash.getMessage.contains("injected"), crash.getMessage)
-      DedupOps.appendFaultInjection = None
+    // the torn segment (no _SUCCESS) is not served: judgments stay at the
+    // committed state, and the batch does not count as applied
+    assert(judge(probe, DedupOps.readCorpusDedupIndex(spark, root)) == before)
+    assert(!store.batchApplied(served(root), 3L))
 
-      // read refuses the torn index instead of judging against it
-      val e = intercept[IllegalStateException] {
-        DedupOps.readCorpusDedupIndex(spark, prefix)
-      }
-      assert(e.getMessage.contains("torn"), e.getMessage)
-
-      // repair quarantines exactly the partial fingerprint files and
-      // restores the last committed state bit-for-bit in judgment terms
-      val summary = DedupOps.repairCorpusDedupIndex(spark, prefix)
-      assert(summary("torn_epochs") == Seq(1L), summary.toString)
-      val deleted = summary("deleted_files").asInstanceOf[Map[String, Int]]
-      assert(deleted("fingerprints") > 0 && deleted("shingles") == 0 &&
-        deleted("bands") == 0, deleted.toString)
-      assert(judge() == before)
-
-      // the retried append applies fully; the index now matches a fresh
-      // build over the unioned corpus
-      DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", prefix)
-      val viaAppend = judge()
-      val viaRebuild = DedupOps.incrementalDedupPrepared(
-          probe, DedupOps.buildCorpusDedupIndex(
-            corpus.unionByName(accepted), "text", "doc_id"), "text", "doc_id")
-        .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(viaAppend == viaRebuild, s"append $viaAppend vs rebuild $viaRebuild")
-      assert(viaAppend.toMap.apply(9000L) == "exact_dup")
-    } finally { DedupOps.appendFaultInjection = None; dropIndex() }
+    // the retried append rewrites the segment; the index now matches a
+    // fresh build over the unioned corpus
+    assert(DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", root, batchId = 3L))
+    val viaAppend = judge(probe, DedupOps.readCorpusDedupIndex(spark, root))
+    val viaRebuild = judge(probe,
+      DedupOps.buildCorpusDedupIndex(corpus.unionByName(accepted), "text", "doc_id"))
+    assert(viaAppend == viaRebuild, s"append $viaAppend vs rebuild $viaRebuild")
+    assert(viaAppend.toMap.apply(9000L) == "exact_dup")
   }
 
   test("tag-keyed appends are exactly-once: committed tags no-op, torn tags redo") {
-    dropIndex()
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix, buckets = 4)
-      val acc1 = Seq((5000L, "first accepted trigger document about epochs"))
-        .toDF("doc_id", "text")
-      DedupOps.appendToCorpusDedupIndex(acc1, "text", "doc_id", prefix,
-        epochTag = Some("b0"))
-      val fpAfter = spark.table(s"${prefix}_fingerprints").count()
-      // replay of a fully-applied trigger: no-op, not a duplicate append
-      DedupOps.appendToCorpusDedupIndex(acc1, "text", "doc_id", prefix,
-        epochTag = Some("b0"))
-      assert(spark.table(s"${prefix}_fingerprints").count() == fpAfter)
+    // the idempotence key is the batch id (the streaming micro-batch id)
+    val root = tmpRoot("cidx_exactly_once")
+    build(root)
+    def fpRows() = DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count()
+    val acc1 = Seq((5000L, "first accepted trigger document about segments"))
+      .toDF("doc_id", "text")
+    assert(DedupOps.appendToCorpusDedupIndex(acc1, "text", "doc_id", root, batchId = 0L))
+    val fpAfter = fpRows()
+    // replay of a fully-applied batch: no-op, not a duplicate append
+    assert(!DedupOps.appendToCorpusDedupIndex(acc1, "text", "doc_id", root, batchId = 0L))
+    assert(fpRows() == fpAfter)
 
-      // a tagged append that crashed mid-insert redoes itself on retry
-      val acc2 = Seq((5001L, "second accepted trigger document about repair"))
-        .toDF("doc_id", "text")
-      DedupOps.appendFaultInjection = Some("bands")
-      intercept[IllegalStateException] {
-        DedupOps.appendToCorpusDedupIndex(acc2, "text", "doc_id", prefix,
-          epochTag = Some("b1"))
-      }
-      DedupOps.appendFaultInjection = None
-      DedupOps.appendToCorpusDedupIndex(acc2, "text", "doc_id", prefix,
-        epochTag = Some("b1"))
-      val probe = Seq(
-        (9000L, "first accepted trigger document about epochs"),
-        (9001L, "second accepted trigger document about repair")
-      ).toDF("doc_id", "text")
-      val out = DedupOps.incrementalDedupPrepared(
-          probe, DedupOps.readCorpusDedupIndex(spark, prefix), "text", "doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(out == Map(9000L -> "exact_dup", 9001L -> "exact_dup"), out.toString)
-    } finally { DedupOps.appendFaultInjection = None; dropIndex() }
+    // a batch that crashed mid-append redoes itself on retry
+    val acc2 = Seq((5001L, "second accepted trigger document about replays"))
+      .toDF("doc_id", "text")
+    DedupOps.appendToCorpusDedupIndex(acc2, "text", "doc_id", root, batchId = 1L)
+    tear(root, 1L)
+    assert(DedupOps.appendToCorpusDedupIndex(acc2, "text", "doc_id", root, batchId = 1L))
+    val probe = Seq(
+      (9000L, "first accepted trigger document about segments"),
+      (9001L, "second accepted trigger document about replays")
+    ).toDF("doc_id", "text")
+    assert(judge(probe, DedupOps.readCorpusDedupIndex(spark, root)).toMap ==
+      Map(9000L -> "exact_dup", 9001L -> "exact_dup"))
+    assert(fpRows() == fpAfter + 1)
   }
 
   test("per-batch joins have no corpus-side exchange: index scans are bucketed leaves") {
-    dropIndex()
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      // force shuffle joins: broadcasting the index side would hide the
-      // exchange question (and can't happen at real corpus scale)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix, buckets = 4)
-      val idx = DedupOps.readCorpusDedupIndex(spark, prefix)
-      val out = DedupOps.incrementalDedupPrepared(newBatch, idx, "text", "doc_id")
-      out.collect()
-      val nodes = allNodes(out.queryExecution.executedPlan)
-
-      // every index-table scan runs as a bucketed scan...
-      val idxScans = nodes.collect {
-        case s: FileSourceScanExec if s.tableIdentifier.exists(_.table.startsWith(prefix)) => s
-      }
-      assert(idxScans.nonEmpty, "no index-table scans in the plan")
-      idxScans.foreach(s => assert(s.bucketedScan,
-        s"index scan of ${s.tableIdentifier.get.table} is not bucketed"))
-
-      // ...and the path from each index scan UP to its nearest join
-      // ancestor crosses no shuffle: the corpus side feeds its join
-      // straight from the bucketed layout. (Shuffles ABOVE the join —
-      // e.g. the post-join groupBy — are batch-sized results and fine.)
+    val root = tmpRoot("cidx_exchange")
+    build(root)
+    DedupOps.appendToCorpusDedupIndex(
+      Seq((5000L, "an appended document so the scans span two partitions")).toDF("doc_id", "text"),
+      "text", "doc_id", root, batchId = 0L)
+    // force shuffle joins: broadcasting the index side would hide the
+    // exchange question (and can't happen at real corpus scale)
+    withoutBroadcast {
+      val out = DedupOps.incrementalDedupPrepared(newBatch,
+        DedupOps.readCorpusDedupIndex(spark, root), "text", "doc_id")
+      assertBucketedScans(out)
+      // the path from each index scan UP to its nearest join ancestor
+      // crosses no shuffle: the corpus side feeds its join straight from
+      // the bucketed layout. (Shuffles ABOVE the join — e.g. the post-join
+      // groupBy — are batch-sized results and fine.)
       val paths = pathsToIndexScans(out.queryExecution.executedPlan, Nil)
       assert(paths.nonEmpty, "no root-to-index-scan paths found")
       paths.foreach { path =>
@@ -459,100 +361,63 @@ class CorpusIndexSpec extends SparkSpec {
         assert(crossed.isEmpty,
           s"corpus index scan shuffles before its join:\n${path.last.treeString.take(800)}")
       }
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      dropIndex()
     }
   }
 
-  test("re-attach refuses to keep a stale registration; same-root compaction refuses") {
-    dropIndex()
-    val extPath = new java.io.File(
-      sys.props("java.io.tmpdir"), "graft_test_cidx_stale").getPath
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix,
-        buckets = 4, path = Some(extPath))
-      // the on-disk index is rebuilt with a DIFFERENT bucket count while
-      // this session still holds the 4-bucket registration; re-attach
-      // must replace the stale DDL (IF NOT EXISTS alone would keep the
-      // 4-bucket metadata over 8-bucket files — silently wrong joins)
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix + "_tmp",
-        buckets = 8, path = Some(extPath + "2"))
-      DedupOps.attachCorpusDedupIndex(spark, prefix, extPath + "2")
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(s"${prefix}_bands"))
-      assert(meta.bucketSpec.exists(_.numBuckets == 8),
-        s"stale 4-bucket registration survived re-attach: ${meta.bucketSpec}")
-      val judged = DedupOps.incrementalDedupPrepared(
-          newBatch, DedupOps.readCorpusDedupIndex(spark, prefix), "text", "doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(judged(10000L) == "exact_dup" && judged(10001L) == "kept")
+  test("reads never reuse a stale registration after folds or rebuilds") {
+    val root = tmpRoot("cidx_stale")
+    build(root)
+    val probe = Seq((9000L, "a doc that only the rebuilt index knows about today")).toDF("doc_id", "text")
+    def tableOf(idx: DedupOps.CorpusDedupIndex): String =
+      idx.bands.queryExecution.analyzed.collectFirst {
+        case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.catalogTable.get.identifier.table
+      }.get
+    val t1 = tableOf(DedupOps.readCorpusDedupIndex(spark, root))
+    assert(judge(probe, DedupOps.readCorpusDedupIndex(spark, root)).toMap.apply(9000L) == "kept")
 
-      // compacting "into" the source root would overwrite files the
-      // input plan is reading (rewrite leg) or delete-before-copy (copy
-      // leg) — refused on both legs at the top
-      val e = intercept[IllegalArgumentException] {
-        DedupOps.compactCorpusDedupIndex(spark, prefix, prefix + "_c",
-          buckets = 8, path = Some(extPath + "2"))
-      }
-      assert(e.getMessage.contains("fresh path"), e.getMessage)
-    } finally {
-      dropIndex()
-      Seq("_fingerprints", "_shingles", "_bands").foreach { sfx =>
-        spark.sql(s"DROP TABLE IF EXISTS ${prefix}_tmp$sfx")
-        spark.sql(s"DROP TABLE IF EXISTS ${prefix}_c$sfx")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(extPath))
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(extPath + "2"))
-    }
+    // a fold serves a new version under a new name
+    DedupOps.compactCorpusDedupIndex(spark, root)
+    val t2 = tableOf(DedupOps.readCorpusDedupIndex(spark, root))
+    assert(t2 != t1)
+
+    // the root deleted and rebuilt in place (same path, same version
+    // number, different data and bucket count): the old registration
+    // must not serve the new files
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
+    DedupOps.writeCorpusDedupIndex(DedupOps.buildCorpusDedupIndex(
+      corpus.unionByName(probe.select((col("doc_id") - 1L).as("doc_id"), col("text"))),
+      "text", "doc_id"), root, buckets = 8)
+    val rebuilt = DedupOps.readCorpusDedupIndex(spark, root)
+    assert(tableOf(rebuilt) != t1)
+    assert(judge(probe, rebuilt).toMap.apply(9000L) == "exact_dup")
   }
 
   test("compaction carries committed idempotence tags into the new ledger") {
-    // the replay-across-maintenance hole: a trigger commits its tagged
-    // append on prefix A, the process dies before the streaming
-    // checkpoint commit, maintenance compacts A→B and promotes, and the
-    // replayed trigger judges against B. B already CONTAINS the
-    // trigger's accepted docs (copied fingerprints), so without the
-    // carried tag the re-judgment would call them all exact_dup, keep
-    // nothing, and overwrite the trigger's target partition with an
-    // empty frame. The carried tag makes the replay a no-op instead.
-    dropIndex()
-    val toPrefix = prefix + "_compacted"
-    def dropTo(): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $toPrefix$s"))
-    dropTo()
-    val srcRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_tagsrc")
-    val dstRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_tagdst")
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        prefix, buckets = 4, path = Some(srcRoot.getPath))
-      val accepted = Seq((5000L, "a trigger-accepted document about carried tags"))
-        .toDF("doc_id", "text")
-      DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", prefix,
-        epochTag = Some("stream-42-7"))
-      DedupOps.compactCorpusDedupIndex(spark, prefix, toPrefix,
-        buckets = 4, path = Some(dstRoot.getPath))
-      assert(DedupOps.epochTagState(spark, toPrefix, "stream-42-7") == "committed",
-        "committed tag lost across compaction — a replayed trigger would " +
-          "re-judge and empty-overwrite its target partition")
-      // the replayed append is a no-op on the compacted index
-      val fpBefore = spark.table(s"${toPrefix}_fingerprints").count()
-      DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", toPrefix,
-        epochTag = Some("stream-42-7"))
-      assert(spark.table(s"${toPrefix}_fingerprints").count() == fpBefore)
-      // an unrelated new tag still appends normally
-      DedupOps.appendToCorpusDedupIndex(
-        Seq((5001L, "a later trigger document")).toDF("doc_id", "text"),
-        "text", "doc_id", toPrefix, epochTag = Some("stream-42-8"))
-      assert(spark.table(s"${toPrefix}_fingerprints").count() == fpBefore + 1)
-    } finally {
-      dropIndex(); dropTo()
-      org.apache.commons.io.FileUtils.deleteQuietly(srcRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(dstRoot)
-    }
+    // the replay-across-maintenance hole: a trigger commits its segment,
+    // the process dies before the streaming checkpoint commit, and
+    // maintenance folds the segment into the next version (twice). The
+    // replayed trigger would find its own docs in the index and judge
+    // them all duplicates; the carried ledger makes the replay a no-op.
+    val root = tmpRoot("cidx_ledger")
+    build(root)
+    val accepted = Seq((5000L, "a trigger-accepted document about carried ledgers"))
+      .toDF("doc_id", "text")
+    DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", root, batchId = 7L)
+    DedupOps.compactCorpusDedupIndex(spark, root)
+    DedupOps.appendToCorpusDedupIndex(
+      Seq((5001L, "a later trigger document")).toDF("doc_id", "text"),
+      "text", "doc_id", root, batchId = 8L)
+    DedupOps.compactCorpusDedupIndex(spark, root)
+    assert(store.currentVersion(root).contains(3))
+    assert(store.foldedBatchIds(served(root)) == Set(7L, 8L))
+    val fpBefore = DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count()
+    assert(!DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", root, batchId = 7L))
+    assert(DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count() == fpBefore)
+    // an unrelated new batch still appends normally
+    assert(DedupOps.appendToCorpusDedupIndex(
+      Seq((5002L, "a third trigger document")).toDF("doc_id", "text"),
+      "text", "doc_id", root, batchId = 9L))
+    assert(DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count() == fpBefore + 1)
   }
 
   test("prepared judgments equal direct incremental dedup on seeded random corpora") {
@@ -589,945 +454,179 @@ class CorpusIndexSpec extends SparkSpec {
   }
 
   test("a quarter of appends, crashes, compactions, and checked promotes converges") {
-    // Generative capstone for the FULL maintenance lifecycle: a seeded
-    // random schedule of daily appends (some dying mid-insert), periodic
-    // compactions onto fresh generations, late appends committing INSIDE
-    // the compact→promote window, and checked promotes (some dying
-    // mid-heal), all resolved through the production pointer. Whatever
-    // the schedule, the surviving generation must judge exactly like a
-    // fresh build over the base corpus plus every batch that ever
-    // COMMITTED — torn work never surfaces, committed work never drops.
-    dropIndex()
+    // Generative capstone for the full maintenance lifecycle: a seeded
+    // random schedule of daily appends (some torn, then replayed), folds
+    // (some dying after writing part of a version — the pointer swap is
+    // checked and refuses the torn version), and prunes. Whatever the
+    // schedule, the served version must judge exactly like a fresh build
+    // over the base corpus plus every committed batch — torn work never
+    // surfaces, committed work never drops.
+    val root = tmpRoot("cidx_quarter")
     val rnd = new scala.util.Random(20260814L)
-    val tables = Seq("fingerprints", "shingles", "bands")
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft_cidx_lcstore").toString
-    val store = graft.io.BatchStore.local(storeRoot)
-    val pointerKey = "pointers/dedup_index.json"
-    def genPrefix(g: Int) = s"${prefix}_gen$g"
-    def genDir(g: Int) = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_test_cidx_lcgen$g")
-    val maxGen = 5
-    def dropAll(): Unit = (0 to maxGen).foreach { g =>
-      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${genPrefix(g)}_$t"))
-      org.apache.commons.io.FileUtils.deleteQuietly(genDir(g))
-    }
-    dropAll()
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        genPrefix(0), buckets = 4, path = Some(genDir(0).getPath))
-      DedupOps.promoteCorpusDedupIndex(store, pointerKey, genPrefix(0),
-        Some(genDir(0).getPath))
-      var gen = 0
-      val committed = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      def mkBatch(day: Int, slot: String): Seq[(Long, String)] =
-        (0 until 2 + rnd.nextInt(2)).map(i =>
-          (8000L + day * 100 + (if (slot == "late") 50 else 0) + i,
-            s"lifecycle $slot day $day doc $i about subject ${rnd.nextInt(1000)}"))
-      def append(rows: Seq[(Long, String)], prefix: String, tag: String): Unit = {
-        val df = rows.toDF("doc_id", "text")
-        if (rnd.nextDouble() < 0.25) {
-          DedupOps.appendFaultInjection = Some(tables(rnd.nextInt(3)))
-          intercept[IllegalStateException] {
-            DedupOps.appendToCorpusDedupIndex(df, "text", "doc_id", prefix,
-              epochTag = Some(tag))
-          }
-          DedupOps.appendFaultInjection = None
-          // torn: untagged observers refuse until the tagged retry
-          // self-repairs and applies
-          intercept[IllegalStateException] {
-            DedupOps.readCorpusDedupIndex(spark, prefix)
-          }
-        }
-        DedupOps.appendToCorpusDedupIndex(df, "text", "doc_id", prefix,
-          epochTag = Some(tag))
-        committed ++= rows
+    build(root)
+    val committed = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
+    for (day <- 0 until 12) {
+      val rows = (0 until 2 + rnd.nextInt(2)).map(i =>
+        (8000L + day * 100 + i, s"lifecycle day $day doc $i about subject ${rnd.nextInt(1000)}"))
+      val df = rows.toDF("doc_id", "text")
+      DedupOps.appendToCorpusDedupIndex(df, "text", "doc_id", root, batchId = day.toLong)
+      if (rnd.nextDouble() < 0.25) {
+        tear(root, day.toLong)
+        assert(DedupOps.appendToCorpusDedupIndex(df, "text", "doc_id", root, day.toLong))
       }
-      for (day <- 0 until 12) {
-        val current = DedupOps.resolveCorpusDedupIndex(spark, store, pointerKey)
-        assert(current == genPrefix(gen))
-        append(mkBatch(day, "daily"), current, s"day$day")
-        if (day % 4 == 3 && gen < maxGen - 1) {
-          val from = genPrefix(gen); val to = genPrefix(gen + 1)
-          DedupOps.compactCorpusDedupIndex(spark, from, to, buckets = 4,
-            path = Some(genDir(gen + 1).getPath))
-          // half the maintenance windows see a late append COMMIT on the
-          // old generation after compaction read it
-          val hasLate = rnd.nextBoolean()
-          if (hasLate) append(mkBatch(day, "late"), from, s"late$day")
-          if (hasLate && rnd.nextBoolean()) {
-            // the promote dies mid-heal; repair, then retry
-            DedupOps.healFaultInjection = Some(tables(rnd.nextInt(3)))
-            intercept[IllegalStateException] {
-              DedupOps.promoteCorpusDedupIndexChecked(spark, store, pointerKey,
-                to, Some(genDir(gen + 1).getPath))
+      committed ++= rows
+      if (day % 4 == 3) {
+        if (rnd.nextBoolean()) {
+          // a fold dies mid-write: its version dir is claimed but
+          // incomplete, and the checked swap refuses it
+          val torn = intercept[IllegalStateException] {
+            store.publish(root) { (_, v) =>
+              graft.io.IndexMeta.writeString(s"${store.versionDir(root, v)}/bands/part-0", "x")
+              throw new IllegalStateException(s"fold of v$v died")
             }
-            DedupOps.healFaultInjection = None
-            DedupOps.repairCorpusDedupIndex(spark, to)
-          }
-          val promoted = DedupOps.promoteCorpusDedupIndexChecked(spark, store,
-            pointerKey, to, Some(genDir(gen + 1).getPath))
-          assert(promoted("healed_epochs").asInstanceOf[Seq[Long]].nonEmpty == hasLate,
-            s"day $day: healed=${promoted("healed_epochs")} hasLate=$hasLate")
-          gen += 1
+          }.getMessage.stripPrefix("fold of v").stripSuffix(" died").toInt
+          intercept[IllegalArgumentException](store.swapPointer(root, torn))
         }
+        DedupOps.compactCorpusDedupIndex(spark, root)
+        DedupOps.pruneCorpusDedupIndex(root)
       }
-      val finalPrefix = DedupOps.resolveCorpusDedupIndex(spark, store, pointerKey)
-      val probe = committed.toSeq.map { case (id, txt) => (id + 100000L, txt) }
-        .toDF("doc_id", "text")
-      def results(idx: DedupOps.CorpusDedupIndex) =
-        DedupOps.incrementalDedupPrepared(probe, idx, "text", "doc_id")
-          .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val viaLifecycle = results(DedupOps.readCorpusDedupIndex(spark, finalPrefix))
-      assert(viaLifecycle.forall(_._2 == "exact_dup"),
-        s"committed docs lost across the lifecycle: ${viaLifecycle.filter(_._2 != "exact_dup").take(5)}")
-      val viaRebuild = results(DedupOps.buildCorpusDedupIndex(
-        corpus.unionByName(committed.toSeq.toDF("doc_id", "text")), "text", "doc_id"))
-      assert(viaLifecycle == viaRebuild)
-    } finally {
-      DedupOps.appendFaultInjection = None
-      DedupOps.healFaultInjection = None
-      dropAll(); dropIndex()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storeRoot))
     }
+    val probe = committed.toSeq.map { case (id, txt) => (id + 100000L, txt) }
+      .toDF("doc_id", "text")
+    val viaLifecycle = judge(probe, DedupOps.readCorpusDedupIndex(spark, root))
+    assert(viaLifecycle.forall(_._2 == "exact_dup"),
+      s"committed docs lost across the lifecycle: ${viaLifecycle.filter(_._2 != "exact_dup").take(5)}")
+    val viaRebuild = judge(probe, DedupOps.buildCorpusDedupIndex(
+      corpus.unionByName(committed.toSeq.toDF("doc_id", "text")), "text", "doc_id"))
+    assert(viaLifecycle == viaRebuild)
+    assert(store.foldedBatchIds(served(root)) ++ store.segments(served(root))
+      .map(_.stripPrefix("b").toLong) == (0L until 12L).toSet)
   }
 
   test("a month of appends with interleaved crashes converges to the rebuilt index") {
-    dropIndex()
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix, buckets = 4)
-      val batches = (0 until 6).map { b =>
-        (0 until 3).map { i =>
-          (6000L + b * 10 + i,
-            s"daily ingest batch $b accepted document $i concerning subject ${b * 3 + i}")
-        }.toDF("doc_id", "text")
-      }
-      // crash epochs 2 and 4 mid-insert (different tables), repair, retry
-      batches.zipWithIndex.foreach { case (batch, b) =>
-        if (b == 2 || b == 4) {
-          DedupOps.appendFaultInjection = Some(if (b == 2) "shingles" else "bands")
-          intercept[IllegalStateException] {
-            DedupOps.appendToCorpusDedupIndex(batch, "text", "doc_id", prefix,
-              epochTag = Some(s"day$b"))
-          }
-          DedupOps.appendFaultInjection = None
-          // an UNTAGGED observer refuses while torn; the tagged retry
-          // self-repairs and applies
-          intercept[IllegalStateException] {
-            DedupOps.readCorpusDedupIndex(spark, prefix)
-          }
-        }
-        DedupOps.appendToCorpusDedupIndex(batch, "text", "doc_id", prefix,
-          epochTag = Some(s"day$b"))
-      }
-      // every accepted doc across all epochs judges as an exact dup, and
-      // the multi-epoch index equals a fresh build over the full union
-      val all = batches.reduce(_.unionByName(_))
-      val probe = all.select((col("doc_id") + 1000L).as("doc_id"), col("text"))
-      def results(idx: DedupOps.CorpusDedupIndex) =
-        DedupOps.incrementalDedupPrepared(probe, idx, "text", "doc_id")
-          .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-      val viaEpochs = results(DedupOps.readCorpusDedupIndex(spark, prefix))
-      assert(viaEpochs.forall(_._2 == "exact_dup"), viaEpochs.take(5).toString)
-      val viaRebuild = results(DedupOps.buildCorpusDedupIndex(
-        corpus.unionByName(all), "text", "doc_id"))
-      assert(viaEpochs == viaRebuild)
-    } finally { DedupOps.appendFaultInjection = None; dropIndex() }
-  }
-
-  test("an append committing between compaction read and promote is healed by the checked promote") {
-    // THE compact-promote window: a streaming trigger's tagged append
-    // COMMITS on the old prefix after compaction has read it, and the
-    // trigger's checkpoint also commits — foreachBatch never replays it,
-    // so without the promote-time diff the doc would be present in the
-    // old index, absent from the promoted one, and near-dup judgments
-    // would be silently blind to it forever.
-    dropIndex()
-    val toPrefix = prefix + "_compacted"
-    def dropTo(): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $toPrefix$s"))
-    dropTo()
-    val srcRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_winsrc")
-    val dstRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_windst")
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft_cidx_store").toString
-    val store = graft.io.BatchStore.local(storeRoot)
-    val pointerKey = "pointers/dedup_index.json"
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        prefix, buckets = 4, path = Some(srcRoot.getPath))
-      // covered append (before compaction reads) — must NOT be re-healed
-      DedupOps.appendToCorpusDedupIndex(
-        Seq((6000L, "a document accepted before the compaction read happened"))
-          .toDF("doc_id", "text"),
-        "text", "doc_id", prefix, epochTag = Some("covered-1"))
-      DedupOps.compactCorpusDedupIndex(spark, prefix, toPrefix,
-        buckets = 4, path = Some(dstRoot.getPath))
-      // the window: two appends commit on the OLD prefix after the
-      // compaction read, before the promote
-      val late1 = Seq((6001L, "a late document committing inside the promote window"))
-        .toDF("doc_id", "text")
-      val late2 = Seq((6002L, "another distinct late arrival with its own content entirely"))
-        .toDF("doc_id", "text")
-      DedupOps.appendToCorpusDedupIndex(late1, "text", "doc_id", prefix,
-        epochTag = Some("late-1"))
-      DedupOps.appendToCorpusDedupIndex(late2, "text", "doc_id", prefix,
-        epochTag = Some("late-2"))
-
-      // refuse mode names the gap
-      val e = intercept[IllegalStateException] {
-        DedupOps.promoteCorpusDedupIndexChecked(spark, store, pointerKey,
-          toPrefix, path = Some(dstRoot.getPath), healMissing = false)
-      }
-      assert(e.getMessage.contains("late-1") && e.getMessage.contains("late-2"),
-        e.getMessage)
-
-      // heal mode copies the missing epochs in and swaps the pointer
-      val promoted = DedupOps.promoteCorpusDedupIndexChecked(spark, store,
-        pointerKey, toPrefix, path = Some(dstRoot.getPath))
-      assert(promoted("healed_epochs").asInstanceOf[Seq[Long]].size == 2, promoted)
-      assert(DedupOps.resolveCorpusDedupIndex(spark, store, pointerKey) == toPrefix)
-
-      // the promoted index now judges the late docs: exact copies are
-      // exact_dup (fingerprints healed), perturbed copies near_dup
-      // (shingles AND bands healed — fingerprints alone can't do this),
-      // and the replayed tags read committed (append idempotence holds)
-      val probes = Seq(
-        (9000L, "a late document committing inside the promote window"),
-        (9001L, "another distinct late arrival with its own content entirely"),
-        (9002L, "a late document committing inside the promote area"),
-        (9003L, "a genuinely novel probe document unrelated to everything else here")
-      ).toDF("doc_id", "text")
-      val out = DedupOps.incrementalDedupPrepared(probes,
-          DedupOps.readCorpusDedupIndex(spark, toPrefix), "text", "doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(out(9000L) == "exact_dup", s"healed fingerprint miss: ${out(9000L)}")
-      assert(out(9001L) == "exact_dup", s"healed fingerprint miss: ${out(9001L)}")
-      assert(out(9002L) == "near_dup", s"healed bands/shingles miss: ${out(9002L)}")
-      assert(out(9003L) == "kept", s"novel probe judged ${out(9003L)}")
-      for (tag <- Seq("covered-1", "late-1", "late-2"))
-        assert(DedupOps.epochTagState(spark, toPrefix, tag) == "committed",
-          s"tag $tag not committed on the promoted index")
-
-      // a second checked promote is a no-op (healed epochs are recorded,
-      // not re-copied) and the healed index passes a full read
-      val again = DedupOps.promoteCorpusDedupIndexChecked(spark, store,
-        pointerKey, toPrefix, path = Some(dstRoot.getPath))
-      assert(again("healed_epochs").asInstanceOf[Seq[Long]].isEmpty, again)
-      DedupOps.readCorpusDedupIndex(spark, toPrefix)
-
-      // a REWRITTEN source (ledger identity change) refuses the promote:
-      // its epoch numbering restarted, so the snapshot proves nothing
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        prefix, buckets = 4, path = Some(srcRoot.getPath))
-      val e2 = intercept[IllegalStateException] {
-        DedupOps.promoteCorpusDedupIndexChecked(spark, store, pointerKey,
-          toPrefix, path = Some(dstRoot.getPath))
-      }
-      assert(e2.getMessage.contains("re-written"), e2.getMessage)
-    } finally {
-      dropIndex(); dropTo()
-      org.apache.commons.io.FileUtils.deleteQuietly(srcRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(dstRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storeRoot))
+    val root = tmpRoot("cidx_month")
+    build(root)
+    val batches = (0 until 6).map { b =>
+      (0 until 3).map { i =>
+        (6000L + b * 10 + i,
+          s"daily ingest batch $b accepted document $i concerning subject ${b * 3 + i}")
+      }.toDF("doc_id", "text")
     }
-  }
-
-  test("a promote dying mid-heal leaves a refusable torn epoch, repairs, and re-heals") {
-    // the heal copies files into three tables — a crash between copies
-    // must follow the SAME torn-epoch discipline as a crashed append:
-    // the pointer is NOT swapped, readers refuse the half-healed index,
-    // repair quarantines the partial files, and the next checked
-    // promote re-heals from scratch
-    dropIndex()
-    val toPrefix = prefix + "_compacted"
-    def dropTo(): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $toPrefix$s"))
-    dropTo()
-    val srcRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_hfsrc")
-    val dstRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_hfdst")
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft_cidx_hfstore").toString
-    val store = graft.io.BatchStore.local(storeRoot)
-    val pointerKey = "pointers/dedup_index.json"
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        prefix, buckets = 4, path = Some(srcRoot.getPath))
-      DedupOps.compactCorpusDedupIndex(spark, prefix, toPrefix,
-        buckets = 4, path = Some(dstRoot.getPath))
-      DedupOps.appendToCorpusDedupIndex(
-        Seq((6100L, "a windowed late arrival carrying brand new content today"))
-          .toDF("doc_id", "text"),
-        "text", "doc_id", prefix, epochTag = Some("late-hf"))
-
-      // the promote dies between the fingerprint copy and the bands copy
-      DedupOps.healFaultInjection = Some("bands")
-      intercept[IllegalStateException] {
-        DedupOps.promoteCorpusDedupIndexChecked(spark, store, pointerKey,
-          toPrefix, path = Some(dstRoot.getPath))
+    // batches 2 and 4 crash before their commit marker, then replay
+    batches.zipWithIndex.foreach { case (batch, b) =>
+      DedupOps.appendToCorpusDedupIndex(batch, "text", "doc_id", root, b.toLong)
+      if (b == 2 || b == 4) {
+        tear(root, b.toLong)
+        assert(DedupOps.appendToCorpusDedupIndex(batch, "text", "doc_id", root, b.toLong))
       }
-      DedupOps.healFaultInjection = None
-      // the pointer was never swapped...
-      assert(store.readJsonIfExists(pointerKey).isEmpty,
-        "pointer swapped despite the heal dying")
-      // ...and the half-healed index REFUSES reads until repaired
-      val e = intercept[IllegalStateException] {
-        DedupOps.readCorpusDedupIndex(spark, toPrefix)
-      }
-      assert(e.getMessage.contains("torn"), e.getMessage)
-      val repair = DedupOps.repairCorpusDedupIndex(spark, toPrefix)
-      assert(repair("torn_epochs").asInstanceOf[Seq[Long]].nonEmpty, repair)
-
-      // the retry re-heals the full epoch and swaps
-      val promoted = DedupOps.promoteCorpusDedupIndexChecked(spark, store,
-        pointerKey, toPrefix, path = Some(dstRoot.getPath))
-      assert(promoted("healed_epochs").asInstanceOf[Seq[Long]].size == 1, promoted)
-      val out = DedupOps.incrementalDedupPrepared(
-          Seq((9100L, "a windowed late arrival carrying brand new content today"))
-            .toDF("doc_id", "text"),
-          DedupOps.readCorpusDedupIndex(spark, toPrefix), "text", "doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(out(9100L) == "exact_dup", s"re-heal incomplete: ${out(9100L)}")
-    } finally {
-      DedupOps.healFaultInjection = None
-      dropIndex(); dropTo()
-      org.apache.commons.io.FileUtils.deleteQuietly(srcRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(dstRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storeRoot))
     }
+    // every accepted doc judges as an exact dup, and the multi-segment
+    // index equals a fresh build over the full union
+    val all = batches.reduce(_.unionByName(_))
+    val probe = all.select((col("doc_id") + 1000L).as("doc_id"), col("text"))
+    val viaSegments = judge(probe, DedupOps.readCorpusDedupIndex(spark, root))
+    assert(viaSegments.forall(_._2 == "exact_dup"), viaSegments.take(5).toString)
+    assert(viaSegments == judge(probe,
+      DedupOps.buildCorpusDedupIndex(corpus.unionByName(all), "text", "doc_id")))
   }
 
-  test("compaction prunes carried tags to the recent window, keeping replay semantics") {
-    // foreachBatch replays only the single in-flight trigger, so the
-    // carry needs a bounded recent window, not the index's full tag
-    // history — without pruning the base record grows one tag per
-    // tagged append for the index's lifetime
-    dropIndex()
-    val toPrefix = prefix + "_compacted"
-    def dropTo(): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $toPrefix$s"))
-    dropTo()
-    val srcRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_prunesrc")
-    val dstRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_prunedst")
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        prefix, buckets = 4, path = Some(srcRoot.getPath))
-      for (i <- 1 to 6)
-        DedupOps.appendToCorpusDedupIndex(
-          Seq((6000L + i, s"unique appended document number $i with its own words"))
-            .toDF("doc_id", "text"),
-          "text", "doc_id", prefix, epochTag = Some(f"trig-$i%02d"))
-      DedupOps.compactCorpusDedupIndex(spark, prefix, toPrefix,
-        buckets = 4, path = Some(dstRoot.getPath), carryRecentTags = 3)
-      // only the 3 most recent tags carry; older ones age out
-      for (t <- Seq("trig-04", "trig-05", "trig-06"))
-        assert(DedupOps.epochTagState(spark, toPrefix, t) == "committed",
-          s"recent tag $t lost by pruning")
-      for (t <- Seq("trig-01", "trig-02", "trig-03"))
-        assert(DedupOps.epochTagState(spark, toPrefix, t) == "absent",
-          s"old tag $t survived pruning")
-      // the in-flight trigger (always the newest) replays as a no-op
-      val fpBefore = spark.table(s"${toPrefix}_fingerprints").count()
-      DedupOps.appendToCorpusDedupIndex(
-        Seq((6006L, "unique appended document number 6 with its own words"))
-          .toDF("doc_id", "text"),
-        "text", "doc_id", toPrefix, epochTag = Some("trig-06"))
-      assert(spark.table(s"${toPrefix}_fingerprints").count() == fpBefore)
-    } finally {
-      dropIndex(); dropTo()
-      org.apache.commons.io.FileUtils.deleteQuietly(srcRoot)
-      org.apache.commons.io.FileUtils.deleteQuietly(dstRoot)
-    }
+  test("a fold cannot drop a concurrent append: appends and folds serialize") {
+    // A trigger holds the intake claim from its batchApplied check to its
+    // segment commit. A fold that enumerated segments inside that window
+    // and swapped after it would drop the batch from every later version
+    // while the stream checkpoint commits; the claim makes the fold wait.
+    val root = tmpRoot("cidx_fold_race")
+    build(root)
+    val acc = Seq((5000L, "a document accepted while a fold was waiting")).toDF("doc_id", "text")
+    val inWindow = new java.util.concurrent.CountDownLatch(1)
+    val committed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val trigger = new Thread(() =>
+      try store.withServedDir(root) { dir =>
+        inWindow.countDown()
+        Thread.sleep(1500L)
+        DedupOps.appendSegment(acc, "text", "doc_id", dir, 4L)
+        committed.set(true)
+      } catch { case t: Throwable => errs.add(t) }, "cidx-trigger")
+    trigger.start()
+    assert(inWindow.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    DedupOps.compactCorpusDedupIndex(spark, root)
+    assert(committed.get(), "the fold completed inside the trigger's window")
+    trigger.join(30000L)
+    assert(errs.isEmpty, s"trigger threw: ${errs.peek()}")
+    assert(store.foldedBatchIds(served(root)) == Set(4L))
+    val probe = Seq((9000L, "a document accepted while a fold was waiting")).toDF("doc_id", "text")
+    assert(judge(probe, DedupOps.readCorpusDedupIndex(spark, root)).toMap.apply(9000L) == "exact_dup")
   }
 
-  test("pointer resolve re-attaches when the catalog holds the prefix at a stale path") {
-    // a→b→a prefix alternation: the pointer moves a RETIRED prefix name
-    // onto a fresh path, but this session's catalog still registers the
-    // prefix at the old path — resolve must notice the location mismatch
-    // and re-attach, not silently judge against the retired index
-    dropIndex()
-    val path1 = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_alt1")
-    val path2 = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_alt2")
-    val storeRoot = java.nio.file.Files.createTempDirectory("graft_cidx_altstore").toString
-    val store = graft.io.BatchStore.local(storeRoot)
-    val pointerKey = "pointers/dedup_index.json"
-    val tmpPrefix = prefix + "_gen2"
-    def dropTmp(): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $tmpPrefix$s"))
-    try {
-      val corpusB = Seq(
-        (9000L, "generation two corpus document that generation one never contained"))
-        .toDF("doc_id", "text")
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        prefix, buckets = 4, path = Some(path1.getPath))
-      // a later generation's files land at path2 (written under a
-      // scratch prefix, then dropped from the catalog — the files and
-      // manifest are what the pointer will reference)
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpusB, "text", "doc_id"),
-        tmpPrefix, buckets = 4, path = Some(path2.getPath))
-      dropTmp()
-      // the pointer moves the ORIGINAL prefix name onto the new path
-      // while this session still registers it at path1
-      DedupOps.promoteCorpusDedupIndex(store, pointerKey, prefix,
-        Some(path2.getPath))
-      val resolved = DedupOps.resolveCorpusDedupIndex(spark, store, pointerKey)
-      assert(resolved == prefix)
-      val out = DedupOps.incrementalDedupPrepared(
-          Seq(
-            (1L, "generation two corpus document that generation one never contained"),
-            (2L, "corpus document number 7 talks about topic 7 in moderate detail with 0 extra side remarks included")
-          ).toDF("doc_id", "text"),
-          DedupOps.readCorpusDedupIndex(spark, resolved), "text", "doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(out(1L) == "exact_dup",
-        s"resolve kept judging against the retired generation: ${out(1L)}")
-      assert(out(2L) == "kept",
-        s"generation-one doc should be unknown to generation two: ${out(2L)}")
-    } finally {
-      dropIndex(); dropTmp()
-      org.apache.commons.io.FileUtils.deleteQuietly(path1)
-      org.apache.commons.io.FileUtils.deleteQuietly(path2)
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storeRoot))
-    }
-  }
-
-  test("compaction refuses nested destinations; attach refuses to drop a managed index") {
-    dropIndex()
-    val srcRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_nest")
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        prefix, buckets = 4, path = Some(srcRoot.getPath))
-      // a destination NESTED INSIDE the source root passes an exact-
-      // equality guard yet plants the new index's files under a source
-      // table dir — the source's recursive listing would fold them into
-      // its ledger pinning and repair could delete them
-      val nested = new java.io.File(srcRoot, "fingerprints/sub").getPath
-      val e = intercept[IllegalArgumentException] {
-        DedupOps.compactCorpusDedupIndex(spark, prefix, prefix + "_n",
-          buckets = 4, path = Some(nested))
-      }
-      assert(e.getMessage.contains("overlap"), e.getMessage)
-      // ...and a destination that is an ANCESTOR of the source root
-      // would have the copy leg delete the source before copying it
-      val e2 = intercept[IllegalArgumentException] {
-        DedupOps.compactCorpusDedupIndex(spark, prefix, prefix + "_n",
-          buckets = 4, path = Some(sys.props("java.io.tmpdir")))
-      }
-      assert(e2.getMessage.contains("overlap"), e2.getMessage)
-
-      // attach over an in-use MANAGED prefix must refuse, not DROP: for
-      // a managed table DROP TABLE deletes the data files themselves
-      val managed = "graft_test_cidx_managed"
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $managed$s"))
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        managed, buckets = 2) // no path → MANAGED tables
-      val e3 = intercept[IllegalArgumentException] {
-        DedupOps.attachCorpusDedupIndex(spark, managed, srcRoot.getPath)
-      }
-      assert(e3.getMessage.contains("MANAGED"), e3.getMessage)
-      // the managed index's data survived the refused attach
-      assert(spark.table(s"${managed}_fingerprints").count() > 0)
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $managed$s"))
-    } finally {
-      dropIndex()
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(s => spark.sql(s"DROP TABLE IF EXISTS ${prefix}_n$s"))
-      org.apache.commons.io.FileUtils.deleteQuietly(srcRoot)
-    }
-  }
-
-  test("chained compaction prunes carried tags by RECENCY, not lexicographic order") {
-    // Real intake tags are "$qid-$batchId" with no zero-padding, so
-    // lexicographically "q-10" < "q-9" while append order is 9 < 10. The
-    // carried list must persist in APPEND order: a chained (second)
-    // compaction prunes the base-carried list with takeRight, and a
-    // sorted list would keep the lexicographically-last tag (the OLDEST
-    // in-flight-relevant one, q-9) while dropping the most recent — the
-    // replayed in-flight trigger would then re-judge against an index
-    // already holding its docs and empty-overwrite its partition.
-    dropIndex()
-    val gen1 = prefix + "_chain1"
-    val gen2 = prefix + "_chain2"
-    def dropGen(p: String): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $p$s"))
-    dropGen(gen1); dropGen(gen2)
-    val srcRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_chainsrc")
-    val mid = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_chainmid")
-    val dst = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_chaindst")
-    Seq(srcRoot, mid, dst).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        prefix, buckets = 4, path = Some(srcRoot.getPath))
-      // batch ids 9, 10, 11: append order differs from lexicographic
-      for (i <- 9 to 11)
-        DedupOps.appendToCorpusDedupIndex(
-          Seq((7000L + i, s"chained unpadded tag document $i with distinct content"))
-            .toDF("doc_id", "text"),
-          "text", "doc_id", prefix, epochTag = Some(s"q-$i"))
-      DedupOps.compactCorpusDedupIndex(spark, prefix, gen1,
-        buckets = 4, path = Some(mid.getPath))
-      // second compaction: the three tags now live in gen1's BASE record
-      // (carried), and the prune must keep the most RECENT one
-      DedupOps.compactCorpusDedupIndex(spark, gen1, gen2,
-        buckets = 4, path = Some(dst.getPath), carryRecentTags = 1)
-      assert(DedupOps.epochTagState(spark, gen2, "q-11") == "committed",
-        "most recent tag q-11 dropped by the chained prune — lexicographic " +
-          "order leaked into the recency window")
-      for (t <- Seq("q-9", "q-10"))
-        assert(DedupOps.epochTagState(spark, gen2, t) == "absent",
-          s"stale tag $t survived a carryRecentTags=1 prune")
-      // the in-flight trigger (q-11) replays as a no-op on gen2
-      val fpBefore = spark.table(s"${gen2}_fingerprints").count()
-      DedupOps.appendToCorpusDedupIndex(
-        Seq((7011L, "chained unpadded tag document 11 with distinct content"))
-          .toDF("doc_id", "text"),
-        "text", "doc_id", gen2, epochTag = Some("q-11"))
-      assert(spark.table(s"${gen2}_fingerprints").count() == fpBefore)
-    } finally {
-      dropIndex(); dropGen(gen1); dropGen(gen2)
-      Seq(srcRoot, mid, dst).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    }
-  }
-
-  test("a replay whose tag fell outside the carried window no-ops instead of empty-overwriting") {
-    // The carried-tags window is bounded (carryRecentTags); only the
-    // single in-flight trigger should ever replay, but if a replay DOES
-    // arrive with a pruned tag — operator error, a checkpoint restored
-    // from backup — the trigger body must not overwrite its partition
-    // with the empty re-judgment. Contract: kept-empty + partition
-    // already exists → no-op, the prior attempt's output stands.
-    dropIndex()
-    val gen1 = prefix + "_window1"
-    def dropGen(p: String): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $p$s"))
-    dropGen(gen1)
-    val srcRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_winsrc")
-    val dstRoot = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_windst")
-    val target = new java.io.File(sys.props("java.io.tmpdir"), "graft_test_cidx_wintgt")
-    Seq(srcRoot, dstRoot, target).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        prefix, buckets = 4, path = Some(srcRoot.getPath))
-      val batch = Seq(
-        (8000L, "window boundary document alpha with entirely novel words"),
-        (8001L, "window boundary document beta with different novel words"))
-        .toDF("doc_id", "text")
-      // first attempt: judges (both kept), writes batch=q-5, appends tag q-5
-      graft.streaming.StreamOps.intakeUpdateTrigger(batch, 5L, prefix,
-        "text", "doc_id", target.getPath, 3, 64, 32, 0.5, DedupOps.DefaultMaxBucket)
-      val part = new java.io.File(target, "batch=q-5")
-      assert(spark.read.parquet(part.getPath).count() == 2)
-      // maintenance compacts with the tag PRUNED from the carried window
-      DedupOps.compactCorpusDedupIndex(spark, prefix, gen1,
-        buckets = 4, path = Some(dstRoot.getPath), carryRecentTags = 0)
-      assert(DedupOps.epochTagState(spark, gen1, "q-5") == "absent")
-      // the replay re-judges against gen1 (which holds both docs via the
-      // compacted fingerprints) → kept empty → must NOT clobber batch=q-5
-      graft.streaming.StreamOps.intakeUpdateTrigger(batch, 5L, gen1,
-        "text", "doc_id", target.getPath, 3, 64, 32, 0.5, DedupOps.DefaultMaxBucket)
-      assert(spark.read.parquet(part.getPath).count() == 2,
-        "pruned-tag replay empty-overwrote its target partition — data loss")
-    } finally {
-      dropIndex(); dropGen(gen1)
-      Seq(srcRoot, dstRoot, target).foreach(org.apache.commons.io.FileUtils.deleteQuietly)
-    }
-  }
-
-  test("racing appends mint disjoint epochs: neither ledger record is overwritten, repair quarantines nothing") {
-    // Two writers racing one ledger (deployment shape: a promote healing
-    // into an index a streaming intake is appending to). Before the
-    // claimed allocation both could mint the SAME epoch id — the loser's
-    // intent/commit records were silently overwritten and its committed
-    // files read as orphans, so the NEXT repair deleted a fully
-    // committed append. The claim steps the loser to the next id; both
-    // appends survive under every interleaving.
-    dropIndex()
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix, buckets = 4)
-      val accA = Seq((6000L, "racer a accepted a document about claims and ledgers today"))
-        .toDF("doc_id", "text")
-      val accB = Seq((6001L, "racer b accepted a different document about epochs and markers"))
-        .toDF("doc_id", "text")
-      // the allocator itself, raced directly (deterministic): every
-      // concurrent read-then-claim must yield a DISTINCT epoch id —
-      // `led.nextEpoch` alone hands both racers the same one
-      val ids = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val claimLatch = new java.util.concurrent.CountDownLatch(4)
-      val claimers = (0 until 4).map(_ => new Thread(() => {
-        claimLatch.countDown(); claimLatch.await()
-        ids.add(DedupOps.claimNextEpochId(spark, prefix))
-      }))
-      claimers.foreach(_.start()); claimers.foreach(_.join())
-      val claimed = ids.toArray(Array.empty[java.lang.Long]).map(_.toLong).toSeq
-      assert(claimed.distinct.size == 4, s"epoch ids collided under race: $claimed")
-
-      // end-to-end: a REAL append racing the other writer's allocation
-      // step (the deployment pair is an insertInto appender vs a
-      // file-copy heal writer — they share the LEDGER, not Spark's
-      // insert committer, whose _temporary staging cannot host two
-      // concurrent jobs on one table). The append must land on an id
-      // disjoint from everything the rival claimed, under any timing.
-      val latch = new java.util.concurrent.CountDownLatch(2)
-      val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val rivalIds = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-      val appender = new Thread(() => {
-        latch.countDown(); latch.await()
-        try {
-          DedupOps.appendToCorpusDedupIndex(accA, "text", "doc_id", prefix, Some("rA"))
-          DedupOps.appendToCorpusDedupIndex(accB, "text", "doc_id", prefix, Some("rB"))
-        } catch { case t: Throwable => errs.add(t) }
-      })
-      val rival = new Thread(() => {
-        latch.countDown(); latch.await()
-        try (0 until 6).foreach { _ =>
-          rivalIds.add(DedupOps.claimNextEpochId(spark, prefix)); Thread.sleep(5)
-        } catch { case t: Throwable => errs.add(t) }
-      })
-      appender.start(); rival.start(); appender.join(); rival.join()
-      assert(errs.isEmpty, s"racing append threw: ${errs.peek()}")
-      // both commit records survived: repair finds nothing torn and —
-      // critically — deletes NO files (a lost commit record would turn
-      // that append's files into quarantined orphans right here)
-      val rep = DedupOps.repairCorpusDedupIndex(spark, prefix)
-      assert(rep("torn_epochs") == Nil, s"torn epochs after race: $rep")
-      assert(rep("deleted_files").asInstanceOf[Map[String, Any]].values
-          .forall(v => String.valueOf(v) == "0"),
-        s"repair quarantined a committed append's files: $rep")
-      // both appended docs are corpus-known to later judgments
-      val later = Seq(
-        (7000L, "racer a accepted a document about claims and ledgers today"),
-        (7001L, "racer b accepted a different document about epochs and markers"),
-        (7002L, "nothing resembling anything else in this corpus today at all")
-      ).toDF("doc_id", "text")
-      val judged = DedupOps.incrementalDedupPrepared(
-          later, DedupOps.readCorpusDedupIndex(spark, prefix), "text", "doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toMap
-      assert(judged(7000L) == "exact_dup" && judged(7001L) == "exact_dup" &&
-        judged(7002L) == "kept", s"post-race judgments: $judged")
-      // replay idempotence by tag holds for BOTH racers
-      val rows = spark.table(s"${prefix}_fingerprints").count()
-      DedupOps.appendToCorpusDedupIndex(accA, "text", "doc_id", prefix, Some("rA"))
-      DedupOps.appendToCorpusDedupIndex(accB, "text", "doc_id", prefix, Some("rB"))
-      assert(spark.table(s"${prefix}_fingerprints").count() == rows,
-        "a tagged replay re-applied after the race")
-    } finally dropIndex()
+  test("racing writers publish disjoint versions and racing appends both land") {
+    val root = tmpRoot("cidx_race")
+    build(root)
+    val accA = Seq((6000L, "racer a accepted a document about claims and versions today"))
+      .toDF("doc_id", "text")
+    val accB = Seq((6001L, "racer b accepted a different document about folds and pointers"))
+      .toDF("doc_id", "text")
+    val start = new java.util.concurrent.CountDownLatch(4)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def racer(body: => Unit): Thread = new Thread(() => {
+      start.countDown(); start.await()
+      try body catch { case t: Throwable => errs.add(t) }
+    })
+    val racers = Seq(
+      racer(DedupOps.compactCorpusDedupIndex(spark, root)),
+      racer(DedupOps.compactCorpusDedupIndex(spark, root)),
+      racer(DedupOps.appendToCorpusDedupIndex(accA, "text", "doc_id", root, 10L)),
+      racer(DedupOps.appendToCorpusDedupIndex(accB, "text", "doc_id", root, 11L)))
+    racers.foreach(_.start()); racers.foreach(_.join())
+    assert(errs.isEmpty, s"a racer threw: ${errs.peek()}")
+    // every publish claimed its own complete version; the last one serves
+    val versions = graft.io.IndexMeta.listChildNames(s"$root/versions").sorted
+    assert(versions == Seq("v0001", "v0002", "v0003"), versions.toString)
+    assert(versions.forall(v => store.exists(s"$root/versions/$v")))
+    assert(store.currentVersion(root).contains(3))
+    // both appends are corpus-known, whichever version they landed in
+    val later = Seq(
+      (7000L, "racer a accepted a document about claims and versions today"),
+      (7001L, "racer b accepted a different document about folds and pointers"),
+      (7002L, "nothing resembling anything else in this corpus today at all")
+    ).toDF("doc_id", "text")
+    assert(judge(later, DedupOps.readCorpusDedupIndex(spark, root)).toMap ==
+      Map(7000L -> "exact_dup", 7001L -> "exact_dup", 7002L -> "kept"))
+    assert(!DedupOps.appendToCorpusDedupIndex(accA, "text", "doc_id", root, 10L))
+    assert(!DedupOps.appendToCorpusDedupIndex(accB, "text", "doc_id", root, 11L))
   }
 
   test("dedup-index retention GC: grace window kept, serving generation safe, carried-tag replays survive collection") {
-    // the q128/q129 keep/collect boundary applied to the third persisted
-    // family: three promoted generations → retirement ledger [g1, g2] →
-    // prune(keepRetired=1) collects ONLY g1; a second prune(0) collects
-    // g2 but can never touch the serving g3; judgments are unchanged and
-    // a tagged trigger that committed on the COLLECTED g1 still no-ops
-    // (its tag rode the compactions into g3's base record).
-    val (g1, g2, g3) = ("graft_gc_g1", "graft_gc_g2", "graft_gc_g3")
-    def dropGens(): Unit = Seq(g1, g2, g3).foreach(p =>
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $p$sfx")))
-    dropGens()
-    val work = java.nio.file.Files.createTempDirectory("graft_dedupgc_").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work)
-    def sub(n: String) = new java.io.File(work, n).getPath
-    val store = graft.io.BatchStore.local(sub("store"))
-    val key = "pointers/idx.json"
+    // v1 build + append b0 → v2 fold (carries v1's fingerprints/shingles
+    // by reference) → v3 fold rewriting everything → v4 fold carrying
+    // v3's. prune(keepLatest = 2) keeps the served v4, the grace v3
+    // (which v4 also references) and drops v1/v2; prune(1) then keeps v3
+    // anyway because v4 reads its files. The batch that committed on the
+    // collected v1 still replays to a no-op (its id rode the folds).
+    val root = tmpRoot("cidx_gc")
+    build(root)
+    val acc = Seq((9000L, "a gc test document accepted through a trigger")).toDF("doc_id", "text")
+    DedupOps.appendToCorpusDedupIndex(acc, "text", "doc_id", root, batchId = 0L)
+    DedupOps.compactCorpusDedupIndex(spark, root)
+    // v2 reads v1's files: a prune keeping only the served version keeps v1
+    assert(DedupOps.pruneCorpusDedupIndex(root, keepLatest = 1).isEmpty)
+    DedupOps.compactCorpusDedupIndex(spark, root, maxFilesPerBucket = 0)
+    DedupOps.compactCorpusDedupIndex(spark, root)
     val later = Seq(
-      (9100L, "a gc test document accepted through a tagged trigger"),
+      (9100L, "a gc test document accepted through a trigger"),
       (9101L, "nothing resembling anything else in this corpus right now")
     ).toDF("doc_id", "text")
-    def judge(prefix: String): Seq[(Long, String)] =
-      DedupOps.incrementalDedupPrepared(later,
-          DedupOps.readCorpusDedupIndex(spark, prefix), "text", "doc_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq.sortBy(_._1)
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        g1, buckets = 4, path = Some(sub("g1")))
-      val acc = Seq((9000L, "a gc test document accepted through a tagged trigger"))
-        .toDF("doc_id", "text")
-      DedupOps.appendToCorpusDedupIndex(acc, "text", "doc_id", g1, Some("gc-trig-1"))
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g1, Some(sub("g1")))
-      DedupOps.compactCorpusDedupIndex(spark, g1, g2, buckets = 4,
-        path = Some(sub("g2"))).count()
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g2, Some(sub("g2")))
-      DedupOps.compactCorpusDedupIndex(spark, g2, g3, buckets = 4,
-        path = Some(sub("g3"))).count()
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g3, Some(sub("g3")))
+    val before = judge(later, DedupOps.readCorpusDedupIndex(spark, root))
+    assert(before.toMap.apply(9100L) == "exact_dup", before.toString)
 
-      val before = judge(g3)
-      assert(before.toMap.apply(9100L) == "exact_dup",
-        s"the tagged append's doc must be corpus-known pre-GC: $before")
-
-      val collected = DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 1)
-      assert(collected.map(e => (String.valueOf(e("table_prefix")),
-          String.valueOf(e("collected")))) == Seq((g1, "deleted")),
-        s"prune(1) must collect exactly g1: $collected")
-      assert(!graft.io.IndexMeta.exists(sub("g1")), "collected g1 files survived")
-      assert(graft.io.IndexMeta.exists(sub("g2")), "grace-window g2 was collected")
-      assert(graft.io.IndexMeta.exists(sub("g3")), "serving g3 was collected")
-
-      val second = DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 0)
-      assert(second.map(e => (String.valueOf(e("table_prefix")),
-          String.valueOf(e("collected")))) == Seq((g2, "deleted")))
-      assert(graft.io.IndexMeta.exists(sub("g3")), "serving g3 must never collect")
-      // a drained ledger prunes to a no-op
-      assert(DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 0).isEmpty)
-
-      assert(judge(g3) == before, "GC changed a judgment")
-      // carried-tag replay: the trigger that committed on COLLECTED g1
-      // replays against the serving generation and must no-op
-      assert(DedupOps.resolveCorpusDedupIndex(spark, store, key) == g3)
-      val rows = spark.table(s"${g3}_fingerprints").count()
-      DedupOps.appendToCorpusDedupIndex(acc, "text", "doc_id", g3, Some("gc-trig-1"))
-      assert(spark.table(s"${g3}_fingerprints").count() == rows,
-        "a carried-tag replay re-applied after its generation was collected")
-    } finally dropGens()
-  }
-
-  test("dedup-index GC never aliases the serving generation: a re-promoted prefix's entry is skipped, not deleted") {
-    // the a→b→a shape: g1@P1 promoted, g2@P2 promoted (retires g1@P1),
-    // then g1@P1 promoted AGAIN (rollback-by-promote; retires g2@P2).
-    // The ledger now holds an entry whose prefix+path ARE the serving
-    // generation — prune must skip it defensively and still collect g2.
-    val (g1, g2) = ("graft_gcalias_g1", "graft_gcalias_g2")
-    def dropGens(): Unit = Seq(g1, g2).foreach(p =>
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $p$sfx")))
-    dropGens()
-    val work = java.nio.file.Files.createTempDirectory("graft_dedupgc_alias_").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work)
-    def sub(n: String) = new java.io.File(work, n).getPath
-    val store = graft.io.BatchStore.local(sub("store"))
-    val key = "pointers/idx.json"
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        g1, buckets = 4, path = Some(sub("g1")))
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g1, Some(sub("g1")))
-      DedupOps.compactCorpusDedupIndex(spark, g1, g2, buckets = 4,
-        path = Some(sub("g2"))).count()
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g2, Some(sub("g2")))
-      // roll back by re-promoting g1 — its OWN retirement entry now
-      // aliases the serving generation
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g1, Some(sub("g1")))
-      val res = DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 0)
-      val byPrefix = res.map(e => String.valueOf(e("table_prefix")) ->
-        String.valueOf(e("collected"))).toMap
-      assert(byPrefix(g1) == "skipped_serving", s"serving alias deleted: $res")
-      assert(byPrefix(g2) == "deleted", s"retired g2 not collected: $res")
-      assert(graft.io.IndexMeta.exists(sub("g1")), "serving generation's files deleted")
-      assert(!graft.io.IndexMeta.exists(sub("g2")))
-      // the skipped alias stays in the ledger (never silently forgotten)
-      val again = DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 0)
-      assert(again.map(e => String.valueOf(e("collected"))) == Seq("skipped_serving"))
-      // the serving index still judges
-      assert(DedupOps.incrementalDedupPrepared(
-        Seq((9200L, "completely novel wording for the alias check")).toDF("doc_id", "text"),
-        DedupOps.readCorpusDedupIndex(spark, g1), "text", "doc_id")
-        .collect().nonEmpty)
-    } finally dropGens()
-  }
-
-  test("epoch claim markers are released on commit; records fence recycled ids; repair sweeps abandoned claims") {
-    // The round-13 advice finding: claimNextEpoch minted one PERMANENT
-    // epoch-NNNNNNNN.claim dir per epoch — a long-lived intake's ledger
-    // dir grew without bound and nothing collected it. Now the winner
-    // releases its marker once the commit record lands; the record
-    // itself fences the id (the allocator re-checks records after
-    // winning a marker), and repair collects claims a dead writer left.
-    dropIndex()
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix, buckets = 4)
-      val dir = DedupOps.epochLedgerDir(spark, prefix)
-      def claimDirs(): Seq[String] =
-        graft.io.IndexMeta.listChildNames(dir.toString).filter(_.endsWith(".claim"))
-      (0 until 3).foreach { i =>
-        DedupOps.appendToCorpusDedupIndex(
-          Seq((8000L + i, s"clutter check append number $i with its own fresh wording"))
-            .toDF("doc_id", "text"),
-          "text", "doc_id", prefix, Some(s"clutter-$i"))
-      }
-      assert(claimDirs().isEmpty,
-        s"committed appends must release their claim markers, found ${claimDirs()}")
-
-      // a STALE reader (its ledger read predates those commits) starts
-      // below the watermark: the released markers are claimable again,
-      // but the intent/commit RECORDS must step it onto a fresh id —
-      // overwriting epoch 1's records would orphan its committed files
-      val minted = DedupOps.claimEpochIdFrom(spark, prefix, start = 1L)
-      assert(minted >= 4, s"stale reader minted a recorded epoch id: $minted")
-      assert(claimDirs() == Seq(f"epoch-$minted%08d.claim"),
-        "the stale reader's own claim is live and stays")
-
-      // the fence re-released the recycled markers it stepped past
-      assert(!claimDirs().exists(_ != f"epoch-$minted%08d.claim"))
-
-      // abandon the minted claim (simulated writer death before intent),
-      // commit one more real append past it → the marker now sits BELOW
-      // the watermark with no record
-      DedupOps.appendToCorpusDedupIndex(
-        Seq((8100L, "one more committed append to advance the ledger watermark"))
-          .toDF("doc_id", "text"),
-        "text", "doc_id", prefix, Some("clutter-post"))
-      // a DEFAULT repair must NOT sweep it: a live claimant holding a
-      // below-watermark gap id between claim-win and intent-write looks
-      // exactly like this, and releasing its marker would let a second
-      // writer mint the same epoch — the marker is fresh, so it stays
-      val repFresh = DedupOps.repairCorpusDedupIndex(spark, prefix)
-      assert(repFresh("torn_epochs") == Nil, s"clean index read as torn: $repFresh")
-      assert(claimDirs() == Seq(f"epoch-$minted%08d.claim"),
-        "a fresh below-watermark claim may belong to a live claimant and must survive")
-      // once the marker is STALE (no claimant holds a claim for 15min)
-      // the sweep collects it — staleness 0 simulates the aged marker
-      val rep = DedupOps.repairCorpusDedupIndex(spark, prefix, claimStalenessMs = 0L)
-      assert(rep("torn_epochs") == Nil, s"clean index read as torn: $rep")
-      assert(claimDirs().isEmpty,
-        s"repair must sweep the abandoned STALE below-watermark claim, found ${claimDirs()}")
-    } finally dropIndex()
-  }
-
-  test("concurrent promotes serialize: every superseded generation is serving or in the retirement ledger (no orphan)") {
-    // Two unguarded promotes both read pointer P0, both swap, both
-    // append P0 — the losing promote's generation is then recorded
-    // NOWHERE (not serving, not retired): storage the GC can never
-    // find. The pointer-swap claim serializes the read-modify-write.
-    val work = java.nio.file.Files.createTempDirectory("graft_promrace_").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work)
-    def sub(n: String) = new java.io.File(work, n).getPath
-    val store = graft.io.BatchStore.local(sub("store"))
-    val key = "pointers/race.json"
-    DedupOps.promoteCorpusDedupIndex(store, key, "graft_promrace_g0", Some(sub("g0")))
-    val latch = new java.util.concurrent.CountDownLatch(2)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val racers = Seq("g1", "g2").map(g => new Thread(() => {
-      latch.countDown(); latch.await()
-      try DedupOps.promoteCorpusDedupIndex(store, key, s"graft_promrace_$g", Some(sub(g)))
-      catch { case t: Throwable => failures.add(t) }
-    }))
-    racers.foreach(_.start()); racers.foreach(_.join())
-    assert(failures.isEmpty, s"a racing promote failed: ${failures.peek()}")
-    val serving = String.valueOf(
-      store.readJsonIfExists(key).get.apply("table_prefix"))
-    val retired = store.readJsonIfExists(DedupOps.retiredGenerationsKey(key))
-      .flatMap(_.get("retired")).collect { case s: Seq[_] =>
-        s.collect { case m: Map[_, _] =>
-          String.valueOf(m.asInstanceOf[Map[String, Any]]("table_prefix")) } }
-      .getOrElse(Nil)
-    val everyone = Set("graft_promrace_g0", "graft_promrace_g1", "graft_promrace_g2")
-    assert(retired.toSet + serving == everyone,
-      s"a generation was orphaned: serving=$serving retired=$retired")
-    assert(retired.size == 2, s"a ledger append was lost: $retired")
-    // the claim released: a later promote still proceeds
-    DedupOps.promoteCorpusDedupIndex(store, key, "graft_promrace_g3", Some(sub("g3")))
-  }
-
-  test("GC alias guard is spelling-proof: a re-promote naming the serving path with a scheme/slash variant still skips") {
-    // the a→b→a rollback where the caller spells the same location
-    // 'file:' + trailing slash — raw string comparison would miss the
-    // alias and deleteTree() the SERVING generation's files
-    val (g1, g2) = ("graft_gcspell_g1", "graft_gcspell_g2")
-    def dropGens(): Unit = Seq(g1, g2).foreach(p =>
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $p$sfx")))
-    dropGens()
-    val work = java.nio.file.Files.createTempDirectory("graft_gcspell_").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work)
-    def sub(n: String) = new java.io.File(work, n).getPath
-    val store = graft.io.BatchStore.local(sub("store"))
-    val key = "pointers/idx.json"
-    try {
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"),
-        g1, buckets = 4, path = Some(sub("g1")))
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g1, Some(sub("g1")))
-      DedupOps.compactCorpusDedupIndex(spark, g1, g2, buckets = 4,
-        path = Some(sub("g2"))).count()
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g2, Some(sub("g2")))
-      // roll back to g1, spelling its path as file: + trailing slash
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g1,
-        Some("file:" + sub("g1") + "/"))
-      val res = DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 0)
-      val byPrefix = res.map(e => String.valueOf(e("table_prefix")) ->
-        String.valueOf(e("collected"))).toMap
-      assert(byPrefix(g1) == "skipped_serving",
-        s"differently-spelled serving alias was not skipped: $res")
-      assert(byPrefix(g2) == "deleted", s"retired g2 not collected: $res")
-      assert(graft.io.IndexMeta.exists(sub("g1")),
-        "the serving generation's files were deleted through a spelling variant")
-      assert(!graft.io.IndexMeta.exists(sub("g2")))
-    } finally dropGens()
-  }
-
-  test("managed retirements record their ledger dir at promote; prune stays terminal after out-of-band drops") {
-    // A MANAGED generation's only handle after its tables are dropped
-    // used to be nothing — the entry was re-examined and re-written on
-    // every prune forever. Promote now records the epoch-ledger dir
-    // while the tables are still registered, so prune always has
-    // something terminal to do; a legacy entry with no handle at all
-    // drops out of the ledger as unresolvable instead of looping.
-    val (g1, g2) = ("graft_gcman_g1", "graft_gcman_g2")
-    def dropGens(): Unit = Seq(g1, g2).foreach(p =>
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $p$sfx")))
-    dropGens()
-    val work = java.nio.file.Files.createTempDirectory("graft_gcman_").toFile
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(work)
-    def sub(n: String) = new java.io.File(work, n).getPath
-    val store = graft.io.BatchStore.local(sub("store"))
-    val key = "pointers/idx.json"
-    try {
-      // g1 managed (no path), g2 external; g1's retirement entry must
-      // carry its ledger_dir, resolved while g1 was still registered
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), g1, buckets = 4)
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g1)
-      DedupOps.compactCorpusDedupIndex(spark, g1, g2, buckets = 4,
-        path = Some(sub("g2"))).count()
-      DedupOps.promoteCorpusDedupIndexChecked(spark, store, key, g2, Some(sub("g2")))
-      val entry = store.readJsonIfExists(DedupOps.retiredGenerationsKey(key))
-        .flatMap(_.get("retired")).collect { case s: Seq[_] =>
-          s.collect { case m: Map[_, _] => m.asInstanceOf[Map[String, Any]] } }
-        .getOrElse(Nil).head
-      assert(entry.contains("ledger_dir"),
-        s"managed retirement must record its ledger dir: $entry")
-      val ledgerDir = String.valueOf(entry("ledger_dir"))
-      assert(graft.io.IndexMeta.exists(ledgerDir))
-      // someone drops the g1 tables out-of-band (managed drop deletes
-      // table data; the ledger dir is a warehouse sibling and survives)
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $g1$sfx"))
-      assert(graft.io.IndexMeta.exists(ledgerDir),
-        "precondition: the ledger dir outlives the table drops")
-      val res = DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 0)
-      assert(res.map(e => (String.valueOf(e("table_prefix")),
-          String.valueOf(e("collected")))) == Seq((g1, "deleted")),
-        s"recorded ledger dir must make the managed entry terminal: $res")
-      assert(!graft.io.IndexMeta.exists(ledgerDir), "recorded ledger dir survived prune")
-      assert(DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 0).isEmpty,
-        "a collected managed entry must leave the ledger")
-
-      // a LEGACY entry (no path, no ledger_dir, nothing registered)
-      // resolves to nothing: reported unresolvable and dropped, so the
-      // next prune no-ops instead of re-examining it forever
-      store.putJson(DedupOps.retiredGenerationsKey(key), Map("retired" -> Seq(
-        Map("table_prefix" -> "graft_gcman_ghost", "retired_at_utc" -> "t0"))))
-      val ghost = DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 0)
-      assert(ghost.map(e => String.valueOf(e("collected"))) == Seq("dropped_unresolvable"),
-        s"unresolvable legacy entry must be reported dropped: $ghost")
-      assert(DedupOps.pruneCorpusDedupIndex(spark, store, key, keepRetired = 0).isEmpty,
-        "an unresolvable entry must not be re-examined forever")
-    } finally dropGens()
+    assert(DedupOps.pruneCorpusDedupIndex(root) == Seq(1, 2))
+    assert(DedupOps.pruneCorpusDedupIndex(root, keepLatest = 1).isEmpty,
+      "v3 is referenced by the served v4 and must stay")
+    assert(store.exists(store.versionDir(root, 3)) && store.exists(store.versionDir(root, 4)))
+    assert(judge(later, DedupOps.readCorpusDedupIndex(spark, root)) == before, "GC changed a judgment")
+    val rows = DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count()
+    assert(!DedupOps.appendToCorpusDedupIndex(acc, "text", "doc_id", root, batchId = 0L),
+      "a replay re-applied after its version was collected")
+    assert(DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count() == rows)
   }
 }

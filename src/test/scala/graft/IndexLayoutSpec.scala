@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{SearchOps, SemanticIndex, VectorIndex}
+import graft.operators.{DedupOps, SearchOps, SemanticIndex, VectorIndex}
 import graft.streaming.StreamOps
 
 /** Pins the on-disk layout each versioned index family leaves behind
@@ -98,5 +98,63 @@ class IndexLayoutSpec extends SparkSpec {
     assert(layout(root) == Set("POINTER", "_claims", "versions", v,
         s"$v/_CLAIM.*", s"$v/_MODEL_OK", s"$v/folded_batches.txt") ++
       cells(s"$v/labeled", Seq(0, 1, 2, 3)) ++ table(s"$v/centroids"))
+  }
+
+  private val dedupCorpus = Seq(
+    (0L, "the quick brown fox jumps over the lazy dog near the river bank"),
+    (1L, "an entirely separate corpus document about streaming ingestion pipelines")
+  ).toDF("doc_id", "text")
+  private val accepted = Seq(
+    (100L, "fresh material accepted into the corpus about spark state stores")).toDF("doc_id", "text")
+
+  /** Judgment of an exact copy of the accepted doc against the served index. */
+  private def knowsAccepted(root: String): Boolean =
+    DedupOps.incrementalDedupPrepared(
+      accepted.select(($"doc_id" + 1000L).as("doc_id"), $"text"),
+      DedupOps.readCorpusDedupIndex(spark, root), "text", "doc_id")
+      .head().getString(1) == "exact_dup"
+
+  private def dedupTables(dir: String): Set[String] =
+    Set(dir) ++ Seq("fingerprints", "shingles", "bands").flatMap(t => table(s"$dir/$t"))
+
+  test("corpus-dedup root after build → append → fold") {
+    val root = tmpRoot("layout_dedup")
+    DedupOps.writeCorpusDedupIndex(
+      DedupOps.buildCorpusDedupIndex(dedupCorpus, "text", "doc_id"), root.getPath, buckets = 2)
+    assert(DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", root.getPath, 0L))
+    DedupOps.compactCorpusDedupIndex(spark, root.getPath)
+    // v2 carries v1's fingerprints, shingles and the segment's by
+    // reference and rewrites only its bands, so a prune keeps v1
+    assert(DedupOps.pruneCorpusDedupIndex(root.getPath, keepLatest = 1).isEmpty)
+    val (v1, v2) = ("versions/v0001", "versions/v0002")
+    assert(layout(root) == Set("POINTER", "_claims", "versions",
+        v1, s"$v1/_CLAIM.*", s"$v1/manifest.json", s"$v1/ingest",
+        s"$v1/ingest/b0/_SUCCESS",
+        v2, s"$v2/_CLAIM.*", s"$v2/manifest.json", s"$v2/folded_batches.txt") ++
+      dedupTables(v1) ++ dedupTables(s"$v1/ingest/b0") ++ table(s"$v2/bands"))
+    assert(knowsAccepted(root.getPath))
+  }
+
+  test("corpus-dedup segment without _SUCCESS is invisible; its replay rewrites it") {
+    val root = tmpRoot("layout_dedup_torn")
+    DedupOps.writeCorpusDedupIndex(
+      DedupOps.buildCorpusDedupIndex(dedupCorpus, "text", "doc_id"), root.getPath, buckets = 2)
+    assert(DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", root.getPath, 0L))
+    val seg = new java.io.File(root, "versions/v0001/ingest/b0")
+    def parts(t: String): Set[String] =
+      new java.io.File(seg, t).list().filter(_.startsWith("part-")).toSet
+    val before = parts("fingerprints")
+    // the append died after its table writes, before its commit marker
+    assert(new java.io.File(seg, "_SUCCESS").delete())
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(seg, "bands"))
+    assert(!layout(root).contains("versions/v0001/ingest/b0/_SUCCESS"))
+    assert(!knowsAccepted(root.getPath), "a torn segment was served")
+    // the replay of batch 0 rewrites every table of the segment, then commits
+    assert(DedupOps.appendToCorpusDedupIndex(accepted, "text", "doc_id", root.getPath, 0L))
+    assert(layout(root).filter(_.startsWith("versions/v0001/ingest")) ==
+      Set("versions/v0001/ingest", "versions/v0001/ingest/b0/_SUCCESS") ++
+        dedupTables("versions/v0001/ingest/b0"))
+    assert((parts("fingerprints") & before).isEmpty, "the replay kept torn files")
+    assert(knowsAccepted(root.getPath))
   }
 }

@@ -466,7 +466,10 @@ class PlanAuditSpec extends SparkSpec {
     // must scan those tables (not recompute the corpus) and the near
     // stage stays bucketed (no all-pairs join)
     val p = plan("q78_incremental_dedup_prepared")
-    assert(p.contains("graft_q78v2_index"),
+    // registered table names embed the cached root's name (cdx_<root>_
+    // v<N>_<id>_<table>); the root moved from v2 to v3 with the
+    // versioned-root layout
+    assert(p.contains("graft_q78v3_index"),
       "corpus side is not read from the prepared bucketed index")
     assert(p.contains("Bucketed: true"),
       "index scans lost the bucketed layout")

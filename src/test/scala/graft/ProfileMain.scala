@@ -187,242 +187,6 @@ object ProfileMain {
         println(f"RECALL planes=$planes%d probes=$probes%d recall=$recall%.4f  time=$secs%5.2f s")
         spark.catalog.clearCache()
       }
-    } else if (args.headOption.contains("q84stages")) {
-      // q84 lifecycle decomposition: the bench entry's cost is the SUM of
-      // four deliberate lifecycle actions — this prints each one's share
-      // so a bench delta can be attributed. Caveats: single-shot (the
-      // stages mutate persisted state, so best-of-3 would measure
-      // no-ops), and the BENCH entry skips build (persisted across reps)
-      // and no-ops the tag-committed append — only compact + re-ingest
-      // recur there. Absolute numbers here carry this host's burst noise
-      // and table-write cold costs; use the bench minimum for drift, this
-      // for SHARE attribution only.
-      import graft.operators.DedupOps
-      val (corpus, batch1, batch2) =
-        graft.queries.LlmFixtures.skewLifecycleParts(spark, sfDir)
-      val cap = graft.queries.LlmFixtures.skewCap
-      val prefix = "graft_profile_q84"
-      def dirOf(p: String) = new java.io.File(sys.props("java.io.tmpdir"), p)
-      def cleanup(): Unit = Seq(prefix, prefix + "_c").foreach { pf =>
-        Seq("_fingerprints", "_shingles", "_bands")
-          .foreach(sx => spark.sql(s"DROP TABLE IF EXISTS $pf$sx"))
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete()
-        }
-        rm(dirOf(pf))
-      }
-      def timed[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"PROFILE q84:$label%-24s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        // the bench clears cache between timed runs; without this the
-        // build's persisted index frames leak across stages and GC
-        // pressure masquerades as stage cost
-        spark.catalog.clearCache()
-        r
-      }
-      // rep 1 is JIT-cold; rep 2 is the bench-comparable share
-      for (rep <- 1 to 2) {
-        cleanup()
-        timed(s"r$rep:build+write")(DedupOps.writeCorpusDedupIndex(
-          DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id",
-            n = 3, numHashes = 64, bands = 32, maxBucket = cap),
-          prefix, buckets = 16, path = Some(dirOf(prefix).getPath)))
-        timed(s"r$rep:append-batch1")(DedupOps.appendToCorpusDedupIndex(
-          batch1, "text", "doc_id", prefix, epochTag = Some("prof1")))
-        timed(s"r$rep:compact+recap")(DedupOps.compactCorpusDedupIndex(spark, prefix,
-          prefix + "_c", buckets = 16,
-          path = Some(dirOf(prefix + "_c").getPath)).count())
-        timed(s"r$rep:re-ingest-batch2")(DedupOps.incrementalDedupPrepared(batch2,
-            DedupOps.readCorpusDedupIndex(spark, prefix + "_c"), "text", "doc_id",
-            n = 3, numHashes = 64, bands = 32, threshold = 0.5, maxBucket = cap)
-          .write.format("noop").mode("overwrite").save())
-        cleanup()
-      }
-    } else if (args.headOption.contains("q84streamdbg")) {
-      // attribution for the q84stream per-trigger latency: replay
-      // trigger 2's work as separately-timed batch stages
-      import org.apache.spark.sql.functions._
-      import graft.operators.DedupOps
-      import spark.implicits._
-      val (corpus, batch1, batch2) =
-        graft.queries.LlmFixtures.skewLifecycleParts(spark, sfDir)
-      val cap = graft.queries.LlmFixtures.skewCap
-      val prefix = "graft_prof_q84d"
-      def dirOf(p: String) = new java.io.File(sys.props("java.io.tmpdir"), p)
-      def cleanup(): Unit = {
-        for (sx <- Seq("_fingerprints", "_shingles", "_bands"))
-          spark.sql(s"DROP TABLE IF EXISTS $prefix$sx")
-        org.apache.commons.io.FileUtils.deleteQuietly(dirOf(prefix))
-      }
-      def timed[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"PROFILE q84dbg:$label%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
-      }
-      cleanup()
-      try {
-        timed("build+write")(DedupOps.writeCorpusDedupIndex(
-          DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id",
-            n = 3, numHashes = 64, bands = 32, maxBucket = cap),
-          prefix, buckets = 16, path = Some(dirOf(prefix).getPath)))
-        timed("append-batch1")(DedupOps.appendToCorpusDedupIndex(
-          batch1, "text", "doc_id", prefix, epochTag = Some("t1")))
-        val t2batch = batch2.filter(col("doc_id") % 2 === 0).localCheckpoint(true)
-        println(s"trigger2 batch size: ${t2batch.count()}")
-        val idx = timed("read-index")(DedupOps.readCorpusDedupIndex(spark, prefix))
-        val (roster, caches) = timed("judge-plan")(
-          DedupOps.incrementalDedupPreparedWithCaches(t2batch, idx,
-            "text", "doc_id", 3, 64, 32, 0.5, cap))
-        val rosterRows = timed("judge-materialize")(roster.count())
-        println(s"roster rows: $rosterRows")
-        val rk = roster.filter(col("status") === "kept")
-        timed("roster-kept-count")(rk.count())
-        def joinLines(df: org.apache.spark.sql.DataFrame, label: String): Unit = {
-          println(s"== $label joins ==")
-          df.queryExecution.executedPlan.toString.linesIterator
-            .filter(l => l.contains("Join") || l.contains("BroadcastExchange"))
-            .foreach(l => println(l.take(200)))
-        }
-        joinLines(roster, "roster")
-        joinLines(rk, "roster-kept")
-        val keptPlan = t2batch.withColumn("_nid", col("doc_id").cast("long"))
-          .join(roster.filter(col("status") === "kept")
-            .select(col("new_id").as("_nid")), Seq("_nid"), "left_semi")
-          .drop("_nid")
-        timed("kept-join-count")(keptPlan.count())
-        val kept = timed("kept-checkpoint")(keptPlan.localCheckpoint(true))
-        caches.foreach(_.unpersist())
-        timed("write-kept")(kept.write.mode("overwrite")
-          .parquet(dirOf(prefix + "_sink").getPath))
-        timed("append-kept")(DedupOps.appendToCorpusDedupIndex(
-          kept, "text", "doc_id", prefix, epochTag = Some("t2")))
-        // a third small batch after two appends — does append cost grow?
-        val t3batch = batch2.filter(col("doc_id") % 2 === 1).localCheckpoint(true)
-        val (roster3, caches3) = DedupOps.incrementalDedupPreparedWithCaches(
-          t3batch, DedupOps.readCorpusDedupIndex(spark, prefix),
-          "text", "doc_id", 3, 64, 32, 0.5, cap)
-        timed("judge3-materialize")(roster3.count())
-        val kept3 = t3batch.withColumn("_nid", col("doc_id").cast("long"))
-          .join(roster3.filter(col("status") === "kept")
-            .select(col("new_id").as("_nid")), Seq("_nid"), "left_semi")
-          .drop("_nid").localCheckpoint(true)
-        caches3.foreach(_.unpersist())
-        timed("append3-kept")(DedupOps.appendToCorpusDedupIndex(
-          kept3, "text", "doc_id", prefix, epochTag = Some("t3")))
-        org.apache.commons.io.FileUtils.deleteQuietly(dirOf(prefix + "_sink"))
-      } finally cleanup()
-    } else if (args.headOption.contains("q84stream")) {
-      // Bench-scale STREAMING lifecycle (the q84 story driven through
-      // the pointer-resolved intake sink): per-trigger latency before
-      // and after a mid-stream compact + CHECKED promote at this SF,
-      // with a real append committing inside the compact→promote window
-      // (healed by the checked promote) and correctness re-checked
-      // post-swap. One long-running query across the swap — no restart.
-      implicit val sqlCtx = spark.sqlContext
-      import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-      import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.operators.DedupOps
-      import graft.streaming.StreamOps
-      import spark.implicits._
-      val (corpus, batch1, batch2) =
-        graft.queries.LlmFixtures.skewLifecycleParts(spark, sfDir)
-      val cap = graft.queries.LlmFixtures.skewCap
-      val pa = "graft_prof_q84s_a"; val pb = "graft_prof_q84s_b"
-      def dirOf(p: String) = new java.io.File(sys.props("java.io.tmpdir"), p)
-      def cleanup(): Unit = {
-        for (p <- Seq(pa, pb); sx <- Seq("_fingerprints", "_shingles", "_bands"))
-          spark.sql(s"DROP TABLE IF EXISTS $p$sx")
-        Seq(pa, pb, "graft_prof_q84s_store", "graft_prof_q84s_sink")
-          .foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(dirOf(p)))
-      }
-      def timed[A](label: String)(f: => A): A = {
-        val t0 = System.nanoTime(); val r = f
-        println(f"PROFILE q84stream:$label%-28s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-        r
-      }
-      cleanup()
-      try {
-        timed("build+write+promote") {
-          DedupOps.writeCorpusDedupIndex(
-            DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id",
-              n = 3, numHashes = 64, bands = 32, maxBucket = cap),
-            pa, buckets = 16, path = Some(dirOf(pa).getPath))
-        }
-        val store = graft.io.BatchStore.local(dirOf("graft_prof_q84s_store").getPath)
-        val pointerKey = "pointers/dedup_index.json"
-        DedupOps.promoteCorpusDedupIndexChecked(spark, store, pointerKey, pa,
-          Some(dirOf(pa).getPath))
-        val input = MemoryStream[(Long, String)]
-        val target = dirOf("graft_prof_q84s_sink").getPath
-        StreamOps.intakeDebug = true
-        val q = StreamOps.nearDupIntakeSinkWithIndexPointer(
-            input.toDF().toDF("doc_id", "text"), store, pointerKey,
-            "text", "doc_id", target, maxBucket = cap)
-          .trigger(Trigger.ProcessingTime("0 seconds")).start()
-        def rowsOf(df: org.apache.spark.sql.DataFrame) =
-          df.select(col("doc_id").cast("long"), col("text"))
-            .as[(Long, String)].collect().toSeq
-        def feed(label: String, rows: Seq[(Long, String)]): Unit = {
-          input.addData(rows: _*)
-          timed(s"$label(${rows.size} docs)")(q.processAllAvailable())
-        }
-        val b1 = rowsOf(batch1)
-        try {
-          // trigger 1: the 800-member hot family is judged + appended to pa
-          feed("trigger1-skew-accept", b1)
-          // steady-state pre-swap trigger latency (half of batch2)
-          val b2 = rowsOf(batch2)
-          feed("trigger2-pre-swap", b2.filter(_._1 % 2 == 0))
-          // maintenance mid-stream: compact with re-cap...
-          val report = timed("compact+recap")(DedupOps.compactCorpusDedupIndex(
-            spark, pa, pb, buckets = 16, path = Some(dirOf(pb).getPath)))
-          println(s"PROFILE q84stream:recap-dropped-buckets    ${report.count()}")
-          // ...a late append COMMITS on pa inside the window...
-          val late = spark.range(100).select((col("id") + 7000000L).as("doc_id"),
-            concat(lit("late window document number "), col("id"),
-              lit(" committed after the compaction read unique content")).as("text"))
-          DedupOps.appendToCorpusDedupIndex(late, "text", "doc_id", pa,
-            epochTag = Some("late-profile"))
-          // ...and the CHECKED promote heals it into pb before swapping
-          val promoted = timed("checked-promote+heal")(
-            DedupOps.promoteCorpusDedupIndexChecked(spark, store, pointerKey,
-              pb, Some(dirOf(pb).getPath)))
-          println(s"PROFILE q84stream:healed-epochs            " +
-            promoted("healed_epochs").asInstanceOf[Seq[Long]].mkString(","))
-          // trigger 3 (post-swap, same size class as trigger 2): judges
-          // against pb; exact copies of the healed late docs must drop
-          val lateCopies = (0L until 20L).map(i =>
-            (8000000L + i, s"late window document number $i committed after " +
-              "the compaction read unique content"))
-          // exact copies of streamed-in batch1 docs, POST-swap: judged
-          // against pb, so they prove the trigger-1 append survived the
-          // compact+promote (not just that pa held them pre-swap)
-          val b1Copies = b1.take(20).zipWithIndex.map { case ((_, txt), i) =>
-            (9000000L + i, txt)
-          }
-          feed("trigger3-post-swap", b2.filter(_._1 % 2 == 1) ++ lateCopies ++ b1Copies)
-        } finally q.stop()
-        // correctness re-check post-swap: every exact-dup leg must have
-        // dropped (aLeg +5e6 = copies of batch1 docs — proves the append
-        // survived compaction; dLeg +2e6 = copies of base docs; +8e6 =
-        // copies of the HEALED late docs — proves the heal carried data)
-        val kept = spark.read.parquet(target).select("doc_id").as[Long].collect().toSet
-        def leg(name: String, lo: Long, hi: Long): Unit =
-          println(s"PROFILE q84stream:kept-$name = ${kept.count(id => id >= lo && id < hi)}")
-        leg("aLeg-batch1-copies(want 0)", 5000000L, 6000000L)
-        leg("bLeg-near-dups(want 0)", 4000000L, 5000000L)
-        leg("cLeg-fresh-family", 6000000L, 7000000L)
-        leg("dLeg-base-copies(want 0)", 2000000L, 3000000L)
-        leg("late-heal-copies(want 0)", 8000000L, 9000000L)
-        leg("batch1-copies-post-swap(want 0)", 9000000L, 10000000L)
-        require(!kept.exists(id => id >= 8000000L && id < 9000000L),
-          "heal failed: copies of the healed late docs were kept post-swap")
-        require(!kept.exists(id => id >= 9000000L && id < 10000000L),
-          "lifecycle failed: post-swap copies of batch1's streamed docs were kept")
-        require(!kept.exists(id => id >= 5000000L && id < 6000000L),
-          "lifecycle failed: copies of batch1's accepted docs were kept pre-swap")
-      } finally cleanup()
     } else if (args.headOption.contains("vindexstream")) {
       // Bench-scale VECTOR-INDEX lifecycle: build v1 on half the corpus,
       // stream the other half through vectorIngestSink in three real
@@ -430,8 +194,7 @@ object ProfileMain {
       // segments, FOLD the segments into v2 (small-files compaction,
       // atomic swap), re-serve (must be row-identical), then RETRAIN v3
       // from the full corpus and serve once more. One pass, timed stages,
-      // correctness asserts inline — the q84stream treatment applied to
-      // the ANN serving lifecycle.
+      // correctness asserts inline.
       implicit val sqlCtx = spark.sqlContext
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.functions._

@@ -14,8 +14,8 @@ import graft.silver.{FlattenSpecs, SilverBuilder}
 import graft.sources.RestSource
 
 /** The weekly-refresh orchestration, driven END TO END at bench scale in
-  * one process (not a test — the PERF.md transcript driver, the q84stream
-  * convention): stubbed REST pages synthesized from the SF tables →
+  * one process (not a test — it produces the PERF.md transcripts):
+  * stubbed REST pages synthesized from the SF tables →
   * SilverBuilder flatten/merge/DQ/batch writes for seven silver tables →
   * all five gold marts reading the CANDIDATE silver plus the PROMOTED
   * previous batch (both read disciplines) → compat adapters → candidate

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Synthetic N×-scale soak of the headline serving lifecycles (round-18
@@ -22,6 +22,18 @@ import org.apache.spark.sql.functions._
   * (defaults 10 and 100 → 50k docs / ~14 MB text, 200k × 64-dim vecs).
   */
 object SoakMain {
+
+  /** Replica `replica`'s per-component nudge of vector `vecId`:
+    * 2·((vecId + replica) mod 500) quantization grains. Quantization
+    * floors at a 1e-6 grain (VecExprs.quantize), so a sub-grain step
+    * quantizes replicas back into exact twins; two grains per step keep
+    * replicas of one vector distinct after quantizing even where float
+    * rounding lands on a grain boundary. At most 499 steps, i.e. under
+    * 1e-3 per component, so every replica stays a near-dup of its
+    * source. Replicas of one vector are distinct for embMult ≤ 500.
+    */
+  private[graft] def replicaNudge(vecId: Column, replica: Column): Column =
+    ((vecId + replica) % 500L).cast("double") * lit(2.0e-6)
 
   private class MetricsListener extends SparkListener {
     @volatile var shuffleRead = 0L
@@ -104,8 +116,8 @@ object SoakMain {
     }
 
     // Embeddings: replica r offsets ids by r·10M and nudges every
-    // component by an id/replica-derived epsilon (exact in double) —
-    // neighbors and cell structure survive, exact duplicates don't.
+    // component by [[replicaNudge]] — neighbors and cell structure
+    // survive, exact duplicates don't.
     val baseEmb = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id").cast("long").as("vec_id"),
         col("embedding").cast("array<double>").as("embedding"),
@@ -114,16 +126,8 @@ object SoakMain {
       val reps = spark.range(embMult).select(col("id").cast("long").as("_r"))
       val e = baseEmb.crossJoin(reps).select(
         (col("vec_id") + col("_r") * 10000000L).as("vec_id"),
-        // epsilon folds in vec_id so every (vec_id, replica) pair is a
-        // DISTINCT near-duplicate — (_r % 13) alone made replicas r and
-        // r+13 bit-identical twins, a duplicate-heavy corpus instead of
-        // the near-dup shape the comment above promises (r19 ADVICE).
-        // Prime modulus 1048573 keeps replicas of one vector distinct
-        // for any embMult below it (the CLI accepts arbitrary
-        // multipliers; 1021 would have re-twinned r and r+1021)
         transform(col("embedding"),
-          x => x + ((col("vec_id") + col("_r")) % 1048573L).cast("double")
-            * lit(1.0e-9)).as("embedding"),
+          x => x + replicaNudge(col("vec_id"), col("_r"))).as("embedding"),
         col("label"))
       e.write.mode("overwrite").parquet(sub("emb"))
       val out = spark.read.parquet(sub("emb"))
@@ -147,23 +151,21 @@ object SoakMain {
       val corpus = docs.filter(col("doc_id") % 50 =!= 3)
       val batch = docs.filter(col("doc_id") % 50 === 3)
         .select((col("doc_id") + 500000000L).as("doc_id"), col("text"))
-      val prefix = "graft_soak_dedupidx"
+      val root = sub("dedupidx")
       lifecycle("dedup index build+write (q78)") {
         DedupOps.writeCorpusDedupIndex(
           DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id",
             n = 3, numHashes = 64, bands = 32,
             maxBucket = graft.queries.LlmFixtures.skewCap),
-          prefix, buckets = 16, path = Some(sub("dedupidx")))
+          root, buckets = 16)
       }
       lifecycle("prepared ingest judge (q78)") {
-        val idx = DedupOps.readCorpusDedupIndex(spark, prefix)
+        val idx = DedupOps.readCorpusDedupIndex(spark, root)
         val n = DedupOps.incrementalDedupPrepared(batch, idx, "text", "doc_id",
           n = 3, numHashes = 64, bands = 32, threshold = 0.5,
           maxBucket = graft.queries.LlmFixtures.skewCap).count()
         println(s"SOAK   judged batch rows = $n")
       }
-      Seq("_fingerprints", "_shingles", "_bands")
-        .foreach(sx => spark.sql(s"DROP TABLE IF EXISTS $prefix$sx"))
     }
 
     // ---- 3. postings lifecycle (the q128 shape) ----

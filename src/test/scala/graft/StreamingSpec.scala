@@ -207,111 +207,95 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.DedupOps
     val target = Files.createTempDirectory("graft_ndu_sink").resolve("t").toString
-    val prefix = "graft_test_stream_idx"
-    def drop(): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $prefix$s"))
-    drop()
+    val root = Files.createTempDirectory("graft_ndu_idx").toString
+    val corpus = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank")
+    ).toDF("doc_id", "text")
+    DedupOps.writeCorpusDedupIndex(
+      DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), root, buckets = 2)
+
+    val input = MemoryStream[(Long, String)]
+    val stream = input.toDF().toDF("doc_id", "text")
+
+    // one query owns the root (segments key on its batch ids): override
+    // the sink's AvailableNow with a continuous processing-time trigger
+    val q = StreamOps.nearDupIntakeSinkWithIndexUpdate(
+        stream, root, "text", "doc_id", target)
+      .trigger(Trigger.ProcessingTime("0 seconds")).start()
     try {
-      val corpus = Seq(
-        (1L, "the quick brown fox jumps over the lazy dog near the river bank")
-      ).toDF("doc_id", "text")
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix, buckets = 2)
-
-      val input = MemoryStream[(Long, String)]
-      val stream = input.toDF().toDF("doc_id", "text")
-
       // trigger 1: a novel doc — accepted AND appended to the index
-      val q1 = StreamOps.nearDupIntakeSinkWithIndexUpdate(
-        stream, prefix, "text", "doc_id", target).start()
       input.addData(
         (100L, "fresh material arriving in the first trigger about spark state stores"))
-      q1.processAllAvailable(); q1.stop()
+      q.processAllAvailable()
 
       // trigger 2: a NEAR-dup of trigger 1's accepted doc (one word
       // changed) must now drop — the static-index sink would keep it —
       // plus an exact dup of it and a genuinely novel doc
-      val q2 = StreamOps.nearDupIntakeSinkWithIndexUpdate(
-        stream, prefix, "text", "doc_id", target).start()
       input.addData(
         (200L, "fresh material arriving in the first trigger about spark state machines"),
         (201L, "fresh material arriving in the first trigger about spark state stores"),
         (202L, "wholly unrelated second trigger content concerning broadcast variables"))
-      q2.processAllAvailable(); q2.stop()
+      q.processAllAvailable()
+    } finally q.stop()
 
-      val out = spark.read.parquet(target).select("doc_id")
-        .as[Long].collect().toSet
-      assert(out == Set(100L, 202L), s"self-updating sink kept $out")
-    } finally drop()
+    val out = spark.read.parquet(target).select("doc_id")
+      .as[Long].collect().toSet
+    assert(out == Set(100L, 202L), s"self-updating sink kept $out")
   }
 
   test("pointer-resolved intake rolls onto a compacted index mid-stream") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.DedupOps
     val target = Files.createTempDirectory("graft_ndp_sink").resolve("t").toString
-    val storeRoot = Files.createTempDirectory("graft_ndp_store").toString
-    val store = graft.io.BatchStore.local(storeRoot)
-    val pointerKey = "pointers/dedup_index.json"
-    val pa = "graft_test_roll_a"
-    val pb = "graft_test_roll_b"
-    def drop(): Unit = for (p <- Seq(pa, pb); s <- Seq("_fingerprints", "_shingles", "_bands"))
-      spark.sql(s"DROP TABLE IF EXISTS $p$s")
-    drop()
+    val root = Files.createTempDirectory("graft_ndp_idx").toString
+    val corpus = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank")
+    ).toDF("doc_id", "text")
+    DedupOps.writeCorpusDedupIndex(
+      DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), root, buckets = 2)
+
+    val input = MemoryStream[(Long, String)]
+    val stream = input.toDF().toDF("doc_id", "text")
+    // ONE long-running query across the fold: override the sink's
+    // AvailableNow with a continuous processing-time trigger
+    val q = StreamOps.nearDupIntakeSinkWithIndexUpdate(
+        stream, root, "text", "doc_id", target)
+      .trigger(Trigger.ProcessingTime("0 seconds")).start()
     try {
-      val corpus = Seq(
-        (1L, "the quick brown fox jumps over the lazy dog near the river bank")
-      ).toDF("doc_id", "text")
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), pa, buckets = 2)
-      DedupOps.promoteCorpusDedupIndex(store, pointerKey, pa)
+      // trigger 1 judges against v1 and commits 100 as v1's segment
+      input.addData(
+        (100L, "fresh material arriving in the first trigger about spark state stores"))
+      q.processAllAvailable()
 
-      val input = MemoryStream[(Long, String)]
-      val stream = input.toDF().toDF("doc_id", "text")
-      // ONE long-running query across the swap: override the builder's
-      // AvailableNow with a continuous processing-time trigger
-      val q = StreamOps.nearDupIntakeSinkWithIndexPointer(
-          stream, store, pointerKey, "text", "doc_id", target)
-        .trigger(Trigger.ProcessingTime("0 seconds")).start()
-      try {
-        // trigger 1 judges against pa and appends 100 there
-        input.addData(
-          (100L, "fresh material arriving in the first trigger about spark state stores"))
-        q.processAllAvailable()
+      // maintenance mid-stream: fold v1 (and its segment) into v2 — NO
+      // stream restart and no quiesce requirement
+      DedupOps.compactCorpusDedupIndex(spark, root)
+      assert(DedupOps.corpusIndex.currentVersion(root).contains(2))
 
-        // maintenance mid-stream: compact pa → pb (copy-on-write re-cap)
-        // and swap the pointer via the CHECKED promote — NO stream
-        // restart and no quiesce requirement (an append committing in
-        // the window would be healed; here the window is empty)
-        DedupOps.compactCorpusDedupIndex(spark, pa, pb, buckets = 2)
-        val promoted = DedupOps.promoteCorpusDedupIndexChecked(
-          spark, store, pointerKey, pb)
-        assert(promoted("healed_epochs").asInstanceOf[Seq[Long]].isEmpty)
+      // trigger 2 must judge against v2: near-dup of trigger 1's
+      // accepted doc and of the base corpus both drop; novel kept
+      input.addData(
+        (200L, "fresh material arriving in the first trigger about spark state machines"),
+        (201L, "the quick brown fox jumps over the lazy dog near the river bend"),
+        (202L, "wholly unrelated second trigger content concerning broadcast variables"))
+      q.processAllAvailable()
 
-        // trigger 2 must judge against pb: near-dup of trigger 1's
-        // accepted doc and of the base corpus both drop; novel kept
-        input.addData(
-          (200L, "fresh material arriving in the first trigger about spark state machines"),
-          (201L, "the quick brown fox jumps over the lazy dog near the river bend"),
-          (202L, "wholly unrelated second trigger content concerning broadcast variables"))
-        q.processAllAvailable()
+      // trigger 3 proves post-fold appends landed in v2: a near-dup of
+      // trigger 2's accepted doc drops
+      input.addData(
+        (300L, "wholly unrelated second trigger content concerning accumulator variables"),
+        (301L, "a completely distinct third trigger document about shuffle services"))
+      q.processAllAvailable()
+    } finally q.stop()
 
-        // trigger 3 proves post-swap appends landed in pb: a near-dup
-        // of trigger 2's accepted doc drops
-        input.addData(
-          (300L, "wholly unrelated second trigger content concerning accumulator variables"),
-          (301L, "a completely distinct third trigger document about shuffle services"))
-        q.processAllAvailable()
-      } finally q.stop()
-
-      val out = spark.read.parquet(target).select($"doc_id").as[Long].collect().toSet
-      assert(out == Set(100L, 202L, 301L), s"pointer sink kept $out")
-      // post-swap accepts live in the COMPACTED index's tables
-      val pbFp = spark.table(s"${pb}_fingerprints").count()
-      assert(pbFp == 1 + 1 + 2, s"pb fingerprints $pbFp") // corpus + t1 + t2/t3 accepts...
-    } finally {
-      drop()
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(storeRoot))
-    }
+    val out = spark.read.parquet(target).select($"doc_id").as[Long].collect().toSet
+    assert(out == Set(100L, 202L, 301L), s"pointer sink kept $out")
+    // the served v2 holds the corpus, the folded trigger-1 accept and
+    // the segments of triggers 2 and 3
+    val v2 = DedupOps.corpusIndex.versionDir(root, 2)
+    assert(DedupOps.corpusIndex.segments(v2).size == 2)
+    val fp = DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count()
+    assert(fp == 1 + 1 + 1 + 1, s"v2 fingerprints $fp")
   }
 
   test("foreachBatch upsert sink merges micro-batches with M2 semantics") {
@@ -417,13 +401,9 @@ class StreamingSpec extends SparkSpec {
     Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", s".$n.crc"))
   }
 
-  test("intake sink restart: a post-commit kill replays to a no-op; a kill between intent and epoch commit repairs and redoes") {
+  test("intake sink restart: post-commit kill no-ops, pre-commit kill redoes") {
     import graft.operators.DedupOps
-    val prefix = "graft_test_intake_restart"
-    def drop(): Unit = Seq("_fingerprints", "_shingles", "_bands")
-      .foreach(s => spark.sql(s"DROP TABLE IF EXISTS $prefix$s"))
-    drop()
-    val extPath = freshDir("graft_intake_restart_idx_").getPath
+    val root = freshDir("graft_intake_restart_idx_").getPath
     val target = freshDir("graft_intake_restart_tgt_").getPath
     val ckpt = freshDir("graft_intake_restart_ckpt_").getPath
     val src = freshDir("graft_intake_restart_src_").getPath
@@ -434,72 +414,63 @@ class StreamingSpec extends SparkSpec {
     def runOnce(): Unit = {
       val q = StreamOps.nearDupIntakeSinkWithIndexUpdate(
           spark.readStream.schema("doc_id LONG, text STRING").json(src),
-          prefix, "text", "doc_id", target)
+          root, "text", "doc_id", target)
         .option("checkpointLocation", ckpt).start()
       try q.awaitTermination() finally q.stop()
     }
     def served() = spark.read.parquet(target).select("doc_id")
       .as[Long].collect().toSet
-    def fpCount() = {
-      // the shared session caches the table's file listing; the judge
-      // path refreshes on read, this raw count must refresh itself
-      spark.catalog.refreshTable(s"${prefix}_fingerprints")
-      spark.table(s"${prefix}_fingerprints").count()
-    }
-    val ledgerDir = java.nio.file.Paths.get(extPath, "_epochs", prefix)
-    def commitFiles() = ledgerDir.toFile.listFiles()
-      .map(_.getName).filter(_.matches("epoch-\\d+\\.commit\\.json")).sorted.toSeq
-    try {
-      val corpus = Seq(
-        (1L, "the quick brown fox jumps over the lazy dog near the river bank")
-      ).toDF("doc_id", "text")
-      DedupOps.writeCorpusDedupIndex(
-        DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), prefix,
-        buckets = 2, path = Some(extPath))
+    def fpCount() = DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count()
+    val v1 = DedupOps.corpusIndex.versionDir(root, 1)
+    def segments() = DedupOps.corpusIndex.segments(v1).sorted
+    val corpus = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank")
+    ).toDF("doc_id", "text")
+    DedupOps.writeCorpusDedupIndex(
+      DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), root, buckets = 2)
 
-      // trigger 0: one novel doc kept + appended, one corpus near-dup dropped
-      addFile("f0.json", Seq(
-        (100L, "fresh material arriving in the first trigger about spark state stores"),
-        (101L, "the quick brown fox jumps over the lazy dog near the river banks")))
-      runOnce()
-      assert(served() == Set(100L), s"trigger 0 kept ${served()}")
-      val fp1 = fpCount()
-      val commits1 = commitFiles()
+    // trigger 0: one novel doc kept + committed, one corpus near-dup dropped
+    addFile("f0.json", Seq(
+      (100L, "fresh material arriving in the first trigger about spark state stores"),
+      (101L, "the quick brown fox jumps over the lazy dog near the river banks")))
+    runOnce()
+    assert(served() == Set(100L), s"trigger 0 kept ${served()}")
+    val fp1 = fpCount()
+    assert(segments() == Seq("b0"))
 
-      // KILL after the epoch commit but before the checkpoint commit:
-      // the replayed tag reads 'committed' → full no-op (no re-judge
-      // side effects, no new epoch, no partition rewrite)
-      dropCommit(ckpt, 0)
-      runOnce()
-      assert(served() == Set(100L))
-      assert(fpCount() == fp1, "a committed replay re-appended to the index")
-      assert(commitFiles() == commits1, "a committed replay minted a new epoch")
+    // KILL after the segment commit but before the checkpoint commit: the
+    // replayed batch is applied → full no-op (no re-judge, no rewrite)
+    dropCommit(ckpt, 0)
+    runOnce()
+    assert(served() == Set(100L))
+    assert(fpCount() == fp1, "a committed replay re-appended to the index")
+    assert(segments() == Seq("b0"))
 
-      // trigger 1: a near-dup of trigger 0's ACCEPTED doc drops, a novel
-      // doc keeps — then KILL between the epoch intent and its commit
-      // (tables partially/fully inserted, commit record missing): the
-      // replay must read 'torn', repair-quarantine, and redo both writes
-      addFile("f1.json", Seq(
-        (200L, "fresh material arriving in the first trigger about spark state machines"),
-        (201L, "wholly unrelated second trigger content concerning broadcast variables")))
-      runOnce()
-      assert(served() == Set(100L, 201L), s"trigger 1 kept ${served()}")
-      assert(fpCount() == fp1 + 1)
-      val newCommit = (commitFiles().toSet -- commits1.toSet).head
-      assert(Files.deleteIfExists(ledgerDir.resolve(newCommit)))
-      Files.deleteIfExists(ledgerDir.resolve(s".$newCommit.crc"))
-      dropCommit(ckpt, 1)
-      runOnce()
-      assert(served() == Set(100L, 201L),
-        "the torn replay must redo to the identical kept set")
-      assert(fpCount() == fp1 + 1, "the torn replay double-appended after repair")
-      // and the redone append is live: a near-dup of 201 now drops
-      addFile("f2.json", Seq(
-        (300L, "wholly unrelated second trigger content concerning broadcast variable"),
-        (301L, "completely novel third trigger material about shuffle services")))
-      runOnce()
-      assert(served() == Set(100L, 201L, 301L), s"final kept ${served()}")
-    } finally drop()
+    // trigger 1: a near-dup of trigger 0's ACCEPTED doc drops, a novel
+    // doc keeps — then KILL before the segment's commit marker (tables
+    // partially written, `_SUCCESS` missing): the replay re-judges
+    // against the unchanged index and rewrites both outputs
+    addFile("f1.json", Seq(
+      (200L, "fresh material arriving in the first trigger about spark state machines"),
+      (201L, "wholly unrelated second trigger content concerning broadcast variables")))
+    runOnce()
+    assert(served() == Set(100L, 201L), s"trigger 1 kept ${served()}")
+    // (no index read in between: a torn segment is one no reader ever
+    // saw committed)
+    assert(graft.io.IndexMeta.deleteTree(s"$v1/ingest/b1/_SUCCESS"))
+    graft.io.IndexMeta.deleteTree(s"$v1/ingest/b1/shingles")
+    dropCommit(ckpt, 1)
+    runOnce()
+    assert(served() == Set(100L, 201L),
+      "the torn replay must redo to the identical kept set")
+    assert(segments() == Seq("b0", "b1"))
+    assert(fpCount() == fp1 + 1, "the torn replay double-appended")
+    // and the redone segment is live: a near-dup of 201 now drops
+    addFile("f2.json", Seq(
+      (300L, "wholly unrelated second trigger content concerning broadcast variable"),
+      (301L, "completely novel third trigger material about shuffle services")))
+    runOnce()
+    assert(served() == Set(100L, 201L, 301L), s"final kept ${served()}")
   }
 
   test("postings sink restart: a kill between version commit and pointer swap replays to convergence; a post-swap kill replays to a no-op") {

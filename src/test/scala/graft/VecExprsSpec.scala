@@ -180,4 +180,25 @@ class VecExprsSpec extends SparkSpec {
       assert(r.getLong(2) >= 0L)
     }
   }
+
+  test("soak replicas 0..63 of a fixture vector quantize to distinct near-dup arrays") {
+    // SoakMain's replica nudge must survive quantization: a sub-grain
+    // step floors replicas of one vector back into exact twins
+    val base = Seq(0.1234567, -0.5, 0.9999995, 0.0, 1e-7, -0.3333333, 0.25, 0.0000009)
+    for (vecId <- Seq(0L, 7L, 499L, 123456789L)) {
+      val reps = (0 until 64).map(r => (vecId, r.toLong, base)).toDF("vec_id", "_r", "embedding")
+        .select(col("_r"), transform(col("embedding"),
+          x => x + SoakMain.replicaNudge(col("vec_id"), col("_r"))).as("nudged"))
+        .select(col("_r"), col("nudged"), VecExprs.quantize(col("nudged")).as("q"))
+        .collect()
+      assert(reps.map(_.getSeq[Long](2)).distinct.length == 64,
+        s"vec $vecId: replicas quantized into twins")
+      reps.foreach { r =>
+        r.getSeq[Double](1).zip(base).foreach { case (x, b) =>
+          assert(math.abs(x - b) <= 1e-3, s"vec $vecId replica ${r.getLong(0)}: nudge ${x - b}")
+        }
+      }
+    }
+  }
 }
+
