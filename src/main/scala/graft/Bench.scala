@@ -57,7 +57,6 @@ object Bench {
     "q82_skew_neardup_capped",  // planted hot-bucket corpus: capped LSH near-dup
     "q83_skew_ingest_capped",   // planted hot-bucket corpus: capped prepared ingest
     "q84_skew_lifecycle_compacted", // index lifecycle: append → re-cap fold → re-ingest
-                                // (the fold runs once per cached root; later reps re-ingest)
     "q102_ann_topk_pq",         // product-quantization ANN: encode + cell-restricted ADC scan
     "q103_ann_topk_pq_trained", // trained-PQ ANN: per-subspace Lloyd + encode + ADC scan
     "q107_ann_topk_ivfpq_residual", // residual IVF-PQ (IVFADC): PQ over cell-centroid residuals

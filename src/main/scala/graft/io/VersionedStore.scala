@@ -142,12 +142,12 @@ trait VersionedStore {
 
   // ---- ingest segments and the carried ledger --------------------------
 
-  protected def segmentDir(dir: String, batchId: Long): String = s"$dir/ingest/b$batchId"
+  private[graft] def segmentDir(dir: String, batchId: Long): String = s"$dir/ingest/b$batchId"
 
   /** Names (`b<id>`) of the committed segments under `dir/ingest`; torn
     * ones (no `_SUCCESS`) are invisible.
     */
-  protected def committedSegments(dir: String): Seq[String] =
+  private[graft] def committedSegments(dir: String): Seq[String] =
     IndexMeta.listChildNames(s"$dir/ingest")
       .filter(n => IndexMeta.exists(s"$dir/ingest/$n/_SUCCESS"))
 

@@ -728,6 +728,8 @@ object DedupOps {
   //   ingest/b<id>/{fingerprints,shingles,bands}/  one appended batch,
   //     complete-or-absent (`_SUCCESS` at the segment root, written last)
   //   folded_batches.txt  the batch ids folded into this version
+  // and, at the root, `intake_owner`: the one streaming query whose batch
+  // ids the segments carry (see [[claimIntakeOwner]])
   // Readers register a version's tables as external catalog tables
   // PARTITIONED by segment and BUCKETED by join key: every base dir and
   // committed segment is one partition at its own location, and the
@@ -747,8 +749,6 @@ object DedupOps {
       val dir = versionDir(root, v)
       if (exists(dir)) readManifest(dir).carried.values.flatten.toSeq else Nil
     }
-    def segments(dir: String): Seq[String] = committedSegments(dir)
-    def segment(dir: String, batchId: Long): String = segmentDir(dir, batchId)
   }
 
   private final case class IndexManifest(buckets: Int, schemas: Map[String, String],
@@ -859,23 +859,32 @@ object DedupOps {
     CorpusDedupIndex(read("fingerprints"), read("shingles"), read("bands"), Some(m.params))
   }
 
+  /** Catalog-name prefix of version `dir`'s registrations
+    * (`cdx_<root leaf>_vNNNN_<hash of the qualified dir>_`): no two
+    * versions of any roots share one, so [[pruneCorpusDedupIndex]] can
+    * drop exactly the registrations of the versions it deletes.
+    */
+  private def registrationPrefix(dir: String): String = {
+    val vPath = graft.io.IndexMeta.fs(dir).makeQualified(new org.apache.hadoop.fs.Path(dir))
+    val leaf = vPath.getParent.getParent.getName.toLowerCase.replaceAll("[^a-z0-9_]", "_")
+    val id = java.util.UUID.nameUUIDFromBytes(vPath.toString.getBytes("UTF-8")).toString.take(8)
+    s"cdx_${leaf}_${vPath.getName}_${id}_"
+  }
+
   /** Register version `dir`'s three tables in the session catalog and add
     * any committed segment not yet registered as a partition. Table names
-    * derive from the root, the version and the manifest's version id, so a
-    * registration never outlives the version it describes — a root rebuilt
-    * in place, or a fold, gets fresh names. Returns table name per index
-    * table.
+    * are the version's [[registrationPrefix]] plus the manifest's version
+    * id, so a registration never outlives the version it describes — a
+    * root rebuilt in place, or a fold, gets fresh names. Returns table
+    * name per index table.
     */
   private def registerVersion(spark: org.apache.spark.sql.SparkSession, root: String,
                               dir: String, m: IndexManifest): Map[String, String] =
     registerLock.synchronized {
-      val vPath = new org.apache.hadoop.fs.Path(dir)
-      val leaf = vPath.getParent.getParent.getName.toLowerCase.replaceAll("[^a-z0-9_]", "_")
-      val id = java.util.UUID.nameUUIDFromBytes(s"$dir|${m.versionId}".getBytes("UTF-8"))
-        .toString.take(8)
-      val segs = corpusIndex.segments(dir)
+      val prefix = registrationPrefix(dir) + m.versionId.take(8)
+      val segs = corpusIndex.committedSegments(dir)
       IndexTables.map { case (name, cols) =>
-        val table = s"cdx_${leaf}_${vPath.getName}_${id}_$name"
+        val table = s"${prefix}_$name"
         val bases = m.carried.get(name).fold(Seq("base" -> s"$dir/$name"))(
           _.zipWithIndex.map { case (rel, i) => s"c$i" -> s"$root/$rel" })
         val parts = bases ++ segs.map(n => n -> s"$dir/ingest/$n/$name")
@@ -924,11 +933,43 @@ object DedupOps {
     * applied — committed here or absorbed by a fold — is a no-op. A replay
     * of a torn append rewrites its segment. Holds the root's intake claim,
     * so a fold never enumerates segments while an append is between its
-    * check and its commit. Returns true when this call wrote the segment.
+    * check and its commit. Refuses a root a streaming query owns
+    * ([[claimIntakeOwner]]). Returns true when this call wrote the segment.
     */
   def appendToCorpusDedupIndex(accepted: DataFrame, textCol: String, idCol: String,
                                root: String, batchId: Long): Boolean =
-    corpusIndex.withServedDir(root)(appendSegment(accepted, textCol, idCol, _, batchId))
+    corpusIndex.withServedDir(root) { dir =>
+      intakeOwner(root).foreach(q => throw new IllegalStateException(
+        s"corpus index at $root is fed by streaming query $q; a batch append " +
+          "would share that query's batch ids"))
+      appendSegment(accepted, textCol, idCol, dir, batchId)
+    }
+
+  /** The streaming query that feeds `root` (StreamOps'
+    * nearDupIntakeSinkWithIndexUpdate), recorded on its first trigger.
+    * Segments key on the raw micro-batch id, so a second writer's ids
+    * collide with the owner's and [[graft.io.VersionedStore.batchApplied]]
+    * would skip that writer's batches unjudged: the record turns the
+    * collision into a refusal.
+    */
+  private def intakeOwner(root: String): Option[String] =
+    graft.io.IndexMeta.readString(s"$root/intake_owner")
+
+  /** Refuse a streaming query other than `root`'s owner; record `queryId`
+    * as the owner of a root no batch was applied to yet. For a caller
+    * holding the intake claim on served version `dir`.
+    */
+  private[graft] def claimIntakeOwner(root: String, dir: String, queryId: String): Unit =
+    intakeOwner(root) match {
+      case Some(q) => if (q != queryId) throw new IllegalStateException(
+        s"corpus index at $root is fed by streaming query $q; query $queryId " +
+          "would skip every batch id that query already applied")
+      case None =>
+        if (corpusIndex.committedSegments(dir).nonEmpty || corpusIndex.foldedBatchIds(dir).nonEmpty)
+          throw new IllegalStateException(s"corpus index at $root already holds appended " +
+            s"batches; streaming query $queryId would skip those whose ids it reuses")
+        graft.io.IndexMeta.writeString(s"$root/intake_owner", queryId)
+    }
 
   /** [[appendToCorpusDedupIndex]] into version dir `dir`, for a caller
     * already holding the intake claim.
@@ -945,7 +986,7 @@ object DedupOps {
       // the shingle table feeds the shingle write AND the band derivation
       val sh = shingleHashTable(acc, textCol, idCol, m.params.n).persist()
       try {
-        val seg = corpusIndex.segment(dir, batchId)
+        val seg = corpusIndex.segmentDir(dir, batchId)
         val frames = tableFrames(CorpusDedupIndex(
           acc.select(col(idCol).as("cid"), textFingerprint(col(textCol)).as("_h")), sh,
           bandTable(minhashSignaturesFromShingles(sh, m.params.numHashes),
@@ -979,7 +1020,7 @@ object DedupOps {
     corpusIndex.withServedDir(root) { from =>
       val m = readManifest(from)
       val idx = readCorpusIndexAt(spark, root, from)
-      val segs = corpusIndex.segments(from)
+      val segs = corpusIndex.committedSegments(from)
       def relative(path: String): String = path.stripPrefix(s"$root/")
       val carried = Seq("fingerprints", "shingles").map { name =>
         name -> (m.carried.getOrElse(name, Seq(relative(s"$from/$name"))) ++
@@ -1002,10 +1043,26 @@ object DedupOps {
 
   /** Retention GC ([[graft.io.VersionedStore.pruneVersions]]): keeps the
     * served version, the `keepLatest - 1` newest superseded ones, and every
-    * version a kept one carries files from. Returns the pruned versions.
+    * version a kept one carries files from — and drops the pruned
+    * versions' catalog registrations (never at read time: a running plan
+    * over an older version lists its partitions through the catalog).
+    * Returns the pruned versions.
     */
-  def pruneCorpusDedupIndex(root: String, keepLatest: Int = 2): Seq[Int] =
-    corpusIndex.pruneVersions(root, keepLatest)
+  def pruneCorpusDedupIndex(root: String, keepLatest: Int = 2): Seq[Int] = {
+    val pruned = corpusIndex.pruneVersions(root, keepLatest)
+    // their registrations now point at deleted dirs; the catalog is shared
+    // by the context's sessions, so any session reaches every one of them
+    org.apache.spark.sql.SparkSession.getActiveSession
+      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession).foreach { spark =>
+        val catalog = spark.sessionState.catalog
+        registerLock.synchronized(pruned.foreach { v =>
+          catalog.listTables(catalog.getCurrentDatabase,
+              registrationPrefix(corpusIndex.versionDir(root, v)) + "*")
+            .foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.quotedString}"))
+        })
+      }
+    pruned
+  }
 
   /** [[incrementalDedup]] against a PRECOMPUTED corpus index: every
     * corpus-side artifact (fingerprints, shingles, band hashes) comes in

@@ -953,8 +953,10 @@ object LlmPipeline {
     // then FOLDED with re-cap (the appended family's ~0.9 × 800-wide
     // band buckets exceed skewCap and drop — the fold report must be
     // non-empty), and a second batch is judged against the folded index.
-    // The fold runs once per cached root: once batch 1 is folded in, the
-    // served version is the lifecycle's end state. The batch2 legs pin every lifecycle
+    // Every evaluation folds: it serves v1 (the build plus its batch-1
+    // segment) again, folds it into a fresh version, and prunes the
+    // previous evaluation's fold — v1 stays, the fold reads its
+    // fingerprint and shingle files. The batch2 legs pin every lifecycle
     // property: exact copies of appended docs prove the append survived
     // compaction (fingerprints are never capped); perturbed base copies
     // prove compaction preserved the base bands; 20 fresh family
@@ -966,12 +968,13 @@ object LlmPipeline {
     "q84_skew_lifecycle_compacted" -> ((s, dir) => {
       val (corpus, batch1, batch2) = skewLifecycleParts(s, dir)
       val root = cachedDedupIndex("graft_q84v3_work_", dir, corpus, skewCap)
-      DedupOps.appendToCorpusDedupIndex(batch1, "text", "doc_id", root, batchId = 1L)
       val store = DedupOps.corpusIndex
-      if (!store.foldedBatchIds(store.versionDir(root, store.servedVersion(root))).contains(1L))
-        require(DedupOps.compactCorpusDedupIndex(s, root).count() > 0,
-          "q84 lifecycle: the fold dropped no buckets — the appended hot " +
-            "family should have grown past the cap")
+      store.withIntakeClaim(root)(store.swapPointer(root, 1))
+      DedupOps.appendToCorpusDedupIndex(batch1, "text", "doc_id", root, batchId = 1L)
+      require(DedupOps.compactCorpusDedupIndex(s, root).count() > 0,
+        "q84 lifecycle: the fold dropped no buckets — the appended hot " +
+          "family should have grown past the cap")
+      DedupOps.pruneCorpusDedupIndex(root, keepLatest = 1)
       DedupOps.incrementalDedupPrepared(batch2,
           DedupOps.readCorpusDedupIndex(s, root), "text", "doc_id",
           n = 3, numHashes = 64, bands = 32, threshold = 0.5,

@@ -254,8 +254,11 @@ object StreamOps {
     * mark each of them a duplicate of itself. The resolve→judge→commit
     * window holds the root's intake claim
     * ([[graft.io.VersionedStore.withServedDir]]), mutually exclusive with
-    * folds and prunes. One logical stream owns an index root (segments key
-    * on the raw batch id, the [[vectorIngestSink]] convention).
+    * folds and prunes. One streaming query owns an index root: segments
+    * key on the raw batch id, so the first trigger records its query id
+    * ([[graft.operators.DedupOps.claimIntakeOwner]]) and any other query
+    * — a second one, or a restart on a fresh checkpoint — fails its
+    * trigger instead of skipping batch ids the owner already applied.
     */
   def nearDupIntakeSinkWithIndexUpdate(stream: DataFrame, root: String,
                         textCol: String, idCol: String, targetPath: String,
@@ -279,6 +282,7 @@ object StreamOps {
     if (batch.isEmpty) return // idle trigger: no empty partitions/segments
     val dedup = graft.operators.DedupOps
     dedup.corpusIndex.withServedDir(root) { dir =>
+      dedup.claimIntakeOwner(root, dir, streamingQueryId(batch.sparkSession))
       if (!dedup.corpusIndex.batchApplied(dir, batchId)) {
         val kept = judgeKept(batch, dedup.incrementalDedupPreparedWithCaches(batch,
           dedup.readCorpusIndexAt(batch.sparkSession, root, dir), textCol, idCol,
@@ -455,18 +459,20 @@ object StreamOps {
     ()
   }
 
-  /** Idempotence tag for one micro-batch: streaming query id (stable
-    * across restarts from the same checkpoint — the replay case) +
-    * batch id. Distinct queries (fresh checkpoints) get distinct tags,
-    * so their batch 0s don't collide.
+  /** The running streaming query's id: stable across restarts from the
+    * same checkpoint (the replay case), fresh for a fresh checkpoint.
+    */
+  private def streamingQueryId(spark: org.apache.spark.sql.SparkSession): String =
+    Option(spark.sparkContext.getLocalProperty(
+      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
+      .getOrElse("q")
+
+  /** Idempotence tag for one micro-batch: query id + batch id. Distinct
+    * queries get distinct tags, so their batch 0s don't collide.
     */
   private def intakeBatchTag(spark: org.apache.spark.sql.SparkSession,
-                             batchId: Long): String = {
-    val qid = Option(spark.sparkContext.getLocalProperty(
-      org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
-      .getOrElse("q").replace("-", "").take(12)
-    s"$qid-$batchId"
-  }
+                             batchId: Long): String =
+    s"${streamingQueryId(spark).replace("-", "").take(12)}-$batchId"
 
   /** Semi-join the batch down to the roster's `kept` docs. */
   private def judgeKept(batch: DataFrame,

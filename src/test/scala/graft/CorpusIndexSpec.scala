@@ -115,11 +115,13 @@ class CorpusIndexSpec extends SparkSpec {
 
   test("round-trips through bucketed tables, re-attaches, and matches the in-memory path") {
     val root = tmpRoot("cidx_roundtrip")
+    // first: the pointer probe resolves its filesystem through the active
+    // session, which this suite may not have started yet
+    val direct = DedupOps.incrementalDedup(newBatch, corpus, "text", "doc_id")
+      .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(!DedupOps.corpusDedupIndexExists(root))
     assert(build(root) == 1)
     assert(DedupOps.corpusDedupIndexExists(root))
-    val direct = DedupOps.incrementalDedup(newBatch, corpus, "text", "doc_id")
-      .orderBy("new_id").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     val prepared = judge(newBatch, DedupOps.readCorpusDedupIndex(spark, root))
     assert(prepared == direct, s"prepared $prepared vs direct $direct")
     assert(prepared.toMap.apply(10000L) == "exact_dup")
@@ -499,7 +501,7 @@ class CorpusIndexSpec extends SparkSpec {
     val viaRebuild = judge(probe, DedupOps.buildCorpusDedupIndex(
       corpus.unionByName(committed.toSeq.toDF("doc_id", "text")), "text", "doc_id"))
     assert(viaLifecycle == viaRebuild)
-    assert(store.foldedBatchIds(served(root)) ++ store.segments(served(root))
+    assert(store.foldedBatchIds(served(root)) ++ store.committedSegments(served(root))
       .map(_.stripPrefix("b").toLong) == (0L until 12L).toSet)
   }
 
@@ -619,7 +621,15 @@ class CorpusIndexSpec extends SparkSpec {
     val before = judge(later, DedupOps.readCorpusDedupIndex(spark, root))
     assert(before.toMap.apply(9100L) == "exact_dup", before.toString)
 
+    // every version was read (folds read their source), so each holds
+    // three registrations; prune drops exactly those of what it deletes
+    val leaf = new java.io.File(root).getName.toLowerCase
+    def registered(v: Int): Int = spark.catalog.listTables().collect().map(_.name)
+      .count(_.startsWith(f"cdx_${leaf}_v$v%04d_"))
+    assert((1 to 4).map(registered) == Seq(3, 3, 3, 3))
     assert(DedupOps.pruneCorpusDedupIndex(root) == Seq(1, 2))
+    assert((1 to 4).map(registered) == Seq(0, 0, 3, 3),
+      "the pruned versions' catalog registrations must go with their dirs")
     assert(DedupOps.pruneCorpusDedupIndex(root, keepLatest = 1).isEmpty,
       "v3 is referenced by the served v4 and must stay")
     assert(store.exists(store.versionDir(root, 3)) && store.exists(store.versionDir(root, 4)))

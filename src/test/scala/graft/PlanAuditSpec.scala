@@ -467,8 +467,8 @@ class PlanAuditSpec extends SparkSpec {
     // stage stays bucketed (no all-pairs join)
     val p = plan("q78_incremental_dedup_prepared")
     // registered table names embed the cached root's name (cdx_<root>_
-    // v<N>_<id>_<table>); the root moved from v2 to v3 with the
-    // versioned-root layout
+    // v<N>_<dir hash>_<version id>_<table>); the root moved from v2 to
+    // v3 with the versioned-root layout
     assert(p.contains("graft_q78v3_index"),
       "corpus side is not read from the prepared bucketed index")
     assert(p.contains("Bucketed: true"),

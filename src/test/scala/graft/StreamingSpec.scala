@@ -243,6 +243,58 @@ class StreamingSpec extends SparkSpec {
     assert(out == Set(100L, 202L), s"self-updating sink kept $out")
   }
 
+  test("a second query on an owned intake root fails instead of skipping its batches") {
+    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.DedupOps
+    val target = Files.createTempDirectory("graft_ndo_sink").resolve("t").toString
+    val root = Files.createTempDirectory("graft_ndo_idx").toString
+    val corpus = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog near the river bank")
+    ).toDF("doc_id", "text")
+    DedupOps.writeCorpusDedupIndex(
+      DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), root, buckets = 2)
+    def start(input: MemoryStream[(Long, String)]) = StreamOps.nearDupIntakeSinkWithIndexUpdate(
+        input.toDF().toDF("doc_id", "text"), root, "text", "doc_id", target)
+      .trigger(Trigger.ProcessingTime("0 seconds")).start()
+    def kept() = spark.read.parquet(target).select("doc_id").as[Long].collect().toSet
+    def segments() = DedupOps.corpusIndex.committedSegments(DedupOps.corpusIndex.versionDir(root, 1))
+
+    // the first query owns the root: its batch 0 lands as segment b0
+    val in1 = MemoryStream[(Long, String)]
+    val q1 = start(in1)
+    try {
+      in1.addData((100L, "fresh material arriving in the first trigger about spark state stores"))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    assert(kept() == Set(100L) && segments() == Seq("b0"))
+
+    // a second query (fresh checkpoint) also numbers its first batch 0:
+    // batchApplied(b0) is true, so it would skip a novel doc unjudged —
+    // the owner record stops it instead
+    val in2 = MemoryStream[(Long, String)]
+    val q2 = start(in2)
+    val err = try {
+      in2.addData((200L, "wholly unrelated second query content concerning broadcast variables"))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q2.processAllAvailable())
+    } finally q2.stop()
+    assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("is fed by streaming query")), err)
+    assert(kept() == Set(100L) && segments() == Seq("b0"))
+    // a batch append would share the owner's ids too
+    intercept[IllegalStateException](DedupOps.appendToCorpusDedupIndex(
+      Seq((300L, "a batch-appended doc")).toDF("doc_id", "text"), "text", "doc_id", root, 1L))
+
+    // and a stream refuses a root that batch appends already fed
+    val batchRoot = Files.createTempDirectory("graft_ndo_batch_idx").toString
+    DedupOps.writeCorpusDedupIndex(
+      DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), batchRoot, buckets = 2)
+    assert(DedupOps.appendToCorpusDedupIndex(
+      Seq((300L, "a batch-appended doc")).toDF("doc_id", "text"), "text", "doc_id", batchRoot, 0L))
+    assert(intercept[IllegalStateException](DedupOps.claimIntakeOwner(batchRoot,
+      DedupOps.corpusIndex.versionDir(batchRoot, 1), "query")).getMessage
+      .contains("already holds appended batches"))
+  }
+
   test("pointer-resolved intake rolls onto a compacted index mid-stream") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.DedupOps
@@ -293,7 +345,7 @@ class StreamingSpec extends SparkSpec {
     // the served v2 holds the corpus, the folded trigger-1 accept and
     // the segments of triggers 2 and 3
     val v2 = DedupOps.corpusIndex.versionDir(root, 2)
-    assert(DedupOps.corpusIndex.segments(v2).size == 2)
+    assert(DedupOps.corpusIndex.committedSegments(v2).size == 2)
     val fp = DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count()
     assert(fp == 1 + 1 + 1 + 1, s"v2 fingerprints $fp")
   }
@@ -422,7 +474,7 @@ class StreamingSpec extends SparkSpec {
       .as[Long].collect().toSet
     def fpCount() = DedupOps.readCorpusDedupIndex(spark, root).fingerprints.count()
     val v1 = DedupOps.corpusIndex.versionDir(root, 1)
-    def segments() = DedupOps.corpusIndex.segments(v1).sorted
+    def segments() = DedupOps.corpusIndex.committedSegments(v1).sorted
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank")
     ).toDF("doc_id", "text")
