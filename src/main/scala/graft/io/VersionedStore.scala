@@ -20,6 +20,8 @@ import org.apache.spark.sql.DataFrame
   *   - `versions/vNNNN/folded_batches.txt` — the carried ledger of batch
   *     ids a fold or rebuild already absorbed.
   *   - `_claims/intake/` — the per-root intake/maintenance mutex.
+  *   - `intake_owner` — the one streaming query that feeds the root
+  *     through [[intakeTrigger]], written on its first trigger.
   *
   * Invariants:
   *  1. Immutability is the recovery story. Every mutation writes a NEW
@@ -38,7 +40,11 @@ import org.apache.spark.sql.DataFrame
   *     trigger — foreachBatch re-run, checkpoint restart, replay across
   *     a swap — converge instead of double-count. [[publish]] carries
   *     the ledger INTO the new version (never referenced from an old
-  *     one), so retention GC cannot resurrect a replay.
+  *     one), so retention GC cannot resurrect a replay. Segments key
+  *     on the raw micro-batch id, so ownership is the store's too: the
+  *     root records the one streaming query that feeds it, and any other
+  *     query's trigger fails instead of finding its batch ids applied
+  *     and skipping them ([[intakeTrigger]]).
   *  4. Intake and maintenance serialize on one per-root claim
   *     ([[withIntakeClaim]]). A trigger's resolve→write→commit window and
   *     every publish or prune hold it, taken exactly once per mutation
@@ -90,6 +96,33 @@ trait VersionedStore {
   /** Hold the intake claim and run `body` on the served version's dir. */
   def withServedDir[T](root: String)(body: String => T): T =
     withIntakeClaim(root)(body(versionDir(root, servedVersion(root))))
+
+  /** The streaming query that feeds `root` through [[intakeTrigger]]. */
+  private[graft] def intakeOwner(root: String): Option[String] =
+    IndexMeta.readString(s"$root/intake_owner")
+
+  /** One trigger of streaming query `queryId` into `root`: under the
+    * intake claim, resolve the served version, record `queryId` as the
+    * root's owner on its first trigger (refusing a root that already
+    * holds appended batches) or refuse any other query, skip batch
+    * `batchId` if it is already applied, and otherwise run `write` on the
+    * served version's dir.
+    */
+  private[graft] def intakeTrigger(root: String, queryId: String, batchId: Long)(
+      write: String => Unit): Unit =
+    withServedDir(root) { dir =>
+      intakeOwner(root) match {
+        case Some(q) => if (q != queryId) throw new IllegalStateException(
+          s"$family at $root is fed by streaming query $q; query $queryId " +
+            "would skip every batch id that query already applied")
+        case None =>
+          if (committedSegments(dir).nonEmpty || foldedBatchIds(dir).nonEmpty)
+            throw new IllegalStateException(s"$family at $root already holds appended " +
+              s"batches; streaming query $queryId would skip those whose ids it reuses")
+          IndexMeta.writeString(s"$root/intake_owner", queryId)
+      }
+      if (!batchApplied(dir, batchId)) write(dir)
+    }
 
   /** Point readers at version `v`; refuses a torn target. */
   def swapPointer(root: String, v: Int): Unit = {

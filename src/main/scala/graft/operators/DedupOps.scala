@@ -448,17 +448,14 @@ object DedupOps {
   def lshEmbeddingNearDupPairs(emb: DataFrame, idCol: String, vecCol: String,
                                dim: Int, bands: Int = 16, planesPerBand: Int = 8,
                                t2: Double = 0.81,
-                               cacheQuantized: Boolean = true,
                                maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
     // the quantized table feeds three consumers (banding + both verify
     // joins) — persist it once, same rationale as the q28 shingle table;
     // at corpus scale write it as parquet instead
-    val q0 = quantized(emb, idCol, vecCol)
-    val q = if (cacheQuantized)
-      q0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else q0
+    val q = quantized(emb, idCol, vecCol)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ±1 plane components, precomputed driver-side (bands·planes × dim ints)
     val signs: Array[Array[Long]] =
       Array.tabulate(bands * planesPerBand, dim)((p, d) => SimilarityOps.planeSign(p, d).toLong)
@@ -728,8 +725,6 @@ object DedupOps {
   //   ingest/b<id>/{fingerprints,shingles,bands}/  one appended batch,
   //     complete-or-absent (`_SUCCESS` at the segment root, written last)
   //   folded_batches.txt  the batch ids folded into this version
-  // and, at the root, `intake_owner`: the one streaming query whose batch
-  // ids the segments carry (see [[claimIntakeOwner]])
   // Readers register a version's tables as external catalog tables
   // PARTITIONED by segment and BUCKETED by join key: every base dir and
   // committed segment is one partition at its own location, and the
@@ -934,41 +929,16 @@ object DedupOps {
     * of a torn append rewrites its segment. Holds the root's intake claim,
     * so a fold never enumerates segments while an append is between its
     * check and its commit. Refuses a root a streaming query owns
-    * ([[claimIntakeOwner]]). Returns true when this call wrote the segment.
+    * ([[graft.io.VersionedStore.intakeTrigger]]): it would share that
+    * query's batch ids. Returns true when this call wrote the segment.
     */
   def appendToCorpusDedupIndex(accepted: DataFrame, textCol: String, idCol: String,
                                root: String, batchId: Long): Boolean =
     corpusIndex.withServedDir(root) { dir =>
-      intakeOwner(root).foreach(q => throw new IllegalStateException(
+      corpusIndex.intakeOwner(root).foreach(q => throw new IllegalStateException(
         s"corpus index at $root is fed by streaming query $q; a batch append " +
           "would share that query's batch ids"))
       appendSegment(accepted, textCol, idCol, dir, batchId)
-    }
-
-  /** The streaming query that feeds `root` (StreamOps'
-    * nearDupIntakeSinkWithIndexUpdate), recorded on its first trigger.
-    * Segments key on the raw micro-batch id, so a second writer's ids
-    * collide with the owner's and [[graft.io.VersionedStore.batchApplied]]
-    * would skip that writer's batches unjudged: the record turns the
-    * collision into a refusal.
-    */
-  private def intakeOwner(root: String): Option[String] =
-    graft.io.IndexMeta.readString(s"$root/intake_owner")
-
-  /** Refuse a streaming query other than `root`'s owner; record `queryId`
-    * as the owner of a root no batch was applied to yet. For a caller
-    * holding the intake claim on served version `dir`.
-    */
-  private[graft] def claimIntakeOwner(root: String, dir: String, queryId: String): Unit =
-    intakeOwner(root) match {
-      case Some(q) => if (q != queryId) throw new IllegalStateException(
-        s"corpus index at $root is fed by streaming query $q; query $queryId " +
-          "would skip every batch id that query already applied")
-      case None =>
-        if (corpusIndex.committedSegments(dir).nonEmpty || corpusIndex.foldedBatchIds(dir).nonEmpty)
-          throw new IllegalStateException(s"corpus index at $root already holds appended " +
-            s"batches; streaming query $queryId would skip those whose ids it reuses")
-        graft.io.IndexMeta.writeString(s"$root/intake_owner", queryId)
     }
 
   /** [[appendToCorpusDedupIndex]] into version dir `dir`, for a caller

@@ -628,20 +628,10 @@ object SimilarityOps {
     * Returns one row per input vector: (vid, cell, dup_of, kept).
     */
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, maxIter: Int, t2: Double,
-      cacheLabeled: Boolean = true, maxCell: Int = NoCellCap,
+      k: Int, maxIter: Int, t2: Double, maxCell: Int = NoCellCap,
       cacheQuantized: Boolean = false): DataFrame = {
-    // with no labeled cache the quantized frame is the verdict plan's
-    // only working cache — the plain wrapper cannot release it after
-    // the caller's action, so that combination would leak it for the
-    // session (the round-19 ADVICE leak, on a different flag pairing);
-    // refuse loudly and point at the variant that can release it
-    require(!cacheQuantized || cacheLabeled,
-      "semanticDedup: cacheQuantized=true with cacheLabeled=false would leak " +
-        "the quantized frame for the session — use semanticDedupWithCaches " +
-        "and unpersist after the final action")
     val (verdicts, caches) = semanticDedupWithCaches(emb, idCol, vecCol,
-      k, maxIter, t2, cacheLabeled, maxCell, cacheQuantized)
+      k, maxIter, t2, maxCell, cacheQuantized)
     releaseCapWidths(caches)
     releaseQuantized(caches)
     verdicts
@@ -691,7 +681,6 @@ object SimilarityOps {
     */
   def semanticDedupWithCaches(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, maxIter: Int, t2: Double,
-      cacheLabeled: Boolean = true,
       maxCell: Int = NoCellCap,
       cacheQuantized: Boolean = false): (DataFrame, Seq[DataFrame]) = {
     // cacheQuantized: single derivation of the input — the quantized
@@ -713,12 +702,10 @@ object SimilarityOps {
     // and the verdict join-back) — persist it once, the q28/q55
     // rationale; at corpus scale write it as parquet instead (it IS the
     // cell-partitioned index an IVF build would store anyway)
-    val q0 = qf
+    val q = qf
       .withColumn("cell", assignCells(col("qv"), cents))
       .withColumn("n2", VecExprs.dotLong(col("qv"), col("qv")).cast("double"))
-    val q = if (cacheLabeled)
-      q0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else q0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (judged, capCaches) = boundCells(q, maxCell, "semanticDedup")
     val a = judged.select(col("cell"), col("vid").as("va"), col("qv").as("qa"),
       col("n2").as("na2"))
@@ -734,9 +721,7 @@ object SimilarityOps {
     val verdicts = q.select(col("vid"), col("cell"))
       .join(dups, Seq("vid"), "left")
       .withColumn("kept", col("dup_of").isNull)
-    (verdicts,
-      (if (cacheQuantized) Seq(qf) else Nil) ++
-      (if (cacheLabeled) Seq(q) else Nil) ++ capCaches)
+    (verdicts, (if (cacheQuantized) Seq(qf) else Nil) ++ Seq(q) ++ capCaches)
   }
 
   /** Incremental SemDeDup: judge a NEW batch of embeddings against an
@@ -763,9 +748,9 @@ object SimilarityOps {
     */
   def incrementalSemanticDedup(newBatch: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, maxIter: Int, t2: Double,
-      cacheLabeled: Boolean = true, maxCell: Int = NoCellCap): DataFrame = {
+      maxCell: Int = NoCellCap): DataFrame = {
     val (verdicts, caches) = incrementalSemanticDedupWithCaches(newBatch,
-      corpus, idCol, vecCol, k, maxIter, t2, cacheLabeled, maxCell)
+      corpus, idCol, vecCol, k, maxIter, t2, maxCell)
     releaseCapWidths(caches)
     verdicts
   }
@@ -776,7 +761,6 @@ object SimilarityOps {
     */
   def incrementalSemanticDedupWithCaches(newBatch: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, maxIter: Int, t2: Double,
-      cacheLabeled: Boolean = true,
       maxCell: Int = NoCellCap): (DataFrame, Seq[DataFrame]) = {
     // every caller's corpus here is a cheap scan (embeddings parquet),
     // so the quantized frame is NOT persisted: re-deriving it per
@@ -786,14 +770,11 @@ object SimilarityOps {
     // cacheQuantized, not this path.
     val cents = kmeansTrainQ(corpus.select(col(idCol).cast("long").as("vid"),
       quantize(col(vecCol)).as("qv")), k, maxIter)
-    def labeled(df: DataFrame): DataFrame = {
-      val l = df.select(col(idCol).cast("long").as("vid"),
-          quantize(col(vecCol)).as("qv"))
+    def labeled(df: DataFrame): DataFrame =
+      df.select(col(idCol).cast("long").as("vid"), quantize(col(vecCol)).as("qv"))
         .withColumn("cell", assignCells(col("qv"), cents))
         .withColumn("n2", VecExprs.dotLong(col("qv"), col("qv")).cast("double"))
-      if (cacheLabeled) l.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else l
-    }
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val corpusL = labeled(corpus)
     val batchL = labeled(newBatch)
     // the cap bounds each pair leg by ITS candidate-mass side: a hot
@@ -804,8 +785,7 @@ object SimilarityOps {
     val (batchJ, batchCaps) =
       boundCells(batchL, maxCell, "incrementalSemanticDedup.batch")
     val verdicts = judgeLabeledBatch(batchL, corpusJ, batchJ, t2)
-    (verdicts, (if (cacheLabeled) Seq(corpusL, batchL) else Nil) ++
-      corpusCaps ++ batchCaps)
+    (verdicts, Seq(corpusL, batchL) ++ corpusCaps ++ batchCaps)
   }
 
   /** The judging core of [[incrementalSemanticDedup]] over PRE-LABELED

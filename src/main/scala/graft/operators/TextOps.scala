@@ -241,10 +241,8 @@ object TextOps {
   val QcEtaNum = 4L
 
   def qualityClassifier(df: DataFrame, textCol: String, idCol: String,
-      isTarget: Column, steps: Int = 3,
-      cacheFeatures: Boolean = true): DataFrame =
-    qualityClassifierWithCaches(df, textCol, idCol, isTarget, steps,
-      cacheFeatures)._1
+      isTarget: Column, steps: Int = 3): DataFrame =
+    qualityClassifierWithCaches(df, textCol, idCol, isTarget, steps)._1
 
   /** [[qualityClassifier]] plus the internally persisted feature table
     * for caller unpersist — the spanDedupWithCaches convention (the
@@ -252,13 +250,12 @@ object TextOps {
     * come AFTER the caller's final action on it).
     */
   def qualityClassifierWithCaches(df: DataFrame, textCol: String, idCol: String,
-      isTarget: Column, steps: Int = 3,
-      cacheFeatures: Boolean = true): (DataFrame, Seq[DataFrame]) = {
+      isTarget: Column, steps: Int = 3): (DataFrame, Seq[DataFrame]) = {
     // collect_set IS the binary-feature distinct: the set of occupied
     // buckets per doc (≤256 two-char ids), deduplicated map-side under
     // the one groupBy — the old explode→distinct (doc, bucket) table
     // at doc grain
-    val feat0 = df.select(col(idCol).cast("long").as("doc_id"),
+    val feat = df.select(col(idCol).cast("long").as("doc_id"),
         isTarget.as("is_target"),
         explode(words(col(textCol))).as("tk"))
       .filter(col("tk") =!= "")
@@ -267,9 +264,7 @@ object TextOps {
       .groupBy("doc_id")
       .agg(collect_set(col("bucket")).as("bs"),
         first(col("is_target")).as("is_target"))
-    val feat = if (cacheFeatures)
-      feat0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else feat0
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val n = feat.count()
     require(n > 0, "qualityClassifier: no documents with tokens")
     val occupied = feat.select(explode(col("bs")).as("bucket")).distinct()
@@ -301,7 +296,7 @@ object TextOps {
     val margins = feat.filter(!col("is_target"))
       .select(col("doc_id"), marginOf(w).as("margin_q"))
       .withColumn("predicted_target", col("margin_q") > 0L)
-    (margins, if (cacheFeatures) Seq(feat) else Nil)
+    (margins, Seq(feat))
   }
 
   /** Bigram language-model surprisal — the CCNet-style quality signal:

@@ -297,12 +297,13 @@ object LlmPipeline {
       org.apache.commons.io.FileUtils.forceDeleteOnExit(ckpt)
       val (model, codes) = VectorIndex.build(base, "vec_id", "embedding", "label",
         dim = 64, m = 4, k = 16)
-      VectorIndex.write(model, codes, root.getPath)
+      VectorIndex.writeVersion(model, codes, root.getPath, 1)
+      VectorIndex.swapPointer(root.getPath, 1)
       val input = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Seq[Double])]
       val q = graft.streaming.StreamOps.vectorIngestSink(
-          input.toDF().toDF("vec_id", "embedding"),
-          "vec_id", "embedding", model, root.getPath)
+          input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
+          root.getPath, dim = 64, m = 4, k = 16)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
         .option("checkpointLocation", ckpt.getPath)
         .start()
@@ -315,7 +316,8 @@ object LlmPipeline {
       try (0 until 3).foreach(r => feed(rest.filter(col("vec_id") % 3 === r)))
       finally q.stop()
       VectorIndex.query(emb, "vec_id", "embedding", model,
-          VectorIndex.readCodesWithIngest(s, root.getPath), rawVectors = emb,
+          VectorIndex.readCodesWithIngest(s, VectorIndex.versionDir(root.getPath, 1)),
+          rawVectors = emb,
           nprobe = 2, shortlist = 10, topK = 3)
         .orderBy("query_id", "rank")
     }),
@@ -346,7 +348,7 @@ object LlmPipeline {
         .MemoryStream[(Long, Seq[Double])]
       val q = graft.streaming.StreamOps.vectorIngestSink(
           input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-          model, VectorIndex.versionDir(root.getPath, 1))
+          root.getPath, dim = 64, m = 4, k = 16)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
         .option("checkpointLocation", ckpt.getPath)
         .start()
@@ -392,7 +394,7 @@ object LlmPipeline {
       VectorIndex.swapPointer(root.getPath, 1)
       val input = org.apache.spark.sql.execution.streaming.runtime
         .MemoryStream[(Long, Seq[Double])]
-      val q = graft.streaming.StreamOps.vectorIngestSinkVersioned(
+      val q = graft.streaming.StreamOps.vectorIngestSink(
           input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
           root.getPath, dim = 64, m = 4, k = 16)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))

@@ -219,21 +219,14 @@ object StreamOps {
                         threshold: Double = 0.5,
                         maxBucket: Int = graft.operators.DedupOps.DefaultMaxBucket)
   : DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // idle triggers write nothing
-        if (!batch.isEmpty) {
-          val kept = judgeKept(batch, graft.operators.DedupOps
-            .incrementalDedupPreparedWithCaches(batch, index, textCol, idCol,
-              n, numHashes, bands, threshold, maxBucket), idCol)
-          writeKeptPartition(kept, targetPath,
-            intakeBatchTag(batch.sparkSession, batchId))
-          kept.unpersist()
-        }
-        ()
-      }
+    nonEmptyBatchSink(stream) { (batch, batchId) =>
+      val kept = judgeKept(batch, graft.operators.DedupOps
+        .incrementalDedupPreparedWithCaches(batch, index, textCol, idCol,
+          n, numHashes, bands, threshold, maxBucket), idCol)
+      writeKeptPartition(kept, targetPath,
+        intakeBatchTag(batch.sparkSession, batchId))
+      kept.unpersist()
+    }
 
   /** Near-dup intake that maintains the persisted corpus index at `root`
     * ([[graft.operators.DedupOps.writeCorpusDedupIndex]]): each trigger
@@ -251,12 +244,10 @@ object StreamOps {
     * verdicts, idempotent rewrite; one whose segment committed, or was
     * absorbed by a fold (the carried ledger), skips ENTIRELY, because
     * re-judging a batch against an index holding its own kept docs would
-    * mark each of them a duplicate of itself. The resolve→judge→commit
-    * window holds the root's intake claim
-    * ([[graft.io.VersionedStore.withServedDir]]), mutually exclusive with
-    * folds and prunes. One streaming query owns an index root: segments
-    * key on the raw batch id, so the first trigger records its query id
-    * ([[graft.operators.DedupOps.claimIntakeOwner]]) and any other query
+    * mark each of them a duplicate of itself. Claim, resolve, ownership
+    * and skip are the store's one intake step
+    * ([[graft.io.VersionedStore.intakeTrigger]]), mutually exclusive with
+    * folds and prunes; one streaming query owns the root, and any other
     * — a second one, or a restart on a fresh checkpoint — fails its
     * trigger instead of skipping batch ids the owner already applied.
     */
@@ -266,24 +257,10 @@ object StreamOps {
                         threshold: Double = 0.5,
                         maxBucket: Int = graft.operators.DedupOps.DefaultMaxBucket)
   : DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        intakeUpdateTrigger(batch, batchId, root, textCol, idCol,
-          targetPath, n, numHashes, bands, threshold, maxBucket)
-        ()
-      }
-
-  private[graft] def intakeUpdateTrigger(batch: DataFrame, batchId: Long,
-                        root: String, textCol: String, idCol: String,
-                        targetPath: String, n: Int, numHashes: Int, bands: Int,
-                        threshold: Double, maxBucket: Int): Unit = {
-    if (batch.isEmpty) return // idle trigger: no empty partitions/segments
-    val dedup = graft.operators.DedupOps
-    dedup.corpusIndex.withServedDir(root) { dir =>
-      dedup.claimIntakeOwner(root, dir, streamingQueryId(batch.sparkSession))
-      if (!dedup.corpusIndex.batchApplied(dir, batchId)) {
+    nonEmptyBatchSink(stream) { (batch, batchId) =>
+      val dedup = graft.operators.DedupOps
+      dedup.corpusIndex.intakeTrigger(root, streamingQueryId(batch.sparkSession),
+          batchId) { dir =>
         val kept = judgeKept(batch, dedup.incrementalDedupPreparedWithCaches(batch,
           dedup.readCorpusIndexAt(batch.sparkSession, root, dir), textCol, idCol,
           n, numHashes, bands, threshold, maxBucket), idCol)
@@ -293,75 +270,42 @@ object StreamOps {
         } finally kept.unpersist()
       }
     }
-    ()
-  }
 
-  /** Streaming ingest into a persisted vector index
-    * ([[graft.operators.VectorIndex]]): each micro-batch of
-    * (id, embedding) rows is encoded against the STORED model —
-    * coarse-assign to the nearest stored centroid, residualize,
-    * PQ-encode with the stored codebooks, the standard between-retrains
-    * write path — and lands as its own committed ingest segment via
-    * [[graft.operators.VectorIndex.appendBatch]]. Exactly-once under
-    * replay: a re-run trigger finds its `ingest/b<batchId>` segment
-    * complete and no-ops, or overwrites its own torn remnant; it never
-    * double-appends and never touches another batch's files. Per-trigger
-    * cost is batch-proportional (batch-sized encode + one segment
-    * write); the corpus participates only through the driver-baked model
-    * constants, so the same sink holds against a 100 TB index. Readers
-    * serve base + committed segments via
-    * [[graft.operators.VectorIndex.readCodesWithIngest]]; a periodic
-    * retrain ([[graft.operators.VectorIndex.retrainAndSwap]]) folds
-    * segments into the next version and resets model staleness.
-    */
-  def vectorIngestSink(stream: DataFrame, idCol: String, vecCol: String,
-                       model: graft.operators.VectorIndex.Model,
-                       indexPath: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.VectorIndex.appendBatch(
-            batch, idCol, vecCol, model, indexPath, batchId)
-        ()
-      }
-
-  /** [[vectorIngestSink]] resolving the SERVED index version per trigger
-    * (the [[nearDupIntakeSinkWithIndexUpdate]] treatment applied to the
-    * vector index): each micro-batch reads `root/POINTER`, loads that
-    * version's model (a model-sized collect: cells·dim + m·k·sub longs),
-    * and commits its segment inside that version's directory — so a
-    * maintenance job's [[graft.operators.VectorIndex.foldIngestAndSwap]]
-    * or [[graft.operators.VectorIndex.retrainAndSwap]] rolls the
-    * running ingest onto the new version with NO stream restart.
-    * Exactly-once holds ACROSS the swap: fold/retrain carry the
-    * folded-batch ledger into the new version, so a trigger that
-    * committed its segment to the old version and replays after the
-    * swap no-ops instead of re-appending rows the fold already
-    * consolidated (VectorIndexSpec pins the cross-swap replay).
-    * The resolve→encode→commit window holds the per-root intake claim
-    * ([[graft.io.VersionedStore.withServedDir]]), mutually exclusive with
+  /** Streaming ingest into the persisted vector index at `root`
+    * ([[graft.operators.VectorIndex]]): each trigger resolves the SERVED
+    * version, loads its model (a model-sized collect: cells·dim + m·k·sub
+    * longs), encodes the micro-batch of (id, embedding) rows against it —
+    * coarse-assign to the nearest stored centroid, residualize, PQ-encode
+    * with the stored codebooks, the standard between-retrains write path
+    * — and commits it as that version's ingest segment `b<id>`
+    * ([[graft.operators.VectorIndex.appendBatch]]). Per-trigger cost is
+    * batch-proportional: the corpus participates only through the
+    * driver-baked model constants. Readers serve base + committed
+    * segments via [[graft.operators.VectorIndex.readCodesWithIngest]].
+    *
+    * A maintenance [[graft.operators.VectorIndex.foldIngestAndSwap]] or
+    * [[graft.operators.VectorIndex.retrainAndSwap]] rolls the running
+    * ingest onto the new version with NO stream restart. Exactly-once
+    * holds across the swap: fold/retrain carry the folded-batch ledger,
+    * so a trigger that committed to the old version and replays after
+    * the swap no-ops (VectorIndexSpec pins the cross-swap replay); a
+    * replay over a torn segment rewrites it. Claim, resolve, ownership
+    * and skip are the store's one intake step
+    * ([[graft.io.VersionedStore.intakeTrigger]]), mutually exclusive with
     * fold/retrain/prune: a fold that enumerated segments before this
     * trigger's commit but swapped after it would silently drop the
-    * batch's rows from every future version (the round-17 SemanticIndex
-    * race, identical on this family); a prune could delete the resolved
-    * dir mid-encode.
+    * batch's rows from every future version, and a prune could delete
+    * the resolved dir mid-encode. One streaming query owns the root.
     */
-  def vectorIngestSinkVersioned(stream: DataFrame, idCol: String,
-                                vecCol: String, root: String,
-                                dim: Int, m: Int, k: Int): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) graft.operators.VectorIndex.withServedDir(root) { dir =>
-          graft.operators.VectorIndex.appendBatch(batch, idCol, vecCol,
-            graft.operators.VectorIndex.readModel(batch.sparkSession, dir, dim, m, k),
-            dir, batchId)
-        }
-        ()
+  def vectorIngestSink(stream: DataFrame, idCol: String, vecCol: String,
+                       root: String, dim: Int, m: Int, k: Int): DataStreamWriter[Row] =
+    nonEmptyBatchSink(stream) { (batch, batchId) =>
+      val vi = graft.operators.VectorIndex
+      vi.intakeTrigger(root, streamingQueryId(batch.sparkSession), batchId) { dir =>
+        vi.appendBatch(batch, idCol, vecCol,
+          vi.readModel(batch.sparkSession, dir, dim, m, k), dir, batchId)
       }
+    }
 
   /** Streaming ingest into the persisted BM25 postings index
     * ([[graft.operators.SearchOps.appendPostingsIndex]]): each
@@ -378,15 +322,10 @@ object StreamOps {
     */
   def postingsIngestSink(stream: DataFrame, textCol: String, idCol: String,
                          root: String): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.SearchOps.appendPostingsIndex(batch, textCol,
-            idCol, root, intakeBatchTag(batch.sparkSession, batchId))
-        ()
-      }
+    nonEmptyBatchSink(stream) { (batch, batchId) =>
+      graft.operators.SearchOps.appendPostingsIndex(batch, textCol,
+        idCol, root, intakeBatchTag(batch.sparkSession, batchId))
+    }
 
   /** Streaming semantic-dedup intake against the persisted trained-cell
     * layout ([[graft.operators.SemanticIndex]]) — the deployment story
@@ -395,15 +334,10 @@ object StreamOps {
     * labeled with the SERVED version's stored model (pointer resolved
     * per trigger, so a maintenance [[graft.operators.SemanticIndex
     * .foldIngestAndSwap]] rolls the running intake onto the new version
-    * with NO stream restart — fold and trigger are serialized by the
-    * store's intake claim ([[graft.io.VersionedStore.withServedDir]]),
-    * so a fold can never enumerate segments while a trigger is between
-    * its batchApplied check and its segment commit), judged against the
-    * stored labeled corpus PLUS every earlier trigger's committed kept
-    * rows, its verdict
-    * rows written to `targetPath/batch=b<id>`, and its KEPT rows
-    * committed as an ingest segment so later batches dedup against
-    * them.
+    * with NO stream restart), judged against the stored labeled corpus
+    * PLUS every earlier trigger's committed kept rows, its verdict rows
+    * written to `targetPath/batch=b<id>`, and its KEPT rows committed as
+    * an ingest segment so later batches dedup against them.
     *
     * Exactly-once, in commit order: verdict partition (deterministic
     * overwrite) THEN segment append (the commit point). A replayed
@@ -412,52 +346,51 @@ object StreamOps {
     * landed (or was absorbed by a fold — the carried ledger) skips
     * ENTIRELY, because re-judging a batch against an index that already
     * contains its own kept rows would mark each of them a duplicate of
-    * itself. Per-trigger cost is batch-proportional: the corpus
-    * participates as a cell-pruned scan + map-side partial min, never
-    * an exchange. One logical stream owns an index root (segments key
-    * on the raw batch id, the [[vectorIngestSink]] convention).
+    * itself. Claim, resolve, ownership and skip are the store's one
+    * intake step ([[graft.io.VersionedStore.intakeTrigger]]): a fold can
+    * never enumerate segments while a trigger is between its skip check
+    * and its segment commit, and one streaming query owns the root.
+    * Per-trigger cost is batch-proportional: the corpus participates as
+    * a cell-pruned scan + map-side partial min, never an exchange.
     */
   def semanticIntakeSink(stream: DataFrame, idCol: String, vecCol: String,
                          root: String, targetPath: String,
                          t2: Double): DataStreamWriter[Row] =
-    stream.writeStream
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        semanticIntakeTrigger(batch, batchId, root, idCol, vecCol,
-          targetPath, t2)
-        ()
-      }
+    nonEmptyBatchSink(stream)(
+      semanticIntakeTrigger(_, _, root, idCol, vecCol, targetPath, t2))
 
   private[graft] def semanticIntakeTrigger(batch: DataFrame, batchId: Long,
       root: String, idCol: String, vecCol: String, targetPath: String,
       t2: Double): Unit = {
-    if (batch.isEmpty) return // idle trigger: no empty partitions/segments
-    // The whole resolve→judge→append window holds the intake claim,
-    // mutually exclusive with foldIngestAndSwap and pruneVersions: a
-    // fold that enumerated segments before this trigger's append (but
-    // swapped after) would silently drop the batch's kept rows from
-    // every future version, and a prune could delete the resolved dir
-    // mid-judge (round-17 ADVICE). Claim cost when no maintenance is
-    // running: two small FS ops per trigger.
-    graft.operators.SemanticIndex.withServedDir(root) { dir =>
-      if (!graft.operators.SemanticIndex.batchApplied(dir, batchId)) {
-        val (verdicts, batchL) = graft.operators.SemanticIndex.judgeBatch(
-          batch, idCol, vecCol, dir, t2)
-        // pin: the verdict frame feeds the partition write AND the kept
-        // semi-join — un-pinned, each consumer re-runs both pair legs
-        // (the judgeKept rationale)
-        val vp = verdicts.localCheckpoint(true)
-        try {
-          vp.write.mode("overwrite").parquet(s"$targetPath/batch=b$batchId")
-          val kept = batchL.join(vp.filter(col("kept")).select(col("vid")),
-            Seq("vid"), "left_semi")
-          graft.operators.SemanticIndex.appendBatch(kept, dir, batchId)
-        } finally vp.unpersist()
-      }
+    val si = graft.operators.SemanticIndex
+    si.intakeTrigger(root, streamingQueryId(batch.sparkSession), batchId) { dir =>
+      val (verdicts, batchL) = si.judgeBatch(batch, idCol, vecCol, dir, t2)
+      // pin: the verdict frame feeds the partition write AND the kept
+      // semi-join — un-pinned, each consumer re-runs both pair legs
+      // (the judgeKept rationale)
+      val vp = verdicts.localCheckpoint(true)
+      try {
+        vp.write.mode("overwrite").parquet(s"$targetPath/batch=b$batchId")
+        val kept = batchL.join(vp.filter(col("kept")).select(col("vid")),
+          Seq("vid"), "left_semi")
+        si.appendBatch(kept, dir, batchId)
+      } finally vp.unpersist()
     }
-    ()
   }
+
+  /** An append-mode AvailableNow sink that runs `body` on each non-empty
+    * micro-batch (one `isEmpty` job per trigger): idle triggers write no
+    * empty partitions, segments or versions.
+    */
+  private def nonEmptyBatchSink(stream: DataFrame)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) body(batch, batchId)
+        ()
+      }
 
   /** The running streaming query's id: stable across restarts from the
     * same checkpoint (the replay case), fresh for a fresh checkpoint.

@@ -95,7 +95,7 @@ class IndexLayoutSpec extends SparkSpec {
     assert(SemanticIndex.foldIngestAndSwap(spark, root.getPath) == 2)
     assert(SemanticIndex.pruneVersions(root.getPath, keepLatest = 1) == Seq(1))
     val v = "versions/v0002"
-    assert(layout(root) == Set("POINTER", "_claims", "versions", v,
+    assert(layout(root) == Set("POINTER", "_claims", "intake_owner", "versions", v,
         s"$v/_CLAIM.*", s"$v/_MODEL_OK", s"$v/folded_batches.txt") ++
       cells(s"$v/labeled", Seq(0, 1, 2, 3)) ++ table(s"$v/centroids"))
   }

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
+import scala.jdk.CollectionConverters._
+
 /** Structural audit of the physical plans the engine produces — the
   * properties that keep the operators viable at 100 TB, asserted so a
   * regression (a lost filter pushdown, a dropped broadcast, an accidental
@@ -512,5 +514,27 @@ class PlanAuditSpec extends SparkSpec {
     val jp = j.queryExecution.executedPlan.toString
     assert(jp.contains("BroadcastHashJoin"), "q86 roster join did not broadcast")
     assert(jp.contains("normalize_name"), "q86 lost the native expression")
+  }
+
+  test("the intake decision stays in the versioned store") {
+    // who may feed an index root, and when a replayed batch is skipped,
+    // is one store method (VersionedStore.intakeTrigger); a sink or an
+    // operator that reads the owner record, takes claims itself or
+    // re-checks the ledger re-grows the per-family copies it replaced
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val sources = {
+      val walk = java.nio.file.Files.walk(root)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    def text(p: java.nio.file.Path) = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+    val owners = Set("io/VersionedStore.scala", "io/IndexMeta.scala")
+    for (p <- sources if !owners(root.relativize(p).toString);
+         token <- Seq("intake_owner", "IndexMeta.claimDir", "IndexMeta.withIntakeClaim"))
+      assert(!text(p).contains(token), s"$p references $token outside the store")
+    val sinks = text(root.resolve("streaming/StreamOps.scala"))
+    for (call <- Seq("batchApplied", "withServedDir"))
+      assert(!sinks.contains(call), s"StreamOps calls $call: use VersionedStore.intakeTrigger")
+    assert("def vector\\w*Sink".r.findAllIn(sinks).size == 1, "StreamOps has more than one vector sink")
   }
 }

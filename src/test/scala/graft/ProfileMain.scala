@@ -189,12 +189,12 @@ object ProfileMain {
       }
     } else if (args.headOption.contains("vindexstream")) {
       // Bench-scale VECTOR-INDEX lifecycle: build v1 on half the corpus,
-      // stream the other half through vectorIngestSink in three real
-      // triggers (per-trigger latency printed), serve a query over base +
-      // segments, FOLD the segments into v2 (small-files compaction,
-      // atomic swap), re-serve (must be row-identical), then RETRAIN v3
-      // from the full corpus and serve once more. One pass, timed stages,
-      // correctness asserts inline.
+      // stream the other half through vectorIngestSink into the served
+      // v1 in three real triggers (per-trigger latency printed), serve a
+      // query over base + segments, FOLD the segments into v2 (small-files
+      // compaction, atomic swap), re-serve (must be row-identical), then
+      // RETRAIN v3 from the full corpus and serve once more. One pass,
+      // timed stages, correctness asserts inline.
       implicit val sqlCtx = spark.sqlContext
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       import org.apache.spark.sql.functions._
@@ -218,16 +218,15 @@ object ProfileMain {
         val base = emb.filter(col("vec_id") <= cutoff)
         val rest = emb.filter(col("vec_id") > cutoff)
         println(s"PROFILE vindexstream:corpus = ${emb.count()} vectors, base ${base.count()}")
-        val model = timed("build-v1+swap") {
-          val (mdl, codes) = VectorIndex.build(base, "vec_id", "embedding", "label", dim, m, k)
-          VectorIndex.writeVersion(mdl, codes, root.getPath, 1)
+        timed("build-v1+swap") {
+          val (model, codes) = VectorIndex.build(base, "vec_id", "embedding", "label", dim, m, k)
+          VectorIndex.writeVersion(model, codes, root.getPath, 1)
           VectorIndex.swapPointer(root.getPath, 1)
-          mdl
         }
         val input = MemoryStream[(Long, Seq[Double])]
         val q = graft.streaming.StreamOps.vectorIngestSink(
             input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-            model, VectorIndex.versionDir(root.getPath, 1))
+            root.getPath, dim, m, k)
           .trigger(Trigger.ProcessingTime("0 seconds"))
           .option("checkpointLocation", ckpt.getPath)
           .start()

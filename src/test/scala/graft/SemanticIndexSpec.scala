@@ -44,7 +44,7 @@ class SemanticIndexSpec extends SparkSpec {
       SemanticIndex.currentVersion(root).get)
     val (viaIndex, _) = SemanticIndex.judgeBatch(batch, "vid", "vd", dir, t2)
     val derived = SimilarityOps.incrementalSemanticDedup(batch, corpus,
-      "vid", "vd", k, iters, t2, cacheLabeled = false)
+      "vid", "vd", k, iters, t2)
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("vid").collect()
       .map(r => (r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) -1L else r.getLong(2), r.getBoolean(3))).toSeq

@@ -245,44 +245,87 @@ class StreamingSpec extends SparkSpec {
 
   test("a second query on an owned intake root fails instead of skipping its batches") {
     implicit val sqlCtx = spark.sqlContext
-    import graft.operators.DedupOps
-    val target = Files.createTempDirectory("graft_ndo_sink").resolve("t").toString
-    val root = Files.createTempDirectory("graft_ndo_idx").toString
+    import graft.operators.{DedupOps, SemanticIndex, VectorIndex}
+    /** One segment-ledger family: a served v1 at `root`, a sink started
+      * on a fresh stream (returns the row feeder and the query), and the
+      * streamed ids the root has taken in.
+      */
+    final case class Family(name: String, store: graft.io.VersionedStore, root: String,
+        start: () => (Long => Unit, org.apache.spark.sql.streaming.StreamingQuery),
+        kept: () => Set[Long])
+    val texts = Map(
+      100L -> "fresh material arriving in the first trigger about spark state stores",
+      200L -> "wholly unrelated second query content concerning broadcast variables")
+    val vecs = Map(100L -> Seq(5.0, 5.0, 0.0, 0.0), 200L -> Seq(0.0, 0.0, 7.0, 7.0))
+    def running(q: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]) =
+      q.trigger(Trigger.ProcessingTime("0 seconds")).start()
+
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog near the river bank")
     ).toDF("doc_id", "text")
+    val corpusRoot = Files.createTempDirectory("graft_ndo_idx").toString
+    val corpusTarget = Files.createTempDirectory("graft_ndo_sink").resolve("t").toString
     DedupOps.writeCorpusDedupIndex(
-      DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), root, buckets = 2)
-    def start(input: MemoryStream[(Long, String)]) = StreamOps.nearDupIntakeSinkWithIndexUpdate(
-        input.toDF().toDF("doc_id", "text"), root, "text", "doc_id", target)
-      .trigger(Trigger.ProcessingTime("0 seconds")).start()
-    def kept() = spark.read.parquet(target).select("doc_id").as[Long].collect().toSet
-    def segments() = DedupOps.corpusIndex.committedSegments(DedupOps.corpusIndex.versionDir(root, 1))
+      DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), corpusRoot, buckets = 2)
 
-    // the first query owns the root: its batch 0 lands as segment b0
-    val in1 = MemoryStream[(Long, String)]
-    val q1 = start(in1)
-    try {
-      in1.addData((100L, "fresh material arriving in the first trigger about spark state stores"))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    assert(kept() == Set(100L) && segments() == Seq("b0"))
+    val axes = (0 until 4).map(i => (i.toLong, Seq.tabulate(4)(d => if (d == i) 10.0 else 0.0)))
+    val vectorRoot = freshDir("graft_vdo_idx").getPath
+    val (model, codes) = VectorIndex.build(
+      axes.map { case (id, v) => (id, v, id % 2) }.toDF("vec_id", "embedding", "label"),
+      "vec_id", "embedding", "label", 4, 2, 2)
+    VectorIndex.writeVersion(model, codes, vectorRoot, 1)
+    VectorIndex.swapPointer(vectorRoot, 1)
 
-    // a second query (fresh checkpoint) also numbers its first batch 0:
-    // batchApplied(b0) is true, so it would skip a novel doc unjudged —
-    // the owner record stops it instead
-    val in2 = MemoryStream[(Long, String)]
-    val q2 = start(in2)
-    val err = try {
-      in2.addData((200L, "wholly unrelated second query content concerning broadcast variables"))
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException](q2.processAllAvailable())
-    } finally q2.stop()
-    assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
-      .exists(e => String.valueOf(e.getMessage).contains("is fed by streaming query")), err)
-    assert(kept() == Set(100L) && segments() == Seq("b0"))
+    val semanticRoot = freshDir("graft_sdo_idx").getPath
+    val semanticTarget = freshDir("graft_sdo_sink").getPath
+    SemanticIndex.buildAndServe(axes.toDF("vid", "vd"), "vid", "vd", k = 4, maxIter = 2,
+      semanticRoot)
+
+    val families = Seq(
+      Family("corpus", DedupOps.corpusIndex, corpusRoot, () => {
+        val in = MemoryStream[(Long, String)]
+        ((id: Long) => { in.addData((id, texts(id))); () }, running(
+          StreamOps.nearDupIntakeSinkWithIndexUpdate(in.toDF().toDF("doc_id", "text"),
+            corpusRoot, "text", "doc_id", corpusTarget)))
+      }, () => spark.read.parquet(corpusTarget).select("doc_id").as[Long].collect().toSet),
+      Family("vector", VectorIndex, vectorRoot, () => {
+        val in = MemoryStream[(Long, Seq[Double])]
+        ((id: Long) => { in.addData((id, vecs(id))); () }, running(
+          StreamOps.vectorIngestSink(in.toDF().toDF("vec_id", "embedding"),
+            "vec_id", "embedding", vectorRoot, 4, 2, 2)))
+      }, () => VectorIndex.readCodesWithIngest(spark, VectorIndex.versionDir(vectorRoot, 1))
+        .filter($"vid" >= 100L).select("vid").as[Long].collect().toSet),
+      Family("semantic", SemanticIndex, semanticRoot, () => {
+        val in = MemoryStream[(Long, Seq[Double])]
+        ((id: Long) => { in.addData((id, vecs(id))); () }, running(
+          StreamOps.semanticIntakeSink(in.toDF().toDF("vid", "vd"), "vid", "vd",
+            semanticRoot, semanticTarget, t2 = 0.81)))
+      }, () => spark.read.parquet(semanticTarget).filter($"kept").select("vid")
+        .as[Long].collect().toSet))
+
+    families.foreach { f => withClue(s"${f.name}: ") {
+      def segments() = f.store.committedSegments(f.store.versionDir(f.root, 1))
+      // the first query owns the root: its batch 0 lands as segment b0
+      val (feed1, q1) = f.start()
+      try { feed1(100L); q1.processAllAvailable() } finally q1.stop()
+      assert(f.kept() == Set(100L) && segments() == Seq("b0"))
+
+      // a second query (fresh checkpoint) also numbers its first batch 0:
+      // b0 is applied, so it would skip a novel row unjudged — the owner
+      // record stops it instead
+      val (feed2, q2) = f.start()
+      val err = try {
+        feed2(200L)
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException](q2.processAllAvailable())
+      } finally q2.stop()
+      assert(Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("is fed by streaming query")), err)
+      assert(f.kept() == Set(100L) && segments() == Seq("b0"))
+    } }
+
     // a batch append would share the owner's ids too
     intercept[IllegalStateException](DedupOps.appendToCorpusDedupIndex(
-      Seq((300L, "a batch-appended doc")).toDF("doc_id", "text"), "text", "doc_id", root, 1L))
+      Seq((300L, "a batch-appended doc")).toDF("doc_id", "text"), "text", "doc_id", corpusRoot, 1L))
 
     // and a stream refuses a root that batch appends already fed
     val batchRoot = Files.createTempDirectory("graft_ndo_batch_idx").toString
@@ -290,8 +333,8 @@ class StreamingSpec extends SparkSpec {
       DedupOps.buildCorpusDedupIndex(corpus, "text", "doc_id"), batchRoot, buckets = 2)
     assert(DedupOps.appendToCorpusDedupIndex(
       Seq((300L, "a batch-appended doc")).toDF("doc_id", "text"), "text", "doc_id", batchRoot, 0L))
-    assert(intercept[IllegalStateException](DedupOps.claimIntakeOwner(batchRoot,
-      DedupOps.corpusIndex.versionDir(batchRoot, 1), "query")).getMessage
+    assert(intercept[IllegalStateException](DedupOps.corpusIndex.intakeTrigger(batchRoot,
+      "query", 0L)(_ => fail("a refused trigger must not write"))).getMessage
       .contains("already holds appended batches"))
   }
 
@@ -771,7 +814,7 @@ class StreamingSpec extends SparkSpec {
       .foreach(f => Files.move(f.toPath, java.nio.file.Paths.get(src, f.getName)))
 
     def runOnce(): Unit = {
-      val q = StreamOps.vectorIngestSinkVersioned(
+      val q = StreamOps.vectorIngestSink(
           spark.readStream.schema("vec_id LONG, embedding ARRAY<DOUBLE>").json(src),
           "vec_id", "embedding", root, dim, m, k)
         .option("checkpointLocation", ckpt).start()

@@ -143,7 +143,8 @@ class VectorIndexSpec extends SparkSpec {
     val bulk = tmpDir("vindex_bulk")
     val ckpt = tmpDir("vindex_stream_ckpt")
     val (model, codes) = VectorIndex.build(base, "vec_id", "embedding", "label", dim, m, k)
-    VectorIndex.write(model, codes, streamed.getPath)
+    VectorIndex.writeVersion(model, codes, streamed.getPath, 1)
+    VectorIndex.swapPointer(streamed.getPath, 1)
     VectorIndex.write(model, codes, bulk.getPath)
     VectorIndex.append(rest, "vec_id", "embedding", model, bulk.getPath)
 
@@ -151,7 +152,7 @@ class VectorIndexSpec extends SparkSpec {
       .MemoryStream[(Long, Seq[Double])]
     val q = graft.streaming.StreamOps.vectorIngestSink(
         input.toDF().toDF("vec_id", "embedding"),
-        "vec_id", "embedding", model, streamed.getPath)
+        "vec_id", "embedding", streamed.getPath, dim, m, k)
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))
       .option("checkpointLocation", ckpt.getPath)
       .start()
@@ -166,7 +167,8 @@ class VectorIndexSpec extends SparkSpec {
       .select(col("vid"), col("cell"), col("codes").cast("array<long>"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toList))
       .sortBy(_._1).toSeq
-    val viaStream = canon(VectorIndex.readCodesWithIngest(spark, streamed.getPath))
+    val viaStream = canon(VectorIndex.readCodesWithIngest(spark,
+      VectorIndex.versionDir(streamed.getPath, 1)))
     assert(viaStream.nonEmpty)
     assert(viaStream == canon(VectorIndex.readCodes(spark, bulk.getPath)),
       "streaming the ingest in triggers must yield the bulk append's codes")
@@ -258,7 +260,7 @@ class VectorIndexSpec extends SparkSpec {
 
     val input = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(Long, Seq[Double])]
-    val q = graft.streaming.StreamOps.vectorIngestSinkVersioned(
+    val q = graft.streaming.StreamOps.vectorIngestSink(
         input.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
         root.getPath, dim, m, k)
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("0 seconds"))

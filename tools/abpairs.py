@@ -7,8 +7,8 @@ Usage (from the root of the repository):
   python3 tools/abpairs.py --workload refresh_weekly --seeds 1-6 --base main
 
 Each pair runs `perfbench/run.py --workload W --seed S --seconds 5 --trace 0`
-once in a checkout of the base revision (a temporary `git worktree`, removed
-afterwards) and once in the working tree, on the same seed. The side that
+once in an export of the base revision (`git archive` into a temporary
+directory, removed afterwards) and once in the working tree, on the same seed. The side that
 runs first alternates from pair to pair, so a host that drifts during the
 series weighs on both sides alike. It refuses to run when the base is HEAD
 and no tracked file has changed: both sides would run the same code.
@@ -112,8 +112,13 @@ def main():
 
     tmp = tempfile.mkdtemp(prefix="abpairs-")
     base_dir = os.path.join(tmp, "base")
-    subprocess.run(["git", "worktree", "add", "--detach", base_dir, args.base],
-                   cwd=ROOT, check=True, stdout=subprocess.DEVNULL)
+    os.makedirs(base_dir)
+    archive = subprocess.Popen(["git", "archive", rev(args.base)], cwd=ROOT,
+                               stdout=subprocess.PIPE)
+    subprocess.run(["tar", "-x", "-C", base_dir], stdin=archive.stdout, check=True)
+    archive.stdout.close()
+    if archive.wait() != 0:
+        raise SystemExit(f"git archive {args.base} failed")
     pairs = []
     try:
         for i, seed in enumerate(parse_seeds(args.seeds)):
@@ -126,8 +131,6 @@ def main():
             print(f"pair {i + 1} seed {seed} ({order[0][0]} first): latency_s.p50 "
                   f"base {p50['base']} change {p50['change']}", flush=True)
     finally:
-        subprocess.run(["git", "worktree", "remove", "--force", base_dir], cwd=ROOT,
-                       stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
         shutil.rmtree(tmp, ignore_errors=True)
     try:
         lines = summarize(pairs, spec)
