@@ -3,6 +3,8 @@ package graft.compat
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Legacy-schema compatibility surface (SURVEY §2.2 P2, §2.5 J8; reference
   * extract/oireachtas/downstream_compat.py + compat_comparison.py +
   * contracts.py:157-176): column-mapping adapters and legacy-vs-compat
@@ -80,11 +82,11 @@ object CompatOps {
   def compare(name: String, legacy: DataFrame, compat: DataFrame,
               legacyKeyCol: String, compatKeyCol: String,
               threshold: ComparisonThreshold): ComparisonRow = {
-    val lk = keySet(legacy, legacyKeyCol).cache()
-    val ck = keySet(compat, compatKeyCol).cache()
-    val (matched, legacyOnly, compatOnly) =
-      try (lk.intersect(ck).count(), lk.except(ck).count(), ck.except(lk).count())
-      finally { ck.unpersist(); lk.unpersist() }
+    val (matched, legacyOnly, compatOnly) = CacheScope.run {
+      val lk = CacheScope.persist(keySet(legacy, legacyKeyCol))
+      val ck = CacheScope.persist(keySet(compat, compatKeyCol))
+      (lk.intersect(ck).count(), lk.except(ck).count(), ck.except(lk).count())
+    }
     val legacyRows = legacy.count()
     val compatRows = compat.count()
     val coverage = coveragePct(compat, compatKeyCol)

@@ -3,6 +3,7 @@ package graft.compat
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
 import graft.sources.XmlDebateWalker.stableHash
 
 /** Cutover review tooling (reference
@@ -77,9 +78,9 @@ object ReviewOps {
   /** mismatch_review.py:68-70 summary counts for one dataset pair. */
   def mismatchSummary(legacy: DataFrame, unified: DataFrame,
                       datasetName: String): Map[String, Any] = {
-    val lk = memberLookup(legacy).select("member_code").cache()
-    val uk = memberLookup(unified).select("member_code").cache()
-    try {
+    CacheScope.run {
+      val lk = CacheScope.persist(memberLookup(legacy).select("member_code"))
+      val uk = CacheScope.persist(memberLookup(unified).select("member_code"))
       val matched = lk.intersect(uk).count()
       val legacyOnly = lk.except(uk).count()
       val unifiedOnly = uk.except(lk).count()
@@ -92,7 +93,7 @@ object ReviewOps {
         "matched_member_count" -> matched,
         "legacy_only_count" -> legacyOnly,
         "unified_only_count" -> unifiedOnly)
-    } finally { uk.unpersist(); lk.unpersist() }
+    }
   }
 
   /** mismatch_review.py:188-204 _dq. */
@@ -131,10 +132,11 @@ object ReviewOps {
     val uks = unified.flatMap(keysOf(_, unifiedJoin))
     val (matched, legacyOnly, unifiedOnly) = (lks, uks) match {
       case (Some(l), Some(u)) =>
-        val lc = l.cache(); val uc = u.cache()
-        try (lc.intersect(uc).count().toString,
-          lc.except(uc).count().toString, uc.except(lc).count().toString)
-        finally { uc.unpersist(); lc.unpersist() }
+        CacheScope.run {
+          val lc = CacheScope.persist(l); val uc = CacheScope.persist(u)
+          (lc.intersect(uc).count().toString,
+            lc.except(uc).count().toString, uc.except(lc).count().toString)
+        }
       case _ => ("", "", "")
     }
     val unifiedRows = unified.map(_.count()).getOrElse(0L)

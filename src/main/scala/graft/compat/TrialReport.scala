@@ -3,6 +3,8 @@ package graft.compat
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Side-by-side trial report for the member-profile-metrics cutover
   * (reference extract/oireachtas/member_profile_trial_report.py:1-165):
   * the legacy metrics table and the trial (compat) rebuild are compared
@@ -38,12 +40,12 @@ object TrialReport {
     */
   def summaryRows(legacy: DataFrame, trial: DataFrame,
                   legacyKey: String, trialKey: String): Seq[Map[String, String]] = {
-    val lk = memberCodes(legacy).cache()
-    val tk = memberCodes(trial).cache()
-    val (legacyMembers, trialMembers, matched, trialOnly, legacyOnly) =
-      try (lk.count(), tk.count(), lk.intersect(tk).count(), tk.except(lk).count(),
+    val (legacyMembers, trialMembers, matched, trialOnly, legacyOnly) = CacheScope.run {
+      val lk = CacheScope.persist(memberCodes(legacy))
+      val tk = CacheScope.persist(memberCodes(trial))
+      (lk.count(), tk.count(), lk.intersect(tk).count(), tk.except(lk).count(),
         lk.except(tk).count())
-      finally { tk.unpersist(); lk.unpersist() }
+    }
     val legacyRows = legacy.count()
     val trialRows = trial.count()
     val commonColumns = (legacy.columns.toSet & trial.columns.toSet).toSeq.sorted

@@ -1,9 +1,9 @@
 package graft.gold
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 import graft.compat.CompatOps
+import graft.core.CacheScope
 
 /** Gold-phase orchestration: the five marts + the two compat adapters
   * in dependency order, with the promoted inputs SHARED — speeches and
@@ -44,13 +44,11 @@ object GoldPhase {
                           snapshotDate: String)
 
   /** Run the phase; returns the (sink-returned) current-members frame —
-    * the one output later pipeline stages commonly reuse. The caller
-    * owns its lifecycle; this helper unpersists only what it persisted:
-    * an input the CALLER already persisted (any storage level) is left
-    * exactly as found — Spark persists are not reference-counted, so an
-    * unconditional unpersist here would silently evict the caller's
-    * block (and an unconditional persist would throw on a caller-chosen
-    * different level).
+    * the one output later pipeline stages commonly reuse. The phase runs
+    * in one [[CacheScope]]: it persists speeches and votes for their
+    * consumers and releases them on every exit path. An input the
+    * CALLER already persisted (any storage level) is left exactly as
+    * found.
     *
     * The one-scan-per-input guarantee holds only for sinks that
     * MATERIALIZE each output before returning (a write, a persisted
@@ -63,38 +61,25 @@ object GoldPhase {
     * helper then leaves them untouched) and release them after its own
     * last action.
     */
-  def run(in: Inputs)(sink: (String, DataFrame) => DataFrame): DataFrame = {
-    def persistIfUnpersisted(df: DataFrame): Boolean =
-      if (df.storageLevel == StorageLevel.NONE) {
-        df.persist(StorageLevel.MEMORY_AND_DISK); true
-      } else false
-    val speeches = in.speeches
-    val votes = in.votes
-    val ownSpeeches = persistIfUnpersisted(speeches)
-    val ownVotes = persistIfUnpersisted(votes)
-    try {
-      val cm = sink("gold_current_members", GoldMarts.currentMembers(
-        in.members, in.memberships, in.parties, in.constituencies,
-        in.offices, in.snapshotDate))
-      val activityYearly = sink("gold_member_activity_yearly",
-        GoldMarts.memberActivityYearly(cm, speeches, votes, in.divisions,
-          in.snapshotDate))
-      sink("gold_member_activity_monthly",
-        GoldMarts.memberActivityMonthly(speeches, votes, in.snapshotDate))
-      sink("gold_constituency_activity_yearly",
-        GoldMarts.constituencyActivityYearly(cm, speeches, votes,
-          in.snapshotDate))
-      if (ownSpeeches) speeches.unpersist() // last consumer: constituency mart
-      sink("gold_content_fact_pool",
-        GoldMarts.contentFactPool(activityYearly, cm, in.snapshotDate))
-      sink("compat_members", CompatOps.membersCompat(cm))
-      sink("compat_member_votes", CompatOps.memberVotesCompat(votes))
-      cm
-    } finally {
-      // idempotent; covers the failure path too. Only blocks THIS call
-      // persisted — a caller-held persist survives untouched.
-      if (ownSpeeches) speeches.unpersist()
-      if (ownVotes) votes.unpersist() // last votes consumer: member-votes compat
-    }
+  def run(in: Inputs)(sink: (String, DataFrame) => DataFrame): DataFrame = CacheScope.run {
+    val speeches = CacheScope.persist(in.speeches)
+    val votes = CacheScope.persist(in.votes)
+    val cm = sink("gold_current_members", GoldMarts.currentMembers(
+      in.members, in.memberships, in.parties, in.constituencies,
+      in.offices, in.snapshotDate))
+    val activityYearly = sink("gold_member_activity_yearly",
+      GoldMarts.memberActivityYearly(cm, speeches, votes, in.divisions,
+        in.snapshotDate))
+    sink("gold_member_activity_monthly",
+      GoldMarts.memberActivityMonthly(speeches, votes, in.snapshotDate))
+    sink("gold_constituency_activity_yearly",
+      GoldMarts.constituencyActivityYearly(cm, speeches, votes,
+        in.snapshotDate))
+    CacheScope.release(speeches) // last consumer: constituency mart
+    sink("gold_content_fact_pool",
+      GoldMarts.contentFactPool(activityYearly, cm, in.snapshotDate))
+    sink("compat_members", CompatOps.membersCompat(cm))
+    sink("compat_member_votes", CompatOps.memberVotesCompat(votes))
+    cm // votes release with the scope: member-votes compat was their last consumer
   }
 }

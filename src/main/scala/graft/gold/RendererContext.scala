@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Post-context assembly for the carousel renderer (reference
   * instagram/renderer/context.py:12-218 + util.py:19-165): normalized-name
   * member lookup, photo/background enrichment joins, issue counters with
@@ -146,15 +148,12 @@ object RendererContext {
                        constituencyName: String, requestedMember: Option[String] = None,
                        issueLimit: Int = 8): PostContext = {
     // every frame cached here is released before the call returns, on
-    // the failure path too; dependents go first so no release re-plans
-    // a cache that is about to go as well
-    val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cache(df: DataFrame): DataFrame = { cached += df; df.cache() }
-    try {
-      val mt = cache(buildMemberTable(members, photos, summaries))
+    // the failure path too
+    CacheScope.run {
+      val mt = CacheScope.persist(buildMemberTable(members, photos, summaries))
       val conKey = normalizeNameStr(constituencyName)
 
-      val inCon = cache(mt.filter(col("constituency_key") === conKey))
+      val inCon = CacheScope.persist(mt.filter(col("constituency_key") === conKey))
       if (inCon.isEmpty) {
         val sample = mt.select("constituency").na.drop().distinct()
           .orderBy("constituency").limit(20).collect().map(_.getString(0)).toSeq
@@ -162,9 +161,9 @@ object RendererContext {
           s"No members matched constituency '$constituencyName'. Sample available constituencies: $sample")
       }
 
-      val recs = cache(issueRecords(debateIssues, mt))
-      val conCounts = cache(recs.filter(col("constituency_key") === conKey).groupBy("issue")
-        .agg(count(lit(1)).as("count")))
+      val recs = CacheScope.persist(issueRecords(debateIssues, mt))
+      val conCounts = CacheScope.persist(recs.filter(col("constituency_key") === conKey)
+        .groupBy("issue").agg(count(lit(1)).as("count")))
       val speechCounts = recs.filter(col("constituency_key") === conKey)
         .groupBy("member_key").agg(count(lit(1)).as("speech_count"))
 
@@ -211,7 +210,7 @@ object RendererContext {
           memberKey = memberKey),
         issues = conIssues,
         memberIssues = memIssues)
-    } finally cached.reverseIterator.foreach(_.unpersist())
+    }
   }
 
   /** context.py:26-34 pick_constituency_image: exact or either-way

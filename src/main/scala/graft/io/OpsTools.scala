@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
+import graft.core.CacheScope
 import graft.functions.Fns
 
 /** Operational driver tools (the reference's thin `process/` scripts over
@@ -105,9 +106,8 @@ object OpsTools {
     // recursive listings of the store), and a file created between the
     // csv and summary actions would make summary.json disagree with the
     // s3_inventory.csv rows it claims to describe
-    val inv = inventoryRows(spark, root, prefixes)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    CacheScope.run {
+      val inv = CacheScope.persist(inventoryRows(spark, root, prefixes))
       TableIO.writeCsv(inv, s"$outDir/s3_inventory.csv")
       val perPrefix = inv.groupBy("prefix")
         .agg(count(lit(1)).as("n"), sum(col("size")).as("bytes"))
@@ -124,7 +124,7 @@ object OpsTools {
       val out = fs.create(new Path(s"$outDir/summary.json"), true)
       try out.write(StableJson.write(summary).getBytes("UTF-8")) finally out.close()
       summary
-    } finally { inv.unpersist(); () }
+    }
   }
 
   // ---------------- Instagram max-length stress fixture ----------------

@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.CacheScope
 
 /** End-to-end training-corpus curation: the composition a 100 TB
   * pipeline actually runs, built from the individual operators —
@@ -30,34 +31,37 @@ import org.apache.spark.storage.StorageLevel
   *    later one, and the landed stages give restartability.
   *
   * Caches internal to one stage (the span stage's tokenization, the
-  * near-dup shingle table) persist in both shapes; a sink releases each
-  * once the stage it serves has landed.
+  * near-dup shingle table) persist in both shapes. A sink runs each such
+  * stage in its own [[CacheScope]], so they are released once the stage
+  * they serve has landed; the lazy variants leave them to the caller's
+  * scope, since the returned plans read them.
   */
 object CurationPipeline {
 
   /** Where a chain's stages go. `stage` is called at each stage boundary
     * in chain order and returns the frame later stages build on; `report`
     * takes a monitoring report by name, so a boundary that does not keep
-    * it never builds its plan; `release` ends a stage-internal cache once
-    * the stage it serves has landed.
+    * it never builds its plan; `scoped` runs a block that builds and
+    * hands on a stage with stage-internal caches.
     */
   private final case class Boundary(stage: (String, DataFrame) => DataFrame,
                                     report: (String, => DataFrame) => Unit,
-                                    release: DataFrame => Unit)
+                                    scoped: (=> DataFrame) => DataFrame)
 
   /** The lazy boundary: persist the named stages, pass everything else
     * through, drop the reports unbuilt; stage-internal caches stay alive
     * for the returned plans.
     */
   private def persisting(labels: String*): Boundary = Boundary(
-    (label, df) => if (labels.contains(label)) df.persist(StorageLevel.MEMORY_AND_DISK) else df,
+    (label, df) => if (labels.contains(label)) CacheScope.persist(df) else df,
     (_, _) => (),
-    _ => ())
+    block => block)
 
   /** The sink boundary: write `outDir/<label>.parquet` (stages and
-    * reports alike) and continue from the landed stage; stage-internal
-    * caches unpersist once landed. The read-back takes the schema just
-    * written, so landing a stage runs no footer-inference job.
+    * reports alike) and continue from the landed stage; a scoped block
+    * runs in its own [[CacheScope]], so its caches go once it has landed.
+    * The read-back takes the schema just written, so landing a stage
+    * runs no footer-inference job.
     */
   private def landing(outDir: String): Boundary = {
     def write(label: String, df: DataFrame): String = {
@@ -67,7 +71,7 @@ object CurationPipeline {
     }
     Boundary((label, df) => df.sparkSession.read.schema(df.schema).parquet(write(label, df)),
       (label, df) => write(label, df),
-      _.unpersist())
+      block => CacheScope.run(block))
   }
 
   /** The (doc_id, lang, _is_eval, _nt norm text, _ws words) frame both
@@ -139,20 +143,18 @@ object CurationPipeline {
 
     // 3. near-dup removal: LSH candidates + exact verify (same engine
     // as q28; _nt is already normalized so re-normalization is a
-    // no-op), drop the larger id of each pair. The shingle table is
-    // persisted HERE (not inside minhashNearDupPairs) so the chain owns
-    // every cache it creates.
-    val sh = DedupOps.shingleHashTable(keep2, "_nt", "doc_id", ngramN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val keep3 = try {
+    // no-op), drop the larger id of each pair. The pairs call persists
+    // the shingle table, which the cap-drop report reads too.
+    val keep3 = at.scoped {
+      val sh = DedupOps.shingleHashTable(keep2, "_nt", "doc_id", ngramN)
       val dropped = DedupOps.minhashNearDupPairsFromShingles(sh,
-          threshold = jaccardThreshold, cacheShingles = false, maxBucket = maxBucket)
+          threshold = jaccardThreshold, maxBucket = maxBucket)
         .select(col("doc_b").as("doc_id")).distinct()
       val landed = at.stage("3_near_dedup", keep2.join(dropped, Seq("doc_id"), "left_anti"))
       at.report("reports/near_dup_cap_drops",
         DedupOps.minhashOversizedBuckets(sh, maxBucket = maxBucket))
       landed
-    } finally at.release(sh)
+    }
 
     // 4. decontamination: survivors vs the full original eval set
     // (union keeps contaminationReport's single-input shape; the eval
@@ -172,7 +174,7 @@ object CurationPipeline {
     * landed table, the near-dup cap-drop report lands as
     * `outDir/reports/near_dup_cap_drops.parquet` (a production run never
     * discards mass silently), and every cache the chain created is
-    * unpersisted once its stage has landed — a long-lived session can
+    * released once its stage has landed — a long-lived session can
     * run curation repeatedly without accumulating executor storage.
     * Returns the final survivors read back from parquet.
     */
@@ -266,31 +268,28 @@ object CurationPipeline {
     // 4. span-level substring dedup over the line-cleaned corpus;
     // emitWordHashes hands the surviving words' hashes straight to the
     // near-dup stage (no re-tokenize / re-hash of the cleaned text)
-    val (spanned, spanCaches) = ScrubOps.spanDedupWithCaches(keep3, "_t", "doc_id",
-      spanWords, spanMinCount, emitWordHashes = true)
-    val keep4 = try at.stage("4_span_dedup", spanned
+    val keep4 = at.scoped(at.stage("4_span_dedup",
+      ScrubOps.spanDedup(keep3, "_t", "doc_id", spanWords, spanMinCount, emitWordHashes = true)
         .filter(col("text_clean") =!= "")
-        .select(col("doc_id"), col("text_clean").as("_t"), col("wh_clean")))
-      finally spanCaches.foreach(at.release)
+        .select(col("doc_id"), col("text_clean").as("_t"), col("wh_clean"))))
 
     // 5. near-dup removal, shingling the span stage's word-hash arrays
-    // (chain-owned shingle cache, see curateChain). keep5 carries
-    // wh_clean forward: the decontamination stage shingles the SAME
+    // (the shingle cache as in curateChain). keep5 carries wh_clean
+    // forward: the decontamination stage shingles the SAME
     // surviving-word hashes (split(_t) words == the surviving words,
     // FNV'd == wh_clean) instead of re-tokenizing every survivor
-    val shTbl = keep4.select(col("doc_id"),
+    val keep5 = at.scoped {
+      val shTbl = keep4.select(col("doc_id"),
         DedupOps.shingleHashesOfWordHashes(col("wh_clean"), ngramN).as("sg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val keep5 = try {
       val dropped = DedupOps.minhashNearDupPairsFromShingles(shTbl,
-          threshold = jaccardThreshold, cacheShingles = false, maxBucket = maxBucket)
+          threshold = jaccardThreshold, maxBucket = maxBucket)
         .select(col("doc_b").as("doc_id")).distinct()
       val landed = at.stage("5_near_dedup", keep4.join(dropped, Seq("doc_id"), "left_anti")
         .select("doc_id", "_t", "wh_clean"))
       at.report("reports/near_dup_cap_drops",
         DedupOps.minhashOversizedBuckets(shTbl, maxBucket = maxBucket))
       landed
-    } finally at.release(shTbl)
+    }
 
     // 6. decontamination vs the ORIGINAL eval texts — eval side hashed
     // with the same FNV kernel so the shingle families match

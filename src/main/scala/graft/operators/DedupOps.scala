@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.CacheScope
+
 /** Large-scale text deduplication operators (north-star surface beyond the
   * reference): exact, n-gram Jaccard brute force, MinHash+LSH, SimHash.
   *
@@ -244,9 +246,10 @@ object DedupOps {
     * shingle frame produces — the cap-drop monitoring companion to
     * [[minhashNearDupPairsFromShingles]] with the same parameters:
     * (band_idx, band_hash, bucket_width) for every bucket the cap
-    * discards. Lazy; callers persist the shingle frame (the curation
-    * chains already do) so evaluating the report costs one extra
-    * signature + banding pass over cached shingles, not a re-tokenize.
+    * discards. Lazy; callers pass the shingle frame the pairs call
+    * persisted (the curation chains do) so evaluating the report costs
+    * one extra signature + banding pass over cached shingles, not a
+    * re-tokenize.
     */
   def minhashOversizedBuckets(sh: DataFrame, numHashes: Int = 64, bands: Int = 32,
                               maxBucket: Int = DefaultMaxBucket): DataFrame =
@@ -301,11 +304,9 @@ object DedupOps {
   def minhashNearDupPairs(docs: DataFrame, textCol: String, idCol: String,
                           n: Int = 3, numHashes: Int = 64, bands: Int = 32,
                           threshold: Double = 0.5,
-                          cacheShingles: Boolean = true,
                           maxBucket: Int = DefaultMaxBucket): DataFrame = {
     val (pairs, drops) = minhashNearDupPairsFromShinglesWithDrops(
-      shingleHashTable(docs, textCol, idCol, n),
-      numHashes, bands, threshold, cacheShingles, maxBucket)
+      shingleHashTable(docs, textCol, idCol, n), numHashes, bands, threshold, maxBucket)
     // "no silent caps" (VERDICT r7 #3): a bare capped call logs its
     // one-line drop count eagerly — one signature+banding pass over the
     // (cached) shingle frame, whose materialization the pairs evaluation
@@ -330,16 +331,14 @@ object DedupOps {
   def minhashNearDupPairsFromShingles(sh0: DataFrame,
                                       numHashes: Int = 64, bands: Int = 32,
                                       threshold: Double = 0.5,
-                                      cacheShingles: Boolean = true,
                                       maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // The shingle table feeds three consumers (signature agg + both
     // verify-join sides) — persist it once instead of recomputing the
-    // most expensive narrow stage per consumer. At corpus scale, write it
-    // as a parquet table instead and feed it back through
+    // most expensive narrow stage per consumer (a caller that already
+    // cached it keeps its own cache). At corpus scale, write it as a
+    // parquet table instead and feed it back through
     // minhashSignaturesFromShingles.
-    val sh = if (cacheShingles)
-      sh0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else sh0
+    val sh = CacheScope.persist(sh0)
     val sig = minhashSignaturesFromShingles(sh, numHashes)
     val cand = lshCandidatePairs(sig, bands, numHashes / bands, maxBucket)
     cand
@@ -359,11 +358,9 @@ object DedupOps {
   def minhashNearDupPairsFromShinglesWithDrops(sh0: DataFrame,
                                       numHashes: Int = 64, bands: Int = 32,
                                       threshold: Double = 0.5,
-                                      cacheShingles: Boolean = true,
                                       maxBucket: Int = DefaultMaxBucket)
   : (DataFrame, Option[DataFrame]) = {
-    val pairs = minhashNearDupPairsFromShingles(
-      sh0, numHashes, bands, threshold, cacheShingles, maxBucket)
+    val pairs = minhashNearDupPairsFromShingles(sh0, numHashes, bands, threshold, maxBucket)
     val drops =
       if (maxBucket == NoBucketCap) None
       else Some(minhashOversizedBuckets(sh0, numHashes, bands, maxBucket))
@@ -454,8 +451,7 @@ object DedupOps {
     // the quantized table feeds three consumers (banding + both verify
     // joins) — persist it once, same rationale as the q28 shingle table;
     // at corpus scale write it as parquet instead
-    val q = quantized(emb, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val q = CacheScope.persist(quantized(emb, idCol, vecCol))
     // ±1 plane components, precomputed driver-side (bands·planes × dim ints)
     val signs: Array[Array[Long]] =
       Array.tabulate(bands * planesPerBand, dim)((p, d) => SimilarityOps.planeSign(p, d).toLong)
@@ -609,17 +605,14 @@ object DedupOps {
     // In-session convenience wrapper: derives the corpus index here and
     // persists its two join-side frames (each feeds the prepared kernel
     // once per side, and Spark would otherwise recompute the corpus scan
-    // per consumer). Long-lived sessions that call this repeatedly should
-    // either clearCache() after consuming the result or — better — build
-    // the index ONCE with [[buildCorpusDedupIndex]], write it to parquet,
-    // and call [[incrementalDedupPrepared]] per batch: that is the shape
-    // whose per-ingest cost is proportional to the batch, not the corpus.
+    // per consumer); the caller's CacheScope releases them. Long-lived
+    // sessions should rather build the index ONCE with
+    // [[buildCorpusDedupIndex]], write it to parquet, and call
+    // [[incrementalDedupPrepared]] per batch: that is the shape whose
+    // per-ingest cost is proportional to the batch, not the corpus.
     val idx0 = buildCorpusDedupIndex(corpus, textCol, idCol, n, numHashes, bands, maxBucket)
-    val idx = CorpusDedupIndex(
-      idx0.fingerprints,
-      idx0.shingles.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      idx0.bands.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
-      idx0.params)
+    val idx = idx0.copy(shingles = CacheScope.persist(idx0.shingles),
+      bands = CacheScope.persist(idx0.bands))
     incrementalDedupPrepared(newBatch, idx, textCol, idCol, n, numHashes, bands, threshold,
       maxBucket)
   }
@@ -636,16 +629,12 @@ object DedupOps {
                                 n: Int = 3, numHashes: Int = 64, bands: Int = 32,
                                 threshold: Double = 0.5,
                                 maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val idx0 = buildCorpusDedupIndex(corpus, textCol, idCol, n, numHashes, bands, maxBucket)
-    val sh = idx0.shingles.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bd = idx0.bands.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (out, caches) = incrementalDedupPreparedWithCaches(newBatch,
-      CorpusDedupIndex(idx0.fingerprints, sh, bd, idx0.params),
-      textCol, idCol, n, numHashes, bands, threshold, maxBucket)
     // released also when the write throws: a failed sink must not leave
     // corpus-sized caches behind for the rest of the session
-    try out.write.mode("overwrite").parquet(outPath)
-    finally (Seq(sh, bd) ++ caches).foreach(_.unpersist())
+    CacheScope.run {
+      incrementalDedup(newBatch, corpus, textCol, idCol, n, numHashes, bands, threshold,
+        maxBucket).write.mode("overwrite").parquet(outPath)
+    }
     newBatch.sparkSession.read.parquet(outPath)
   }
 
@@ -953,9 +942,9 @@ object DedupOps {
       // semi-join, which three table writes would otherwise re-run
       val acc = accepted.select(col(idCol).cast("long").as(idCol),
         col(textCol).cast("string").as(textCol)).localCheckpoint(true)
-      // the shingle table feeds the shingle write AND the band derivation
-      val sh = shingleHashTable(acc, textCol, idCol, m.params.n).persist()
-      try {
+      try CacheScope.run {
+        // the shingle table feeds the shingle write AND the band derivation
+        val sh = CacheScope.persist(shingleHashTable(acc, textCol, idCol, m.params.n))
         val seg = corpusIndex.segmentDir(dir, batchId)
         val frames = tableFrames(CorpusDedupIndex(
           acc.select(col(idCol).as("cid"), textFingerprint(col(textCol)).as("_h")), sh,
@@ -966,7 +955,7 @@ object DedupOps {
         }
         graft.io.IndexMeta.writeString(s"$seg/_SUCCESS", "")
         true
-      } finally { sh.unpersist(); acc.unpersist() }
+      } finally acc.unpersist()
     }
 
   /** Fold the served version into the next one: re-apply the width cap to
@@ -1047,22 +1036,7 @@ object DedupOps {
                                textCol: String, idCol: String,
                                n: Int = 3, numHashes: Int = 64, bands: Int = 32,
                                threshold: Double = 0.5,
-                               maxBucket: Int = DefaultMaxBucket): DataFrame =
-    incrementalDedupPreparedWithCaches(newBatch, index, textCol, idCol,
-      n, numHashes, bands, threshold, maxBucket)._1
-
-  /** [[incrementalDedupPrepared]] plus the batch-sized frames it
-    * persisted, so an eager caller can unpersist them after its final
-    * action (see [[incrementalDedupToParquet]] and the streaming
-    * per-trigger sink StreamOps.nearDupIntakeSink, which must not let
-    * caches accumulate across micro-batches).
-    */
-  private[graft] def incrementalDedupPreparedWithCaches(
-                               newBatch: DataFrame, index: CorpusDedupIndex,
-                               textCol: String, idCol: String,
-                               n: Int = 3, numHashes: Int = 64, bands: Int = 32,
-                               threshold: Double = 0.5,
-                               maxBucket: Int = DefaultMaxBucket): (DataFrame, Seq[DataFrame]) = {
+                               maxBucket: Int = DefaultMaxBucket): DataFrame = {
     // an index built with different shingle n / signature count / banding
     // produces band hashes from a DIFFERENT hash family: the joins would
     // run fine and match (almost) nothing. When the index carries its
@@ -1079,10 +1053,10 @@ object DedupOps {
     }
     // four consumers (both exact joins, the anti-join, the final roster)
     // re-evaluate the fingerprint projection — persist it once (batch-
-    // sized; freed by the caller's clearCache or session end)
-    val nfp = newBatch.select(col(idCol).cast("long").as("nid"), col(textCol).as("_text"))
-      .withColumn("_h", textFingerprint(col("_text")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // sized; released by the caller's CacheScope)
+    val nfp = CacheScope.persist(
+      newBatch.select(col(idCol).cast("long").as("nid"), col(textCol).as("_text"))
+        .withColumn("_h", textFingerprint(col("_text"))))
 
     // exact matches: min corpus id per hash, min earlier new id per hash
     val exactC = nfp.join(index.fingerprints, Seq("_h")).groupBy("nid").agg(min("cid").as("_mc"))
@@ -1102,9 +1076,8 @@ object DedupOps {
     // (batch-sized work), then join the batch bands against the corpus
     // band table — corpus-corpus pairs never materialize, and corpus
     // docs in buckets no new doc touches never leave the scan
-    val shNew = shingleHashTable(surv.select(col("nid").as(idCol), col("_text").as(textCol)),
-        textCol, idCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val shNew = CacheScope.persist(shingleHashTable(
+      surv.select(col("nid").as(idCol), col("_text").as(textCol)), textCol, idCol, n))
     // batch-side skew guard: a degenerate NEW-side bucket is dropped
     // before either candidate leg (width-1 buckets stay — a lone new doc
     // still probes the corpus); the corpus side was capped at index
@@ -1134,9 +1107,8 @@ object DedupOps {
     // bucketed index while only the candidate side (batch-sized) moves.
     // candSh feeds both legs — persisted (batch-sized) so the candidate
     // generation doesn't run twice
-    val candSh = cand
-      .join(shNew.select(col("doc_id").as("nid"), col("sg").as("sg_n")), Seq("nid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val candSh = CacheScope.persist(cand
+      .join(shNew.select(col("doc_id").as("nid"), col("sg").as("sg_n")), Seq("nid")))
     val nearCorpus = candSh
       .join(index.shingles.select(col("doc_id").as("partner"), col("sg").as("sg_p")), Seq("partner"))
     val nearNew = candSh
@@ -1145,13 +1117,12 @@ object DedupOps {
       .filter(jaccard(col("sg_n"), col("sg_p")) >= threshold)
       .groupBy("nid").agg(min("partner").as("match_id"))
 
-    val roster = nfp.select("nid")
+    nfp.select("nid")
       .join(exactMatch.withColumn("status", lit("exact_dup")), Seq("nid"), "left")
       .join(nearMatch.withColumnRenamed("match_id", "_nm"), Seq("nid"), "left")
       .select(col("nid").as("new_id"),
         coalesce(col("status"), when(col("_nm").isNotNull, "near_dup").otherwise("kept")).as("status"),
         coalesce(col("match_id"), col("_nm")).as("match_id"))
-    (roster, Seq(nfp, shNew, candSh))
   }
 
   /** Benchmark-decontamination report: training docs (evalPred false)

@@ -2,12 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.CacheScope
 
 /** Declarative data-quality checks (SURVEY §2.6 A11, reference per-table
-  * `_dq_results` + contracts.py:63-154). One pass over a cached DataFrame
-  * produces a single summary row; `toResults` reshapes it into the
-  * (check_name, status, value) result table the reference writes.
+  * `_dq_results` + contracts.py:63-154). `summary` is one aggregation
+  * producing a single summary row; `validate` runs its checks over one
+  * cached pass of the frame, in its own [[CacheScope]] — a frame the
+  * caller already cached is used as is and left cached.
   */
 object DqOps {
 
@@ -42,11 +44,9 @@ object DqOps {
     val missing = contract.requiredCols.filterNot(cols.contains)
     val colCheck = ("required_columns", missing.isEmpty, missing.mkString(","))
 
-    // cache for the several checks below unless the caller already holds
-    // a persist of this frame; release only what this call persisted
-    val own = df.storageLevel == StorageLevel.NONE
-    val cnt = if (own) df.cache() else df
-    try {
+    // one cached pass feeds the several checks below
+    CacheScope.run {
+      val cnt = CacheScope.persist(df)
       val rowCount = cnt.count()
       val rowCheck = ("min_rows", rowCount >= contract.minRows, s"$rowCount")
 
@@ -62,6 +62,6 @@ object DqOps {
         (s"nonnull_$c", nulls == 0, s"$nulls")
       }
       Seq(colCheck, rowCheck) ++ pkChecks ++ nnChecks
-    } finally if (own) cnt.unpersist()
+    }
   }
 }

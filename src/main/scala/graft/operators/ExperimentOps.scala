@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.core.CacheScope
+
 /** LLM prompt-experiment fan-out (SURVEY §2.6 A10 + §2.11 L4; reference
   * process/ridiculous_sentences_experiments.py): run every prompt VARIANT
   * over the candidate corpus, rank per (variant, week), and build the
@@ -112,8 +114,7 @@ object ExperimentOps {
   def runExperiments(speeches: DataFrame, variants: Seq[PromptVariant],
                      scorer: DataFrame => DataFrame,
                      topN: Int = 10): (DataFrame, DataFrame, DataFrame) = {
-    val scored = scorer(fanOutCandidates(speeches, variants))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val scored = CacheScope.persist(scorer(fanOutCandidates(speeches, variants)))
     val top = selectTopRows(scored, topN)
     (scored, top, buildSummary(top, scored))
   }

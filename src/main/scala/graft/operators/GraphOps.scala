@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.core.CacheScope
 
 /** Distributed graph helpers for the dedup surface. */
 object GraphOps {
@@ -43,13 +44,11 @@ object GraphOps {
                                     maxIter: Int = 50,
                                     checkpointEvery: Int = 5): (DataFrame, Int) = {
     val edges = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-    val sym = edges
+    val sym = CacheScope.persist(edges
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
+    var labels = CacheScope.persist(sym.select(col("src").as("node")).distinct()
+      .select(col("node"), col("node").as("label")))
     var iter = 0
     var changed = 1L
     while (changed > 0 && iter < maxIter) {
@@ -71,7 +70,7 @@ object GraphOps {
           col("_old"))
       // localCheckpoint truncates lineage so plan size stays bounded, at
       // two costs: (a) checkpoint blocks live outside the cache manager,
-      // so the labels.unpersist() below is a no-op on checkpoint rounds —
+      // so the labels release below is a no-op on checkpoint rounds —
       // blocks free only when the RDD is GC'd on the driver; (b) the
       // blocks are executor-local, so an executor loss mid-run is
       // unrecoverable (no lineage to recompute from). For very long runs
@@ -81,15 +80,15 @@ object GraphOps {
       val updated =
         if ((iter + 1) % checkpointEvery == 0) jumped.localCheckpoint(false) // lazy:
           // materialized by the count below, same single job
-        else jumped.persist(StorageLevel.MEMORY_AND_DISK)
+        else CacheScope.persist(jumped)
       // the round's ONE action: materializes `updated` and counts
       // decreased labels off the carried _old column
       changed = updated.filter(col("label") < col("_old")).count()
-      labels.unpersist()
+      CacheScope.release(labels)
       labels = updated
       iter += 1
     }
-    sym.unpersist()
+    CacheScope.release(sym)
     (labels.select(col("node").as("doc_id"), col("label").as("component")), iter)
   }
 }

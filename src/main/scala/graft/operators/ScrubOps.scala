@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Corpus scrubbing operators for a training-data pipeline: PII
   * redaction and C4/RefinedWeb-style line-level boilerplate removal.
   *
@@ -152,29 +154,19 @@ object ScrubOps {
 
   def spanDedup(df: DataFrame, textCol: String, idCol: String,
       spanWords: Int, minCount: Int = 2,
-      emitWordHashes: Boolean = false): DataFrame =
-    spanDedupWithCaches(df, textCol, idCol, spanWords, minCount, emitWordHashes)._1
-
-  /** [[spanDedup]] plus the internally persisted tokenized frame, so an
-    * eager caller (the curation chain's parquet sink) can unpersist it
-    * after its final action.
-    */
-  private[operators] def spanDedupWithCaches(df: DataFrame, textCol: String, idCol: String,
-      spanWords: Int, minCount: Int = 2,
-      emitWordHashes: Boolean = false): (DataFrame, Seq[DataFrame]) = {
+      emitWordHashes: Boolean = false): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     // typed map (see SpanHash): tokenize + word-hash + span-fold in one
     // guaranteed-linear pass per document
-    val ws = df.select(col(idCol).cast("long"), col(textCol).cast("string"))
+    val ws = CacheScope.persist(df.select(col(idCol).cast("long"), col(textCol).cast("string"))
       .as[(Long, String)]
       .map { case (docId, text) =>
         val words = SpanHash.tokenize(text)
         val wh = words.map(SpanHash.fnv1a64)
         (docId, words.toSeq, wh.toSeq, SpanHash.spanHashes(wh, spanWords))
       }
-      .toDF(idCol, "_ws", "_wh", "_spans")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .toDF(idCol, "_ws", "_wh", "_spans"))
 
     val occ = ws.select(col(idCol), explode(col("_spans")).as("s"))
       .select(col(idCol), col("s.start"), col("s.h"))
@@ -210,7 +202,7 @@ object ScrubOps {
       textClean(col("_ws"), col("_cov")).as("text_clean"))
     val cols = if (emitWordHashes)
       base :+ whClean(col("_wh"), col("_cov")).as("wh_clean") else base
-    (joined.select(cols: _*), Seq(ws))
+    joined.select(cols: _*)
   }
 
   /** GPT-3-style decontamination SCRUB (Brown et al. 2020 Appendix C —
@@ -242,27 +234,18 @@ object ScrubOps {
     * caller decides (the lineFrequencyFilter convention).
     */
   def decontaminateScrub(df: DataFrame, textCol: String, idCol: String,
-      evalPred: Column, n: Int = 5, window: Int = 10): DataFrame =
-    decontaminateScrubWithCaches(df, textCol, idCol, evalPred, n, window)._1
-
-  /** [[decontaminateScrub]] plus the internally persisted tokenized
-    * frame for caller unpersist — the [[spanDedupWithCaches]]
-    * convention.
-    */
-  def decontaminateScrubWithCaches(df: DataFrame, textCol: String, idCol: String,
-      evalPred: Column, n: Int = 5,
-      window: Int = 10): (DataFrame, Seq[DataFrame]) = {
+      evalPred: Column, n: Int = 5, window: Int = 10): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val ws = df.select(col(idCol).cast("long"), evalPred, col(textCol).cast("string"))
+    val ws = CacheScope.persist(df.select(col(idCol).cast("long"), evalPred,
+        col(textCol).cast("string"))
       .as[(Long, Boolean, String)]
       .map { case (docId, isEval, text) =>
         val words = SpanHash.tokenize(text)
         val wh = words.map(SpanHash.fnv1a64)
         (docId, isEval, words.toSeq, SpanHash.spanHashes(wh, n))
       }
-      .toDF("doc_id", "_is_eval", "_ws", "_spans")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .toDF("doc_id", "_is_eval", "_ws", "_spans"))
     val dirty = ws.filter(col("_is_eval"))
       .select(explode(col("_spans")).as("s"))
       .select(col("s.h").as("h")).distinct()
@@ -286,10 +269,10 @@ object ScrubOps {
         wsArr.iterator.zipWithIndex.collect { case (w, i) if !c(i) => w }.mkString(" ")
       }
     }
-    (joined.select(col("doc_id"),
+    joined.select(col("doc_id"),
       size(col("_ws")).cast("long").as("n_words"),
       size(col("_cov")).cast("long").as("n_covered"),
-      textClean(col("_ws"), col("_cov")).as("text_clean")), Seq(ws))
+      textClean(col("_ws"), col("_cov")).as("text_clean"))
   }
 
   /** C4-style line-level boilerplate removal: a line that appears in

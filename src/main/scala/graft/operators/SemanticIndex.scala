@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
 import graft.functions.VecExprs
 
 /** Persisted SemDeDup index: the trained-cell layout that serves
@@ -112,13 +113,11 @@ object SemanticIndex extends graft.io.VersionedStore {
     // opt-in. Bit-identical either way (quantize is deterministic).
     val qf0 = corpus.select(col(idCol).cast("long").as("vid"),
       SimilarityOps.quantize(col(vecCol)).as("qv"))
-    val qf = if (cacheQuantized)
-      qf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else qf0
-    try {
+    CacheScope.run {
+      val qf = if (cacheQuantized) CacheScope.persist(qf0) else qf0
       val cents = SimilarityOps.kmeansTrainQ(qf, k, maxIter)
       publish(root)((_, v) => writeVersion(cents, labelQ(qf, cents), root, v))
-    } finally if (cacheQuantized) qf.unpersist()
+    }
   }
 
   /** The trained model of a version dir — k·dim longs, driver-sized. */

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
 import graft.functions.VecExprs
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -34,19 +35,19 @@ object SimilarityOps {
     * cell-keyed window here would shuffle (and per-cell buffer) the
     * whole labeled corpus just to count it. The keep-cell list is
     * model-sized (k ≈ √n cells) and rides a broadcast semi-join onto
-    * the labeled frame, so the cap adds ZERO corpus-sized shuffle; the
-    * width table persists across its two consumers (the drop-stats
-    * action and the keep-list) and is handed back for caller unpersist
-    * (the spanDedupWithCaches convention). Members of dropped cells
-    * still receive verdict rows (kept — their recall is gone, loudly
-    * logged, never silently judged).
+    * the labeled frame, so the cap adds ZERO corpus-sized shuffle. The
+    * width table is persisted for its one eager consumer, the drop-stats
+    * collect, and released before this returns: the keep-list then
+    * recomputes its k-row count from the still-cached labeled frame when
+    * it materializes — corpus-size-independent, and no width cache
+    * outlives the call. Members of dropped cells still receive verdict
+    * rows (kept — their recall is gone, loudly logged, never silently
+    * judged).
     */
-  private def boundCells(labeled: DataFrame, maxCell: Int,
-      op: String): (DataFrame, Seq[DataFrame]) = {
-    if (maxCell == NoCellCap) (labeled, Nil)
+  private def boundCells(labeled: DataFrame, maxCell: Int, op: String): DataFrame =
+    if (maxCell == NoCellCap) labeled
     else {
-      val widths = labeled.groupBy("cell").agg(count(lit(1)).as("_cw"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val widths = CacheScope.persist(labeled.groupBy("cell").agg(count(lit(1)).as("_cw")))
       val drops = widths.filter(col("_cw") > maxCell)
         .agg(count(lit(1)).as("n_cells"),
           coalesce(sum(col("_cw")), lit(0L)).as("n_rows"))
@@ -58,10 +59,11 @@ object SimilarityOps {
           "NoCellCap on an oracle-checked path")
       else
         log.info(s"$op: cell cap $maxCell dropped nothing")
-      (labeled.join(broadcast(widths.filter(col("_cw") <= maxCell).select("cell")),
-        Seq("cell"), "left_semi"), Seq(widths))
+      val judged = labeled.join(broadcast(widths.filter(col("_cw") <= maxCell).select("cell")),
+        Seq("cell"), "left_semi")
+      CacheScope.release(widths)
+      judged
     }
-  }
 
   /** Cast a float vector column to double for deterministic math. */
   def toDouble(v: Column): Column = transform(v, x => x.cast("double"))
@@ -630,59 +632,6 @@ object SimilarityOps {
   def semanticDedup(emb: DataFrame, idCol: String, vecCol: String,
       k: Int, maxIter: Int, t2: Double, maxCell: Int = NoCellCap,
       cacheQuantized: Boolean = false): DataFrame = {
-    val (verdicts, caches) = semanticDedupWithCaches(emb, idCol, vecCol,
-      k, maxIter, t2, maxCell, cacheQuantized)
-    releaseCapWidths(caches)
-    releaseQuantized(caches)
-    verdicts
-  }
-
-  /** The plain (non-WithCaches) wrappers cannot unpersist after their
-    * caller's final action, so a capped call would leak the cap's
-    * width frame for the session. The width frame's only EAGER consumer
-    * (the drop-stats collect) already ran inside [[boundCells]];
-    * releasing it here costs at most one recompute of a k-row map-side
-    * count (from the still-cached labeled frame) when the keep-list
-    * broadcast materializes — corpus-size-independent. The labeled
-    * frame stays cached (it feeds the verdict plan's pair legs and
-    * join-back at full corpus width); callers wanting full cache
-    * hygiene use the WithCaches variants.
-    */
-  private def releaseCapWidths(caches: Seq[DataFrame]): Unit =
-    caches.filter(_.columns.sameElements(Array("cell", "_cw")))
-      .foreach(_.unpersist())
-
-  /** Release the quantized (vid, qv) frame a cacheQuantized call left
-    * persisted: its training-time consumers (seed collect + Lloyd
-    * passes) already ran eagerly inside the training loop, and once the
-    * LABELED frame's cache is materialized the quantized copy is
-    * redundant — without this, each plain-wrapper call (q151/q152 per
-    * bench rep) leaked a full corpus-sized cached copy for the session.
-    * The labeled cache is forced with a count (one job over the
-    * still-cached quantized frame — the same pass the caller's first
-    * action would have paid to fill it) BEFORE the unpersist, so the
-    * expensive upstream is never re-derived. No-op unless both frames
-    * are present (the incremental wrappers cache labeled sides only).
-    */
-  private def releaseQuantized(caches: Seq[DataFrame]): Unit = {
-    val quantized = caches.filter(_.columns.sameElements(Array("vid", "qv")))
-    val labeled = caches.find(
-      _.columns.sameElements(Array("vid", "qv", "cell", "n2")))
-    if (quantized.nonEmpty && labeled.isDefined) {
-      labeled.get.count()
-      quantized.foreach(_.unpersist())
-    }
-  }
-
-  /** [[semanticDedup]] plus the internally persisted frames (the
-    * labeled+quantized table and, when capped, the cell-width frame),
-    * so an eager caller can unpersist them after its final action —
-    * the spanDedupWithCaches convention.
-    */
-  def semanticDedupWithCaches(emb: DataFrame, idCol: String, vecCol: String,
-      k: Int, maxIter: Int, t2: Double,
-      maxCell: Int = NoCellCap,
-      cacheQuantized: Boolean = false): (DataFrame, Seq[DataFrame]) = {
     // cacheQuantized: single derivation of the input — the quantized
     // frame persists ONCE and feeds the seed collect, every Lloyd
     // iteration AND the final labeled table. For an EXPENSIVE upstream
@@ -694,19 +643,25 @@ object SimilarityOps {
     // is deterministic and the training passes see the same rows.
     val qf0 = emb.select(col(idCol).cast("long").as("vid"),
       quantize(col(vecCol)).as("qv"))
-    val qf = if (cacheQuantized)
-      qf0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    else qf0
+    val qf = if (cacheQuantized) CacheScope.persist(qf0) else qf0
     val cents = kmeansTrainQ(qf, k, maxIter)
     // the labeled+quantized table feeds three consumers (both pair legs
     // and the verdict join-back) — persist it once, the q28/q55
     // rationale; at corpus scale write it as parquet instead (it IS the
     // cell-partitioned index an IVF build would store anyway)
-    val q = qf
+    val q = CacheScope.persist(qf
       .withColumn("cell", assignCells(col("qv"), cents))
-      .withColumn("n2", VecExprs.dotLong(col("qv"), col("qv")).cast("double"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (judged, capCaches) = boundCells(q, maxCell, "semanticDedup")
+      .withColumn("n2", VecExprs.dotLong(col("qv"), col("qv")).cast("double")))
+    if (cacheQuantized) {
+      // the quantized frame's consumers (seed collect + Lloyd passes)
+      // already ran; once the labeled cache is filled — one count over
+      // the still-cached quantized frame, the pass the first verdict
+      // action would pay anyway — the quantized copy is redundant, and
+      // the expensive upstream is never re-derived
+      q.count()
+      CacheScope.release(qf)
+    }
+    val judged = boundCells(q, maxCell, "semanticDedup")
     val a = judged.select(col("cell"), col("vid").as("va"), col("qv").as("qa"),
       col("n2").as("na2"))
     val b = judged.select(col("cell"), col("vid").as("vb"), col("qv").as("qb"),
@@ -718,10 +673,9 @@ object SimilarityOps {
       .filter(col("d") > 0 && col("d") * col("d") >= lit(t2) * col("na2") * col("nb2"))
       .groupBy(col("vb").as("vid"))
       .agg(min(col("va")).as("dup_of"))
-    val verdicts = q.select(col("vid"), col("cell"))
+    q.select(col("vid"), col("cell"))
       .join(dups, Seq("vid"), "left")
       .withColumn("kept", col("dup_of").isNull)
-    (verdicts, (if (cacheQuantized) Seq(qf) else Nil) ++ Seq(q) ++ capCaches)
   }
 
   /** Incremental SemDeDup: judge a NEW batch of embeddings against an
@@ -749,19 +703,6 @@ object SimilarityOps {
   def incrementalSemanticDedup(newBatch: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, maxIter: Int, t2: Double,
       maxCell: Int = NoCellCap): DataFrame = {
-    val (verdicts, caches) = incrementalSemanticDedupWithCaches(newBatch,
-      corpus, idCol, vecCol, k, maxIter, t2, maxCell)
-    releaseCapWidths(caches)
-    verdicts
-  }
-
-  /** [[incrementalSemanticDedup]] plus the internally persisted frames
-    * (both labeled sides and, when capped, the per-leg cell-width
-    * frames) for caller unpersist — the spanDedupWithCaches convention.
-    */
-  def incrementalSemanticDedupWithCaches(newBatch: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int, maxIter: Int, t2: Double,
-      maxCell: Int = NoCellCap): (DataFrame, Seq[DataFrame]) = {
     // every caller's corpus here is a cheap scan (embeddings parquet),
     // so the quantized frame is NOT persisted: re-deriving it per
     // training pass costs less than materializing a second full copy
@@ -770,22 +711,18 @@ object SimilarityOps {
     // cacheQuantized, not this path.
     val cents = kmeansTrainQ(corpus.select(col(idCol).cast("long").as("vid"),
       quantize(col(vecCol)).as("qv")), k, maxIter)
-    def labeled(df: DataFrame): DataFrame =
+    def labeled(df: DataFrame): DataFrame = CacheScope.persist(
       df.select(col(idCol).cast("long").as("vid"), quantize(col(vecCol)).as("qv"))
         .withColumn("cell", assignCells(col("qv"), cents))
-        .withColumn("n2", VecExprs.dotLong(col("qv"), col("qv")).cast("double"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("n2", VecExprs.dotLong(col("qv"), col("qv")).cast("double")))
     val corpusL = labeled(corpus)
     val batchL = labeled(newBatch)
     // the cap bounds each pair leg by ITS candidate-mass side: a hot
     // corpus cell explodes |batch∩cell|·|corpus∩cell|, a hot batch cell
     // its own m(m−1)/2 — capped members stay judgeable on the other leg
-    val (corpusJ, corpusCaps) =
-      boundCells(corpusL, maxCell, "incrementalSemanticDedup.corpus")
-    val (batchJ, batchCaps) =
-      boundCells(batchL, maxCell, "incrementalSemanticDedup.batch")
-    val verdicts = judgeLabeledBatch(batchL, corpusJ, batchJ, t2)
-    (verdicts, Seq(corpusL, batchL) ++ corpusCaps ++ batchCaps)
+    val corpusJ = boundCells(corpusL, maxCell, "incrementalSemanticDedup.corpus")
+    val batchJ = boundCells(batchL, maxCell, "incrementalSemanticDedup.batch")
+    judgeLabeledBatch(batchL, corpusJ, batchJ, t2)
   }
 
   /** The judging core of [[incrementalSemanticDedup]] over PRE-LABELED

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
 import graft.functions.Fns
 
 /** Text-analysis operators for a training-data pipeline: language ID
@@ -236,26 +237,18 @@ object TextOps {
     * No join keys on raw tokens. Bit-identical: Long sums over the
     * same per-doc bucket sets are order-independent, and the one libm
     * exp() per doc per step is the same expression. Returns
-    * (doc_id, margin_q, predicted_target) for raw docs.
+    * (doc_id, margin_q, predicted_target) for raw docs; the margins read
+    * the cached feature table, which the caller's [[CacheScope]] releases.
     */
   val QcEtaNum = 4L
 
   def qualityClassifier(df: DataFrame, textCol: String, idCol: String,
-      isTarget: Column, steps: Int = 3): DataFrame =
-    qualityClassifierWithCaches(df, textCol, idCol, isTarget, steps)._1
-
-  /** [[qualityClassifier]] plus the internally persisted feature table
-    * for caller unpersist — the spanDedupWithCaches convention (the
-    * returned margins frame still reads `feat`, so the release must
-    * come AFTER the caller's final action on it).
-    */
-  def qualityClassifierWithCaches(df: DataFrame, textCol: String, idCol: String,
-      isTarget: Column, steps: Int = 3): (DataFrame, Seq[DataFrame]) = {
+      isTarget: Column, steps: Int = 3): DataFrame = {
     // collect_set IS the binary-feature distinct: the set of occupied
     // buckets per doc (≤256 two-char ids), deduplicated map-side under
     // the one groupBy — the old explode→distinct (doc, bucket) table
     // at doc grain
-    val feat = df.select(col(idCol).cast("long").as("doc_id"),
+    val feat = CacheScope.persist(df.select(col(idCol).cast("long").as("doc_id"),
         isTarget.as("is_target"),
         explode(words(col(textCol))).as("tk"))
       .filter(col("tk") =!= "")
@@ -263,8 +256,7 @@ object TextOps {
         substring(sha2(concat(lit("graft-qc:"), col("tk")), 256), 1, 2).as("bucket"))
       .groupBy("doc_id")
       .agg(collect_set(col("bucket")).as("bs"),
-        first(col("is_target")).as("is_target"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        first(col("is_target")).as("is_target")))
     val n = feat.count()
     require(n > 0, "qualityClassifier: no documents with tokens")
     val occupied = feat.select(explode(col("bs")).as("bucket")).distinct()
@@ -293,10 +285,9 @@ object TextOps {
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       w = w.map { case (b, wb) => b -> (wb - grad.getOrElse(b, 0L) * QcEtaNum / n) }
     }
-    val margins = feat.filter(!col("is_target"))
+    feat.filter(!col("is_target"))
       .select(col("doc_id"), marginOf(w).as("margin_q"))
       .withColumn("predicted_target", col("margin_q") > 0L)
-    (margins, Seq(feat))
   }
 
   /** Bigram language-model surprisal — the CCNet-style quality signal:

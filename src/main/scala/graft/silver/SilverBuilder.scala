@@ -3,7 +3,7 @@ package graft.silver
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.TableSpec
+import graft.core.{CacheScope, TableSpec}
 import graft.io.{BatchStore, TableIO}
 import graft.operators.{DqOps, FlattenOps, MergeOps}
 import graft.sources.RestSource
@@ -66,8 +66,8 @@ object SilverBuilder {
 
     // one cached pass feeds DQ and writes; released on every path, a
     // failed write included
-    merged.cache()
-    val (rowCount, dqStatus) = try {
+    val (rowCount, dqStatus) = CacheScope.run {
+      CacheScope.persist(merged)
       val dqRow = DqOps.summary(merged, spec.primaryKey, spec.columns).collect().head
       val rowCount = dqRow.getAs[Long]("row_count")
       val dqStatus =
@@ -78,7 +78,7 @@ object SilverBuilder {
       TableIO.writeCsv(merged, s"$storeRoot/${store.batchKeyForProductionKey(csvKey, batchId)}")
       TableIO.writeParquet(merged, s"$storeRoot/${store.batchKeyForProductionKey(parquetKey, batchId)}")
       (rowCount, dqStatus)
-    } finally merged.unpersist()
+    }
 
     store.recordBatchTable(batchId, spec.name, rowCount, dqStatus,
       spec.primaryKey, spec.columns, Seq(csvKey, parquetKey))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.core.CacheScope
 import graft.operators.MergeOps
 
 /** Structured-Streaming surface (SURVEY §2.12): tumbling/sliding/session
@@ -221,7 +222,7 @@ object StreamOps {
   : DataStreamWriter[Row] =
     nonEmptyBatchSink(stream) { (batch, batchId) =>
       val kept = judgeKept(batch, graft.operators.DedupOps
-        .incrementalDedupPreparedWithCaches(batch, index, textCol, idCol,
+        .incrementalDedupPrepared(batch, index, textCol, idCol,
           n, numHashes, bands, threshold, maxBucket), idCol)
       writeKeptPartition(kept, targetPath,
         intakeBatchTag(batch.sparkSession, batchId))
@@ -261,7 +262,7 @@ object StreamOps {
       val dedup = graft.operators.DedupOps
       dedup.corpusIndex.intakeTrigger(root, streamingQueryId(batch.sparkSession),
           batchId) { dir =>
-        val kept = judgeKept(batch, dedup.incrementalDedupPreparedWithCaches(batch,
+        val kept = judgeKept(batch, dedup.incrementalDedupPrepared(batch,
           dedup.readCorpusIndexAt(batch.sparkSession, root, dir), textCol, idCol,
           n, numHashes, bands, threshold, maxBucket), idCol)
         try {
@@ -356,14 +357,17 @@ object StreamOps {
   def semanticIntakeSink(stream: DataFrame, idCol: String, vecCol: String,
                          root: String, targetPath: String,
                          t2: Double): DataStreamWriter[Row] =
-    nonEmptyBatchSink(stream)(
-      semanticIntakeTrigger(_, _, root, idCol, vecCol, targetPath, t2))
+    nonEmptyBatchSink(stream) { (batch, batchId) =>
+      semanticIntakeTrigger(batch, batchId, streamingQueryId(batch.sparkSession),
+        root, idCol, vecCol, targetPath, t2)
+    }
 
+  /** One [[semanticIntakeSink]] trigger, fed by streaming query `queryId`. */
   private[graft] def semanticIntakeTrigger(batch: DataFrame, batchId: Long,
-      root: String, idCol: String, vecCol: String, targetPath: String,
-      t2: Double): Unit = {
+      queryId: String, root: String, idCol: String, vecCol: String,
+      targetPath: String, t2: Double): Unit = {
     val si = graft.operators.SemanticIndex
-    si.intakeTrigger(root, streamingQueryId(batch.sparkSession), batchId) { dir =>
+    si.intakeTrigger(root, queryId, batchId) { dir =>
       val (verdicts, batchL) = si.judgeBatch(batch, idCol, vecCol, dir, t2)
       // pin: the verdict frame feeds the partition write AND the kept
       // semi-join — un-pinned, each consumer re-runs both pair legs
@@ -394,11 +398,14 @@ object StreamOps {
 
   /** The running streaming query's id: stable across restarts from the
     * same checkpoint (the replay case), fresh for a fresh checkpoint.
+    * Outside a streaming query there is none, and a made-up one would
+    * record an owner no real stream could match.
     */
   private def streamingQueryId(spark: org.apache.spark.sql.SparkSession): String =
     Option(spark.sparkContext.getLocalProperty(
       org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY))
-      .getOrElse("q")
+      .getOrElse(throw new IllegalStateException(
+        "no streaming query id: a sink trigger ran outside a streaming query"))
 
   /** Idempotence tag for one micro-batch: query id + batch id. Distinct
     * queries get distinct tags, so their batch 0s don't collide.
@@ -407,11 +414,12 @@ object StreamOps {
                              batchId: Long): String =
     s"${streamingQueryId(spark).replace("-", "").take(12)}-$batchId"
 
-  /** Semi-join the batch down to the roster's `kept` docs. */
-  private def judgeKept(batch: DataFrame,
-                        rosterAndCaches: (DataFrame, Seq[DataFrame]),
-                        idCol: String): DataFrame = {
-    val (roster, caches) = rosterAndCaches
+  /** Semi-join the batch down to the roster's `kept` docs. The roster is
+    * built in a [[CacheScope]] that closes once `kept` is pinned, so the
+    * judgment's caches never outlive the trigger.
+    */
+  private def judgeKept(batch: DataFrame, roster: => DataFrame,
+                        idCol: String): DataFrame = CacheScope.run {
     // Pin the ROSTER first: the judgment plan is a DAG whose exact-stage
     // and candidate-stage subtrees appear under several join legs, and a
     // `filter(status)` pushed into the un-materialized plan re-executes
@@ -433,7 +441,6 @@ object StreamOps {
     // lingers in the BlockManager per trigger until the ContextCleaner
     // happens to collect it
     rosterPinned.unpersist()
-    caches.foreach(_.unpersist())
     kept
   }
 

@@ -6,9 +6,9 @@ import graft.operators.{CurationPipeline, DedupOps}
 
 /** The eager chain runners must leave executor storage exactly as they
   * found it: a long-lived session running curation or ingest dedup
-  * repeatedly must not accumulate cached frames (round-4/5 advice — the
-  * lazy chains persist between stages by design, so the parquet-sink
-  * variants own the unpersist).
+  * repeatedly must not accumulate cached frames (round-4/5 advice). The
+  * lazy operators persist for the plans they return, so their caches go
+  * when the caller's CacheScope closes.
   */
 class CacheHygieneSpec extends SparkSpec {
   import spark.implicits._
@@ -22,6 +22,12 @@ class CacheHygieneSpec extends SparkSpec {
     (100L, "document number 3 about topic 3 with several words of content to pass the gates easily", "en"), // exact dup of 3
     (900L, "an evaluation benchmark question about topic seven and its answer text", "en")
   )).toDF("doc_id", "text", "lang")
+
+  // three tight blobs of 4-d vectors, ids from 7000
+  private lazy val vecs = (0 until 24).map { i =>
+    (i.toLong + 7000L, Seq.tabulate(4)(d =>
+      (if (d == i % 3) 11.0 else 0.0) + 0.01 * ((i * 7 + d) % 5)))
+  }.toDF("vec_id", "embedding")
 
   test("curateToParquet unpersists every chain cache") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
@@ -54,44 +60,64 @@ class CacheHygieneSpec extends SparkSpec {
     assert(leaked.isEmpty, s"curateFullToParquet leaked cached frames with RDD ids $leaked")
   }
 
-  test("the WithCaches variants hand back every persisted frame (round-15 advice)") {
-    import graft.operators.{ScrubOps, SimilarityOps, TextOps}
+  test("every cache-taking operator leaves nothing cached once its scope closes") {
+    import graft.core.CacheScope
+    import graft.operators.{ExperimentOps, GraphOps, ScrubOps, SimilarityOps, TextOps}
     // distinctive literals so CacheManager plan-matching can't alias
     // these frames with another suite's cached plans
-    val vecs = (0 until 24).map { i =>
-      (i.toLong + 7000L, Seq.tabulate(4)(d =>
-        (if (d == i % 3) 11.0 else 0.0) + 0.01 * ((i * 7 + d) % 5)))
-    }.toDF("vec_id", "embedding")
+    val vecBatch = vecs.filter(col("vec_id") % 4 === 0)
+      .select((col("vec_id") + 1000L).as("vec_id"), col("embedding"))
     val texts = (0 until 30).map(i =>
       (i.toLong + 7000L, s"hygiene fixture doc $i topic ${i % 5} with shared window phrase alpha beta gamma delta epsilon zeta"))
       .toDF("doc_id", "text")
+    val textBatch = Seq(
+      (7100L, "hygiene fixture doc 3 topic 3 with shared window phrase alpha beta gamma delta epsilon zeta"),
+      (7101L, "a hygiene batch document with entirely original content today"))
+      .toDF("doc_id", "text")
+    val speeches = Seq(
+      ("hyg-w1", "Hy Giene", "The budget is late. We must act now!"),
+      ("hyg-w2", "Sani Tary", "Roads need repair. Bridges too."))
+      .toDF("week_id", "speaker_name", "speech_text")
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "semanticDedup (capped)" -> (() => SimilarityOps.semanticDedup(vecs, "vec_id",
+        "embedding", k = 3, maxIter = 5, t2 = 0.81, maxCell = 5)),
+      "incrementalSemanticDedup (capped)" -> (() => SimilarityOps.incrementalSemanticDedup(
+        vecBatch, vecs, "vec_id", "embedding", k = 3, maxIter = 5, t2 = 0.81, maxCell = 5)),
+      "qualityClassifier" -> (() => TextOps.qualityClassifier(texts, "text", "doc_id",
+        col("doc_id") % 3 === 0, steps = 2)),
+      "decontaminateScrub" -> (() => ScrubOps.decontaminateScrub(texts, "text", "doc_id",
+        col("doc_id") % 3 === 0, n = 5, window = 2)),
+      "lshEmbeddingNearDupPairs" -> (() => DedupOps.lshEmbeddingNearDupPairs(vecs, "vec_id",
+        "embedding", dim = 4)),
+      "spanDedup" -> (() => ScrubOps.spanDedup(texts, "text", "doc_id", spanWords = 3)),
+      "incrementalDedupPrepared" -> (() => DedupOps.incrementalDedupPrepared(textBatch,
+        DedupOps.buildCorpusDedupIndex(texts, "text", "doc_id"), "text", "doc_id")),
+      "incrementalDedup" -> (() => DedupOps.incrementalDedup(textBatch, texts, "text", "doc_id")),
+      "minhashNearDupPairs" -> (() => DedupOps.minhashNearDupPairs(texts, "text", "doc_id")),
+      "GraphOps.connectedComponents" -> (() => GraphOps.connectedComponents(
+        Seq((7003L, 7005L), (7003L, 7008L), (7008L, 7002L), (7007L, 7010L)).toDF("a", "b"),
+        "a", "b")),
+      "ExperimentOps.runExperiments" -> (() => ExperimentOps.runExperiments(speeches,
+        Seq(ExperimentOps.PromptVariant("hyg-v1", "absurdist", "sentence_score")),
+        _.withColumn("score", size(split(col("quote"), " "))), topN = 1)._3),
+      "curate (lazy)" -> (() => CurationPipeline.curate(docs, "text", "doc_id", "lang",
+        col("doc_id") >= 900)),
+      "curateFull (lazy)" -> (() => CurationPipeline.curateFull(docs, "text", "doc_id", "lang",
+        col("doc_id") >= 900, minWords = 3, lineWords = 2, lineMinDocs = 50, spanWords = 3,
+        spanMinCount = 50)))
+    for ((label, op) <- ops) assertNoLeak(label) {
+      CacheScope.run {
+        val before = spark.sparkContext.getPersistentRDDs.keySet
+        op().collect()
+        // a row whose operator caches nothing would check no release
+        assert((spark.sparkContext.getPersistentRDDs.keySet -- before).nonEmpty,
+          s"$label cached nothing inside its scope")
+      }
+    }
+  }
 
-    def assertClean(label: String)(run: => Seq[org.apache.spark.sql.DataFrame]): Unit = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val caches = run
-      caches.foreach(_.unpersist(true))
-      // RDD-id SETS, not counts (see the suites above for the rationale)
-      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-      assert(leaked.isEmpty, s"$label leaked cached frames with RDD ids $leaked")
-    }
-
-    assertClean("semanticDedupWithCaches (capped)") {
-      val (res, caches) = SimilarityOps.semanticDedupWithCaches(vecs, "vec_id",
-        "embedding", k = 3, maxIter = 5, t2 = 0.81, maxCell = 5)
-      res.collect()
-      assert(caches.size == 2, "expected the labeled frame + the cell-width frame")
-      caches
-    }
-    assertClean("incrementalSemanticDedupWithCaches (capped)") {
-      val batch = vecs.filter(col("vec_id") % 4 === 0)
-        .select((col("vec_id") + 1000L).as("vec_id"), col("embedding"))
-      val (res, caches) = SimilarityOps.incrementalSemanticDedupWithCaches(
-        batch, vecs, "vec_id", "embedding", k = 3, maxIter = 5, t2 = 0.81,
-        maxCell = 5)
-      res.collect()
-      assert(caches.size == 4, "expected both labeled sides + both width frames")
-      caches
-    }
+  test("the plain capped wrappers release their width frames outside any scope") {
+    import graft.operators.SimilarityOps
     // The PLAIN capped wrappers cannot hand caches back, so they must
     // release the cap width frame(s) themselves (round-16 advice: the
     // q143/q144 shape through the plain entry point leaked the width
@@ -114,20 +140,6 @@ class CacheHygieneSpec extends SparkSpec {
         .select((col("vec_id") + 2000L).as("vec_id"), col("embedding"))
       SimilarityOps.incrementalSemanticDedup(batch, vecs, "vec_id",
         "embedding", k = 3, maxIter = 5, t2 = 0.81, maxCell = 5).collect()
-    }
-    assertClean("qualityClassifierWithCaches") {
-      val (res, caches) = TextOps.qualityClassifierWithCaches(texts, "text",
-        "doc_id", col("doc_id") % 3 === 0, steps = 2)
-      res.collect()
-      assert(caches.size == 1, "expected the persisted feature table")
-      caches
-    }
-    assertClean("decontaminateScrubWithCaches") {
-      val (res, caches) = ScrubOps.decontaminateScrubWithCaches(texts, "text",
-        "doc_id", col("doc_id") % 3 === 0, n = 5, window = 2)
-      res.collect()
-      assert(caches.size == 1, "expected the persisted tokenized frame")
-      caches
     }
   }
 

@@ -90,8 +90,8 @@ class IndexLayoutSpec extends SparkSpec {
     SemanticIndex.buildAndServe(corpus, "vid", "vd", k = 4, maxIter = 2, root.getPath)
     val batch = Seq((100L, Seq(9.8, 0.1, 0.0, 0.0)), (101L, Seq(5.0, 5.0, 0.0, 0.0)))
       .toDF("vid", "vd")
-    StreamOps.semanticIntakeTrigger(batch, 0L, root.getPath, "vid", "vd",
-      target.getPath, t2 = 0.81)
+    StreamOps.semanticIntakeTrigger(batch, 0L, "layout-semantic-query", root.getPath, "vid",
+      "vd", target.getPath, t2 = 0.81)
     assert(SemanticIndex.foldIngestAndSwap(spark, root.getPath) == 2)
     assert(SemanticIndex.pruneVersions(root.getPath, keepLatest = 1) == Seq(1))
     val v = "versions/v0002"

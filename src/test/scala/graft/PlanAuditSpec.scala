@@ -261,9 +261,11 @@ class PlanAuditSpec extends SparkSpec {
       // the cell-keyed corpus — per-ingest cost stays batch-sized
       "q139_semantic_dedup_incremental" -> (3, 5, 2, 0),
       // capped SemDeDup under planted hot-cell skew: widths are a
-      // combinable cell-count aggregate (persisted across drop-stats
-      // and keep-list) and the cap is a broadcast semi-join of the
-      // model-sized keep-cell list — zero corpus shuffle added, zero
+      // combinable cell-count aggregate (persisted for the eager
+      // drop-stats action, released before the operator returns, so the
+      // keep-list recomputes its k-row count off the cached labeled
+      // frame — q144's shape) and the cap is a broadcast semi-join of
+      // the model-sized keep-cell list — zero corpus shuffle added, zero
       // Window (asserted structurally below); the extra scan and the
       // hot-clone reference cross come from the fixture's 1-row clone
       // source
@@ -314,8 +316,8 @@ class PlanAuditSpec extends SparkSpec {
 
   test("capped SemDeDup: no Window at all — widths aggregate, keep-cells broadcast") {
     // boundCells derives widths as a COMBINABLE cell-count aggregate
-    // (persisted across the drop-stats action and the keep-list — the
-    // round-15 single-pass advice) and applies the cap as a broadcast
+    // (persisted for the drop-stats action, released before the
+    // keep-list runs) and applies the cap as a broadcast
     // semi-join, so the cap adds ZERO corpus-sized shuffle: a
     // WindowExec surfacing in q143's executed tree means the cap
     // regressed to the corpus-shuffling cell-window shape
@@ -521,20 +523,36 @@ class PlanAuditSpec extends SparkSpec {
     // is one store method (VersionedStore.intakeTrigger); a sink or an
     // operator that reads the owner record, takes claims itself or
     // re-checks the ledger re-grows the per-family copies it replaced
-    val root = java.nio.file.Paths.get("src/main/scala/graft")
-    val sources = {
-      val walk = java.nio.file.Files.walk(root)
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }
-    def text(p: java.nio.file.Path) = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
     val owners = Set("io/VersionedStore.scala", "io/IndexMeta.scala")
-    for (p <- sources if !owners(root.relativize(p).toString);
+    for ((p, text) <- mainSources if !owners(p);
          token <- Seq("intake_owner", "IndexMeta.claimDir", "IndexMeta.withIntakeClaim"))
-      assert(!text(p).contains(token), s"$p references $token outside the store")
-    val sinks = text(root.resolve("streaming/StreamOps.scala"))
+      assert(!text.contains(token), s"$p references $token outside the store")
+    val sinks = mainSources.toMap.apply("streaming/StreamOps.scala")
     for (call <- Seq("batchApplied", "withServedDir"))
       assert(!sinks.contains(call), s"StreamOps calls $call: use VersionedStore.intakeTrigger")
     assert("def vector\\w*Sink".r.findAllIn(sinks).size == 1, "StreamOps has more than one vector sink")
+  }
+
+  test("the cache decision stays in CacheScope") {
+    // who releases a persisted intermediate, and when, is one rule
+    // (core/CacheScope); a bare Dataset persist, a tuple-returning
+    // *WithCaches twin or a cacheShingles flag re-grows the per-operator
+    // conventions it replaced
+    val bare = """(?<!CacheScope)\.(persist\(|cache\(\))""".r
+    for ((p, text) <- mainSources if p != "core/CacheScope.scala") {
+      bare.findFirstIn(text).foreach(m => fail(s"$p calls $m outside CacheScope"))
+      """\w*WithCaches\b""".r.findFirstIn(text).foreach(m => fail(s"$p defines or calls $m"))
+      assert(!text.contains("cacheShingles"), s"$p has a cacheShingles flag")
+    }
+  }
+
+  /** Every main-tree source as (path under graft/, text). */
+  private lazy val mainSources: List[(String, String)] = {
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => root.relativize(p).toString ->
+        new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
+    finally walk.close()
   }
 }

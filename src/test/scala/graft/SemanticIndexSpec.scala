@@ -183,7 +183,10 @@ class SemanticIndexSpec extends SparkSpec {
     val root = tmpDir("semidx_rebuild").getPath
     val target = tmpDir("semidx_rebuild_verdicts").getPath
     SemanticIndex.buildAndServe(corpus, "vid", "vd", k, iters, root)
-    StreamOps.semanticIntakeTrigger(batch, 7L, root, "vid", "vd", target, t2)
+    val queryId = "semidx-rebuild-query"
+    StreamOps.semanticIntakeTrigger(batch, 7L, queryId, root, "vid", "vd", target, t2)
+    assert(SemanticIndex.intakeOwner(root).contains(queryId),
+      "the first trigger must record the query it was given as the root's owner")
     def verdicts() = spark.read.parquet(s"$target/batch=b7")
       .select("vid", "dup_of", "kept").orderBy("vid").collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) -1L else r.getLong(1),
@@ -194,7 +197,7 @@ class SemanticIndexSpec extends SparkSpec {
     val keptIds = first.filter(_._3).map(_._1)
     val rebuilt = corpus.unionByName(batch.filter(col("vid").isin(keptIds: _*)))
     val v2 = SemanticIndex.buildAndServe(rebuilt, "vid", "vd", k, iters, root)
-    StreamOps.semanticIntakeTrigger(batch, 7L, root, "vid", "vd", target, t2)
+    StreamOps.semanticIntakeTrigger(batch, 7L, queryId, root, "vid", "vd", target, t2)
     assert(verdicts() == first, "a replayed absorbed batch must skip, not re-judge")
     val dir = SemanticIndex.versionDir(root, v2)
     assert(SemanticIndex.foldedBatchIds(dir) == Set(7L),

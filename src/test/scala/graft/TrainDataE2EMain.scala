@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
 import graft.io.ShardExport
 import graft.operators.{CurationPipeline, DedupOps, GraphOps, MixOps,
   SimilarityOps, SplitOps, TextOps}
@@ -79,36 +80,37 @@ object TrainDataE2EMain {
     val qualityText = "zephyr quixotic lambent vellum citrine aurum " +
       "gossamer peregrine sylvan thalassic verdant obsidian"
     val isPlantedQuality = col("doc_id") % 50 === 5
-    val classified = stage("score:classifier") {
-      val docsCls = docs.withColumn("text",
-        when(isEval || isPlantedQuality, lit(qualityText)).otherwise(col("text")))
-      val (m, clsCaches) = TextOps.qualityClassifierWithCaches(
-        docsCls, "text", "doc_id", isEval, steps = 3)
-      val mc = m.cache()
-      val predPlanted = mc.filter(col("predicted_target") && isPlantedQuality).count()
-      val planted = docs.filter(isPlantedQuality).count()
-      val predOther = mc.filter(col("predicted_target") && !isPlantedQuality).count()
-      println(s"  planted target-like raw docs predicted: $predPlanted/$planted" +
-        s" (false positives elsewhere: $predOther)")
-      require(predPlanted > 0 && predPlanted * 10 >= planted * 9,
-        s"classifier failed to separate the planted vocabulary ($predPlanted/$planted)")
-      require(predOther <= predPlanted / 5,
-        s"classifier predictions not concentrated on the planted mass ($predOther)")
-      val joined = curated.join(mc, Seq("doc_id"), "left")
-      val pos = joined.filter(col("predicted_target")).count()
-      println(s"  survivors scoring target-like: $pos")
-      clsCaches.foreach(_.unpersist())
-      (joined, mc)
-    }
+    // one scope over stages 2-3: the classifier's feature table and its
+    // cached margins go once the scored corpus has landed
+    val scored = CacheScope.run {
+      val classified = stage("score:classifier") {
+        val docsCls = docs.withColumn("text",
+          when(isEval || isPlantedQuality, lit(qualityText)).otherwise(col("text")))
+        val mc = CacheScope.persist(TextOps.qualityClassifier(
+          docsCls, "text", "doc_id", isEval, steps = 3))
+        val predPlanted = mc.filter(col("predicted_target") && isPlantedQuality).count()
+        val planted = docs.filter(isPlantedQuality).count()
+        val predOther = mc.filter(col("predicted_target") && !isPlantedQuality).count()
+        println(s"  planted target-like raw docs predicted: $predPlanted/$planted" +
+          s" (false positives elsewhere: $predOther)")
+        require(predPlanted > 0 && predPlanted * 10 >= planted * 9,
+          s"classifier failed to separate the planted vocabulary ($predPlanted/$planted)")
+        require(predOther <= predPlanted / 5,
+          s"classifier predictions not concentrated on the planted mass ($predOther)")
+        val joined = curated.join(mc, Seq("doc_id"), "left")
+        val pos = joined.filter(col("predicted_target")).count()
+        println(s"  survivors scoring target-like: $pos")
+        joined
+      }
 
-    // 3: DSIR importance — same feature space, generative ratios
-    val scored = stage("score:dsir") {
-      val s = TextOps.dsirScores(docs, "text", "doc_id", isEval)
-      val joined = classified._1.join(
-        s.select(col("doc_id"), col("dsir_score")), Seq("doc_id"), "left")
-      joined.write.mode("overwrite").parquet(s"$root/scored")
-      classified._2.unpersist()
-      spark.read.parquet(s"$root/scored")
+      // 3: DSIR importance — same feature space, generative ratios
+      stage("score:dsir") {
+        val s = TextOps.dsirScores(docs, "text", "doc_id", isEval)
+        val joined = classified.join(
+          s.select(col("doc_id"), col("dsir_score")), Seq("doc_id"), "left")
+        joined.write.mode("overwrite").parquet(s"$root/scored")
+        spark.read.parquet(s"$root/scored")
+      }
     }
 
     // 4: semantic dedup over the embedding modality (q136 shape). The
@@ -117,7 +119,7 @@ object TrainDataE2EMain {
     // 5th vector re-appends under +1e5 with its first component scaled
     // ×1.25 (the q136 near-dup construction), and the run ASSERTS the
     // stage drops that planted mass.
-    stage("dedup:semantic-emb") {
+    stage("dedup:semantic-emb")(CacheScope.run {
       val embBase = emb.select(col("vec_id").cast("long").as("vid"),
         transform(col("embedding"), x => x.cast("double")).as("vd"))
       val embPert = embBase.filter(col("vid") % 5 === 0)
@@ -125,15 +127,13 @@ object TrainDataE2EMain {
           concat(array(element_at(col("vd"), 1) * lit(1.25)),
             slice(col("vd"), lit(2), size(col("vd")) - 1)).as("vd"))
       val planted = embPert.count()
-      val (verdicts, sdCaches) = SimilarityOps.semanticDedupWithCaches(
-        embBase.unionByName(embPert), "vid", "vd",
+      val verdicts = SimilarityOps.semanticDedup(embBase.unionByName(embPert), "vid", "vd",
         k = 8, maxIter = 2, t2 = 0.81)
       val dropped = verdicts.filter(!col("kept")).count()
       println(s"  embedding near-dups dropped: $dropped (planted: $planted)")
       require(dropped > 0 && dropped * 10 >= planted * 9,
         s"semantic dedup failed to drop the planted near-copies ($dropped/$planted)")
-      sdCaches.foreach(_.unpersist())
-    }
+    })
 
     // 5+6: near-dup components built ONCE over the survivors' curated
     // text, feeding BOTH cluster-level policies (the FromComponents
